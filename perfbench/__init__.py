@@ -1,0 +1,1 @@
+"""Store benchmark: see README.md in this directory."""
