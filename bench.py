@@ -7,14 +7,15 @@ Prints ONE JSON line:
 
 Env:
     SPARK_GRAFT_SF_DIR   parquet dir (default /root/testdata/sf0.1)
-    SPARK_GRAFT_CPUS     local[] parallelism (default 32)
+    SPARK_GRAFT_CPUS     local[] parallelism (default: os.cpu_count())
     BENCH_ENCODE_ROWS    synthetic code-table rows for the encode job
                          (default 200_000 ≈ 210 MB of content)
     BENCH_QUERIES        comma list to restrict query set
 
 Scaling evidence (north_rule two-cluster-size stand-in) is produced by
-``scripts/scaling_bench.py`` which runs THIS file at local[8] and local[32]
-on the same cached input and reports both throughputs + efficiency.
+``scripts/scaling_bench.py``, which runs the same encode job in its own
+sessions at N and 4N cores (``SCALING_N``, default 1: local[1] and
+local[4]) on the same input and reports both throughputs + efficiency.
 """
 from __future__ import annotations
 
@@ -32,7 +33,7 @@ os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 ENCODE_ROWS = int(os.environ.get("BENCH_ENCODE_ROWS", "200000"))
 # group size is a property of the DATA PLAN, not the cluster size: both
 # scaling levels must encode the identical part_key layout

@@ -14,10 +14,14 @@ module is our equivalent over blockstore metadata rows:
   per distinct value rounded up to a power of two (so probe positions are
   a mask, not a mod), capped at ``MAX_BITS`` — pages too distinct to fit
   usefully store NULL and simply stay unprunable.
-* probing happens entirely JVM-side at plan time: the driver hashes the
-  filter LITERAL once (``probe_hashes``), and ``operators.pipeline``
-  builds a Catalyst predicate over the stored words — no Python touches
-  per-block data, so pruning scales with metadata rows, not store bytes.
+* probing runs JVM-side, inside the metadata job that plans a filtered
+  decode: the driver hashes each filter LITERAL once
+  (``hash_pair_int`` / ``hash_pair_bytes``), folds the K probe positions
+  into constants, and ``operators.pipeline._sql_bloom_probe`` renders
+  them as one SQL predicate over the stored words (a word fetch and a
+  bit test per probe).  No Python touches per-block data and the words
+  never reach the driver, so pruning scales with metadata rows, not
+  store bytes.
 
 Hash: double hashing h(i) = h1 + i*h2 (Kirsch-Mitzenmacher) over two
 independent 32-bit streams of the value's canonical rendering —
@@ -29,10 +33,11 @@ crc32 loop was ~30% of total encode CPU at page granularity):
 * strings/binary hash with pandas' C siphash (``pd.util.hash_array``,
   two fixed 16-byte keys = two streams; one C pass over the array).
 
-Both streams are masked to 32 bits so the JVM-side probe's constant
-``h1 + i*h2`` stays comfortably inside a Catalyst long.  The stream
-definitions are a FORMAT CONSTANT: build (executor) and probe (driver
-literal hashing) must move together, and stores persist their filters.
+Both streams are masked to 32 bits so the probe constants ``h1 + i*h2``
+stay well inside a SQL BIGINT, and their word indexes inside an INT.  The
+stream definitions are a FORMAT CONSTANT: build (executor) and probe
+(driver literal hashing) must move together, and stores persist their
+filters.
 False positives only cost a wasted decode (the exact re-filter still
 runs); false negatives are impossible because every non-null value's
 bits are set from the same canonical rendering the probe uses.
@@ -42,6 +47,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute  # noqa: F401 — binds pa.compute
 
 K = 4                    # probes per value
 BITS_PER_DISTINCT = 10   # ~1.2% false-positive rate at k=4
@@ -146,8 +152,9 @@ def build(arr: pa.Array, is_string: bool) -> list[int] | None:
 
 def maybe_contains(words: list[int], v: bytes | int) -> bool:
     """Local probe (tests / driver-side checks); the production probe is
-    the Catalyst expression in ``operators.pipeline._bloom_pred``.
-    Pass bytes for the string rendering, an int for the integer one."""
+    the SQL predicate of ``operators.pipeline._sql_bloom_probe``, which
+    must agree with it bit for bit.  Pass bytes for the string rendering,
+    an int for the integer one."""
     m = len(words) * 64
     h1, h2 = (hash_pair_int(v) if isinstance(v, int)
               else hash_pair_bytes(v))

@@ -170,7 +170,8 @@ def _build_table(sample: np.ndarray):
     luts: list[np.ndarray] = []
     exp_of: dict[int, bytes] = {}
     # byte length of each symbol id's expansion (base bytes = 1; SENTINEL
-    # never appears in a candidate pair because of the `ok` mask)
+    # never appears in a candidate pair: its rows and columns of the pair
+    # count table are zeroed before merging)
     exp_len = np.ones(512, dtype=np.int64)
     stream = sample
     next_id = BASE

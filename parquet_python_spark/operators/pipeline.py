@@ -37,6 +37,7 @@ import time
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute  # noqa: F401 — binds pa.compute
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -270,7 +271,8 @@ def make_encode_group(cols: list[str], page_bytes: int = DEFAULT_PAGE_BYTES,
     column (xxhash64 over all encoded columns, added pre-shuffle).
     ``compression_name`` may be a single codec or a per-column dict."""
     comp_names = _per_column_compression(compression_name, cols)
-    comp_ids = {c: comp.resolve(n) for c, n in comp_names.items()}
+    for name in comp_names.values():
+        comp.resolve(name)  # an unavailable codec fails here, not in a task
     # per-column trial-metric hints, shared across every group/sub-block
     # this python worker encodes: the expensive sampled trials (FSST /
     # line-split / BSS-gzip) run once per column per worker instead of
@@ -281,9 +283,8 @@ def make_encode_group(cols: list[str], page_bytes: int = DEFAULT_PAGE_BYTES,
 
     def encode_group(key: tuple, tbl: pa.Table) -> pa.Table:
         part_key = int(key[0].as_py() if hasattr(key[0], "as_py") else key[0])
-        n = tbl.num_rows
         out: list[dict] = []
-        if n == 0:
+        if tbl.num_rows == 0:
             return _ARROW_BLOCKS_SCHEMA.empty_table()
         if "repo" in tbl.column_names:
             repos = pa.compute.unique(tbl["repo"])
@@ -298,39 +299,50 @@ def make_encode_group(cols: list[str], page_bytes: int = DEFAULT_PAGE_BYTES,
         # this amortizes per-block fixed costs (symbol-table builds,
         # selector sampling) that dominated with row-aligned pages
         for ci, c in enumerate(cols):
-            logical = _meta_name(c)  # dotted path in metadata
-            col = tbl[c].combine_chunks()
-            bpr = _sampled_bytes_per_row(tbl, [c])
-            rows_per_page = max(int(page_bytes / bpr), 1024)
-            for page_id, lo in enumerate(range(0, n, rows_per_page)):
-                hi = min(lo + rows_per_page, n)
-                arr = col.slice(lo, hi - lo)
-                t0 = time.perf_counter()
-                choice = selector.choose(
-                    arr, compressed=comp_ids[c] != comp.UNCOMPRESSED,
-                    hints=trial_hints.setdefault(c, {}))
-                blk = enc.encode_block(arr, choice.codec, comp_ids[c])
-                ms = (time.perf_counter() - t0) * 1000.0
-                mn, mx = _minmax_str(arr)
-                mn_n, mx_n = _minmax_num(arr, choice.dtype_id)
-                rh = (int(np.bitwise_xor.reduce(
+            def row_hash(page_id, lo, hi):
+                return (int(np.bitwise_xor.reduce(
                     rh_all[lo:hi].view(np.uint64)).astype(np.int64))
                     if rh_all is not None and ci == 0 and hi > lo else 0)
-                out.append(dict(
-                    part_key=part_key, repo=repo, split_id=split_id,
-                    page_id=page_id, col_idx=ci, column=logical,
-                    codec=choice.codec_name, compression=comp_names[c],
-                    dtype_id=choice.dtype_id, n_values=hi - lo,
-                    n_nulls=int(arr.null_count), raw_size=int(arr.nbytes),
-                    encoded_size=len(blk), encode_ms=ms,
-                    min_s=mn, max_s=mx, min_num=mn_n, max_num=mx_n,
-                    row_hash=rh,
-                    metrics=_metrics_json(choice.metrics),
-                    bloom=_page_bloom(arr, choice.dtype_id), block=blk,
-                ))
+
+            bpr = _sampled_bytes_per_row(tbl, [c])
+            out += _encode_pages(
+                tbl[c].combine_chunks(), max(int(page_bytes / bpr), 1024),
+                comp_names[c], trial_hints.setdefault(c, {}), row_hash,
+                part_key=part_key, repo=repo, split_id=split_id, col_idx=ci,
+                column=_meta_name(c))  # dotted path in metadata
         return pa.Table.from_pylist(out, schema=_ARROW_BLOCKS_SCHEMA)
 
     return encode_group
+
+
+def _encode_pages(col: pa.Array, rows_per_page: int, comp_name: str,
+                  hints: dict, row_hash, **fields) -> list[dict]:
+    """One column of one part -> its block rows: per page, the selector's
+    codec, the encoded block, min/max stats and the Bloom filter.
+    ``fields`` are shared by every page; ``row_hash(page_id, lo, hi)``
+    gives each page's lineage hash."""
+    comp_id = comp.resolve(comp_name)
+    out = []
+    for page_id, lo in enumerate(range(0, len(col), rows_per_page)):
+        hi = min(lo + rows_per_page, len(col))
+        arr = col.slice(lo, hi - lo)
+        t0 = time.perf_counter()
+        choice = selector.choose(arr, compressed=comp_id != comp.UNCOMPRESSED,
+                                 hints=hints)
+        blk = enc.encode_block(arr, choice.codec, comp_id)
+        ms = (time.perf_counter() - t0) * 1000.0
+        mn, mx = _minmax_str(arr)
+        mn_n, mx_n = _minmax_num(arr, choice.dtype_id)
+        out.append(dict(
+            fields, page_id=page_id, codec=choice.codec_name,
+            compression=comp_name, dtype_id=choice.dtype_id,
+            n_values=hi - lo, n_nulls=int(arr.null_count),
+            raw_size=int(arr.nbytes), encoded_size=len(blk), encode_ms=ms,
+            min_s=mn, max_s=mx, min_num=mn_n, max_num=mx_n,
+            row_hash=row_hash(page_id, lo, hi),
+            metrics=_metrics_json(choice.metrics),
+            bloom=_page_bloom(arr, choice.dtype_id), block=blk))
+    return out
 
 
 def _metrics_json(metrics: dict) -> str:
@@ -882,7 +894,7 @@ def write_blockstore(blocks: DataFrame, path: str, mode: str = "append",
     new_files = sorted(_list_part_files(bdir) - before)
     if not new_files:
         return None
-    new_lin = lineage_from_blocks(spark.read.parquet(*new_files))
+    new_lin = lineage_from_blocks(_read_block_files(spark, *new_files))
     ldir = f"{path}/lineage"
     if mode != "append":
         _commit_manifest(spark, path, new_lin)
@@ -976,7 +988,14 @@ def lineage_from_blocks(blocks: DataFrame) -> DataFrame:
 
 
 def read_blocks(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(f"{path}/blocks")
+    """The store's block rows, read with the known ``BLOCKS_SCHEMA``: no
+    schema-inference job, and a store written before a column existed
+    (``bloom``) reads it as NULL, which pruning treats as "keep"."""
+    return _read_block_files(spark, f"{path}/blocks")
+
+
+def _read_block_files(spark: SparkSession, *paths: str) -> DataFrame:
+    return spark.read.schema(BLOCKS_SCHEMA).parquet(*paths)
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
@@ -1007,8 +1026,7 @@ def completed_part_keys(spark: SparkSession, path: str) -> DataFrame | None:
     is column-pruned to the one part_key value per block row (the binary
     payload column is never read)."""
     try:
-        return (spark.read.parquet(f"{path}/blocks")
-                .select("part_key").distinct())
+        return read_blocks(spark, path).select("part_key").distinct()
     except Exception as e:  # noqa: BLE001 — re-raised unless path-missing
         if _is_path_missing(e):
             return None
@@ -1267,7 +1285,7 @@ def _commit_blocks_delta(spark: SparkSession, path: str,
     if affected_is_all:
         aff_uris = sorted(_list_part_files(bdir))
     else:
-        blocks = spark.read.parquet(bdir).withColumn(
+        blocks = read_blocks(spark, path).withColumn(
             "_file", F.input_file_name())
         aff_uris = [r["_file"] for r in
                     (blocks.join(F.broadcast(affected_keys), "part_key",
@@ -1301,12 +1319,12 @@ def _commit_blocks_delta(spark: SparkSession, path: str,
     # here was a scale-killer at 10^6+ parts).
     if affected_is_all and new_files:
         # no survivors: fresh lineage is just the new files' rollup
-        kept_lin = lineage_from_blocks(spark.read.parquet(*new_files))
+        kept_lin = lineage_from_blocks(_read_block_files(spark, *new_files))
     else:
         kept_lin = read_lineage(spark, path).join(
             F.broadcast(affected_keys), "part_key", "left_anti")
         if new_files:
-            replaced = (spark.read.parquet(*new_files)
+            replaced = (_read_block_files(spark, *new_files)
                         .join(F.broadcast(affected_keys), "part_key",
                               "left_semi"))
             kept_lin = kept_lin.unionByName(lineage_from_blocks(replaced))
@@ -1407,11 +1425,6 @@ def recode_blocks(blocks: DataFrame, page_bytes: int = DEFAULT_PAGE_BYTES,
         part_key = int(key[0].as_py() if hasattr(key[0], "as_py") else key[0])
         if tbl.num_rows == 0:
             return _ARROW_BLOCKS_SCHEMA.empty_table()
-        names = tbl["column"].to_pylist()
-        pages = tbl["page_id"].to_pylist()
-        cidx = tbl["col_idx"].to_pylist()
-        comp_in = tbl["compression"].to_pylist()
-        blocks_col = tbl["block"].combine_chunks()
         repos = set(tbl["repo"].to_pylist())
         repo = repos.pop() if len(repos) == 1 else None
         splits = set(tbl["split_id"].to_pylist())
@@ -1420,30 +1433,19 @@ def recode_blocks(blocks: DataFrame, page_bytes: int = DEFAULT_PAGE_BYTES,
             np.asarray(tbl["row_hash"].combine_chunks().fill_null(0),
                        dtype=np.int64)
             .view(np.uint64)).astype(np.int64))
-        per_col: dict[str, list] = {}
         col_order: dict[str, int] = {}
         col_comp: dict[str, str] = {}
-        for i, c in enumerate(names):
-            per_col.setdefault(c, []).append((pages[i], i))
-            col_order.setdefault(c, cidx[i])
-            col_comp.setdefault(c, comp_in[i])
-        ordered = sorted(per_col, key=lambda c: (col_order[c], c))
+        for c, ci, cp in zip(tbl["column"].to_pylist(),
+                             tbl["col_idx"].to_pylist(),
+                             tbl["compression"].to_pylist()):
+            col_order.setdefault(c, ci)
+            col_comp.setdefault(c, cp)
+        ordered = sorted(col_order, key=lambda c: (col_order[c], c))
         override = (_per_column_compression(compression, ordered)
                     if compression is not None else None)
         out: list[dict] = []
         trial_hints: dict[str, dict] = {}
-        decoded: dict[str, pa.Array] = {}
-        for c in ordered:
-            lst = per_col[c]
-            page_ids = [p for p, _ in lst]
-            if len(set(page_ids)) != len(page_ids):
-                raise ValueError(
-                    f"part has duplicate pages for column {c!r} — the same "
-                    "data was appended twice (use resume=True for retries, "
-                    "or merge_stores to consolidate overlapping stores)")
-            arrs = [enc.decode_block(blocks_col[i].as_py())
-                    for _, i in sorted(lst)]
-            decoded[c] = pa.concat_arrays(arrs) if len(arrs) > 1 else arrs[0]
+        decoded = _decode_columns(tbl)
         if sort_by:
             missing = [c for c in sort_by if c not in decoded]
             if missing:
@@ -1456,35 +1458,15 @@ def recode_blocks(blocks: DataFrame, page_bytes: int = DEFAULT_PAGE_BYTES,
             decoded = {c: a.take(perm) for c, a in decoded.items()}
         for ci, c in enumerate(ordered):
             arr_all = decoded[c]
-            n = len(arr_all)
-            comp_name = override[c] if override is not None else col_comp[c]
-            comp_id = comp.resolve(comp_name)
-            bpr = max(arr_all.nbytes / max(n, 1), 1.0)
-            rows_per_page = max(int(page_bytes / bpr), 1024)
-            for page_id, lo in enumerate(range(0, n, rows_per_page)):
-                hi = min(lo + rows_per_page, n)
-                arr = arr_all.slice(lo, hi - lo)
-                t0 = time.perf_counter()
-                choice = selector.choose(
-                    arr, compressed=comp_id != comp.UNCOMPRESSED,
-                    hints=trial_hints.setdefault(c, {}))
-                blk = enc.encode_block(arr, choice.codec, comp_id)
-                ms = (time.perf_counter() - t0) * 1000.0
-                mn, mx = _minmax_str(arr)
-                mn_n, mx_n = _minmax_num(arr, choice.dtype_id)
-                rh = rh_total if ci == 0 and page_id == 0 else 0
-                out.append(dict(
-                    part_key=part_key, repo=repo, split_id=split_id,
-                    page_id=page_id, col_idx=ci, column=c,
-                    codec=choice.codec_name, compression=comp_name,
-                    dtype_id=choice.dtype_id, n_values=hi - lo,
-                    n_nulls=int(arr.null_count), raw_size=int(arr.nbytes),
-                    encoded_size=len(blk), encode_ms=ms,
-                    min_s=mn, max_s=mx, min_num=mn_n, max_num=mx_n,
-                    row_hash=rh,
-                    metrics=_metrics_json(choice.metrics),
-                    bloom=_page_bloom(arr, choice.dtype_id), block=blk,
-                ))
+            bpr = max(arr_all.nbytes / max(len(arr_all), 1), 1.0)
+            out += _encode_pages(
+                arr_all, max(int(page_bytes / bpr), 1024),
+                override[c] if override is not None else col_comp[c],
+                trial_hints.setdefault(c, {}),
+                lambda page_id, lo, hi: (rh_total if ci == 0 and page_id == 0
+                                         else 0),
+                part_key=part_key, repo=repo, split_id=split_id, col_idx=ci,
+                column=c)
         return pa.Table.from_pylist(out, schema=_ARROW_BLOCKS_SCHEMA)
 
     return blocks.groupBy("part_key").applyInArrow(recode_group,
@@ -1623,7 +1605,7 @@ def merge_stores(spark: SparkSession, paths: list[str], out_path: str) -> dict:
                                     allowMissingColumns=True)
     merged.write.mode("overwrite").option("compression", "none").parquet(
         f"{out_path}/blocks")
-    written = spark.read.parquet(f"{out_path}/blocks")
+    written = read_blocks(spark, out_path)
     lineage_from_blocks(written).write.mode("overwrite").parquet(
         f"{out_path}/lineage")
     # merged plan: DETERMINISTICALLY first-store-wins per repo (future
@@ -1653,8 +1635,35 @@ def merge_stores(spark: SparkSession, paths: list[str], out_path: str) -> dict:
 
 # -------------------------------------------------------------------- decode
 
+def _decode_columns(tbl: pa.Table) -> dict[str, pa.Array]:
+    """One part's block rows -> {column: decoded array}: per column, the
+    pages in page_id order, concatenated — pages are per-column
+    (independent row splits), but every column covers the same rows in
+    the same order."""
+    names = tbl["column"].to_pylist()
+    pages = tbl["page_id"].to_pylist()
+    blocks_col = tbl["block"].combine_chunks()
+    per_col: dict[str, list] = {}
+    for i, c in enumerate(names):  # one iteration per block (not per row)
+        per_col.setdefault(c, []).append((pages[i], i))
+    out = {}
+    for c, lst in per_col.items():
+        if len({p for p, _ in lst}) != len(lst):
+            # duplicate (column, page_id) pairs have NO consistent
+            # cross-column ordering — concatenating them risks silent
+            # row misalignment, so refuse loudly
+            raise ValueError(
+                f"part has duplicate pages for column {c!r} — the same "
+                "data was appended twice (use resume=True for retries, "
+                "or merge_stores to consolidate overlapping stores)")
+        arrs = [enc.decode_block(blocks_col[i].as_py())
+                for _, i in sorted(lst)]
+        out[c] = pa.concat_arrays(arrs) if len(arrs) > 1 else arrs[0]
+    return out
+
+
 def _schema_from_column_rows(rows) -> StructType:
-    """(column, col_idx, dts) records -> decoded StructType.
+    """(name, col_idx, dts) records -> decoded StructType.
 
     Schema EVOLUTION aware: generations appended with extra columns give
     the union of all column names (first-seen col_idx order, so old
@@ -1663,8 +1672,8 @@ def _schema_from_column_rows(rows) -> StructType:
     loudly rather than mis-decoding (type widening is re-encode-time
     work — ``recode_blocks`` — not read-time guesswork)."""
     from pyspark.sql.pandas.types import from_arrow_type
-    rows = sorted(rows, key=lambda r: (r["col_idx"], r["column"]))
-    conflicts = {r["column"]: sorted(r["dts"]) for r in rows
+    rows = sorted(rows, key=lambda r: (r["col_idx"], r["name"]))
+    conflicts = {r["name"]: sorted(r["dts"]) for r in rows
                  if len(r["dts"]) > 1}
     if conflicts:
         raise ValueError(
@@ -1673,7 +1682,7 @@ def _schema_from_column_rows(rows) -> StructType:
     # spark_safe: unsigned widths promote to the next wider signed type
     # (Spark has no unsigned types; reference promotion api.py:974-996)
     return StructType([
-        StructField(r["column"],
+        StructField(r["name"],
                     from_arrow_type(enc.spark_safe_arrow_type(sorted(r["dts"])[0])),
                     True)
         for r in rows])
@@ -1683,95 +1692,102 @@ def infer_schema_from_blocks(blocks: DataFrame) -> StructType:
     """Recover the decoded schema (name, order, arrow dtype) from block
     metadata — the thrift-footer-schema analogue (fastparquet/schema.py).
     See ``_schema_from_column_rows`` for the evolution semantics."""
-    rows = (blocks.groupBy("column")
-            .agg(F.min("col_idx").alias("col_idx"),
-                 F.collect_set("dtype_id").alias("dts"))
+    return _plan_decode(blocks, None, [])[0]
+
+
+def _plan_decode(blocks: DataFrame, proj, groups):
+    """ONE metadata job over the payload-free block columns plans a decode
+    -> (schema, kept part_keys or None when nothing prunes, {sizer column:
+    uncovered part_keys}).  Per projected column (``proj``; None = all):
+    min ``col_idx`` and the dtype set, i.e. the schema.  When pruning or
+    projecting, each block row with its pruning flags (``_prune_flags``)
+    is also aggregated per part (an explode: one shuffle serves both
+    keys): is the part kept, and does it hold any projected column?  A
+    part holding none (written before those columns existed) decodes
+    through its sizer column, whose length sizes the NULL fill instead of
+    the part silently vanishing (fastparquet NA-fills absent columns,
+    api.py:566-573).  Only schema rows and kept / uncovered parts are
+    collected."""
+    flags, keep = _prune_flags(
+        blocks, groups,
+        ["col_idx", "encoded_size",
+         (F.lit(True) if proj is None else proj).alias("_proj")])
+    prunes = keep != "true"
+    aggs = [F.expr("min(col_idx) AS col_idx"),
+            F.expr("collect_set(dtype_id) AS dts")]
+    if not prunes and proj is None:  # every part holds every column
+        rows = flags.groupBy(F.col("column").alias("name")).agg(*aggs).collect()
+        return _schema_from_column_rows(rows), None, {}
+    rows = (flags
+            .withColumn("_set",
+                        F.expr("explode(IF(_proj, array(0, 1), array(1)))"))
+            .groupBy(F.expr("IF(_set = 0, `column`, NULL) AS name"),
+                     F.expr("IF(_set = 1, part_key, NULL) AS part_key"))
+            .agg(*aggs, F.expr(f"{keep} AS _keep"),
+                 # an uncovered part's (column, encoded_size) pages
+                 F.expr("IF(bool_or(_proj), NULL, collect_list(IF(_proj, NULL,"
+                        " struct(`column`, encoded_size)))) AS pages"))
+            .where(f"name IS NOT NULL OR (_keep AND ({str(prunes).lower()}"
+                   " OR pages IS NOT NULL))")
             .collect())
-    return _schema_from_column_rows(rows)
+    sizers: dict[str, list[int]] = {}
+    for r in rows:
+        if r["pages"] is not None:
+            # the column with the smallest encoded footprint, name as the
+            # tiebreak (not just the first name: r4 ADVICE)
+            size: dict[str, int] = {}
+            for c, b in r["pages"]:
+                size[c] = size.get(c, 0) + b
+            sizer = min(size, key=lambda c: (size[c], c))
+            sizers.setdefault(sizer, []).append(r["part_key"])
+    return (_schema_from_column_rows([r for r in rows
+                                      if r["name"] is not None]),
+            [r["part_key"] for r in rows if r["name"] is None] if prunes
+            else None, sizers)
+
+
+def _part_key_in(keys: list[int]):
+    """``part_key IN (...)`` as SQL text: one py4j call, pushed down."""
+    return F.expr(f"part_key IN ({', '.join(str(int(k)) for k in keys)})")
 
 
 def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
                   filters=None, keep_part_key: bool = False,
                   reassemble: bool = True,
                   tasks: int | None = None) -> DataFrame:
-    """Blocks -> original rows. Projection prunes blocks before the shuffle;
-    ``filters`` additionally prunes whole blocks on min/max stats, then
-    re-applies the exact predicate on decoded rows (the reference's two-level
-    scheme: filter_row_groups then row_filter, api.py:691-794).
+    """Blocks -> original rows (the reference's two-level read:
+    filter_row_groups, then the row filter, api.py:691-794).
+
+    One metadata job plans the call (``_plan_decode``): the projected
+    schema, the schema-evolution coverage check and, under ``filters``,
+    the parts whose stats and Bloom filters may hold a match
+    (``prune_blocks`` semantics).  When no part survives the result is an
+    empty frame the optimizer folds to an empty local relation: no decode
+    job runs.  Otherwise the decode scans only the projected columns of
+    the kept parts (``column IN`` / ``part_key IN``, pushed into the block
+    scan), groups them by part in Python, and re-applies the exact
+    predicate to the decoded rows.
+
     ``keep_part_key=True`` prepends the originating part_key to every row
     (store-maintenance ops re-encode rows under their original parts).
     ``tasks`` caps concurrent decode workers (hash repartition on
     part_key that the group-decode reuses — same memory-bandwidth
     rationale as ``run_encode(encode_tasks=)``)."""
     user_cols = list(columns) if columns is not None else None
-    if filters is not None:
-        need = {c for grp in _norm_filters(filters) for (c, _, _) in grp}
-        if columns is not None:
-            columns = list(dict.fromkeys(list(columns) + [c for c in need if c not in columns]))
+    groups = _norm_filters(filters)
+    proj = None
     if columns is not None:
+        need = [c for grp in groups for (c, _, _) in grp]
+        columns = list(dict.fromkeys(list(columns) + need))
         # a requested struct column matches its dotted children; a column
         # literally named 'a.b' matches its META_ESC metadata spelling
         match = list(dict.fromkeys(
             list(columns) + [c.replace(".", META_ESC) for c in columns
                              if "." in c]))
-        cond = F.col("column").isin(match)
+        proj = F.col("column").isin(match)
         for c in columns:
-            cond = cond | F.col("column").startswith(c + ".")
-        all_blocks = blocks
-        blocks = blocks.where(cond)
-        # infer the schema BEFORE stats pruning: a filter that prunes
-        # every part must still yield an empty frame with the right
-        # columns, not an unresolvable zero-column plan.
-        # ONE metadata job (grouping sets) serves both the projected
-        # schema (per-column rows) and the schema-evolution coverage
-        # check (the grand-total row): does any part lack EVERY projected
-        # column?  Such a part would form no decode group and its rows
-        # would silently vanish instead of null-filling (r3 ADVICE; the
-        # reference NA-fills absent columns for every row group,
-        # fastparquet api.py:566-573).  Column-pruned — payload never read.
-        grows = (all_blocks
-                 .withColumn("_proj", cond)
-                 .groupingSets([[F.col("column")], []], F.col("column"))
-                 .agg(F.min(F.when(F.col("_proj"), F.col("col_idx")))
-                      .alias("col_idx"),
-                      F.collect_set(F.when(F.col("_proj"), F.col("dtype_id")))
-                      .alias("dts"),
-                      F.countDistinct("part_key").alias("n_all"),
-                      F.countDistinct(F.when(F.col("_proj"),
-                                             F.col("part_key")))
-                      .alias("n_cov"),
-                      F.grouping("column").alias("_g"))
-                 .collect())
-        schema = _schema_from_column_rows(
-            [r for r in grows if r["_g"] == 0 and r["dts"]])
-        total = next((r for r in grows if r["_g"] == 1), None)
-        if total is not None and total["n_cov"] < total["n_all"]:
-            # retain one SIZER column per uncovered part — its decoded
-            # length sizes the null fill; decode_group ignores
-            # non-projected columns otherwise.  Pick the column with the
-            # SMALLEST encoded footprint (r4 ADVICE: lexicographic min
-            # could select a wide text column and decode its whole
-            # payload just to count rows), name as the tiebreak.
-            percol = (all_blocks
-                      .groupBy("part_key", "column")
-                      .agg(F.max(cond.cast("int")).alias("_proj"),
-                           F.sum("encoded_size").alias("_bytes")))
-            uncovered = (percol
-                         .groupBy("part_key")
-                         .agg(F.max("_proj").alias("_has"),
-                              F.min(F.when(F.col("_proj") == 0, F.struct(
-                                  F.col("_bytes"), F.col("column"))))
-                              .alias("_sz"))
-                         .where(F.col("_has") == 0)
-                         .select("part_key",
-                                 F.col("_sz.column").alias("_sizer")))
-            sizer_blocks = (all_blocks
-                            .join(uncovered, "part_key", "inner")
-                            .where(F.col("column") == F.col("_sizer"))
-                            .drop("_sizer"))
-            blocks = blocks.unionByName(sizer_blocks)
-    else:
-        schema = infer_schema_from_blocks(blocks)
+            proj = proj | F.col("column").startswith(c + ".")
+    schema, kept, sizers = _plan_decode(blocks, proj, groups)
     if filters is not None:
         # resolve filter names against the flat metadata schema: exact
         # (struct-path) spelling wins; else the escaped literal-dot one
@@ -1780,60 +1796,47 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
                      else (c.replace(".", META_ESC)
                            if c.replace(".", META_ESC) in names else c),
                      op, v) for (c, op, v) in grp]
-                   for grp in _norm_filters(filters)]
-        blocks = prune_blocks(blocks, filters)
+                   for grp in groups]
     if keep_part_key:
         schema = StructType(
             [StructField("part_key", LongType(), False)] + list(schema.fields))
-
     want_cols = [f.name for f in schema.fields if f.name != "part_key"]
     from pyspark.sql.pandas.types import to_arrow_schema
     expected = to_arrow_schema(schema)
 
     def decode_group(key: tuple, tbl: pa.Table) -> pa.Table:
-        """One part's blocks: per column, decode pages in page_id order and
-        concatenate — pages are per-column (independent row splits), but
-        every column covers the same rows in the same order."""
-        names = tbl["column"].to_pylist()
-        pages = tbl["page_id"].to_pylist()
-        blocks_col = tbl["block"].combine_chunks()
-        per_col: dict[str, list] = {}
-        for i in range(len(names)):  # one iteration per block (not per row)
-            per_col.setdefault(names[i], []).append((pages[i], i))
-        data = {}
-        for c, lst in per_col.items():
-            page_ids = [p for p, _ in lst]
-            if len(set(page_ids)) != len(page_ids):
-                # duplicate (column, page_id) pairs have NO consistent
-                # cross-column ordering — concatenating them risks silent
-                # row misalignment, so refuse loudly
-                raise ValueError(
-                    f"part has duplicate pages for column {c!r} — the same "
-                    "data was appended twice (use resume=True for retries, "
-                    "or merge_stores to consolidate overlapping stores)")
-            arrs = [enc.decode_block(blocks_col[i].as_py())
-                    for _, i in sorted(lst)]
-            data[c] = pa.concat_arrays(arrs) if len(arrs) > 1 else arrs[0]
+        data = _decode_columns(tbl)
         # schema evolution: a part written before a column existed serves
-        # NULLs for it (parquet row-group semantics; fastparquet fills
-        # absent columns with NA, api.py:566-573) — sized off any sibling
-        # column, so at least one column present in every part must be in
-        # the projection (true whenever any original column is requested)
+        # NULLs for it (parquet row-group semantics), sized off any decoded
+        # column — a projected sibling or the plan's sizer column
         n_rows = len(next(iter(data.values()))) if data else 0
         cols = {c: data.get(c) if data.get(c) is not None
                 else pa.nulls(n_rows, type=expected.field(c).type)
                 for c in want_cols}
         if keep_part_key:
             pk = int(key[0].as_py() if hasattr(key[0], "as_py") else key[0])
-            n = len(next(iter(cols.values()))) if cols else 0
-            cols = {"part_key": pa.array(np.full(n, pk, dtype=np.int64)),
+            cols = {"part_key": pa.array(np.full(n_rows, pk, dtype=np.int64)),
                     **cols}
         # cast to Spark's exact arrow schema (tz metadata on timestamps)
         return pa.table(cols).cast(expected)
 
-    if tasks is not None:
-        blocks = blocks.repartition(int(tasks), "part_key")
-    out = blocks.groupBy("part_key").applyInArrow(decode_group, schema)
+    if kept == []:
+        out = (blocks.where("false")
+               .selectExpr(*[f"CAST({'NULL' if f.nullable else '0'} AS "
+                             f"{f.dataType.simpleString()})"
+                             for f in schema.fields])
+               .toDF(*[f.name for f in schema.fields]))
+    else:
+        cond = F.lit(True) if proj is None else proj
+        if kept is not None:
+            cond = cond & _part_key_in(kept)
+        for col, pks in sizers.items():
+            # decode_group ignores non-projected columns but for sizing
+            cond = cond | ((F.col("column") == col) & _part_key_in(pks))
+        blocks = blocks.where(cond)
+        if tasks is not None:
+            blocks = blocks.repartition(int(tasks), "part_key")
+        out = blocks.groupBy("part_key").applyInArrow(decode_group, schema)
     if filters is not None:
         out = filt.apply_filters(out, filters)
         if user_cols is not None:
@@ -1862,154 +1865,215 @@ _NUMERIC_DTS = (enc.DT_INT64, enc.DT_INT32, enc.DT_INT16, enc.DT_INT8,
                 enc.DT_BOOL, enc.DT_FLOAT64, enc.DT_FLOAT32,
                 enc.DT_TIMESTAMP_US, enc.DT_DATE32,
                 enc.DT_UINT64, enc.DT_UINT32, enc.DT_UINT16, enc.DT_UINT8)
-
-
-def _prune_literals(v) -> dict:
-    """Typed renderings of one filter value for stats comparison: ``s``
-    (string), ``num`` (plain numeric), ``ts`` (µs since epoch), ``days``
-    (days since epoch, fractional for datetimes).  A key is None when the
-    value can't be read as that type — blocks of that dtype are then
-    ineligible for pruning (kept).  float() is monotonic, so comparing
-    exact int/timestamp values in double space against the conservative
-    double bounds never excludes a matching part."""
-    import datetime
-
-    out = {"s": None, "num": None, "ts": None, "days": None}
-    if isinstance(v, str):
-        out["s"] = v
-        try:
-            t = pd.Timestamp(v)
-            out["ts"] = float(t.value // 1000)
-            out["days"] = t.value / 86_400_000_000_000
-        except (ValueError, OverflowError):
-            pass
-    elif isinstance(v, bool) or isinstance(v, (int, float,
-                                               np.integer, np.floating)):
-        # a NaN literal can't be range-compared against finite stats
-        # (Spark orders NaN above +inf) — leave num None so every block
-        # stays eligible and the exact re-filter decides
-        if not (isinstance(v, (float, np.floating)) and np.isnan(v)):
-            out["num"] = float(v)
-    elif isinstance(v, datetime.datetime):
-        t = pd.Timestamp(v)
-        out["ts"] = float(t.value // 1000)
-        out["days"] = t.value / 86_400_000_000_000
-    elif isinstance(v, datetime.date):
-        days = (v - datetime.date(1970, 1, 1)).days
-        out["days"] = float(days)
-        out["ts"] = float(days) * 86_400_000_000.0
-    return out
-
-
-def _num_lit_expr(lits: dict):
-    """Per-block-row literal: picks the rendering that matches the block's
-    integer-view units (µs for timestamps, days for date32)."""
-    return (F.when(F.col("dtype_id") == enc.DT_TIMESTAMP_US,
-                   F.lit(lits["ts"]).cast("double"))
-            .when(F.col("dtype_id") == enc.DT_DATE32,
-                  F.lit(lits["days"]).cast("double"))
-            .otherwise(F.lit(lits["num"]).cast("double")))
-
-
-def _bloom_item_hashes(v) -> dict:
-    """(h1, h2) stream pairs per canonical rendering of one equality
-    literal, keyed like ``_prune_literals``: ``str`` (utf-8 / raw bytes),
-    ``int`` (plain integer view), ``ts`` (µs since epoch), ``days``.  A
-    None rendering keeps blocks of that dtype (can't refute)."""
-    import datetime
-
-    out = {"str": None, "int": None, "ts": None, "days": None}
-
-    def _ival(x):
-        try:
-            i = int(x)
-        except (TypeError, ValueError):
-            return None
-        if not -(1 << 63) <= i < (1 << 63):  # outside the int64 rendering
-            return None
-        return bloom.hash_pair_int(i)
-
-    if isinstance(v, (str, bytes)):
-        out["str"] = bloom.hash_pair_bytes(
-            v.encode("utf-8") if isinstance(v, str) else v)
-        try:
-            t = pd.Timestamp(v)
-            out["ts"] = _ival(t.value // 1000)
-            if t.value % 86_400_000_000_000 == 0:
-                out["days"] = _ival(t.value // 86_400_000_000_000)
-        except (ValueError, OverflowError, TypeError):
-            pass
-    elif isinstance(v, bool):
-        pass  # bools carry no bloom
-    elif isinstance(v, (int, np.integer)):
-        out["int"] = _ival(v)
-    elif isinstance(v, (float, np.floating)):
-        if float(v).is_integer():  # x == 3.0 can match int 3
-            out["int"] = _ival(v)
-    elif isinstance(v, datetime.datetime):
-        t = pd.Timestamp(v)
-        out["ts"] = _ival(t.value // 1000)
-        if t.value % 86_400_000_000_000 == 0:
-            out["days"] = _ival(t.value // 86_400_000_000_000)
-    elif isinstance(v, datetime.date):
-        days = (v - datetime.date(1970, 1, 1)).days
-        out["days"] = _ival(days)
-        out["ts"] = _ival(days * 86_400_000_000)
-    return out
-
-
-def _bloom_probe(words, hp: tuple[int, int]):
-    """Catalyst maybe-contains: K constant double-hash positions masked by
-    the per-row filter size (a power of two), each bit fetched with
-    element_at + bit_get — pruning runs JVM-side over metadata rows
-    only."""
-    m_mask = F.size(words).cast("long") * 64 - 1
-    cond = F.lit(True)
-    for i in range(bloom.K):
-        pos = F.lit(int(hp[0] + i * hp[1])).bitwiseAND(m_mask)
-        word = F.element_at(words, F.shiftrightunsigned(pos, 6).cast("int") + 1)
-        cond = cond & (F.bit_get(word, pos.bitwiseAND(F.lit(63)).cast("int"))
-                       == 1)
-    return cond
-
-
+# numeric stats dtypes other than timestamps and dates
+_PLAIN_NUM_DTS = tuple(d for d in _NUMERIC_DTS
+                       if d not in (enc.DT_TIMESTAMP_US, enc.DT_DATE32))
 _BLOOM_PLAIN_INT_DTS = (enc.DT_INT64, enc.DT_INT32, enc.DT_INT16,
                         enc.DT_INT8, enc.DT_UINT64, enc.DT_UINT32,
                         enc.DT_UINT16, enc.DT_UINT8)
 
 
-def _bloom_item_pred(words, v):
-    """Per-block-row: could this block contain ``v``?  Picks the hash
-    rendering matching the block's dtype (like ``_num_lit_expr``); blocks
-    without a filter, or dtypes without a rendering, stay possible."""
-    hs = _bloom_item_hashes(v)
+def _literal_views(v) -> dict:
+    """Typed renderings of one filter value, each None when the value
+    can't be read as that type (blocks of that dtype are then kept):
+    ``s`` (str / bytes), ``num`` (a plain number), ``ts`` (µs since
+    epoch) and ``days`` (days since epoch, fractional off midnight).
+    float() is monotonic, so comparing them in double space against the
+    conservative double bounds never excludes a matching part."""
+    import datetime
 
-    def p(hp):
-        return _bloom_probe(words, hp) if hp is not None else F.lit(True)
+    out = dict.fromkeys(("s", "num", "ts", "days"))
+    t = None
+    if isinstance(v, (str, bytes)):
+        out["s"] = v
+        try:
+            t = pd.Timestamp(v)
+        except (ValueError, OverflowError, TypeError):
+            pass
+    elif isinstance(v, (bool, int, float, np.integer, np.floating)):
+        # a NaN literal can't be range-compared against finite stats
+        # (Spark orders NaN above +inf) — leave num None so every block
+        # stays eligible and the exact re-filter decides
+        if not (isinstance(v, (float, np.floating)) and np.isnan(v)):
+            out["num"] = v
+    elif isinstance(v, datetime.datetime):
+        t = pd.Timestamp(v)
+    elif isinstance(v, datetime.date):
+        out["days"] = (v - datetime.date(1970, 1, 1)).days
+        out["ts"] = out["days"] * 86_400_000_000
+    if t is not None:
+        out["ts"] = t.value // 1000
+        days, rem = divmod(t.value, 86_400_000_000_000)
+        out["days"] = days if rem == 0 else t.value / 86_400_000_000_000
+    return out
 
-    chain = (F.when(F.col("dtype_id").isin(list(_BLOOM_STR_DTS)),
-                    p(hs["str"]))
-             .when(F.col("dtype_id") == enc.DT_TIMESTAMP_US, p(hs["ts"]))
-             .when(F.col("dtype_id") == enc.DT_DATE32, p(hs["days"]))
-             .when(F.col("dtype_id").isin(list(_BLOOM_PLAIN_INT_DTS)),
-                   p(hs["int"]))
-             .otherwise(F.lit(True)))
-    return F.when(words.isNull(), F.lit(True)).otherwise(chain)
+
+def _bloom_hashes(lt: dict) -> dict:
+    """(h1, h2) stream pairs per Bloom rendering of one literal's views:
+    ``str`` (utf-8 / raw bytes), ``int`` (plain integer view), ``ts``
+    (µs), ``days``; None where no exact int64 rendering exists (bools
+    carry no Bloom filter)."""
+    def ival(x):
+        if x is None or not -(1 << 63) <= int(x) < (1 << 63):
+            return None
+        return bloom.hash_pair_int(int(x))
+
+    s, n, days = lt["s"], lt["num"], lt["days"]
+    integral = (isinstance(n, (int, np.integer)) and not isinstance(n, bool)
+                # x == 3.0 can match int 3
+                or isinstance(n, (float, np.floating)) and n.is_integer())
+    return {"str": None if s is None else bloom.hash_pair_bytes(
+                s.encode("utf-8") if isinstance(s, str) else s),
+            "int": ival(n) if integral else None,
+            "ts": ival(lt["ts"]),
+            "days": ival(days) if isinstance(days, int) else None}
 
 
-def _range_pred(lo, hi, lit, op):
-    """Can a value satisfying ``x op lit`` exist in [lo, hi]?"""
-    if op in ("==", "="):
-        return (lo <= lit) & (hi >= lit)
-    if op == "<":
-        return lo < lit
-    if op == "<=":
-        return lo <= lit
-    if op == ">":
-        return hi > lit
-    if op == ">=":
-        return hi >= lit
-    return F.lit(True)  # != / not in: stats can't disprove cheaply
+# The pruning predicate is SQL text: integer and double constants are
+# folded in when the plan is built; string literals are elements of one
+# array-of-literals column, referenced as ``_lit[i]`` and never spliced
+# into the text.  Building it costs a few py4j calls however many probes
+# it holds.
+
+def _sql_in(vals) -> str:
+    return "(" + ", ".join(str(v) for v in vals) + ")"
+
+
+def _sql_double(x: float) -> str:
+    """An exact DOUBLE constant: ``repr`` round-trips, and the ``D``
+    suffix keeps it a DOUBLE, not a DECIMAL."""
+    if np.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{float(x)!r}D"
+
+
+def _sql_any(terms) -> str:
+    terms = list(terms)
+    if "true" in terms:
+        return "true"
+    return "(" + " OR ".join(terms) + ")" if terms else "false"
+
+
+def _sql_case(branches) -> str:
+    """CASE over DISJOINT (condition, value) branches, ELSE true — so an
+    always-true branch can be dropped."""
+    whens = [f"WHEN {c} THEN {v}" for c, v in branches if v != "true"]
+    return f"CASE {' '.join(whens)} ELSE true END" if whens else "true"
+
+
+_RANGE_SQL = {"==": "({lo} <= {x} AND {hi} >= {x})",
+              "<": "{lo} < {x}", "<=": "{lo} <= {x}",
+              ">": "{hi} > {x}", ">=": "{hi} >= {x}"}
+
+
+def _sql_bloom_probe(hp: tuple[int, int] | None) -> str:
+    """``bloom.maybe_contains`` over the row's words: the K double-hash
+    positions are constants, so each probe is one word fetch (its
+    index masked by the power-of-two filter size) and one bit test."""
+    if hp is None:
+        return "true"
+    probes = []
+    for i in range(bloom.K):
+        p = hp[0] + i * hp[1]
+        probes.append(f"bit_get(get(bloom, {p >> 6} & (size(bloom) - 1)), "
+                      f"{p & 63}) = 1")
+    return "(" + " AND ".join(probes) + ")"
+
+
+def _sql_maybe(op: str, v, has_bloom: bool, lit) -> str | None:
+    """Row-level SQL: can this block row hold an ``x`` with ``x op v``?
+    Yes unless its min/max stats or its Bloom filter rule every literal
+    out; rows without usable stats (none stored, a NULL truncated max, a
+    literal unreadable as the row's dtype) stay possible.  None for ops
+    stats can't disprove (``!=``, ``not in``).  ``lit(s)`` returns the
+    SQL reference of a string literal."""
+    op = "==" if op == "=" else op
+    if op not in ("==", "<", "<=", ">", ">=", "in"):
+        return None
+    items = list(v) if op == "in" else [v]
+    rng = _RANGE_SQL["==" if op == "in" else op]
+    need = ((["min"] if op not in (">", ">=") else [])
+            + (["max"] if op not in ("<", "<=") else []))
+
+    def elig(kind: str, dts) -> str:
+        return " AND ".join([f"dtype_id IN {_sql_in(dts)}"]
+                            + [f"{b}_{kind} IS NOT NULL" for b in need])
+
+    lits = [_literal_views(x) for x in items]
+    branches = []
+    if all(isinstance(lt["s"], str) for lt in lits):
+        branches.append((elig("s", [enc.DT_STRING]), _sql_any(
+            rng.format(lo="min_s", hi="max_s", x=lit(lt["s"]))
+            for lt in lits)))
+    # a NaN-bearing page stores max +inf, and Spark orders NaN above +inf:
+    # only ``>= +inf`` keeps such a page for ``> +inf``
+    def nrng(x):
+        return _RANGE_SQL[">="] if op == ">" and x == np.inf else rng
+
+    # stats of timestamps and dates are in their integer-view units
+    for dts, key in (([enc.DT_TIMESTAMP_US], "ts"), ([enc.DT_DATE32], "days"),
+                     (_PLAIN_NUM_DTS, "num")):
+        xs = [lt[key] for lt in lits]
+        branches.append((elig("num", dts), "true" if None in xs else _sql_any(
+            nrng(x).format(lo="min_num", hi="max_num",
+                           x=_sql_double(float(x)))
+            for x in xs)))
+    terms = [_sql_case(branches)]
+    if has_bloom and op in ("==", "in"):
+        # equality literals probe the page's Bloom filter — the one pruner
+        # that works on high-cardinality UNSORTED columns
+        hs = [_bloom_hashes(lt) for lt in lits]
+        probe = _sql_case(
+            (f"dtype_id IN {_sql_in(dts)}",
+             _sql_any(_sql_bloom_probe(h[key]) for h in hs))
+            for dts, key in ((_BLOOM_STR_DTS, "str"),
+                             ([enc.DT_TIMESTAMP_US], "ts"),
+                             ([enc.DT_DATE32], "days"),
+                             (_BLOOM_PLAIN_INT_DTS, "int")))
+        if probe != "true":
+            terms.append(f"coalesce(bloom IS NULL OR {probe}, true)")
+    return " AND ".join(t for t in terms if t != "true") or "true"
+
+
+def _prune_flags(blocks: DataFrame, groups, extra=()) -> tuple[DataFrame, str]:
+    """The one pruning implementation -> (block rows with ``part_key``,
+    ``column``, ``dtype_id``, ``extra`` and per filter triple ``i`` the
+    flags ``_h<i>``: the row is of the triple's column, and ``_m<i>``: it
+    also may hold a match (``_sql_maybe``); the aggregate SQL keeping a
+    part: OR over groups of AND over triples of ``NOT bool_or(_h<i>) OR
+    bool_or(_m<i>)``).  A part drops only when every page of the column
+    rules the triple out.  A dotted name matches both its struct-path and
+    escaped literal-dot spellings (keeping more is always safe)."""
+    strs: list[str] = []
+
+    def lit(s: str) -> str:
+        strs.append(s)
+        return f"_lit[{len(strs) - 1}]"
+
+    has_bloom = "bloom" in blocks.columns  # stores predate the bloom column
+    flags, keep_groups = [], []
+    for grp in groups:
+        terms = []
+        for c, op, v in grp:
+            maybe = _sql_maybe(op, v, has_bloom, lit)
+            if maybe is None:
+                continue
+            i = len(flags) // 2
+            names = [c] + ([c.replace(".", META_ESC)] if "." in c else [])
+            is_col = f"`column` IN ({', '.join(lit(n) for n in names)})"
+            flags += [f"{is_col} AS _h{i}", f"{is_col} AND {maybe} AS _m{i}"]
+            terms.append(f"(NOT bool_or(_h{i}) OR bool_or(_m{i}))")
+        keep_groups.append(" AND ".join(terms) or "true")
+    keep = ("true" if not keep_groups or "true" in keep_groups
+            else " OR ".join(f"({g})" for g in keep_groups))
+    cols = ["part_key", "column", "dtype_id", *extra]
+    if keep == "true":
+        return blocks.select(*cols), keep
+    stats = ["min_s", "max_s", "min_num", "max_num"] + (
+        ["bloom"] if has_bloom else [])
+    out = blocks.select(*cols, *stats,
+                        F.array(*[F.lit(s) for s in strs]).alias("_lit"))
+    return out.selectExpr("*", *flags), keep
 
 
 def prune_blocks(blocks: DataFrame, filters) -> DataFrame:
@@ -2022,86 +2086,19 @@ def prune_blocks(blocks: DataFrame, filters) -> DataFrame:
     Strings compare against min_s/max_s (lexicographic, upper-bound-safe
     truncation); ints / floats / bools / timestamps / dates against the
     typed min_num/max_num doubles (reference typed-stat coercion:
-    api.py:1425-1518).  Ineligible blocks (no stats, unparseable literal,
-    unsupported dtype) are kept — correctness is preserved by the exact
-    re-filter after decode."""
+    api.py:1425-1518); ``==`` / ``in`` literals also probe the page's
+    Bloom filter.  Pages without usable stats are kept; the exact
+    re-filter after decode decides.  Lazy: ``blocks`` semi-joined with
+    the kept part_keys, aggregated from the same flags
+    (``_prune_flags``) as ``decode_blocks``' one metadata job."""
     groups = _norm_filters(filters)
-    if not groups:
+    flags, keep = _prune_flags(blocks, groups)
+    if keep == "true":
         return blocks
-
-    sel = ["part_key", "column", "dtype_id",
-           "min_s", "max_s", "min_num", "max_num"]
-    has_bloom = "bloom" in blocks.columns  # stores predate the bloom column
-    if has_bloom:
-        sel.append("bloom")
-    stats = blocks.select(*sel)
-    lo_s, hi_s = F.col("min_s"), F.col("max_s")
-    lo_n, hi_n = F.col("min_num"), F.col("max_num")
-    surviving = None
-    for grp in groups:
-        cond = F.lit(True)
-        for c, op, v in grp:
-            is_col = F.col("column") == c
-            # a truncated-beyond-repair max stat is stored NULL — such a
-            # page is eligible only for ops that don't consult the max
-            need_min = op in ("==", "=", "<", "<=", "in")
-            need_max = op in ("==", "=", ">", ">=", "in")
-            items = list(v) if op == "in" else [v]
-            lits = [_prune_literals(item) for item in items]
-
-            elig_s = is_col & (F.col("dtype_id") == enc.DT_STRING)
-            if need_min:
-                elig_s = elig_s & lo_s.isNotNull()
-            if need_max:
-                elig_s = elig_s & hi_s.isNotNull()
-            poss_s = F.lit(False)
-            s_vals = [lt["s"] for lt in lits]
-            if all(s is not None for s in s_vals):
-                for s in s_vals:
-                    poss_s = poss_s | _range_pred(lo_s, hi_s, F.lit(s),
-                                                  "==" if op == "in" else op)
-            else:
-                elig_s = F.lit(False)
-
-            elig_n = is_col & F.col("dtype_id").isin(list(_NUMERIC_DTS))
-            if need_min:
-                elig_n = elig_n & lo_n.isNotNull()
-            if need_max:
-                elig_n = elig_n & hi_n.isNotNull()
-            poss_n = F.lit(False)
-            n_exprs = [_num_lit_expr(lt) for lt in lits]
-            for ne in n_exprs:
-                poss_n = poss_n | _range_pred(lo_n, hi_n, ne,
-                                              "==" if op == "in" else op)
-            # a null typed literal (value unparseable for this dtype) makes
-            # the comparison null -> coalesce to "possible" (keep)
-            poss_n = F.coalesce(poss_n, F.lit(True))
-
-            # bloom channel: equality/IN literals probe the page's Bloom
-            # filter — the one pruner that works on high-cardinality
-            # UNSORTED columns where every [min, max] spans the domain
-            bloom_poss = F.lit(True)
-            elig_b = F.lit(False)
-            if has_bloom and op in ("==", "=", "in"):
-                bp = F.lit(False)
-                for item in items:
-                    bp = bp | _bloom_item_pred(F.col("bloom"), item)
-                bloom_poss = bp
-                elig_b = is_col & F.col("bloom").isNotNull()
-
-            eligible = elig_s | elig_n | elig_b
-            stats_poss = (F.when(elig_s, F.coalesce(poss_s, F.lit(True)))
-                          .when(elig_n, poss_n)
-                          .otherwise(F.lit(True)))
-            possible = eligible & stats_poss & bloom_poss
-            has_eligible = F.max(F.when(eligible, 1).otherwise(0)) == 1
-            any_possible = F.max(F.when(possible, 1).otherwise(0)) == 1
-            cond = cond & F.when(has_eligible, any_possible).otherwise(F.lit(True))
-        surviving = cond if surviving is None else (surviving | cond)
-    keep = (stats.groupBy("part_key").agg(surviving.alias("_keep"))
-            .where(F.col("_keep")).select("part_key"))
+    kept = (flags.groupBy("part_key").agg(F.expr(keep).alias("_keep"))
+            .where("_keep").select("part_key"))
     # one row per part — broadcast so the blocks side never shuffles
-    return blocks.join(F.broadcast(keep), ["part_key"], "left_semi")
+    return blocks.join(F.broadcast(kept), ["part_key"], "left_semi")
 
 
 def export_hive(df: DataFrame, path: str, partition_cols: list[str],

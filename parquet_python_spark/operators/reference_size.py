@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute  # noqa: F401 — binds pa.compute
 
 
 def _varint_size(v: int) -> int:

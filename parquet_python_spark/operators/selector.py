@@ -18,6 +18,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute  # noqa: F401 — binds pa.compute
 
 from ..kernels import bitpack, fsst
 from . import encoder as enc

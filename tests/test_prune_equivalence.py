@@ -1,0 +1,309 @@
+"""Stats/Bloom pruning against a brute-force Python oracle.
+
+The fixture store is built page by page, so its parts hold what pruning
+must get right: several pages per column, string / int / date32 /
+timestamp / float columns, NaN and all-NaN pages, NULLs, a page whose
+truncated max stat is NULL, string values with quotes, backslashes and
+non-ASCII.  For seeded random filters (every op, AND and OR groups) the
+kept part set must equal an oracle computed in Python from the collected
+min/max stats and ``bloom.maybe_contains``, and a pruned decode must equal
+the unpruned decode plus the filter.  A copy of the store without the
+``bloom`` column checks the same for stores that predate it.
+"""
+import datetime
+import math
+import time
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from parquet_python_spark.kernels import bloom
+from parquet_python_spark.operators import encoder as enc
+from parquet_python_spark.operators import pipeline as pl
+from parquet_python_spark.operators import selector
+from parquet_python_spark.plans import filters as filt
+
+pytestmark = pytest.mark.spark
+
+N_PARTS = 6
+PAGES = 3
+PAGE_ROWS = 20
+EPOCH = datetime.date(1970, 1, 1)
+# a max stat made only of U+10FFFF cannot be truncated upward: stored NULL
+HUGE = "\U0010ffff" * (pl.STATS_TRUNCATE + 6)
+SPECIAL = "it's a \\ back-slashed ünïcödé ✓ value"
+VOCAB = [f"w{i:03d}" for i in range(60)] + [SPECIAL, "O'Brien", "a\\b"]
+
+
+def _column_pages(rng, part: int) -> dict[str, list[pa.Array]]:
+    """One part's pages per column (every column splits at the same rows)."""
+    n = PAGES * PAGE_ROWS
+    s = [VOCAB[i] for i in rng.integers(0, len(VOCAB), n)]
+    s = [None if rng.random() < 0.05 else v for v in s]
+    if part == 1:
+        s[PAGE_ROWS] = HUGE  # page 1 of part 1: max stat NULL
+    k = (part * 40 + rng.integers(0, 60, n)).tolist()
+    d = [EPOCH + datetime.timedelta(days=18_000 + part * 30 + int(x))
+         for x in rng.integers(0, 45, n)]
+    t = [datetime.datetime(2022, 1, 1) + datetime.timedelta(
+        seconds=int(x)) for x in part * 5_000 + rng.integers(0, 8_000, n)]
+    x = (part + rng.normal(size=n)).tolist()
+    if part % 2 == 0:
+        x[:PAGE_ROWS] = [math.nan] * PAGE_ROWS  # an all-NaN page
+    x[-1] = math.nan
+    cols = {"s": pa.array(s, pa.string()), "k": pa.array(k, pa.int64()),
+            "d": pa.array(d, pa.date32()),
+            "t": pa.array(t, pa.timestamp("us")),
+            "x": pa.array(x, pa.float64())}
+    return {c: [a.slice(p * PAGE_ROWS, PAGE_ROWS) for p in range(PAGES)]
+            for c, a in cols.items()}
+
+
+def _block_rows(part: int, pages: dict[str, list[pa.Array]]) -> list[dict]:
+    rows = []
+    for ci, (c, arrs) in enumerate(pages.items()):
+        for page_id, arr in enumerate(arrs):
+            choice = selector.choose(arr)
+            blk = enc.encode_block(arr, choice.codec)
+            lo_s, hi_s = pl._minmax_str(arr)
+            lo_n, hi_n = pl._minmax_num(arr, choice.dtype_id)
+            rows.append(dict(
+                part_key=part, repo=None, split_id=0, page_id=page_id,
+                col_idx=ci, column=c, codec=choice.codec_name,
+                compression="UNCOMPRESSED", dtype_id=choice.dtype_id,
+                n_values=len(arr), n_nulls=arr.null_count,
+                raw_size=arr.nbytes, encoded_size=len(blk), encode_ms=0.0,
+                min_s=lo_s, max_s=hi_s, min_num=lo_n, max_num=hi_n,
+                row_hash=0, metrics=None,
+                bloom=pl._page_bloom(arr, choice.dtype_id), block=blk))
+    return rows
+
+
+@pytest.fixture(scope="module")
+def stores(spark, tmp_path_factory):
+    """(store with Bloom filters, the same store without the column)."""
+    rng = np.random.default_rng(7)
+    rows = [r for p in range(N_PARTS)
+            for r in _block_rows(p, _column_pages(rng, p))]
+    tbl = pa.Table.from_pylist(rows, schema=pl._ARROW_BLOCKS_SCHEMA)
+    assert any(r["column"] == "s" and r["min_s"] is not None
+               and r["max_s"] is None for r in rows)
+    assert any(r["column"] == "x" and r["min_num"] is None for r in rows)
+    base = tmp_path_factory.mktemp("prune")
+    paths = []
+    for name, t in (("bloom", tbl), ("legacy", tbl.drop(["bloom"]))):
+        (base / name / "blocks").mkdir(parents=True)
+        pq.write_table(t, str(base / name / "blocks" / "part-00000.parquet"))
+        paths.append(str(base / name))
+    return paths
+
+
+# ------------------------------------------------------------------ oracle
+
+def _page_maybe(page: dict, op: str, v, use_bloom: bool) -> bool:
+    """Can this page hold a value x with ``x op v``?  Pages without the
+    stats an op needs cannot be ruled out."""
+    if op in ("!=", "not in"):
+        return True
+    items = list(v) if op == "in" else [v]
+    rop = "==" if op in ("in", "=") else op
+    dt = page["dtype_id"]
+    if dt == enc.DT_STRING:
+        lo, hi, key = page["min_s"], page["max_s"], lambda y: y
+    elif dt == enc.DT_DATE32:
+        lo, hi, key = page["min_num"], page["max_num"], \
+            lambda y: float((y - EPOCH).days)
+    elif dt == enc.DT_TIMESTAMP_US:
+        lo, hi, key = page["min_num"], page["max_num"], \
+            lambda y: float((y - datetime.datetime(1970, 1, 1))
+                            // datetime.timedelta(microseconds=1))
+    else:
+        lo, hi, key = page["min_num"], page["max_num"], float
+
+    def in_range(y) -> bool:
+        if isinstance(y, float) and math.isnan(y):
+            return True
+        y = key(y)
+        need_lo = rop in ("==", "<", "<=")
+        need_hi = rop in ("==", ">", ">=")
+        if (need_lo and lo is None) or (need_hi and hi is None):
+            return True
+        # a page that may hold NaN stores max +inf; NaN > +inf holds
+        return {"==": lambda: lo <= y <= hi, "<": lambda: lo < y,
+                "<=": lambda: lo <= y, ">": lambda: hi > y or hi == math.inf,
+                ">=": lambda: hi >= y}[rop]()
+
+    def in_bloom(y) -> bool:
+        words = page["bloom"]
+        if not use_bloom or words is None or rop != "==":
+            return True
+        if dt == enc.DT_STRING:
+            return bloom.maybe_contains(words, y.encode("utf-8"))
+        if dt == enc.DT_DATE32:
+            return bloom.maybe_contains(words, (y - EPOCH).days)
+        if dt == enc.DT_TIMESTAMP_US:
+            return bloom.maybe_contains(words, int(key(y)))
+        if dt == enc.DT_INT64:
+            return bloom.maybe_contains(words, int(y))
+        return True
+
+    return any(in_range(y) and in_bloom(y) for y in items)
+
+
+def _oracle(pages: list[dict], filters, use_bloom: bool) -> set[int]:
+    kept = set()
+    for part in {p["part_key"] for p in pages}:
+        mine = [p for p in pages if p["part_key"] == part]
+        for grp in filters:
+            if all(not any(p["column"] == c for p in mine)
+                   or any(_page_maybe(p, op, v, use_bloom)
+                          for p in mine if p["column"] == c)
+                   for c, op, v in grp):
+                kept.add(part)
+                break
+    return kept
+
+
+# ----------------------------------------------------------------- filters
+
+def _literal(rng, col: str):
+    """A value of ``col``: mostly one the store holds, else an absent one."""
+    vals = {"s": VOCAB + ["zzz-absent", "", HUGE],
+            "k": list(range(0, N_PARTS * 40 + 60, 7)) + [-5, 10**12],
+            "d": [EPOCH + datetime.timedelta(days=int(x))
+                  for x in range(17_990, 18_000 + N_PARTS * 30 + 50, 11)],
+            "t": [datetime.datetime(2022, 1, 1) + datetime.timedelta(
+                seconds=int(x)) for x in range(-100, N_PARTS * 5_000 + 8_100,
+                                               2_099)],
+            "x": [-2.5, -0.5, 0.0, 1.25, 3.5, 4.75, 9.0, math.nan,
+                  math.inf, -math.inf]}[col]
+    return vals[int(rng.integers(len(vals)))]
+
+
+def _random_filters(rng, n: int) -> list:
+    ops = ["==", "!=", "<", "<=", ">", ">=", "in", "not in"]
+    out = []
+    for _ in range(n):
+        groups = []
+        for _ in range(int(rng.integers(1, 3))):
+            grp = []
+            for _ in range(int(rng.integers(1, 3))):
+                c = "skdtx"[int(rng.integers(5))]
+                op = ops[int(rng.integers(len(ops)))]
+                v = ([_literal(rng, c)
+                      for _ in range(int(rng.integers(1, 4)))]
+                     if op in ("in", "not in") else _literal(rng, c))
+                grp.append((c, op, v))
+            groups.append(grp)
+        out.append(groups)
+    return out
+
+
+FIXED = [
+    [("s", "==", SPECIAL)],
+    [("s", "in", ["O'Brien", "a\\b"])],
+    [("s", "==", "zzz-absent")],
+    [("s", ">", "w058")],  # the NULL-max page can't be ruled out
+    [("s", "==", HUGE)],
+    [("k", "==", 10**12)],
+    [("k", "!=", 3)],
+    [("d", "<", EPOCH + datetime.timedelta(days=18_010))],
+    [("t", ">=", datetime.datetime(2022, 1, 1, 7))],
+    [("x", ">", 3.0)],   # NaN rows match: NaN orders above every double
+    [("x", ">", math.inf)],
+    [("x", "==", math.nan)],
+    [("x", "not in", [0.0])],
+    [[("k", "<", 30)], [("s", "==", SPECIAL), ("x", "<=", 0.5)]],
+]
+
+
+def _pages(spark, path):
+    return [r.asDict() for r in pl.read_blocks(spark, path).select(
+        "part_key", "column", "dtype_id", "min_s", "max_s", "min_num",
+        "max_num", "bloom").collect()]
+
+
+def _kept(blocks, f) -> set[int]:
+    return {r[0] for r in
+            pl.prune_blocks(blocks, f).select("part_key").distinct().collect()}
+
+
+def _rows(df) -> list:
+    def key(v):  # NaN != NaN would fail equal rows
+        return "NaN" if isinstance(v, float) and math.isnan(v) else v
+    return sorted((tuple(key(v) for v in r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("which", ["bloom", "legacy"])
+def test_pruning_matches_oracle(spark, stores, which):
+    path = stores[0] if which == "bloom" else stores[1]
+    pages = _pages(spark, path)
+    blocks = pl.read_blocks(spark, path)
+    filters = FIXED + _random_filters(np.random.default_rng(11), 40)
+    pruned_some = False
+    for f in filters:
+        groups = pl._norm_filters(f)
+        want = _oracle(pages, groups, use_bloom=which == "bloom")
+        assert _kept(blocks, f) == want, f
+        pruned_some |= len(want) < N_PARTS
+        if which == "legacy":
+            # a frame without the column at all (not just NULL words)
+            assert _kept(blocks.drop("bloom"), f) == _oracle(
+                pages, groups, use_bloom=False), f
+    assert pruned_some
+
+
+@pytest.mark.parametrize("which", ["bloom", "legacy"])
+def test_pruned_decode_equals_filtered_full_decode(spark, stores, which):
+    path = stores[0] if which == "bloom" else stores[1]
+    blocks = pl.read_blocks(spark, path)
+    # checkpointed, not cached: the cache's own batch min/max pruning
+    # drops NaN rows for ``x > inf``
+    full = pl.decode_blocks(blocks).localCheckpoint()
+    assert full.count() == N_PARTS * PAGES * PAGE_ROWS
+    for f in FIXED + _random_filters(np.random.default_rng(5), 6):
+        got = _rows(pl.decode_blocks(blocks, filters=f))
+        assert got == _rows(filt.apply_filters(full, f)), f
+    f = [("s", "==", SPECIAL), ("x", ">", 0.0)]
+    got = pl.decode_blocks(blocks, columns=["k"], filters=f)
+    assert got.columns == ["k"]
+    assert _rows(got) == _rows(filt.apply_filters(full, f).select("k"))
+
+
+def _group_jobs(st, group: str) -> list[int]:
+    """The jobs a job group ran, once the status tracker has seen them end
+    (listener events arrive asynchronously; an empty group waits 1 s)."""
+    for _ in range(50):
+        ids = st.getJobIdsForGroup(group)
+        if ids and all(st.getJobInfo(j) is not None and st.getJobInfo(j)
+                       .status in ("SUCCEEDED", "FAILED") for j in ids):
+            return ids
+        time.sleep(0.02)
+    return st.getJobIdsForGroup(group)
+
+
+def test_absent_key_decode_runs_only_the_metadata_job(spark, stores):
+    """A lookup that no part survives plans from one metadata job (a map
+    stage and a result stage: at most 2 jobs) and collects an empty local
+    relation: no decode job, no Python task."""
+    blocks = pl.read_blocks(spark, stores[0])
+    f = [("k", "==", 10**12)]
+    assert _kept(blocks, f) == set()
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    sc.setJobGroup("absent-key-plan", "plan")
+    try:
+        df = pl.decode_blocks(pl.read_blocks(spark, stores[0]), filters=f)
+        sc.setJobGroup("absent-key-collect", "collect")
+        assert df.collect() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 1 <= len(_group_jobs(st, "absent-key-plan")) <= 2
+    assert _group_jobs(st, "absent-key-collect") == []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "Python" not in plan, plan
+    assert "Arrow" not in plan, plan
+    assert df.columns == ["s", "k", "d", "t", "x"]

@@ -1,6 +1,9 @@
 """North-star size gate: our selector-chosen block is never larger than the
 reference's best (PLAIN vs PLAIN_DICTIONARY/RLE) output for the same data."""
 import glob
+import os
+import subprocess
+import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -70,3 +73,27 @@ def test_fsst_round_budget_ratios():
     plain_c = len(enc.encode_block(content, enc.PLAIN))
     assert codec_c == "linedict"
     assert ours_c / plain_c < 0.15, (ours_c, plain_c)
+
+
+def test_reference_size_imports_pyarrow_compute_itself(tmp_path):
+    """``reference_size`` calls ``pa.compute``; the attribute exists only
+    once ``pyarrow.compute`` is imported.  A Spark Python worker imports
+    the module alone and gets its arrays from an Arrow IPC stream, which
+    does not import ``pyarrow.compute`` — so the module must."""
+    arr = pa.array(["ab", "c", None, "ab", "é✓"])
+    sink = pa.BufferOutputStream()
+    tbl = pa.table({"c": arr})
+    with pa.ipc.new_stream(sink, tbl.schema) as w:
+        w.write_table(tbl)
+    (tmp_path / "c.arrows").write_bytes(sink.getvalue().to_pybytes())
+    code = (
+        "import sys, pyarrow as pa\n"
+        "from parquet_python_spark.operators import reference_size as rs\n"
+        "t = pa.ipc.open_stream(open(sys.argv[1], 'rb').read()).read_all()\n"
+        "print(rs.reference_best_size(t['c'].combine_chunks()))\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(tmp_path / "c.arrows")],
+        cwd=root, capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    assert int(out.stdout) == ref.reference_best_size(arr)
