@@ -12,6 +12,11 @@ Env:
                          (default 200_000 ≈ 210 MB of content)
     BENCH_QUERIES        comma list to restrict query set
 
+Task counts come from partitioning, not engine options: the encode job
+coalesces its input to ``ENCODE_TASKS`` (12) partitions, one encode task
+each; compaction and decode run one task per post-shuffle partition
+(``spark.sql.shuffle.partitions`` = 2 x cpus, coalesced by AQE).
+
 Scaling evidence (north_rule two-cluster-size stand-in) is produced by
 ``scripts/scaling_bench.py``, which runs the same encode job in its own
 sessions at N and 4N cores (``SCALING_N``, default 1: local[1] and
@@ -39,14 +44,14 @@ ENCODE_ROWS = int(os.environ.get("BENCH_ENCODE_ROWS", "200000"))
 # scaling levels must encode the identical part_key layout
 TARGET_ROWS = int(os.environ.get("BENCH_TARGET_ROWS",
                                  str(max(ENCODE_ROWS // 96, 8192))))
-# encode/compact workers are memory-bandwidth-bound, not core-bound: on
-# this host 6-10 tasks beat 27-64 tasks by 3-8x AND compress better
-# (pipeline.py run_encode/compact_store docstrings carry the measurements).
-# After the bit-pack byte-decomposition cut per-worker memory traffic ~6x,
-# the sweet spot moved up: 12 tasks reads 0.113-0.115 GB/s vs 0.102-0.111
-# at 8/10/16 (ingest ratio 0.145 vs 0.140; compaction restores 0.1187)
-ENCODE_TASKS = int(os.environ.get("BENCH_ENCODE_TASKS", "12"))
-COMPACT_TASKS = int(os.environ.get("BENCH_COMPACT_TASKS", "12"))
+# encode workers are memory-bandwidth-bound, not core-bound: on a 32-vCPU
+# host 6-10 tasks beat 27-64 tasks by 3-8x AND compress better (the
+# run_encode docstring carries the measurements); after the bit-pack
+# byte-decomposition cut per-worker memory traffic ~6x, 12 tasks read
+# 0.113-0.115 GB/s vs 0.102-0.111 at 8/10/16.  The input is coalesced to
+# this many partitions, which is run_encode's task count.  Compaction's
+# recode tasks follow spark.sql.shuffle.partitions (build_spark).
+ENCODE_TASKS = 12
 CACHE_DIR = os.environ.get("BENCH_CACHE_DIR", "/tmp/pqs_bench_cache")
 
 HEADLINE = ["roundtrip_sha", "q1_pricing_decoded", "dedup_exact",
@@ -75,10 +80,10 @@ def build_spark(cpus: int):
         # loopback TCP to python workers collapses under >8 concurrent
         # streams in this sandbox (kernel sys-time storm); UDS bypasses it
         .config("spark.python.unix.domain.socket.enabled", "true")
-        # fine read splits (~1 per cached file): encode_tasks coalesces
-        # read partitions onto workers, and coarse splits quantize into
-        # uneven file shares — a 1.5x straggler cost the r3 local scaling
-        # row 0.64 vs 0.8+ (see scripts/scaling_bench.py)
+        # fine read splits (~1 per cached file): bench_encode coalesces
+        # read partitions onto ENCODE_TASKS workers, and coarse splits
+        # quantize into uneven file shares — a 1.5x straggler cost the r3
+        # local scaling row 0.64 vs 0.8+ (see scripts/scaling_bench.py)
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.executorEnv.MALLOC_MMAP_MAX_", "0")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
@@ -99,9 +104,9 @@ def cached_code_table(spark, n_rows: int):
     (repo, path) — the Iceberg sorted-table layout a real source-code
     corpus ships with: one repo's files live together, mega-repos span
     several contiguous partitions).  This is the layout the zero-shuffle
-    local encode strategy is designed for; ``BENCH_LAYOUT=scattered``
-    keeps the adversarial round-robin layout (every partition touches
-    every repo) for the worst-case number."""
+    ingest (``encode_table_local``) is designed for;
+    ``BENCH_LAYOUT=scattered`` keeps the adversarial round-robin layout
+    (every partition touches every repo) for the worst-case number."""
     suffix = "" if LAYOUT == "scattered" else "_clustered"
     path = f"{CACHE_DIR}/code_{n_rows}{suffix}.parquet"
     if not os.path.exists(path + "/_SUCCESS"):
@@ -126,15 +131,14 @@ def bench_encode(spark, n_rows: int) -> dict:
     from parquet_python_spark.operators import pipeline as pl
 
     store = f"/tmp/pqs_bench_store_{os.getpid()}"
-    df = cached_code_table(spark, n_rows)
+    df = cached_code_table(spark, n_rows).coalesce(ENCODE_TASKS)
     df.count()  # warm the input file cache out of the timed region
     # untimed warm-up (also creates the persisted plan): this sandbox pays
     # ~1 ms/page on first touch, so the first pass through every python
     # worker is page-fault-bound; steady state (what a long-running
     # cluster job sees) is the honest number
     shutil.rmtree(store, ignore_errors=True)
-    pl.run_encode(df, store, target_rows=TARGET_ROWS, resume=False,
-                  encode_tasks=ENCODE_TASKS)
+    pl.run_encode(df, store, target_rows=TARGET_ROWS, resume=False)
 
     def wipe_data():
         shutil.rmtree(f"{store}/blocks", ignore_errors=True)
@@ -147,8 +151,8 @@ def bench_encode(spark, n_rows: int) -> dict:
     for _ in range(2):
         wipe_data()
         t0 = time.perf_counter()
-        stats = pl.run_encode(df, store, target_rows=TARGET_ROWS, resume=False,
-                              encode_tasks=ENCODE_TASKS)
+        stats = pl.run_encode(df, store, target_rows=TARGET_ROWS,
+                              resume=False)
         w = time.perf_counter() - t0
         wall = w if wall is None else min(wall, w)
     ratio_ingest = stats["enc_bytes"] / max(stats["raw_bytes"], 1)
@@ -167,8 +171,7 @@ def bench_encode(spark, n_rows: int) -> dict:
         comp_res = pl.compact_store(
             spark, store,
             max_pages_per_column=int(os.environ.get("BENCH_COMPACT_MAXPAGES",
-                                                    "2")),
-            concurrency=COMPACT_TASKS)
+                                                    "2")))
         w = time.perf_counter() - t0
         compact_sec = w if compact_sec is None else min(compact_sec, w)
     shutil.rmtree(snap, ignore_errors=True)
@@ -187,8 +190,7 @@ def bench_encode(spark, n_rows: int) -> dict:
     gb = stats["raw_bytes"] / 1e9
     return {"rows": stats["rows"], "gb": round(gb, 3), "sec": round(wall, 2),
             "gbps": round(gb / wall, 4), "cpus": CPUS,
-            "strategy": "local", "layout": LAYOUT,
-            "encode_tasks": ENCODE_TASKS, "compact_tasks": COMPACT_TASKS,
+            "layout": LAYOUT, "encode_tasks": ENCODE_TASKS,
             "decode_sec": round(dec_wall, 2),
             "decode_gbps": round(gb / dec_wall, 4),
             "enc_ratio": round(ratio_ingest, 4),

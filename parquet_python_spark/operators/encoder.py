@@ -11,8 +11,8 @@ Block layout (little-endian), version 2:
     n_values u32 | n_nulls u32 | raw_len u64 |
     [compressed] payload
 
-(version 1 blocks — dtype u8, one nesting level — still decode; v2 widened
-the dtype field so composed nested ids like list<list<T>> fit.)
+(v2 widened v1's u8 dtype field so composed nested ids like
+list<list<T>> fit; nothing writes v1 and decode rejects it.)
 
 Payload when n_nulls > 0:
     u32 def_len | RLE/BP-hybrid width-1 stream of notnull flags
@@ -25,7 +25,6 @@ definition levels (reference analogue: fastparquet/core.py:51-82).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from ..kernels import (bitpack, compression, delta, dictionary, fsst,
@@ -494,18 +493,13 @@ def decode_block(block: bytes) -> pa.Array:
     version = block[4]
     codec = block[5]
     comp = block[6]
-    if version == 1:  # u8 dtype, 24-byte header
-        dt = block[7]
-        n = int(np.frombuffer(block[8:12], dtype="<u4")[0])
-        n_nulls = int(np.frombuffer(block[12:16], dtype="<u4")[0])
-        body = block[24:]
-    elif version == 2:  # u16 dtype (nested composition), 25-byte header
-        dt = int(np.frombuffer(block[7:9], dtype="<u2")[0])
-        n = int(np.frombuffer(block[9:13], dtype="<u4")[0])
-        n_nulls = int(np.frombuffer(block[13:17], dtype="<u4")[0])
-        body = block[25:]
-    else:
+    if version != VERSION:
         raise ValueError(f"unsupported block version {version}")
+    # u16 dtype (nested composition), 25-byte header
+    dt = int(np.frombuffer(block[7:9], dtype="<u2")[0])
+    n = int(np.frombuffer(block[9:13], dtype="<u4")[0])
+    n_nulls = int(np.frombuffer(block[13:17], dtype="<u4")[0])
+    body = block[25:]
     raw = compression.decompress(body, comp)
     pos = 0
     if n_nulls:
@@ -522,7 +516,3 @@ def decode_block(block: bytes) -> pa.Array:
         idx_arr = pa.array(idx, mask=~notnull)
         return vals.take(idx_arr)
     return _decode_values(raw, dt, codec, n)
-
-
-def decode_block_to_pandas(block: bytes) -> pd.Series:
-    return decode_block(block).to_pandas()

@@ -31,7 +31,6 @@ Python anywhere (input_hint).
 """
 from __future__ import annotations
 
-import os
 import time
 
 import numpy as np
@@ -54,7 +53,7 @@ from . import fs as fs_mod
 from . import selector
 
 DEFAULT_PAGE_BYTES = 8 << 20  # target raw bytes per page across all columns
-# local-strategy ingest buffers this much raw input per task before
+# ingest (encode_table_local) buffers this much raw input per task before
 # sorting/encoding a chunk: bounds task memory independently of split
 # size (an executor with 4 concurrent tasks holds <=4 chunks + working
 # copies).  Bigger chunks -> fewer, larger sub-blocks (better ingest
@@ -69,7 +68,7 @@ BLOCKS_SCHEMA = StructType([
     StructField("part_key", LongType(), False),
     StructField("repo", StringType(), True),
     StructField("split_id", IntegerType(), True),
-    StructField("page_id", LongType(), False),  # composed ids (local strategy)
+    StructField("page_id", LongType(), False),  # composed ids at ingest
     StructField("col_idx", IntegerType(), False),
     StructField("column", StringType(), False),
     StructField("codec", StringType(), False),
@@ -276,7 +275,7 @@ def make_encode_group(cols: list[str], page_bytes: int = DEFAULT_PAGE_BYTES,
     # per-column trial-metric hints, shared across every group/sub-block
     # this python worker encodes: the expensive sampled trials (FSST /
     # line-split / BSS-gzip) run once per column per worker instead of
-    # once per sub-block (the local strategy encodes a sub-block per
+    # once per sub-block (ingest encodes a sub-block per
     # (input partition × part) — re-trialing each dominated the UDF,
     # measured ~60% of encode time at bench scale)
     trial_hints: dict[str, dict] = {}
@@ -603,15 +602,37 @@ def encode_table(df: DataFrame, columns: list[str] | None = None,
     return df.groupBy("part_key").applyInArrow(fn, BLOCKS_SCHEMA)
 
 
+def _compose_page_ids(pages: np.ndarray, pid: int, chunk: int,
+                     chunk_lim: int = CHUNKS_PER_TASK,
+                     page_lim: int = PAGES_PER_CHUNK) -> np.ndarray:
+    """Local page ids of chunk ``chunk`` of encode task ``pid`` -> store
+    page ids, so pages from different source partitions and chunks never
+    collide and sort deterministically at decode (chunk k of task p
+    precedes chunk k+1); int64 keeps the composition exact to ~9e7 tasks
+    x 1e5 chunks x 1e6 pages.  Overflowing either field would silently
+    collide page ids across chunks (surfacing later as a misleading
+    'duplicate pages' decode error), so it fails here instead."""
+    if chunk >= chunk_lim:
+        raise ValueError(
+            f"encode task {pid} streamed {chunk + 1} chunks — the "
+            f"page-id composition supports < {chunk_lim} per "
+            "task; raise ENCODE_CHUNK_BYTES or split the input")
+    max_page = int(pages.max()) if len(pages) else 0
+    if max_page >= page_lim:
+        raise ValueError(
+            f"a sub-block produced {max_page + 1} pages — the "
+            f"page-id composition supports < {page_lim} per "
+            "chunk; raise page_bytes or lower ENCODE_CHUNK_BYTES")
+    return (pid * chunk_lim + chunk) * page_lim + pages
+
+
 def encode_table_local(df: DataFrame, columns: list[str] | None = None,
                        target_rows: int = part.DEFAULT_TARGET_ROWS,
                        page_bytes: int = DEFAULT_PAGE_BYTES,
                        compression: str = "UNCOMPRESSED",
-                       plan: DataFrame | None = None,
-                       chunk_bytes: int | None = None,
-                       chunks_per_task: int | None = None,
-                       pages_per_chunk: int | None = None) -> DataFrame:
-    """Shuffle-ENCODED variant of ``encode_table``: no raw-data exchange.
+                       plan: DataFrame | None = None) -> DataFrame:
+    """``run_encode``'s ingest path: ``encode_table`` without the raw-data
+    exchange.
 
     ``encode_table`` hash-shuffles the raw fact table by part_key (1x raw
     bytes over the network) and encodes each part whole.  Here every INPUT
@@ -620,15 +641,15 @@ def encode_table_local(df: DataFrame, columns: list[str] | None = None,
     ratios) ever move — the part_key grouping happens implicitly at decode
     or store-read time over compressed bytes.  Page ids compose
     (input partition, local page) so a part's pages stay row-aligned
-    across columns regardless of which partitions contributed.
+    across columns regardless of which partitions contributed.  One task
+    runs per input partition: coalesce the input to run fewer.
 
     Trade-off: sub-blocks are bounded by the (partition x part) row
     overlap, so per-block dictionaries/symbol tables amortize less — the
-    ratio degrades as input partitions fragment parts.  Pick this strategy
-    when the network is the bottleneck (100-TB clusters, raw >> encoded)
-    or the source layout already correlates with the partition plan; pick
-    ``encode_table`` when maximum compression wins.  Both emit the same
-    BLOCKS_SCHEMA and decode identically.
+    ratio degrades as input partitions fragment parts.  ``compact_store``
+    restores whole-part compression off the ingest path; ``encode_table``
+    (used by the maintenance ops) encodes whole parts directly.  Both
+    emit the same BLOCKS_SCHEMA and decode identically.
     """
     cols = columns or [c for c in df.columns if c not in _HELPER_COLS]
     df, cols = _flatten_structs(df, cols)
@@ -637,13 +658,6 @@ def encode_table_local(df: DataFrame, columns: list[str] | None = None,
         df = part.with_partition_plan(df, target_rows, plan=plan)
     df = _project_for_encode(_with_row_hash(df, cols), cols)
     group_fn = make_encode_group(cols, page_bytes, compression)
-    # captured BY VALUE so the pickled worker closure honors per-call
-    # overrides (module globals re-resolve to defaults on the workers)
-    chunk_bytes = ENCODE_CHUNK_BYTES if chunk_bytes is None else chunk_bytes
-    chunk_lim = (CHUNKS_PER_TASK if chunks_per_task is None
-                 else chunks_per_task)
-    page_lim = (PAGES_PER_CHUNK if pages_per_chunk is None
-                else pages_per_chunk)
 
     def emit_chunk(pid: int, chunk: int, batch_list: list):
         tbl = pa.Table.from_batches(batch_list)
@@ -659,30 +673,10 @@ def encode_table_local(df: DataFrame, columns: list[str] | None = None,
             out = group_fn((int(skeys[lo]),), sub)
             if out.num_rows == 0:
                 continue
-            # compose page ids so pages from different source partitions
-            # and chunks never collide and sort deterministically at
-            # decode (chunk k of task p precedes chunk k+1); int64 keeps
-            # the composition exact to ~9e7 tasks x 1e5 chunks x 1e6 pages
             pages = np.asarray(out["page_id"].combine_chunks(),
                                dtype=np.int64)
-            # r3 ADVICE: overflowing either field would silently collide
-            # page ids across chunks (surfacing later as a misleading
-            # 'duplicate pages' decode error) — fail at encode time with
-            # an accurate message instead
-            if chunk >= chunk_lim:
-                raise ValueError(
-                    f"encode task {pid} streamed {chunk + 1} chunks — the "
-                    f"page-id composition supports < {chunk_lim} per "
-                    "task; raise ENCODE_CHUNK_BYTES or split the input")
-            max_page = int(pages.max()) if len(pages) else 0
-            if max_page >= page_lim:
-                raise ValueError(
-                    f"a sub-block produced {max_page + 1} pages — the "
-                    f"page-id composition supports < {page_lim} per "
-                    "chunk; raise page_bytes or lower ENCODE_CHUNK_BYTES")
-            new_pages = pa.array(
-                (pid * chunk_lim + chunk) * page_lim + pages,
-                type=pa.int64())
+            new_pages = pa.array(_compose_page_ids(pages, pid, chunk),
+                                 type=pa.int64())
             idx = out.schema.get_field_index("page_id")
             yield from out.set_column(idx, "page_id", new_pages).to_batches()
 
@@ -704,7 +698,7 @@ def encode_table_local(df: DataFrame, columns: list[str] | None = None,
                 continue
             buf.append(b)
             buf_bytes += b.nbytes
-            if buf_bytes >= chunk_bytes:
+            if buf_bytes >= ENCODE_CHUNK_BYTES:
                 yield from emit_chunk(pid, chunk, buf)
                 chunk += 1
                 buf, buf_bytes = [], 0
@@ -737,7 +731,7 @@ def _is_path_missing(exc: Exception) -> bool:
 def _combine_lineage(lin: DataFrame) -> DataFrame:
     """COMBINE rollup over lineage delta rows sharing a part_key.
 
-    A second append into an existing part (local-strategy sub-blocks, a
+    A second append into an existing part (ingest sub-blocks, a
     later generation landing in the same bucket) appends a second delta
     row; combining SUMS counts/bytes and XORs row_hash so lineage stays
     truthful to what decode returns (r2 review finding: replacement
@@ -762,7 +756,7 @@ def _combine_lineage(lin: DataFrame) -> DataFrame:
 
 # fold the lineage delta log once it fragments past this many files; keeps
 # combine-on-read bounded without rewriting the table on every micro-batch
-LINEAGE_FOLD_FILES = int(os.environ.get("PQS_LINEAGE_FOLD_FILES", "64"))
+LINEAGE_FOLD_FILES = 64
 
 
 _LINEAGE_PTR = "lineage_ptr.json"
@@ -936,13 +930,13 @@ def lineage_from_blocks(blocks: DataFrame) -> DataFrame:
     """Per-part_key rollup: rows, bytes, codec mix, order-independent hash.
 
     ``n_rows`` is the sum over (repo, split_id) SUBGROUPS of each
-    subgroup's per-column max: local-strategy sub-blocks of one packed
+    subgroup's per-column max: ingest sub-blocks of one packed
     bucket can carry different repo labels, and the old part-wide max
     joined onto every subgroup over/under-counted those parts (r2 review
     finding).  Within a subgroup every encoded column covers the same rows,
     so the per-column max is that subgroup's exact row count; subgroup
-    counts are disjoint row sets, so their sum is the part total under
-    BOTH encode strategies."""
+    counts are disjoint row sets, so their sum is the part total for
+    both ``encode_table`` and ``encode_table_local`` blocks."""
     per_col = blocks.groupBy("part_key", "repo", "split_id", "column").agg(
         F.sum("n_values").alias("col_values"),
         F.countDistinct("page_id").alias("col_pages"),
@@ -1004,7 +998,7 @@ def read_lineage(spark: SparkSession, path: str) -> DataFrame:
     ``write_blockstore``): the pointer file names the folded base
     manifest, ``lineage/`` holds delta appends since, and the associative
     COMBINE rollup reconciles multi-row parts on read.  A pointer-less
-    store (fresh, or written by merge_stores) is a pure delta log.
+    store (only ever appended to) is a pure delta log.
 
     No roll-forward machinery: the pointer PUT is atomic, so every crash
     state reads as either the old or the new committed lineage."""
@@ -1126,8 +1120,6 @@ def run_encode(df: DataFrame, path: str,
                compression: str = "UNCOMPRESSED",
                resume: bool = True,
                generation: int | None = None,
-               strategy: str = "local",
-               encode_tasks: int | None = None,
                summarize: bool = True) -> dict:
     """End-to-end encode run: plan → (resume anti-join) → encode → store.
 
@@ -1139,30 +1131,23 @@ def run_encode(df: DataFrame, path: str,
     each arrival encodes into fresh parts while an identical replay of the
     same generation is still skipped exactly-once.
 
-    ``strategy``: ``"local"`` (DEFAULT — the LSM-style ingest pair with
-    ``compact_store``) encodes each input partition's sub-blocks in place
-    so only ENCODED bytes ever move: zero raw-data exchange, ~8x fewer
-    network bytes at measured ratios, and the sub-block fragmentation it
-    trades away is restored off the ingest path by ``compact_store``.
-    ``"shuffle"`` hash-exchanges raw rows by part_key and encodes whole
-    parts — best immediate compression, pick it when ingest-time ratio
-    matters more than ingest throughput/network.
+    Ingest is the LSM-style pair with ``compact_store``:
+    ``encode_table_local`` encodes each input partition's sub-blocks in
+    place so only ENCODED bytes ever move (zero raw-data exchange, ~8x
+    fewer network bytes at measured ratios), and ``compact_store``
+    restores the whole-part ratio off the ingest path.
 
-    ``encode_tasks``: optional cap on concurrent encode workers (local
-    strategy only; implemented as a shuffle-free ``coalesce``).  Caveat:
-    ``coalesce`` merges ADJACENT input partitions without rebalancing, so
-    coarse read splits quantize into uneven worker shares (6 partitions
-    coalesced to 4 workers deal a 1.5x straggler).  Feed it fine-grained
-    partitions — for parquet sources set
-    ``spark.sql.files.maxPartitionBytes`` so there are >= ~8 read
-    partitions per worker.  Encode
-    kernels are MEMORY-BANDWIDTH-bound, not core-bound: sizing workers to
-    the machine's bandwidth, not its vCPU count, is both faster and
-    compresses better (bigger per-task sub-blocks amortize dictionaries).
-    Measured on this 32-vCPU host at 0.23 GB: 64 natural tasks 0.009-0.05
-    GB/s @ ratio 0.157 vs 6-10 tasks 0.05-0.07 GB/s @ ratio 0.135-0.142.
-    On a multi-executor cluster leave None (natural partitioning) unless
-    executors are similarly over-threaded.
+    One encode task runs per partition of ``df``: the plan join and the
+    resume anti-join are broadcast, so they keep its partitioning.  To
+    run fewer, pass ``df.coalesce(k)``.  ``coalesce`` merges ADJACENT
+    partitions without rebalancing, so coarse read splits quantize into
+    uneven worker shares (6 partitions coalesced to 4 deal a 1.5x
+    straggler); for parquet sources set ``spark.sql.files.maxPartitionBytes``
+    so there are >= ~8 read partitions per worker.  Encode kernels are
+    MEMORY-BANDWIDTH-bound, not core-bound: on a 32-vCPU host at 0.23 GB,
+    64 natural tasks ran 0.009-0.05 GB/s @ ratio 0.157 vs 6-10 tasks at
+    0.05-0.07 GB/s @ ratio 0.135-0.142 (bigger per-task sub-blocks
+    amortize dictionaries).
 
     Returns summary metrics from the lineage table.
     """
@@ -1183,10 +1168,8 @@ def run_encode(df: DataFrame, path: str,
             # north_rule resume: anti-join completed partition ids (one row
             # per part — broadcast keeps the fact table shuffle-free here)
             assigned = assigned.join(F.broadcast(done), "part_key", "left_anti")
-    encode = {"shuffle": encode_table, "local": encode_table_local}[strategy]
-    if encode_tasks is not None and strategy == "local":
-        assigned = assigned.coalesce(int(encode_tasks))
-    blocks = encode(assigned, columns, target_rows, page_bytes, compression)
+    blocks = encode_table_local(assigned, columns, target_rows, page_bytes,
+                                compression)
     summary = write_blockstore(blocks, path, mode="append",
                                summarize=summarize)
     if summary is None and summarize:
@@ -1240,10 +1223,6 @@ def overwrite_partitions(df: DataFrame, path: str,
                               target_rows, page_bytes, compression)
     return _commit_blocks_delta(spark, path, aff_keys, new_blocks,
                                 summarize=summarize)
-
-
-def _uri_to_local(uri: str) -> str:
-    return uri[7:] if uri.startswith("file://") else uri
 
 
 def _commit_blocks_delta(spark: SparkSession, path: str,
@@ -1476,12 +1455,11 @@ def recode_blocks(blocks: DataFrame, page_bytes: int = DEFAULT_PAGE_BYTES,
 def compact_store(spark: SparkSession, path: str,
                   max_pages_per_column: int = 8,
                   page_bytes: int = DEFAULT_PAGE_BYTES,
-                  compression=None,
-                  concurrency: int | None = None) -> dict:
+                  compression=None) -> dict:
     """Re-encode fragmented parts whole — the LSM/Iceberg compaction step
-    that pairs with the shuffle-encoded ingest strategy: ``strategy=
-    "local"`` lands sub-blocks fast (no raw shuffle), compaction later
-    restores the whole-part compression ratio off the ingest path.
+    that pairs with ``run_encode``'s ingest: ``encode_table_local`` lands
+    sub-blocks fast (no raw shuffle), compaction later restores the
+    whole-part compression ratio off the ingest path.
 
     Fragmentation and the before/after byte metrics come from the LINEAGE
     table (one tiny row per part: ``n_pages`` is the widest column's page
@@ -1497,14 +1475,13 @@ def compact_store(spark: SparkSession, path: str,
     in.  Untouched parts are left on disk.  ``compression=None``
     preserves each column's incoming block codec.
 
-    ``concurrency`` throttles the recode stage to that many tasks (an
-    explicit hash repartition on part_key that ``applyInArrow`` reuses —
-    no extra exchange).  Compaction is BACKGROUND maintenance: LSM/Iceberg
-    engines throttle it so it never starves foreground queries, and the
-    recode workers are memory-bandwidth-bound anyway — measured on this
-    32-vCPU host, 27 concurrent recode tasks ran 22-32 s where 8-16 ran
-    2.3-2.7 s for the same 0.23 GB.  None = one task per shuffle
-    partition (cluster default).
+    The recode stage runs one task per post-shuffle partition of the
+    part_key exchange: ``spark.sql.shuffle.partitions``, coalesced by
+    AQE.  Compaction is BACKGROUND maintenance and its workers are
+    memory-bandwidth-bound (on a 32-vCPU host, 27 concurrent recode tasks
+    ran 22-32 s where 8-16 ran 2.3-2.7 s for the same 0.23 GB), so a
+    session that compacts large stores sizes that setting to the node's
+    bandwidth, not its vCPU count.
     Returns {'parts_compacted', 'enc_bytes_before', 'enc_bytes_after'}.
     """
     lin = read_lineage(spark, path)
@@ -1527,8 +1504,6 @@ def compact_store(spark: SparkSession, path: str,
     frag_keys = frag.select("part_key")
     aff = read_blocks(spark, path).join(F.broadcast(frag_keys), "part_key",
                                         "left_semi")
-    if concurrency is not None:
-        aff = aff.repartition(min(int(concurrency), n_parts), "part_key")
     new_blocks = recode_blocks(aff, page_bytes, compression)
     _commit_blocks_delta(spark, path, frag_keys, new_blocks,
                          affected_is_all=(n_parts == int(plan_row["total"])))
@@ -1541,8 +1516,7 @@ def compact_store(spark: SparkSession, path: str,
 
 def sort_store(spark: SparkSession, path: str, by: list[str],
                page_bytes: int = DEFAULT_PAGE_BYTES,
-               compression=None,
-               concurrency: int | None = None) -> dict:
+               compression=None) -> dict:
     """Cluster each part's rows by ``by`` (within-part sort + repagination)
     so per-page [min, max] stats on those columns become narrow and
     disjoint — range predicates then prune PAGES, not just parts, via the
@@ -1553,18 +1527,18 @@ def sort_store(spark: SparkSession, path: str, by: list[str],
     The reference orders row groups on overwrite
     (fastparquet writer.py:1560-1579); this generalizes that to any
     column set as an off-ingest maintenance pass, same fused recode +
-    file-granular commit as ``compact_store``.  Also restores whole-part
-    compression as a side effect (sorted runs dictionary/RLE better).
+    file-granular commit as ``compact_store`` (and the same task count:
+    ``spark.sql.shuffle.partitions``, coalesced by AQE).  Also restores
+    whole-part compression as a side effect (sorted runs dictionary/RLE
+    better).
     """
     # executor-materialized: the key set must survive the lineage swap
     frame = read_lineage(spark, path).select("part_key").localCheckpoint()
     n_keys = frame.count()
     if n_keys == 0:
         return {"parts_sorted": 0}
-    aff = read_blocks(spark, path)
-    if concurrency is not None:
-        aff = aff.repartition(min(int(concurrency), n_keys), "part_key")
-    new_blocks = recode_blocks(aff, page_bytes, compression, sort_by=by)
+    new_blocks = recode_blocks(read_blocks(spark, path), page_bytes,
+                               compression, sort_by=by)
     _commit_blocks_delta(spark, path, frame, new_blocks,
                          affected_is_all=True)
     return {"parts_sorted": int(n_keys)}
@@ -1603,11 +1577,9 @@ def merge_stores(spark: SparkSession, paths: list[str], out_path: str) -> dict:
         cols = [c for c in rows.columns if c not in _HELPER_COLS]
         merged = merged.unionByName(encode_table(rows, cols),
                                     allowMissingColumns=True)
-    merged.write.mode("overwrite").option("compression", "none").parquet(
-        f"{out_path}/blocks")
-    written = read_blocks(spark, out_path)
-    lineage_from_blocks(written).write.mode("overwrite").parquet(
-        f"{out_path}/lineage")
+    # the manifest-pointer commit supersedes whatever lineage ``out_path``
+    # held before, pointer-committed or not
+    summary = write_blockstore(merged, out_path, mode="overwrite")
     # merged plan: DETERMINISTICALLY first-store-wins per repo (future
     # appends stay stable).  Caveat: if two stores planned the SAME repo
     # differently (different target_rows eras), the loser's parts remain
@@ -1628,9 +1600,7 @@ def merge_stores(spark: SparkSession, paths: list[str], out_path: str) -> dict:
         (all_plans.withColumn("_rn", F.row_number().over(w))
          .where(F.col("_rn") == 1).drop("_rn", "_src")
          .write.mode("overwrite").parquet(f"{out_path}/plan"))
-    agg = read_lineage(spark, out_path).agg(
-        F.count(F.lit(1)).alias("parts"), F.sum("n_rows").alias("rows")).collect()[0]
-    return {"parts": agg["parts"], "rows": int(agg["rows"] or 0)}
+    return {"parts": summary["parts"], "rows": summary["rows"]}
 
 
 # -------------------------------------------------------------------- decode
@@ -1752,9 +1722,7 @@ def _part_key_in(keys: list[int]):
 
 
 def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
-                  filters=None, keep_part_key: bool = False,
-                  reassemble: bool = True,
-                  tasks: int | None = None) -> DataFrame:
+                  filters=None, keep_part_key: bool = False) -> DataFrame:
     """Blocks -> original rows (the reference's two-level read:
     filter_row_groups, then the row filter, api.py:691-794).
 
@@ -1770,9 +1738,8 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
 
     ``keep_part_key=True`` prepends the originating part_key to every row
     (store-maintenance ops re-encode rows under their original parts).
-    ``tasks`` caps concurrent decode workers (hash repartition on
-    part_key that the group-decode reuses — same memory-bandwidth
-    rationale as ``run_encode(encode_tasks=)``)."""
+    The decode runs one task per post-shuffle partition of the part_key
+    exchange (``spark.sql.shuffle.partitions``, coalesced by AQE)."""
     user_cols = list(columns) if columns is not None else None
     groups = _norm_filters(filters)
     proj = None
@@ -1833,10 +1800,8 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
         for col, pks in sizers.items():
             # decode_group ignores non-projected columns but for sizing
             cond = cond | ((F.col("column") == col) & _part_key_in(pks))
-        blocks = blocks.where(cond)
-        if tasks is not None:
-            blocks = blocks.repartition(int(tasks), "part_key")
-        out = blocks.groupBy("part_key").applyInArrow(decode_group, schema)
+        out = (blocks.where(cond)
+               .groupBy("part_key").applyInArrow(decode_group, schema))
     if filters is not None:
         out = filt.apply_filters(out, filters)
         if user_cols is not None:
@@ -1850,9 +1815,7 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
                     or any(f.name.startswith(c + ".") for c in user_cols)
                     or (keep_part_key and f.name == "part_key")]
             out = out.select(*[F.col(f"`{c}`") for c in keep])
-    if reassemble:
-        out = reassemble_structs(out)
-    return out
+    return reassemble_structs(out)
 
 
 def _norm_filters(filters):
@@ -2148,37 +2111,36 @@ def sorted_columns(spark: SparkSession, path: str) -> DataFrame:
             .agg((F.sum(F.when(ok, 0).otherwise(1)) == 0).alias("is_sorted")))
 
 
+_CUSTOM_METADATA = "_custom_metadata.json"
+
+
 def update_store_metadata(path: str, updates: dict) -> dict:
     """Custom key-value metadata on the store — parity with
     ``update_file_custom_metadata`` (fastparquet/writer.py:1613-1666):
-    None values delete keys; returns the merged mapping."""
+    None values delete keys; returns the merged mapping.  Written with
+    one atomic PUT through the store's ``StoreFS``."""
     import json
-    import os
 
-    meta_path = f"{path}/_custom_metadata.json"
-    meta = {}
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
+    meta = read_store_metadata(path)
     for k, v in updates.items():
         if v is None:
             meta.pop(k, None)
         else:
             meta[k] = v
-    with open(meta_path, "w") as f:
-        json.dump(meta, f, indent=2, sort_keys=True)
+    fs_mod.get_fs(path).put_atomic(
+        f"{path}/{_CUSTOM_METADATA}",
+        json.dumps(meta, indent=2, sort_keys=True).encode("utf-8"))
     return meta
 
 
 def read_store_metadata(path: str) -> dict:
     import json
-    import os
 
-    meta_path = f"{path}/_custom_metadata.json"
-    if not os.path.exists(meta_path):
+    fs = fs_mod.get_fs(path)
+    meta_path = f"{path}/{_CUSTOM_METADATA}"
+    if not fs.exists(meta_path):
         return {}
-    with open(meta_path) as f:
-        return json.load(f)
+    return json.loads(fs.read_bytes(meta_path).decode("utf-8"))
 
 
 def head_rows(spark: SparkSession, path: str, n: int,
@@ -2209,23 +2171,27 @@ def head_rows(spark: SparkSession, path: str, n: int,
     return decode_blocks(picked, columns=columns).limit(n)
 
 
+# parts decoded per Spark job by ``iter_pages``
+ITER_BATCH_PARTS = 64
+
+
 def iter_pages(spark: SparkSession, path: str,
-               columns: list[str] | None = None,
-               batch_parts: int = 64):
+               columns: list[str] | None = None):
     """Generator of pandas DataFrames, one per part (row group) —
     ``iter_row_groups`` parity (api.py:397-413).
 
-    Parts are decoded in key-range batches of ``batch_parts``: one Spark
-    job fetches a whole batch, which is then sliced per part locally —
-    at 10^6 parts the old one-job-per-part shape was 10^6 scheduler
-    round-trips (r3 judge finding); this is ceil(parts / batch_parts)
-    jobs while preserving the one-frame-per-part yield order."""
+    Parts are decoded in key-range batches of ``ITER_BATCH_PARTS``: one
+    Spark job fetches a whole batch, which is then sliced per part
+    locally — at 10^6 parts the old one-job-per-part shape was 10^6
+    scheduler round-trips (r3 judge finding); this is
+    ceil(parts / ITER_BATCH_PARTS) jobs while preserving the
+    one-frame-per-part yield order."""
     blocks = read_blocks(spark, path)
     keys = [int(r["part_key"]) for r in
             (blocks.select("part_key").distinct()
              .orderBy("part_key").collect())]
-    for i in range(0, len(keys), batch_parts):
-        chunk = keys[i:i + batch_parts]
+    for i in range(0, len(keys), ITER_BATCH_PARTS):
+        chunk = keys[i:i + ITER_BATCH_PARTS]
         grp = blocks.where(F.col("part_key").isin(chunk))
         pdf = decode_blocks(grp, columns=columns,
                             keep_part_key=True).toPandas()
@@ -2241,12 +2207,19 @@ def verify_roundtrip(source: DataFrame, decoded: DataFrame,
                      content_col: str = "content") -> dict:
     """Bit-identical decode check (north_rule): multiset equality of per-row
     sha256 over all columns, computed JVM-side with F.sha2 — no collect of
-    data, only of the two tiny digests."""
+    data, only of the two tiny digests.  Each column's string form is
+    length-prefixed (``V<bytes>:<value>``) and a NULL is ``N``, which no
+    value encodes to, so rows whose columns' string forms differ never
+    hash the same input."""
     cols = decoded.columns
 
+    def field(c: str):
+        s = F.col(c).cast("string")
+        return F.when(s.isNull(), F.lit("N")).otherwise(F.concat(
+            F.lit("V"), F.octet_length(s).cast("string"), F.lit(":"), s))
+
     def digest(df: DataFrame):
-        row_sha = F.sha2(F.concat_ws("\x1f", *[
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in cols]), 256)
+        row_sha = F.sha2(F.concat(*[field(c) for c in cols]), 256)
         return (df.select(row_sha.alias("sha")).groupBy("sha")
                 .agg(F.count(F.lit(1)).alias("cnt")))
 

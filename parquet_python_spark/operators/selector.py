@@ -53,15 +53,15 @@ def _mean_run_len(v: np.ndarray) -> float:
     return len(v) / (changes + 1)
 
 
-def choose(arr: pa.Array, allow_fsst: bool = True,
-           compressed: bool = False, hints: dict | None = None) -> Choice:
+def choose(arr: pa.Array, compressed: bool = False,
+           hints: dict | None = None) -> Choice:
     """Pick a codec for one column chunk by predicted encoded size.
     ``compressed=True`` signals a downstream block codec: float columns
     then also trial BYTE_STREAM_SPLIT, which only pays off post-compression.
 
     ``hints`` amortizes the EXPENSIVE sampled trials across the many
-    sub-blocks one task encodes (the local encode strategy produces a
-    sub-block per (input partition × part) — re-running the FSST trial
+    sub-blocks one task encodes (ingest produces a sub-block per
+    (input partition × part) — re-running the FSST trial
     encode on every one dominated the whole encode pass, measured 60%% of
     UDF time at bench scale): pass a mutable dict scoped to one column of
     one task and the trial ratios (``fsst_ratio``, ``bss_gain``) are
@@ -86,8 +86,7 @@ def choose(arr: pa.Array, allow_fsst: bool = True,
     samp = vals.slice(0, min(nv, SAMPLE))
 
     if dt in (enc.DT_STRING, enc.DT_BINARY):
-        return _choose_string(samp, vals, dt, n,
-                              allow_fsst and dt == enc.DT_STRING, hints)
+        return _choose_string(samp, vals, dt, n, hints)
     if dt == enc.DT_BOOL:
         return Choice(enc.BITPACK, dt, n, {"width": 1})
     if dt in (enc.DT_FLOAT64, enc.DT_FLOAT32):
@@ -96,7 +95,7 @@ def choose(arr: pa.Array, allow_fsst: bool = True,
 
 
 def _choose_string(samp: pa.Array, vals: pa.Array, dt: int, n: int,
-                   allow_fsst: bool, hints: dict | None = None) -> Choice:
+                   hints: dict | None = None) -> Choice:
     s = np.asarray(samp.cast(pa.string())) if dt == enc.DT_STRING else None
     k = len(samp)
     nv = len(vals)
@@ -157,12 +156,12 @@ def _choose_string(samp: pa.Array, vals: pa.Array, dt: int, n: int,
     # FSST builds a symbol table per block (3 merge rounds + full-stream
     # substitution): measured ~2-5 ms fixed cost regardless of block size,
     # so on tiny blocks it burns more time than it can ever repay.  Gate
-    # it to blocks >= 64 KiB: ingest-time sub-blocks (local strategy)
-    # fall back to dict/plain, and compaction — which re-encodes whole
+    # it to blocks >= 64 KiB: ingest-time sub-blocks fall back to
+    # dict/plain, and compaction — which re-encodes whole
     # parts, always > 64 KiB — brings FSST back where it pays.  This is
     # the LSM split: cheap codecs on the ingest path, best codecs after
     # compaction.
-    if (allow_fsst and avg_len >= 8 and distinct_ratio > 0.05
+    if (dt == enc.DT_STRING and avg_len >= 8 and distinct_ratio > 0.05
             and nv * avg_len >= 65536):
         if hints is not None and "fsst_ratio" in hints:
             ratio = hints["fsst_ratio"]

@@ -174,8 +174,8 @@ def test_compact_legacy_store_without_bloom_column(spark, tmp_path):
                   F.col("id").cast("string").alias("path"),
                   F.lit("0").alias("commit")))
     store = str(tmp_path / "legacy")
-    pl.run_encode(df, store, columns=["doc_id", "text"], target_rows=50,
-                  resume=False, encode_tasks=2)
+    pl.run_encode(df.coalesce(2), store, columns=["doc_id", "text"],
+                  target_rows=50, resume=False)
     # strip the bloom column on disk to simulate a pre-r3 store
     legacy = spark.read.parquet(f"{store}/blocks").drop("bloom")
     legacy.write.mode("overwrite").parquet(f"{store}/blocks2")
@@ -183,7 +183,7 @@ def test_compact_legacy_store_without_bloom_column(spark, tmp_path):
     shutil.rmtree(f"{store}/blocks")
     shutil.move(f"{store}/blocks2", f"{store}/blocks")
     spark.catalog.refreshByPath(f"{store}/blocks")
-    pl.compact_store(spark, store, max_pages_per_column=1, concurrency=2)
+    pl.compact_store(spark, store, max_pages_per_column=1)
     d = pl.decode_blocks(pl.read_blocks(spark, store))
     assert d.count() == 300
     got = pl.decode_blocks(pl.read_blocks(spark, store),

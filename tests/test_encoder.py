@@ -62,6 +62,15 @@ def test_nulls_roundtrip(rng):
             assert out.equals(data), f"{data.type} {enc.CODEC_NAMES[codec]}"
 
 
+def test_v1_block_header_raises():
+    """Nothing writes v1 blocks; decode names the version it refuses."""
+    blk = bytearray(enc.encode_block(pa.array([1, 2, 3]), enc.PLAIN))
+    assert blk[4] == enc.VERSION
+    blk[4] = 1
+    with pytest.raises(ValueError, match="block version 1"):
+        enc.decode_block(bytes(blk))
+
+
 def test_all_null_roundtrip():
     arr = pa.array([None, None, None], type=pa.int64())
     _, out = _rt(arr, enc.PLAIN)

@@ -234,9 +234,22 @@ def test_greedy_left_mask_equals_index_path(rng):
             assert (np.diff(idx) >= 2).all()
 
 
-def test_fsst_encode_deterministic_across_paths(rng):
+def test_fsst_encode_deterministic_across_paths(rng, monkeypatch):
     """Same input encodes to identical bytes regardless of which greedy
-    path density selects (locks the adaptive switch out of the output)."""
+    path density selects (locks the adaptive switch out of the output):
+    the dense branch's mask selection is swapped for the sparse path's
+    index selection, and the output must not change."""
     strings = _code_like_strings(300, rng)
     arr = pa.array(strings, type=pa.string())
-    assert fsst.encode(arr) == fsst.encode(arr)
+    want = fsst.encode(arr)
+    dense_calls = []
+
+    def sparse_selection_mask(cand):
+        dense_calls.append(len(cand))
+        mask = np.zeros(len(cand), dtype=bool)
+        mask[fsst._greedy_left(cand)] = True
+        return mask
+
+    monkeypatch.setattr(fsst, "_greedy_left_mask", sparse_selection_mask)
+    assert fsst.encode(arr) == want
+    assert dense_calls, "the dense branch never ran"

@@ -85,9 +85,9 @@ def test_iter_pages(spark, store):
     assert total > 0 and n_pages == 3
 
 
-def test_iter_pages_batches_jobs(spark, tmp_path):
+def test_iter_pages_batches_jobs(spark, tmp_path, monkeypatch):
     """r3 judge: one Spark job per part is 10^6 scheduler round-trips at
-    scale — iter_pages must run ceil(parts / batch_parts) decode jobs.
+    scale — iter_pages must run ceil(parts / ITER_BATCH_PARTS) decode jobs.
     Job count observed via a job group on the status tracker; per-part
     frames and their order must be identical to the unbatched shape."""
     path = str(tmp_path / "s")
@@ -95,10 +95,11 @@ def test_iter_pages_batches_jobs(spark, tmp_path):
     pl.run_encode(df, path, target_rows=30, resume=False)
     n_parts = pl.read_lineage(spark, path).count()
     assert n_parts >= 40  # enough parts for batching to matter
+    # the batch loop runs on the driver, so the module constant applies
+    monkeypatch.setattr(pl, "ITER_BATCH_PARTS", 16)
     sc = spark.sparkContext
     sc.setJobGroup("iter_pages_batched", "test")
-    frames = list(pl.iter_pages(spark, path, columns=["lang"],
-                                batch_parts=16))
+    frames = list(pl.iter_pages(spark, path, columns=["lang"]))
     jobs = len(sc.statusTracker().getJobIdsForGroup("iter_pages_batched"))
     sc.setJobGroup("", "")
     # decode_blocks runs a handful of jobs per call (schema inference,

@@ -353,8 +353,7 @@ def test_local_strategy_lineage_counts_multi_repo_bucket(spark, tmp_path):
     df = spark.createDataFrame(pdf).repartition(4, "repo")
     store = str(tmp_path / "mrb")
     stats = pl.run_encode(df, store, columns=["repo", "val"],
-                          target_rows=10_000, resume=False,
-                          strategy="local")
+                          target_rows=10_000, resume=False)
     assert stats["rows"] == 200
     lin = pl.read_lineage(spark, store)
     assert lin.agg(F.sum("n_rows")).collect()[0][0] == 200
@@ -391,33 +390,33 @@ def test_literal_dot_column_does_not_renest(spark, tmp_path):
     blocks.unpersist()
 
 
-def test_chunk_page_id_overflow_raises(spark, monkeypatch):
+def test_verify_roundtrip_rejects_boundary_and_null_collisions(spark):
+    """A separator byte moved across a column boundary, and NULL vs the
+    string "\x00", are different rows: the verifier must not hash them
+    alike."""
+    src = spark.createDataFrame([("a\x1fb", "c"), (None, "z")],
+                                "x string, y string")
+    dec = spark.createDataFrame([("a", "b\x1fc"), ("\x00", "z")],
+                                "x string, y string")
+    res = pl.verify_roundtrip(src, dec)
+    assert not res["ok"] and res["missing"] == 2 and res["extra"] == 2
+    assert pl.verify_roundtrip(src, src)["ok"]
+
+
+def test_chunk_page_id_overflow_raises():
     """r3 ADVICE: a page-id field overflow must fail AT ENCODE TIME with
     an accurate message, never surface later as a misleading duplicate-
-    pages decode error.  Limits shrunk via monkeypatch to force both
-    overflows cheaply (explicit per-call limits: module globals re-resolve
-    to defaults inside pickled worker closures)."""
-    import pytest
-
-    # > 2 Arrow batches (conftest maxRecordsPerBatch=65536) so the chunk
-    # counter actually advances past the shrunken limit
-    src = (spark.range(140_000)
-           .select(F.col("id").alias("doc_id"),
-                   F.concat(F.lit("text"), F.col("id")).alias("text"),
-                   F.lit("r").alias("repo"),
-                   F.col("id").cast("string").alias("path"),
-                   F.lit("0").alias("commit"))
-           .coalesce(1))
-    # chunk-count overflow: 1-byte chunks -> a new chunk per batch
-    blocks = pl.encode_table_local(src, columns=["doc_id", "text"],
-                                   target_rows=500,
-                                   chunk_bytes=1, chunks_per_task=2)
-    with pytest.raises(Exception, match="page-id composition"):
-        blocks.count()
-    # pages-per-chunk overflow: one whole-chunk sub-block paginates at
-    # the 1024-row floor -> 64 pages >= the shrunken limit
-    blocks = pl.encode_table_local(src, columns=["doc_id", "text"],
-                                   target_rows=1_000_000, page_bytes=64,
-                                   pages_per_chunk=2)
-    with pytest.raises(Exception, match="page-id composition"):
-        blocks.count()
+    pages decode error.  The composition is checked with small limits so
+    both overflows are cheap to reach."""
+    pages = np.arange(3, dtype=np.int64)
+    got = pl._compose_page_ids(pages, 1, 1, chunk_lim=2, page_lim=3)
+    assert got.tolist() == [9, 10, 11]  # (pid * 2 + chunk) * 3 + page
+    # chunk-count overflow: chunk index reaches the per-task limit
+    with pytest.raises(ValueError, match="page-id composition.*per task"):
+        pl._compose_page_ids(pages, 0, 2, chunk_lim=2, page_lim=3)
+    # pages-per-chunk overflow: a sub-block's page index reaches the limit
+    with pytest.raises(ValueError, match="page-id composition.*per chunk"):
+        pl._compose_page_ids(pages, 0, 0, chunk_lim=2, page_lim=2)
+    # the defaults are the module limits
+    assert pl._compose_page_ids(pages, 0, 1).tolist() == \
+        (pl.PAGES_PER_CHUNK + pages).tolist()

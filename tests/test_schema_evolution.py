@@ -80,7 +80,7 @@ def test_compaction_preserves_evolved_schema(spark, tmp_path):
              .where(F.col("doc_id") >= 80))
     pl.run_encode(newer, store, columns=["doc_id", "text", "stars"],
                   target_rows=30, resume=False, generation=1)
-    pl.compact_store(spark, store, max_pages_per_column=1, concurrency=2)
+    pl.compact_store(spark, store, max_pages_per_column=1)
     d = pl.decode_blocks(pl.read_blocks(spark, store))
     assert set(d.columns) == {"doc_id", "text", "stars"}
     assert d.count() == 120

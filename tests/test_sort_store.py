@@ -24,8 +24,8 @@ def scattered_store(spark, tmp_path):
                   F.col("id").cast("string").alias("path"),
                   F.lit("0").alias("commit")))
     store = str(tmp_path / "s")
-    pl.run_encode(df, store, columns=["doc_id", "v"], target_rows=5000,
-                  resume=False, encode_tasks=4)
+    pl.run_encode(df.coalesce(4), store, columns=["doc_id", "v"],
+                  target_rows=5000, resume=False)
     return store
 
 
@@ -41,7 +41,7 @@ def test_sort_store_enables_page_pruning(spark, scattered_store):
         r["doc_id"] for r in
         pl.decode_blocks(pl.read_blocks(spark, store),
                          columns=["doc_id", "v"], filters=filt).collect())
-    res = pl.sort_store(spark, store, ["v"], concurrency=2)
+    res = pl.sort_store(spark, store, ["v"])
     assert res["parts_sorted"] > 0
     after_blocks = _kept_blocks(spark, store, filt)
     assert after_blocks < before_blocks  # pages now refutable by stats

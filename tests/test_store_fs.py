@@ -137,6 +137,30 @@ def test_pointer_commit_uses_single_object_put(spark, no_rename_store):
     assert puts and all(p.endswith(pl._LINEAGE_PTR) for p in puts)
 
 
+def test_store_metadata_uses_store_fs(no_rename_store):
+    """Custom store metadata reads and writes through the registered
+    StoreFS: each update is exactly one atomic PUT of the metadata
+    object (never an in-place truncate-and-rewrite)."""
+    root = no_rename_store
+    store = f"{root}/s"
+    os.makedirs(store)
+    puts = []
+
+    class RecordingFS(ObjectStoreFS):
+        def put_atomic(self, path, data):
+            puts.append(path)
+            super().put_atomic(path, data)
+
+    fs_mod.register_fs(root, RecordingFS())
+    assert pl.read_store_metadata(store) == {}
+    assert pl.update_store_metadata(store, {"a": 1, "b": "x"}) == \
+        {"a": 1, "b": "x"}
+    assert puts == [f"{store}/_custom_metadata.json"]
+    assert pl.update_store_metadata(store, {"a": None}) == {"b": "x"}
+    assert len(puts) == 2
+    assert pl.read_store_metadata(store) == {"b": "x"}
+
+
 class _FakeFsspec:
     """Duck-typed fsspec filesystem (dict-backed): exercises the FsspecFS
     adapter mapping without the optional package."""

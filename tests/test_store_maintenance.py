@@ -53,6 +53,25 @@ def test_merge_colliding_parts(spark, tmp_path):
     assert lin.groupBy("part_key").count().where(F.col("count") > 1).count() == 0
 
 
+def test_merge_over_pointer_committed_store(spark, tmp_path):
+    """merge_stores commits through the lineage pointer: an out_path that
+    already holds a pointer-committed store (after repair_lineage) must
+    report exactly the merged rows — the rows decode returns — not the
+    old manifest's rows on top of them."""
+    a, b, out = (str(tmp_path / x) for x in ("a", "b", "out"))
+    pl.run_encode(_docs(spark, 0, 250), a, columns=COLS, target_rows=100,
+                  resume=False)
+    pl.run_encode(_docs(spark, 250, 500), b, columns=COLS, target_rows=100,
+                  resume=False)
+    pl.run_encode(_docs(spark, 0, 50), out, columns=COLS, target_rows=100,
+                  resume=False)
+    pl.repair_lineage(spark, out)  # installs lineage_ptr.json
+    res = pl.merge_stores(spark, [a, b], out)
+    assert pl.decode_blocks(pl.read_blocks(spark, out)).count() == 500
+    assert res["rows"] == 500
+    assert pl.store_summary(spark, out)["rows"] == 500
+
+
 def test_remove_parts(spark, tmp_path):
     store = str(tmp_path / "rp")
     df = cg.code_table(spark, 600, partitions=2)
@@ -86,8 +105,7 @@ def test_compact_restores_whole_part_ratio(spark, tmp_path):
     and must shrink the store while preserving every row."""
     store = str(tmp_path / "compact")
     df = cg.code_table(spark, 3000, partitions=8).cache()
-    pl.run_encode(df, store, target_rows=1500, resume=False,
-                  strategy="local")
+    pl.run_encode(df, store, target_rows=1500, resume=False)
     blocks = pl.read_blocks(spark, store)
     frag_pages = (blocks.groupBy("part_key", "column")
                   .agg(F.countDistinct("page_id").alias("np"))
@@ -102,15 +120,14 @@ def test_compact_restores_whole_part_ratio(spark, tmp_path):
 
 
 def test_remove_repos_local_strategy_preserves_other_repos(spark, tmp_path):
-    """r2 review finding: with strategy='local', a shared bucket holds
-    per-source-partition repo-LABELED sub-blocks; removal must not drop
-    other repos' sub-blocks just because one block carries the removed
-    label."""
+    """r2 review finding: with per-input-partition ingest, a shared
+    bucket holds per-source-partition repo-LABELED sub-blocks; removal
+    must not drop other repos' sub-blocks just because one block carries
+    the removed label."""
     store = str(tmp_path / "rrlocal")
     df = _docs(spark, 0, 500).repartition("repo")  # repo-pure partitions
     cols = ["repo"] + COLS
-    pl.run_encode(df, store, columns=cols, target_rows=200, resume=False,
-                  strategy="local")
+    pl.run_encode(df, store, columns=cols, target_rows=200, resume=False)
     res = pl.remove_repos(spark, store, ["2"])
     want = df.where(F.col("repo") != "2")
     assert res["rows"] == want.count()
@@ -147,6 +164,10 @@ def test_double_append_lineage_combines_and_decode_refuses(spark, tmp_path):
         pl.decode_blocks(pl.read_blocks(spark, store)).count()
 
 
+def _uri_to_local(uri: str) -> str:
+    return uri[7:] if uri.startswith("file://") else uri
+
+
 def _file_snap(store):
     import glob
     import hashlib
@@ -169,12 +190,11 @@ def test_remove_parts_leaves_untouched_files_intact(spark, tmp_path):
     # many-file by nature
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
-        # shuffle strategy: each output file holds whole parts, so there
+        # whole-part encode: each output file holds whole parts, so there
         # IS a part whose files are a strict subset — the property under
         # test (O(affected) commits) is layout-independent, but asserting
         # byte-identity of untouched files needs the part→file layout
-        pl.run_encode(df, store, target_rows=150, resume=False,
-                      strategy="shuffle")
+        pl.write_blockstore(pl.encode_table(df, target_rows=150), store)
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
                        "true")
@@ -185,8 +205,7 @@ def test_remove_parts_leaves_untouched_files_intact(spark, tmp_path):
             .select("part_key", "f").distinct().collect())
     by_key: dict = {}
     for r in fmap:
-        by_key.setdefault(r["part_key"], set()).add(
-            pl._uri_to_local(r["f"]))
+        by_key.setdefault(r["part_key"], set()).add(_uri_to_local(r["f"]))
     all_files = set().union(*by_key.values())
     drop = next(k for k, v in by_key.items() if v != all_files)
     touched = by_key[drop]
@@ -220,7 +239,7 @@ def test_compact_leaves_unfragmented_files_intact(spark, tmp_path):
     gen1 = _file_snap(store)
     df2 = cg.code_table(spark, 3000, partitions=8)
     pl.run_encode(df2, store, target_rows=1500, resume=False,
-                  strategy="local", generation=1)
+                  generation=1)
     res = pl.compact_store(spark, store, max_pages_per_column=4)
     assert res["parts_compacted"] > 0
     after = _file_snap(store)
