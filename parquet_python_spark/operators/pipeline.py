@@ -38,10 +38,10 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute  # noqa: F401 — binds pa.compute
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
-    StructField, StructType,
+    ArrayType, BinaryType, DoubleType, IntegerType, LongType, MapType,
+    StringType, StructField, StructType,
 )
 
 from ..kernels import bloom
@@ -728,6 +728,32 @@ def _is_path_missing(exc: Exception) -> bool:
     return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
 
 
+# every lineage delta, manifest and fold output has this schema (the
+# rollup ``lineage_from_blocks`` writes); reading with it runs no
+# footer-inference job
+LINEAGE_SCHEMA = StructType([
+    StructField("part_key", LongType()),
+    StructField("repo", StringType()),
+    StructField("split_id", IntegerType()),
+    StructField("n_pages", LongType()),
+    StructField("n_blocks", LongType()),
+    StructField("raw_bytes", LongType()),
+    StructField("enc_bytes", LongType()),
+    StructField("encode_ms", DoubleType()),
+    StructField("row_hash", LongType()),
+    StructField("codecs", ArrayType(StringType())),
+    StructField("n_rows", LongType()),
+    StructField("status", StringType()),
+])
+
+# the persisted plan (``plans.partitioning.plan_splits``)
+PLAN_SCHEMA = StructType([
+    StructField("repo", StringType()),
+    StructField("n_splits", IntegerType()),
+    StructField("bucket", IntegerType()),
+])
+
+
 def _combine_lineage(lin: DataFrame) -> DataFrame:
     """COMBINE rollup over lineage delta rows sharing a part_key.
 
@@ -789,10 +815,39 @@ def _live_delta_files(path: str, ptr: dict | None = None) -> list[str]:
     return [f for f in files if _os.path.basename(f) not in folded]
 
 
-def _commit_manifest(spark: SparkSession, path: str, lin: DataFrame) -> None:
+def _lineage_state(path: str) -> tuple[dict | None, list[str]]:
+    """The committed lineage state: the pointer (None for a pointer-less
+    store) and the live delta files beside the manifest it names.  A
+    commit derived from lineage rows hands the state it read them under
+    to ``_commit_manifest``, which folds exactly those delta files."""
+    ptr = _read_lineage_ptr(path)
+    return ptr, _live_delta_files(path, ptr)
+
+
+def _lineage_rows(spark: SparkSession, path: str,
+                  state: tuple[dict | None, list[str]]) -> DataFrame:
+    """The uncombined lineage rows of ``state`` (``_lineage_state``),
+    read with ``LINEAGE_SCHEMA``."""
+    ptr, deltas = state
+    sources = ([f"{path}/manifests/{ptr['manifest']}"] if ptr else []) + deltas
+    # no file committed yet: read the directory itself, which is an empty
+    # table, or the path-missing error of a store that does not exist
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(
+        *(sources or [f"{path}/lineage"]))
+
+
+def _commit_manifest(spark: SparkSession, path: str, lin: DataFrame,
+                     state: tuple[dict | None, list[str]] | None = None,
+                     ) -> None:
     """Replace the lineage table with ``lin`` via a rename-free pointer
     commit — the object-store-portable protocol (r4 VERDICT missing #2;
     the previous directory-rename swap had no S3/GCS translation).
+
+    ``state`` is the ``_lineage_state`` that ``lin`` was derived under.
+    The commit folds exactly its delta files, so a delta appended after
+    ``lin`` was read stays live instead of being dropped unread, and its
+    pointer epoch is the one the concurrent-commit fence checks.  None
+    means ``lin`` replaces the state committed when the call starts.
 
     Steps (single-writer maintenance, like the reference's `_metadata`
     rewrites, fastparquet writer.py:1464-1494):
@@ -815,11 +870,14 @@ def _commit_manifest(spark: SparkSession, path: str, lin: DataFrame) -> None:
 
     fs = fs_mod.get_fs(path)
     ldir = f"{path}/lineage"
-    ptr_old = _read_lineage_ptr(path)
-    # every CURRENT delta file is superseded by ``lin`` (the caller derived
-    # it from the store's current state, or is replacing the state outright)
-    folded = sorted(_os.path.basename(f)
-                    for f in _list_part_files(ldir))
+    ptr_old, deltas = state if state is not None else _lineage_state(path)
+    # superseded: the delta files ``lin`` covers, and those the old pointer
+    # already folded (GC may not have deleted them yet)
+    covered = ({_os.path.basename(f) for f in deltas}
+               | set((ptr_old or {}).get("folded", ())))
+    folded = sorted(b for b in (_os.path.basename(f)
+                                for f in _list_part_files(ldir))
+                    if b in covered)
     epoch = (int(ptr_old["epoch"]) + 1) if ptr_old else 1
     mname = f"manifest-{epoch:08d}-{uuid.uuid4().hex[:8]}"
     mdir = f"{path}/manifests/{mname}"
@@ -875,9 +933,13 @@ def write_blockstore(blocks: DataFrame, path: str, mode: str = "append",
     between the blocks write and the lineage write leaves lineage stale but
     never causes duplicate encodes.
 
-    Returns a scalar summary dict {parts, rows, raw_bytes, enc_bytes} for
-    the WHOLE store (one distributed agg, one collected row), or None if
-    nothing new was written.
+    The new lineage rows come from one part_key exchange over the new
+    files' metadata columns (``lineage_from_blocks``); the payload column
+    is never read back.
+
+    Returns ``store_summary`` of the WHOLE store ({parts, rows, raw_bytes,
+    enc_bytes}), ``{}`` with ``summarize=False``, or None if nothing new
+    was written.
 
     Parquet-level compression is off: block payloads are already encoded
     (and optionally cramjam-compressed) — recompressing burns CPU for ~0%."""
@@ -896,8 +958,10 @@ def write_blockstore(blocks: DataFrame, path: str, mode: str = "append",
         new_lin.write.mode("append").option(
             "compression", "none").parquet(ldir)
         spark.catalog.refreshByPath(ldir)
-        if len(_live_delta_files(path)) > LINEAGE_FOLD_FILES:
-            _commit_manifest(spark, path, read_lineage(spark, path))
+        state = _lineage_state(path)
+        if len(state[1]) > LINEAGE_FOLD_FILES:
+            _commit_manifest(spark, path, _combine_lineage(
+                _lineage_rows(spark, path, state)), state)
     return store_summary(spark, path) if summarize else {}
 
 
@@ -908,16 +972,24 @@ def repair_lineage(spark: SparkSession, path: str) -> dict:
     BLOCKS, not lineage), but the lost rollup would otherwise under-report
     ``store_summary``/``count()`` and hide the part from compaction
     planning forever.  One distributed scan + the same atomic swap as any
-    maintenance commit; returns the repaired summary."""
+    maintenance commit; returns the repaired summary.
+
+    The lineage state is taken before the blocks are listed: every delta
+    file in it describes blocks the scan sees, and a commit landing after
+    the listing keeps its delta file live."""
+    state = _lineage_state(path)
     _commit_manifest(spark, path,
-                     lineage_from_blocks(read_blocks(spark, path)))
+                     lineage_from_blocks(read_blocks(spark, path)), state)
     return store_summary(spark, path)
 
 
 def store_summary(spark: SparkSession, path: str) -> dict:
-    """Scalar store totals from lineage — one distributed agg, one row."""
-    row = read_lineage(spark, path).agg(
-        F.count(F.lit(1)).alias("parts"),
+    """Scalar store totals from lineage: one aggregation over the
+    uncombined lineage rows, one collected row.  The COMBINE keeps one row
+    per part_key and sums rows and bytes, so the distinct part_keys and the
+    plain sums equal the combined table's totals without combining."""
+    row = _lineage_rows(spark, path, _lineage_state(path)).agg(
+        F.countDistinct("part_key").alias("parts"),
         F.sum("n_rows").alias("rows"),
         F.sum("raw_bytes").alias("raw_bytes"),
         F.sum("enc_bytes").alias("enc_bytes")).collect()[0]
@@ -936,8 +1008,13 @@ def lineage_from_blocks(blocks: DataFrame) -> DataFrame:
     finding).  Within a subgroup every encoded column covers the same rows,
     so the per-column max is that subgroup's exact row count; subgroup
     counts are disjoint row sets, so their sum is the part total for
-    both ``encode_table`` and ``encode_table_local`` blocks."""
-    per_col = blocks.groupBy("part_key", "repo", "split_id", "column").agg(
+    both ``encode_table`` and ``encode_table_local`` blocks.
+
+    One exchange: the block rows are hash-partitioned by part_key once,
+    and every grouping level below has part_key among its keys, so each
+    is already clustered and none shuffles again."""
+    per_col = blocks.repartition("part_key").groupBy(
+        "part_key", "repo", "split_id", "column").agg(
         F.sum("n_values").alias("col_values"),
         F.countDistinct("page_id").alias("col_pages"),
         F.count(F.lit(1)).alias("col_blocks"),
@@ -1001,14 +1078,17 @@ def read_lineage(spark: SparkSession, path: str) -> DataFrame:
     store (only ever appended to) is a pure delta log.
 
     No roll-forward machinery: the pointer PUT is atomic, so every crash
-    state reads as either the old or the new committed lineage."""
-    ptr = _read_lineage_ptr(path)
-    ldir = f"{path}/lineage"
-    if ptr is None:
-        return _combine_lineage(spark.read.parquet(ldir))
-    sources = [f"{path}/manifests/{ptr['manifest']}"]
-    sources += _live_delta_files(path, ptr)
-    return _combine_lineage(spark.read.parquet(*sources))
+    state reads as either the old or the new committed lineage.  Files are
+    read with ``LINEAGE_SCHEMA``, so building the frame runs no job."""
+    return _read_lineage(spark, path)[0]
+
+
+def _read_lineage(spark: SparkSession, path: str,
+                  ) -> tuple[DataFrame, tuple[dict | None, list[str]]]:
+    """``read_lineage`` and the ``_lineage_state`` it was read under — the
+    pair a commit derived from it hands on."""
+    state = _lineage_state(path)
+    return _combine_lineage(_lineage_rows(spark, path, state)), state
 
 
 def completed_part_keys(spark: SparkSession, path: str) -> DataFrame | None:
@@ -1018,7 +1098,9 @@ def completed_part_keys(spark: SparkSession, path: str) -> DataFrame | None:
     block files appear atomically, so a part_key present in blocks was
     fully written — even if the follow-up lineage write crashed.  The scan
     is column-pruned to the one part_key value per block row (the binary
-    payload column is never read)."""
+    payload column is never read), but it still visits every block row of
+    the store: ``run_encode`` skips it for a generation appended for the
+    first time, whose part_keys cannot be in the store yet."""
     try:
         return read_blocks(spark, path).select("part_key").distinct()
     except Exception as e:  # noqa: BLE001 — re-raised unless path-missing
@@ -1028,8 +1110,10 @@ def completed_part_keys(spark: SparkSession, path: str) -> DataFrame | None:
 
 
 def load_plan(spark: SparkSession, path: str) -> DataFrame | None:
+    """The persisted plan, read with ``PLAN_SCHEMA`` (no schema-inference
+    job), or None if the store has none."""
     try:
-        return spark.read.parquet(f"{path}/plan")
+        return spark.read.schema(PLAN_SCHEMA).parquet(f"{path}/plan")
     except Exception as e:  # noqa: BLE001 — re-raised unless path-missing
         if _is_path_missing(e):
             return None
@@ -1076,23 +1160,27 @@ def _store_generations(path: str) -> list[int]:
             json.loads(fs.read_bytes(p).decode("utf-8"))["generations"]]
 
 
-def _record_generation(path: str, generation: int) -> None:
+def _put_generations(path: str, gens) -> None:
+    import json
+
+    fs_mod.get_fs(path).put_atomic(f"{path}/{_GENERATIONS_FILE}", json.dumps(
+        {"generations": sorted({int(g) for g in gens})}).encode("utf-8"))
+
+
+def _record_generation(path: str, generation: int) -> bool:
     """Register an incremental-append generation in store metadata (one
     small object, atomic PUT, recorded BEFORE the blocks write so a crash
     can only over-list, never under-list).  Maintenance needs the set to
     enumerate generation-composed part_keys (``xxhash64(base, gen)``) —
     without it, overwrite/remove silently skipped rows that arrived via
     later generations (r5 fix; caught by the rename-forbidden
-    maintenance suite)."""
-    import json
-
-    fs = fs_mod.get_fs(path)
-    gens = set(_store_generations(path))
+    maintenance suite).  Returns True if the generation was not recorded
+    before: then no block row can carry a part_key composed with it."""
+    gens = _store_generations(path)
     if int(generation) in gens:
-        return
-    gens.add(int(generation))
-    fs.put_atomic(f"{path}/{_GENERATIONS_FILE}", json.dumps(
-        {"generations": sorted(gens)}).encode("utf-8"))
+        return False
+    _put_generations(path, [*gens, generation])
+    return True
 
 
 def _with_generation_keys(keys: DataFrame, path: str) -> DataFrame:
@@ -1149,20 +1237,27 @@ def run_encode(df: DataFrame, path: str,
     0.05-0.07 GB/s @ ratio 0.135-0.142 (bigger per-task sub-blocks
     amortize dictionaries).
 
+    Resume anti-joins the store's completed part_keys, an O(store) scan
+    (``completed_part_keys``).  A generation appended for the first time
+    skips it: the generation is recorded before its blocks are written, so
+    no stored part_key is composed with it yet.  A replay of a recorded
+    generation keeps the anti-join, so it still lands exactly once.
+
     Returns summary metrics from the lineage table.
     """
     spark = df.sparkSession
     plan = _plan_for_store(df, path, target_rows)
     assigned = part.assign_part_keys(df, plan)
+    fresh_generation = False
     if generation is not None:
         if not 0 <= int(generation) < 2**31:
             raise ValueError(
                 f"generation must fit int32, got {generation}: the key "
                 "composition hashes it as an IntegerType literal")
-        _record_generation(path, int(generation))
+        fresh_generation = _record_generation(path, int(generation))
         assigned = assigned.withColumn(
             "part_key", F.xxhash64("part_key", F.lit(int(generation))))
-    if resume:
+    if resume and not fresh_generation:
         done = completed_part_keys(spark, path)
         if done is not None:
             # north_rule resume: anti-join completed partition ids (one row
@@ -1221,15 +1316,16 @@ def overwrite_partitions(df: DataFrame, path: str,
     cols = columns or [c for c in union.columns if c not in _HELPER_COLS]
     new_blocks = encode_table(part.assign_part_keys(union, plan), cols,
                               target_rows, page_bytes, compression)
-    return _commit_blocks_delta(spark, path, aff_keys, new_blocks,
-                                summarize=summarize)
+    _commit_blocks_delta(spark, path, aff_keys, new_blocks)
+    return _parts_rows(spark, path) if summarize else {}
 
 
 def _commit_blocks_delta(spark: SparkSession, path: str,
                          affected_keys: DataFrame,
                          new_blocks: DataFrame | None = None,
                          affected_is_all: bool = False,
-                         summarize: bool = True) -> dict:
+                         lineage: tuple[DataFrame, tuple] | None = None,
+                         ) -> int:
     """File-granular maintenance commit: O(affected + new), never O(store).
 
     ``affected_keys`` (a one-column ``part_key`` frame) names the parts
@@ -1255,7 +1351,16 @@ def _commit_blocks_delta(spark: SparkSession, path: str,
     ``affected_is_all=True`` (caller asserts every live part is affected —
     e.g. a full-store compaction) skips the part→file scan and the
     survivor rewrite entirely: every existing file is dead by definition,
-    so the commit is write-new + unlink-all + fresh lineage."""
+    so the commit is write-new + unlink-all + fresh lineage.
+
+    ``lineage`` is the caller's ``_read_lineage`` result (its frame may be
+    checkpointed); the kept rollups come from it instead of a second
+    lineage read.  Without it, lineage is read once, after the blocks are
+    rewritten.
+
+    Returns the encoded bytes of the replacement parts, observed from
+    their rollup while the manifest is written (0 when nothing new was
+    written).  No summary is computed: callers that return one read it."""
     import os
 
     bdir = f"{path}/blocks"
@@ -1296,20 +1401,32 @@ def _commit_blocks_delta(spark: SparkSession, path: str,
     # old state stays readable for the duration of the job, and nothing
     # per-part ever lands on the driver (r3 judge: the pandas round-trip
     # here was a scale-killer at 10^6+ parts).
-    if affected_is_all and new_files:
+    base, state = lineage or _read_lineage(spark, path)
+    replaced = obs = None
+    if new_files:
+        replaced = _read_block_files(spark, *new_files)
+        if not affected_is_all:
+            replaced = replaced.join(F.broadcast(affected_keys), "part_key",
+                                     "left_semi")
+        obs = Observation()
+        replaced = lineage_from_blocks(replaced).observe(
+            obs, F.sum("enc_bytes").alias("enc_bytes"))
+    if affected_is_all and replaced is not None:
         # no survivors: fresh lineage is just the new files' rollup
-        kept_lin = lineage_from_blocks(_read_block_files(spark, *new_files))
+        kept_lin = replaced
     else:
-        kept_lin = read_lineage(spark, path).join(
-            F.broadcast(affected_keys), "part_key", "left_anti")
-        if new_files:
-            replaced = (_read_block_files(spark, *new_files)
-                        .join(F.broadcast(affected_keys), "part_key",
-                              "left_semi"))
-            kept_lin = kept_lin.unionByName(lineage_from_blocks(replaced))
-    _commit_manifest(spark, path, kept_lin)
-    if not summarize:
-        return {}
+        kept_lin = base.join(F.broadcast(affected_keys), "part_key",
+                             "left_anti")
+        if replaced is not None:
+            kept_lin = kept_lin.unionByName(replaced)
+    _commit_manifest(spark, path, kept_lin, state)
+    # Observation.get blocks until the observed plan has run: only read it
+    # when the manifest write above included the rollup
+    return int(obs.get["enc_bytes"] or 0) if obs is not None else 0
+
+
+def _parts_rows(spark: SparkSession, path: str) -> dict:
+    """{parts, rows} of ``store_summary`` — what maintenance calls return."""
     s = store_summary(spark, path)
     return {"parts": s["parts"], "rows": s["rows"]}
 
@@ -1321,7 +1438,8 @@ def remove_parts(spark: SparkSession, path: str,
     everything else is untouched."""
     keys = spark.createDataFrame([(int(k),) for k in part_keys],
                                  "part_key long")
-    return _commit_blocks_delta(spark, path, keys)
+    _commit_blocks_delta(spark, path, keys)
+    return _parts_rows(spark, path)
 
 
 def remove_repos(spark: SparkSession, path: str, repos: list[str],
@@ -1367,8 +1485,8 @@ def remove_repos(spark: SparkSession, path: str, repos: list[str],
         cols = [c for c in retained.columns if c not in _HELPER_COLS]
         new_blocks = encode_table(retained, cols, target_rows, page_bytes,
                                   compression)
-    return _commit_blocks_delta(spark, path, aff_keys, new_blocks,
-                                summarize=summarize)
+    _commit_blocks_delta(spark, path, aff_keys, new_blocks)
+    return _parts_rows(spark, path) if summarize else {}
 
 
 def recode_blocks(blocks: DataFrame, page_bytes: int = DEFAULT_PAGE_BYTES,
@@ -1467,7 +1585,12 @@ def compact_store(spark: SparkSession, path: str,
     column's page count, so detection errs toward compacting), never from
     a block-file scan: the metadata side of compaction is O(parts) driver
     work, not O(store) executor scans (measured 9 s of the 22 s bench
-    compaction was before/after aggregates over block files).
+    compaction was before/after aggregates over block files).  Lineage is
+    read once: the combined table is checkpointed on the executors, the
+    plan and the fragmented set come from it, and the commit keeps its
+    unaffected rows.  ``enc_bytes_after`` is observed from the
+    replacement rollup as the commit writes it, and no store summary is
+    computed.
 
     Fragmented parts are recoded via the fused ``recode_blocks`` pass
     (the ONLY exchange is of their encoded bytes; decode→re-encode
@@ -1484,32 +1607,30 @@ def compact_store(spark: SparkSession, path: str,
     bandwidth, not its vCPU count.
     Returns {'parts_compacted', 'enc_bytes_before', 'enc_bytes_after'}.
     """
-    lin = read_lineage(spark, path)
+    lin, state = _read_lineage(spark, path)
     # executor-materialized (localCheckpoint, never the driver): every
     # later consumer must not re-scan the pre-rewrite lineage directory
     # after _commit_blocks_delta swaps it
-    frag = (lin.where(F.col("n_pages") > max_pages_per_column)
-            .select("part_key", "enc_bytes").localCheckpoint())
+    lin = lin.localCheckpoint()
+    is_frag = F.col("n_pages") > max_pages_per_column
     plan_row = lin.agg(
         F.count(F.lit(1)).alias("total"),
-        F.count(F.when(F.col("n_pages") > max_pages_per_column, 1))
-        .alias("frag"),
-        F.sum(F.when(F.col("n_pages") > max_pages_per_column,
-                     F.col("enc_bytes"))).alias("before")).collect()[0]
+        F.count(F.when(is_frag, 1)).alias("frag"),
+        F.sum(F.when(is_frag, F.col("enc_bytes"))).alias("before")
+    ).collect()[0]
     n_parts = int(plan_row["frag"])
     if n_parts == 0:
         return {"parts_compacted": 0, "enc_bytes_before": 0,
                 "enc_bytes_after": 0}
     before = int(plan_row["before"] or 0)
-    frag_keys = frag.select("part_key")
+    frag_keys = lin.where(is_frag).select("part_key")
     aff = read_blocks(spark, path).join(F.broadcast(frag_keys), "part_key",
                                         "left_semi")
     new_blocks = recode_blocks(aff, page_bytes, compression)
-    _commit_blocks_delta(spark, path, frag_keys, new_blocks,
-                         affected_is_all=(n_parts == int(plan_row["total"])))
-    after = int(read_lineage(spark, path)
-                .join(F.broadcast(frag_keys), "part_key", "left_semi")
-                .agg(F.sum("enc_bytes")).collect()[0][0] or 0)
+    after = _commit_blocks_delta(
+        spark, path, frag_keys, new_blocks,
+        affected_is_all=(n_parts == int(plan_row["total"])),
+        lineage=(lin, state))
     return {"parts_compacted": int(n_parts),
             "enc_bytes_before": before, "enc_bytes_after": after}
 
@@ -1532,15 +1653,16 @@ def sort_store(spark: SparkSession, path: str, by: list[str],
     whole-part compression as a side effect (sorted runs dictionary/RLE
     better).
     """
+    lin, state = _read_lineage(spark, path)
     # executor-materialized: the key set must survive the lineage swap
-    frame = read_lineage(spark, path).select("part_key").localCheckpoint()
-    n_keys = frame.count()
+    lin = lin.localCheckpoint()
+    n_keys = lin.count()
     if n_keys == 0:
         return {"parts_sorted": 0}
     new_blocks = recode_blocks(read_blocks(spark, path), page_bytes,
                                compression, sort_by=by)
-    _commit_blocks_delta(spark, path, frame, new_blocks,
-                         affected_is_all=True)
+    _commit_blocks_delta(spark, path, lin.select("part_key"), new_blocks,
+                         affected_is_all=True, lineage=(lin, state))
     return {"parts_sorted": int(n_keys)}
 
 
@@ -1577,6 +1699,13 @@ def merge_stores(spark: SparkSession, paths: list[str], out_path: str) -> dict:
         cols = [c for c in rows.columns if c not in _HELPER_COLS]
         merged = merged.unionByName(encode_table(rows, cols),
                                     allowMissingColumns=True)
+    # the generations appended to any source come along: maintenance
+    # enumerates their composed part_keys from this registry, and
+    # run_encode skips its resume scan for a generation missing from it.
+    # Written before the blocks, keeping out_path's own, so a crash can
+    # only over-list
+    _put_generations(out_path, [g for p in [*paths, out_path]
+                                for g in _store_generations(p)])
     # the manifest-pointer commit supersedes whatever lineage ``out_path``
     # held before, pointer-committed or not
     summary = write_blockstore(merged, out_path, mode="overwrite")
@@ -2210,16 +2339,21 @@ def verify_roundtrip(source: DataFrame, decoded: DataFrame,
     data, only of the two tiny digests.  Each column's string form is
     length-prefixed (``V<bytes>:<value>``) and a NULL is ``N``, which no
     value encodes to, so rows whose columns' string forms differ never
-    hash the same input."""
+    hash the same input.  A list, map or struct column's string form is
+    its JSON (``to_json``): ``cast("string")`` does not quote elements, so
+    ``['a, b']`` and ``['a', 'b']`` would both read ``[a, b]``."""
     cols = decoded.columns
 
-    def field(c: str):
-        s = F.col(c).cast("string")
+    def field(c: str, dtype):
+        s = (F.to_json(F.col(c))
+             if isinstance(dtype, (ArrayType, MapType, StructType))
+             else F.col(c).cast("string"))
         return F.when(s.isNull(), F.lit("N")).otherwise(F.concat(
             F.lit("V"), F.octet_length(s).cast("string"), F.lit(":"), s))
 
     def digest(df: DataFrame):
-        row_sha = F.sha2(F.concat(*[field(c) for c in cols]), 256)
+        row_sha = F.sha2(F.concat(*[field(f.name, f.dataType)
+                                    for f in df.schema.fields]), 256)
         return (df.select(row_sha.alias("sha")).groupBy("sha")
                 .agg(F.count(F.lit(1)).alias("cnt")))
 

@@ -44,7 +44,8 @@ def measure(cpus: int, rows: int, reps: int, strategy: str) -> dict:
     persisted partition plan (created untimed) at both levels, so the two
     levels differ ONLY in worker count.  ``shuffle`` encodes whole parts
     via many uniform tasks (task-granular engine scalability);
-    ``local`` is the default chunked ingest with encode_tasks=cpus."""
+    ``local`` is the default chunked ingest over the input coalesced to
+    ``cpus`` partitions (one encode task per partition)."""
     from pyspark.sql import SparkSession
 
     from parquet_python_spark.operators import pipeline as pl

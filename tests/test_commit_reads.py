@@ -1,0 +1,155 @@
+"""A commit builds on what the write already knows.
+
+Lineage and plan frames are read with their known schemas, so building
+one runs no schema-inference job; ``store_summary`` is one aggregation
+over the uncombined lineage rows; an append of a generation the store has
+never seen skips the O(store) resume scan, while a replay keeps it.  The
+reference builds ``_metadata`` from the footers its writer returns instead
+of re-reading them (fastparquet writer.py:732-758).
+"""
+import time
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from parquet_python_spark.operators import pipeline as pl
+from parquet_python_spark.sources import codegen as cg
+
+pytestmark = pytest.mark.spark
+
+
+def _docs(spark, lo, hi):
+    return (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+            .where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+            .withColumn("repo", (F.col("doc_id") % 5).cast("string"))
+            .withColumn("path", F.col("doc_id").cast("string"))
+            .withColumn("commit", F.lit("0")))
+
+
+COLS = ["doc_id", "text", "lang"]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` ran, counted in its own job group once the status
+    tracker has seen them end (listener events arrive asynchronously; an
+    empty group waits 1 s)."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    group = f"commit-reads-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "commit reads")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    for _ in range(50):
+        ids = st.getJobIdsForGroup(group)
+        if ids and all(st.getJobInfo(j) is not None and st.getJobInfo(j)
+                       .status in ("SUCCEEDED", "FAILED") for j in ids):
+            break
+        time.sleep(0.02)
+    return len(st.getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("commit_reads") / "s")
+    pl.run_encode(_docs(spark, 0, 300), path, columns=COLS,
+                  target_rows=100, resume=False)
+    pl.run_encode(_docs(spark, 300, 400), path, columns=COLS,
+                  target_rows=100, generation=1)
+    return path
+
+
+def test_lineage_and_plan_frames_run_no_job(spark, store):
+    assert _jobs(spark, lambda: pl.read_lineage(spark, store)) == 0
+    assert _jobs(spark, lambda: pl.load_plan(spark, store)) == 0
+
+
+def test_store_summary_is_one_aggregation(spark, store):
+    """countDistinct + sums over the uncombined rows: a distinct map
+    stage, a merge stage and the result — no combine exchange before."""
+    assert _jobs(spark, lambda: pl.store_summary(spark, store)) <= 3
+
+
+def test_lineage_files_have_lineage_schema(spark, tmp_path, monkeypatch):
+    """The inferred schema of a delta, a manifest and a fold output is
+    the one lineage is read with."""
+    path = str(tmp_path / "s")
+    pl.run_encode(_docs(spark, 0, 200), path, columns=COLS,
+                  target_rows=100, resume=False)
+    assert spark.read.parquet(f"{path}/lineage").schema == pl.LINEAGE_SCHEMA
+    assert spark.read.parquet(f"{path}/plan").schema == pl.PLAN_SCHEMA
+
+    def manifest_schema():
+        ptr = pl._read_lineage_ptr(path)
+        return spark.read.parquet(
+            f"{path}/manifests/{ptr['manifest']}").schema
+
+    pl.repair_lineage(spark, path)
+    assert manifest_schema() == pl.LINEAGE_SCHEMA
+    monkeypatch.setattr(pl, "LINEAGE_FOLD_FILES", 0)
+    epoch = pl._read_lineage_ptr(path)["epoch"]
+    pl.run_encode(_docs(spark, 200, 260), path, columns=COLS,
+                  target_rows=100, generation=1)
+    assert pl._read_lineage_ptr(path)["epoch"] == epoch + 1  # folded
+    assert manifest_schema() == pl.LINEAGE_SCHEMA
+
+
+def test_first_generation_skips_resume_scan(spark, tmp_path, monkeypatch):
+    """No stored part_key is composed with a generation the store has
+    never recorded, so its append needs no completed-key scan; a replay
+    of a recorded generation still anti-joins and lands exactly once."""
+    path = str(tmp_path / "s")
+    pl.run_encode(_docs(spark, 0, 200), path, columns=COLS,
+                  target_rows=100, resume=False)
+    real = pl.completed_part_keys
+
+    def refuse(spark, path):
+        raise AssertionError("resume scan for a new generation")
+
+    monkeypatch.setattr(pl, "completed_part_keys", refuse)
+    pl.run_encode(_docs(spark, 200, 260), path, columns=COLS,
+                  target_rows=100, generation=3)
+    calls = []
+
+    def record(spark, path):
+        calls.append(path)
+        return real(spark, path)
+
+    monkeypatch.setattr(pl, "completed_part_keys", record)
+    pl.run_encode(_docs(spark, 200, 260), path, columns=COLS,
+                  target_rows=100, generation=3)
+    assert calls == [path]
+    assert pl.decode_blocks(pl.read_blocks(spark, path)).count() == 260
+    assert pl.store_summary(spark, path)["rows"] == 260
+
+
+def test_store_summary_equals_combined_lineage(spark, tmp_path):
+    """After each kind of commit the one-aggregation summary equals the
+    totals of the combined lineage table."""
+    path = str(tmp_path / "s")
+
+    def combined():
+        row = pl.read_lineage(spark, path).agg(
+            F.count(F.lit(1)).alias("parts"),
+            F.sum("n_rows").alias("rows"),
+            F.sum("raw_bytes").alias("raw_bytes"),
+            F.sum("enc_bytes").alias("enc_bytes")).collect()[0]
+        return {k: int(row[k] or 0) for k in row.asDict()}
+
+    # eight source partitions fragment each part into sub-blocks
+    pl.run_encode(cg.code_table(spark, 3000, partitions=8), path,
+                  target_rows=1500, resume=False)
+    pl.run_encode(cg.code_table(spark, 500, partitions=2), path,
+                  target_rows=1500, generation=1)
+    assert pl.store_summary(spark, path) == combined()
+    assert pl.compact_store(spark, path,
+                            max_pages_per_column=4)["parts_compacted"] > 0
+    assert pl.store_summary(spark, path) == combined()
+    first = pl.read_lineage(spark, path).orderBy("part_key").first()
+    pl.remove_parts(spark, path, [first["part_key"]])
+    assert pl.store_summary(spark, path) == combined()
+    assert pl.repair_lineage(spark, path) == combined()
+    assert combined()["rows"] == 3500 - first["n_rows"]

@@ -403,6 +403,21 @@ def test_verify_roundtrip_rejects_boundary_and_null_collisions(spark):
     assert pl.verify_roundtrip(src, src)["ok"]
 
 
+@pytest.mark.parametrize("src,dec", [
+    ("array('a, b')", "array('a', 'b')"),
+    ("map('k', 'a, l -> b')", "map('k', 'a', 'l', 'b')"),
+    ("named_struct('x', 'a, b')", "named_struct('x', 'a', 'y', 'b')"),
+])
+def test_verify_roundtrip_rejects_nested_element_collisions(spark, src, dec):
+    """A list, map or struct whose elements are split or merged at ", "
+    is a different value: its string form must quote the elements."""
+    s = spark.sql(f"SELECT {src} AS v")
+    d = spark.sql(f"SELECT {dec} AS v")
+    res = pl.verify_roundtrip(s, d)
+    assert not res["ok"] and res["missing"] == 1 and res["extra"] == 1
+    assert pl.verify_roundtrip(s, s)["ok"]
+
+
 def test_chunk_page_id_overflow_raises():
     """r3 ADVICE: a page-id field overflow must fail AT ENCODE TIME with
     an accurate message, never surface later as a misleading duplicate-

@@ -72,6 +72,26 @@ def test_merge_over_pointer_committed_store(spark, tmp_path):
     assert pl.store_summary(spark, out)["rows"] == 500
 
 
+def test_merge_carries_generation_registry(spark, tmp_path):
+    """Rows appended by generation stay reachable by maintenance on the
+    merged store: remove_repos enumerates generation-composed part_keys
+    from the registry, so the merged store needs the sources'."""
+    a, b, out = (str(tmp_path / x) for x in ("a", "b", "out"))
+    cols = ["repo"] + COLS
+    pl.run_encode(_docs(spark, 0, 200).withColumn("repo", F.lit("ra")), a,
+                  columns=cols, target_rows=100, resume=False)
+    pl.run_encode(_docs(spark, 200, 260).withColumn("repo", F.lit("ra")), a,
+                  columns=cols, target_rows=100, generation=1)
+    pl.run_encode(_docs(spark, 260, 400).withColumn("repo", F.lit("rb")), b,
+                  columns=cols, target_rows=100, resume=False)
+    pl.merge_stores(spark, [a, b], out)
+    assert pl._store_generations(out) == [1]
+    res = pl.remove_repos(spark, out, ["ra"])
+    dec = pl.decode_blocks(pl.read_blocks(spark, out))
+    assert dec.where(F.col("repo") == "ra").count() == 0
+    assert dec.count() == res["rows"] == 140
+
+
 def test_remove_parts(spark, tmp_path):
     store = str(tmp_path / "rp")
     df = cg.code_table(spark, 600, partitions=2)
