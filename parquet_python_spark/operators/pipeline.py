@@ -8,10 +8,12 @@ Reference parity map:
   one **(repo, split_id)** group (see ``plans.partitioning``) plays the role
   of a row group; inside the group, rows are sliced into *pages* sized by
   sampled byte widths (mirror of ``_rows_per_page``, writer.py:458-484);
-  each (page × column) becomes one self-describing block
-  (``operators.encoder.encode_block``) with min/max/null stats
-  (writer.py:532-564) and the codec chosen by the sampling auto-selector
-  (``operators.selector`` — replaces the static dispatch writer.py:519).
+  as ``write_column`` does under every write entry point, one part
+  encoder (``_encode_part``) writes every block: each (page × column)
+  becomes one self-describing block (``operators.encoder.encode_block``)
+  with min/max/null stats (writer.py:532-564) and the codec chosen by the
+  sampling auto-selector (``operators.selector`` — replaces the static
+  dispatch writer.py:519).
 * ``write_multi`` + ``_metadata`` footer (writer.py:1007-1094, 1412-1439) →
   a parquet *blockstore* (the block rows) plus a *lineage* table (per-group
   rollup with an order-independent row-hash) — the consolidated-footer
@@ -39,6 +41,7 @@ import pyarrow as pa
 import pyarrow.compute  # noqa: F401 — binds pa.compute
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, IntegerType, LongType, MapType,
     StringType, StructField, StructType,
@@ -53,11 +56,11 @@ from . import fs as fs_mod
 from . import selector
 
 DEFAULT_PAGE_BYTES = 8 << 20  # target raw bytes per page across all columns
-# ingest (encode_table_local) buffers this much raw input per task before
-# sorting/encoding a chunk: bounds task memory independently of split
-# size (an executor with 4 concurrent tasks holds <=4 chunks + working
-# copies).  Bigger chunks -> fewer, larger sub-blocks (better ingest
-# ratio); compaction restores the ratio either way.
+# the chunk encoder (``_encode_chunks``) buffers this much raw input per
+# task before sorting/encoding a chunk: bounds task memory independently
+# of split size (an executor with 4 concurrent tasks holds <=4 chunks +
+# working copies).  Bigger chunks -> fewer, larger sub-blocks (better
+# ingest ratio); compaction restores the ratio either way.
 ENCODE_CHUNK_BYTES = 64 << 20
 # page-id composition limits: page_id = (pid * CHUNKS_PER_TASK + chunk)
 #   * PAGES_PER_CHUNK + page — int64-exact to ~9e7 tasks
@@ -84,44 +87,44 @@ BLOCKS_SCHEMA = StructType([
     StructField("min_num", DoubleType(), True),
     StructField("max_num", DoubleType(), True),
     StructField("row_hash", LongType(), True),
-    StructField("metrics", StringType(), True),
     StructField("bloom", ArrayType(LongType()), True),
     StructField("block", BinaryType(), False),
 ])
+# the same schema in Arrow: what the encode and recode UDFs return
+_ARROW_BLOCKS_SCHEMA = to_arrow_schema(BLOCKS_SCHEMA)
 
 _HELPER_COLS = ("part_key", "split_id")
 
 
-def _sampled_bytes_per_row(tbl: pa.Table, cols: list[str]) -> float:
-    """Mean bytes/row from a small head sample — mirror of the reference's
-    ``_rows_per_page`` string-length sampling (writer.py:458-484)."""
-    head = tbl.slice(0, 256)
-    total = 0.0
-    for c in cols:
-        t = tbl.schema.field(c).type
-        if pa.types.is_string(t) or pa.types.is_large_string(t) \
-                or pa.types.is_binary(t):
-            m = pa.compute.mean(pa.compute.binary_length(head[c])).as_py()
-            total += float(m or 0.0) + 4.0
-        elif pa.types.is_map(t):
-            # list_value_length has no map kernel — mean entries/row from
-            # the offsets directly
-            a = head[c].combine_chunks()
-            off = np.asarray(a.offsets, dtype=np.int64)
-            m = (off[-1] - off[0]) / max(len(a), 1) if len(off) else 0.0
-            total += float(m) * 16.0 + 4.0
-        elif pa.types.is_list(t) or pa.types.is_large_list(t):
-            m = pa.compute.mean(pa.compute.list_value_length(head[c])).as_py()
-            try:
-                w = t.value_type.bit_width / 8
-            except ValueError:
-                w = 16.0
-            total += float(m or 0.0) * w + 4.0
-        else:
-            try:
-                total += t.bit_width / 8
-            except (ValueError, AttributeError):
-                total += 8.0
+def _sampled_bytes_per_row(col: pa.ChunkedArray) -> float:
+    """Mean bytes/row of one column from a small head sample — mirror of
+    the reference's ``_rows_per_page`` string-length sampling
+    (writer.py:458-484)."""
+    head = col.slice(0, 256)
+    t = col.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t) \
+            or pa.types.is_binary(t):
+        m = pa.compute.mean(pa.compute.binary_length(head)).as_py()
+        total = float(m or 0.0) + 4.0
+    elif pa.types.is_map(t):
+        # list_value_length has no map kernel — mean entries/row from the
+        # offsets directly
+        a = head.combine_chunks()
+        off = np.asarray(a.offsets, dtype=np.int64)
+        m = (off[-1] - off[0]) / max(len(a), 1) if len(off) else 0.0
+        total = float(m) * 16.0 + 4.0
+    elif pa.types.is_list(t) or pa.types.is_large_list(t):
+        m = pa.compute.mean(pa.compute.list_value_length(head)).as_py()
+        try:
+            w = t.value_type.bit_width / 8
+        except ValueError:
+            w = 16.0
+        total = float(m or 0.0) * w + 4.0
+    else:
+        try:
+            total = t.bit_width / 8
+        except (ValueError, AttributeError):
+            total = 8.0
     return max(total, 1.0)
 
 
@@ -208,20 +211,6 @@ def _minmax_num(arr: pa.Array, dt: int) -> tuple[float | None, float | None]:
     return _num_bounds(lo.as_py(), hi.as_py())
 
 
-_ARROW_BLOCKS_SCHEMA = pa.schema([
-    ("part_key", pa.int64()), ("repo", pa.string()), ("split_id", pa.int32()),
-    ("page_id", pa.int64()), ("col_idx", pa.int32()), ("column", pa.string()),
-    ("codec", pa.string()), ("compression", pa.string()),
-    ("dtype_id", pa.int32()), ("n_values", pa.int64()),
-    ("n_nulls", pa.int64()), ("raw_size", pa.int64()),
-    ("encoded_size", pa.int64()), ("encode_ms", pa.float64()),
-    ("min_s", pa.string()), ("max_s", pa.string()),
-    ("min_num", pa.float64()), ("max_num", pa.float64()),
-    ("row_hash", pa.int64()), ("metrics", pa.string()),
-    ("bloom", pa.list_(pa.int64())),
-    ("block", pa.binary()),
-])
-
 # dtypes that carry a per-page Bloom filter for equality pruning: strings /
 # binary hash their utf-8 bytes, integer-view dtypes (ints, uints,
 # timestamps-as-µs, dates-as-days) their 8-byte little-endian value.
@@ -263,16 +252,15 @@ def _per_column_compression(compression, cols: list[str]) -> dict[str, str]:
 
 def make_encode_group(cols: list[str], page_bytes: int = DEFAULT_PAGE_BYTES,
                       compression_name="UNCOMPRESSED"):
-    """Build the applyInArrow function for one (part_key) group.
-
-    Arrow-native (no pandas object conversion in the hot path); the
-    order-independent per-page row hash XORs the JVM-computed ``_row_hash``
-    column (xxhash64 over all encoded columns, added pre-shuffle).
+    """Build the chunk encoder's ``encode_group(part_key, tbl)``: one
+    part's rows of one chunk -> its block table (``_encode_part``), pages
+    sized from the sampled bytes per row.  The per-page row hash XORs the
+    JVM-computed ``_row_hash`` column (xxhash64 over all encoded columns).
     ``compression_name`` may be a single codec or a per-column dict."""
     comp_names = _per_column_compression(compression_name, cols)
     for name in comp_names.values():
         comp.resolve(name)  # an unavailable codec fails here, not in a task
-    # per-column trial-metric hints, shared across every group/sub-block
+    # per-column trial-metric hints, shared across every part/sub-block
     # this python worker encodes: the expensive sampled trials (FSST /
     # line-split / BSS-gzip) run once per column per worker instead of
     # once per sub-block (ingest encodes a sub-block per
@@ -280,83 +268,71 @@ def make_encode_group(cols: list[str], page_bytes: int = DEFAULT_PAGE_BYTES,
     # measured ~60% of encode time at bench scale)
     trial_hints: dict[str, dict] = {}
 
-    def encode_group(key: tuple, tbl: pa.Table) -> pa.Table:
-        part_key = int(key[0].as_py() if hasattr(key[0], "as_py") else key[0])
-        out: list[dict] = []
-        if tbl.num_rows == 0:
-            return _ARROW_BLOCKS_SCHEMA.empty_table()
+    def encode_group(part_key: int, tbl: pa.Table) -> pa.Table:
         if "repo" in tbl.column_names:
             repos = pa.compute.unique(tbl["repo"])
             repo = repos[0].as_py() if len(repos) == 1 else None
         else:  # re-encode of decoded rows (merge/remove maintenance)
             repo = None
         split_id = int(tbl["split_id"][0].as_py()) if "split_id" in tbl.column_names else 0
-        rh_all = (np.asarray(tbl["_row_hash"].combine_chunks(), dtype=np.int64)
-                  if "_row_hash" in tbl.column_names else None)
-        # pages are sized PER COLUMN (parquet column-chunk model): a narrow
-        # column becomes one big block per group while a wide one splits —
-        # this amortizes per-block fixed costs (symbol-table builds,
-        # selector sampling) that dominated with row-aligned pages
-        for ci, c in enumerate(cols):
-            def row_hash(page_id, lo, hi):
-                return (int(np.bitwise_xor.reduce(
-                    rh_all[lo:hi].view(np.uint64)).astype(np.int64))
-                    if rh_all is not None and ci == 0 and hi > lo else 0)
+        rh = (np.asarray(tbl["_row_hash"].combine_chunks(), dtype=np.int64)
+              .view(np.uint64) if "_row_hash" in tbl.column_names else None)
 
-            bpr = _sampled_bytes_per_row(tbl, [c])
-            out += _encode_pages(
-                tbl[c].combine_chunks(), max(int(page_bytes / bpr), 1024),
-                comp_names[c], trial_hints.setdefault(c, {}), row_hash,
-                part_key=part_key, repo=repo, split_id=split_id, col_idx=ci,
-                column=_meta_name(c))  # dotted path in metadata
-        return pa.Table.from_pylist(out, schema=_ARROW_BLOCKS_SCHEMA)
+        def row_hash(ci, page_id, lo, hi):
+            return (int(np.bitwise_xor.reduce(rh[lo:hi]).astype(np.int64))
+                    if rh is not None and ci == 0 and hi > lo else 0)
+
+        return _encode_part(
+            ((_meta_name(c), tbl[c].combine_chunks(),  # dotted path
+              _sampled_bytes_per_row(tbl[c]), comp_names[c]) for c in cols),
+            page_bytes, trial_hints, row_hash,
+            part_key=part_key, repo=repo, split_id=split_id)
 
     return encode_group
 
 
-def _encode_pages(col: pa.Array, rows_per_page: int, comp_name: str,
-                  hints: dict, row_hash, **fields) -> list[dict]:
-    """One column of one part -> its block rows: per page, the selector's
-    codec, the encoded block, min/max stats and the Bloom filter.
-    ``fields`` are shared by every page; ``row_hash(page_id, lo, hi)``
-    gives each page's lineage hash."""
-    comp_id = comp.resolve(comp_name)
-    out = []
-    for page_id, lo in enumerate(range(0, len(col), rows_per_page)):
-        hi = min(lo + rows_per_page, len(col))
-        arr = col.slice(lo, hi - lo)
-        t0 = time.perf_counter()
-        choice = selector.choose(arr, compressed=comp_id != comp.UNCOMPRESSED,
-                                 hints=hints)
-        blk = enc.encode_block(arr, choice.codec, comp_id)
-        ms = (time.perf_counter() - t0) * 1000.0
-        mn, mx = _minmax_str(arr)
-        mn_n, mx_n = _minmax_num(arr, choice.dtype_id)
-        out.append(dict(
-            fields, page_id=page_id, codec=choice.codec_name,
-            compression=comp_name, dtype_id=choice.dtype_id,
-            n_values=hi - lo, n_nulls=int(arr.null_count),
-            raw_size=int(arr.nbytes), encoded_size=len(blk), encode_ms=ms,
-            min_s=mn, max_s=mx, min_num=mn_n, max_num=mx_n,
-            row_hash=row_hash(page_id, lo, hi),
-            metrics=_metrics_json(choice.metrics),
-            bloom=_page_bloom(arr, choice.dtype_id), block=blk))
-    return out
+def _encode_part(columns, page_bytes: int, hints: dict[str, dict], row_hash,
+                 **fields) -> pa.Table:
+    """One part -> its block table, built column-wise: the one block
+    writer under encode and recode.
 
-
-def _metrics_json(metrics: dict) -> str:
-    import json
-
-    def clean(v):
-        if isinstance(v, (np.integer,)):
-            return int(v)
-        if isinstance(v, (np.floating,)):
-            return float(v)
-        if isinstance(v, dict):
-            return {k: clean(x) for k, x in v.items()}
-        return v
-
-    return json.dumps({k: clean(v) for k, v in metrics.items()})
+    ``columns`` yields, in col_idx order, (metadata name, array, raw bytes
+    per row, compression name).  Pages are sized PER COLUMN (parquet
+    column-chunk model): ``page_bytes / bytes per row`` rows, at least
+    1024, so a narrow column becomes one big block per part while a wide
+    one splits — this amortizes per-block fixed costs (symbol-table
+    builds, selector sampling).  Per page: the selector's codec, the
+    encoded block, min/max stats and the Bloom filter.  ``hints`` holds
+    the selector's trial hints per column name; ``row_hash(col_idx,
+    page_id, lo, hi)`` gives each page's lineage hash; ``fields``
+    (part_key, repo, split_id) are shared by every block."""
+    out: dict[str, list] = {name: [] for name in _ARROW_BLOCKS_SCHEMA.names}
+    for ci, (name, col, bytes_per_row, comp_name) in enumerate(columns):
+        comp_id = comp.resolve(comp_name)
+        rows_per_page = max(int(page_bytes / bytes_per_row), 1024)
+        for page_id, lo in enumerate(range(0, len(col), rows_per_page)):
+            hi = min(lo + rows_per_page, len(col))
+            arr = col.slice(lo, hi - lo)
+            t0 = time.perf_counter()
+            choice = selector.choose(
+                arr, compressed=comp_id != comp.UNCOMPRESSED,
+                hints=hints.setdefault(name, {}))
+            blk = enc.encode_block(arr, choice.codec, comp_id)
+            ms = (time.perf_counter() - t0) * 1000.0
+            mn, mx = _minmax_str(arr)
+            mn_n, mx_n = _minmax_num(arr, choice.dtype_id)
+            page = dict(
+                fields, page_id=page_id, col_idx=ci, column=name,
+                codec=choice.codec_name, compression=comp_name,
+                dtype_id=choice.dtype_id, n_values=hi - lo,
+                n_nulls=int(arr.null_count), raw_size=int(arr.nbytes),
+                encoded_size=len(blk), encode_ms=ms, min_s=mn, max_s=mx,
+                min_num=mn_n, max_num=mx_n,
+                row_hash=row_hash(ci, page_id, lo, hi),
+                bloom=_page_bloom(arr, choice.dtype_id), block=blk)
+            for k, v in page.items():
+                out[k].append(v)
+    return pa.Table.from_pydict(out, schema=_ARROW_BLOCKS_SCHEMA)
 
 
 STRUCT_NOTNULL = "__notnull"
@@ -436,6 +412,18 @@ def _flatten_structs(df: DataFrame, cols: list[str]):
     return df, out_cols
 
 
+def _path_tree(names: list[str]) -> dict[str, list[str]]:
+    """Dotted paths -> {first segment: the rest of each path under it}, in
+    first-seen order; a leaf segment maps to []."""
+    tree: dict[str, list[str]] = {}
+    for n in names:
+        head, dot, rest = n.partition(".")
+        tree.setdefault(head, [])
+        if dot:
+            tree[head].append(rest)
+    return tree
+
+
 def reassemble_structs(df: DataFrame) -> DataFrame:
     """Inverse of ``_flatten_structs``: dotted columns re-nest into struct
     columns, honoring the ``__notnull`` validity bit.  Escaped literal
@@ -445,22 +433,12 @@ def reassemble_structs(df: DataFrame) -> DataFrame:
         return df
 
     def build(prefix: str, names: list[str]):
-        children: dict[str, list[str]] = {}
-        order: list[str] = []
-        for n in names:
-            head = n.split(".", 1)[0]
-            if head not in children:
-                children[head] = []
-                order.append(head)
-            if "." in n:
-                children[head].append(n.split(".", 1)[1])
         exprs = []
-        for head in order:
+        for head, subs in _path_tree(names).items():
             if head == STRUCT_NOTNULL:
                 continue
             out_name = head.replace(META_ESC, ".")
             full = f"{prefix}{head}"
-            subs = children[head]
             if subs:
                 if all(s.split(".", 1)[0] == LIST_ITEM for s in subs):
                     exprs.append(
@@ -491,21 +469,11 @@ def _rebuild_list_struct(full: str, subs: list[str]):
         F.col(f"`{full}.{LIST_ITEM}.{r}`").alias(leafmap[r]) for r in rel])
 
     def build_elem(z, prefix: str, names: list[str]):
-        children: dict[str, list[str]] = {}
-        order: list[str] = []
-        for n in names:
-            head = n.split(".", 1)[0]
-            if head not in children:
-                children[head] = []
-                order.append(head)
-            if "." in n:
-                children[head].append(n.split(".", 1)[1])
         exprs = []
-        for head in order:
+        for head, inner in _path_tree(names).items():
             if head == STRUCT_NOTNULL:
                 continue
             out_name = head.replace(META_ESC, ".")
-            inner = children[head]
             if not inner:
                 exprs.append(z.getField(leafmap[f"{prefix}{head}"])
                              .alias(out_name))
@@ -576,30 +544,39 @@ def _project_for_encode(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.select(*[F.col(f"`{c}`") for c in keep])
 
 
-def encode_table(df: DataFrame, columns: list[str] | None = None,
-                 target_rows: int = part.DEFAULT_TARGET_ROWS,
-                 page_bytes: int = DEFAULT_PAGE_BYTES,
-                 compression: str = "UNCOMPRESSED",
-                 plan: DataFrame | None = None) -> DataFrame:
-    """Source DataFrame -> lazy blocks DataFrame (one row per page×column).
-
-    Struct columns flatten to dotted paths before encoding (see
-    ``_flatten_structs``); ``decode_blocks`` re-nests them.
-
-    The groupBy on ``part_key`` is the single shuffle of the encode path;
-    Catalyst plans it as hash-partitioned exchange + grouped Arrow UDF.
-    """
+def _encode_input(df: DataFrame, columns: list[str] | None,
+                  target_rows: int, plan: DataFrame | None):
+    """The encode prologue -> (frame of only what the encoder reads,
+    encoded column names): struct columns flatten to dotted paths (see
+    ``_flatten_structs``; ``decode_blocks`` re-nests them), literal dots
+    are escaped, part_keys are planned unless present, and the
+    order-independent row hash is computed JVM-side."""
     cols = columns or [c for c in df.columns if c not in _HELPER_COLS]
     df, cols = _flatten_structs(df, cols)
     df, cols = _rename_dotted(df, cols)
     if "part_key" not in df.columns:
         df = part.with_partition_plan(df, target_rows, plan=plan)
-    # order-independent row integrity hash, computed JVM-side pre-shuffle.
-    # Spark (correctly) refuses to hash MAP columns — entry order is
-    # unspecified — so maps are hashed via their sorted entry list.
-    df = _project_for_encode(_with_row_hash(df, cols), cols)
-    fn = make_encode_group(cols, page_bytes, compression)
-    return df.groupBy("part_key").applyInArrow(fn, BLOCKS_SCHEMA)
+    return _project_for_encode(_with_row_hash(df, cols), cols), cols
+
+
+def encode_table(df: DataFrame, columns: list[str] | None = None,
+                 target_rows: int = part.DEFAULT_TARGET_ROWS,
+                 page_bytes: int = DEFAULT_PAGE_BYTES,
+                 compression: str = "UNCOMPRESSED",
+                 plan: DataFrame | None = None) -> DataFrame:
+    """Source DataFrame -> lazy blocks DataFrame (one row per page×column),
+    each part encoded in one task: the maintenance encode.
+
+    The projected rows are hash-partitioned by ``part_key`` — the single
+    exchange of this path, carrying only the encoded columns — and then
+    run ``encode_table_local``'s chunk encoder (``mapInArrow``).  A task
+    holding more than ``ENCODE_CHUNK_BYTES`` of raw rows encodes them
+    chunk by chunk, so its parts may land as several sub-blocks (as at
+    ingest); task memory stays bounded and ``compact_store`` merges them.
+    """
+    df, cols = _encode_input(df, columns, target_rows, plan)
+    return _encode_chunks(df.repartition("part_key"), cols, page_bytes,
+                          compression)
 
 
 def _compose_page_ids(pages: np.ndarray, pid: int, chunk: int,
@@ -634,29 +611,30 @@ def encode_table_local(df: DataFrame, columns: list[str] | None = None,
     """``run_encode``'s ingest path: ``encode_table`` without the raw-data
     exchange.
 
-    ``encode_table`` hash-shuffles the raw fact table by part_key (1x raw
-    bytes over the network) and encodes each part whole.  Here every INPUT
-    partition encodes its own rows' sub-blocks locally inside one
-    ``mapInArrow`` pass; only the encoded blocks (~0.1x raw at measured
-    ratios) ever move — the part_key grouping happens implicitly at decode
-    or store-read time over compressed bytes.  Page ids compose
-    (input partition, local page) so a part's pages stay row-aligned
-    across columns regardless of which partitions contributed.  One task
-    runs per input partition: coalesce the input to run fewer.
+    ``encode_table`` hash-shuffles the projected rows by part_key (1x raw
+    bytes over the network) so each part is encoded in one task.  Here
+    every INPUT partition encodes its own rows' sub-blocks locally inside
+    one ``mapInArrow`` pass; only the encoded blocks (~0.1x raw at
+    measured ratios) ever move — the part_key grouping happens implicitly
+    at decode or store-read time over compressed bytes.  One task runs
+    per input partition: coalesce the input to run fewer.
 
     Trade-off: sub-blocks are bounded by the (partition x part) row
     overlap, so per-block dictionaries/symbol tables amortize less — the
     ratio degrades as input partitions fragment parts.  ``compact_store``
-    restores whole-part compression off the ingest path; ``encode_table``
-    (used by the maintenance ops) encodes whole parts directly.  Both
-    emit the same BLOCKS_SCHEMA and decode identically.
+    restores whole-part compression off the ingest path.  Both entry
+    points run the same encoder and decode identically.
     """
-    cols = columns or [c for c in df.columns if c not in _HELPER_COLS]
-    df, cols = _flatten_structs(df, cols)
-    df, cols = _rename_dotted(df, cols)
-    if "part_key" not in df.columns:
-        df = part.with_partition_plan(df, target_rows, plan=plan)
-    df = _project_for_encode(_with_row_hash(df, cols), cols)
+    df, cols = _encode_input(df, columns, target_rows, plan)
+    return _encode_chunks(df, cols, page_bytes, compression)
+
+
+def _encode_chunks(df: DataFrame, cols: list[str], page_bytes: int,
+                   compression) -> DataFrame:
+    """The one encode UDF: a ``mapInArrow`` pass that encodes each task's
+    rows chunk by chunk, per part.  Page ids compose (task, chunk, local
+    page), so a part's pages stay row-aligned across columns whichever
+    tasks and chunks contributed."""
     group_fn = make_encode_group(cols, page_bytes, compression)
 
     def emit_chunk(pid: int, chunk: int, batch_list: list):
@@ -669,10 +647,7 @@ def encode_table_local(df: DataFrame, columns: list[str] | None = None,
         bounds = np.r_[bounds, len(skeys)]
         for i in range(len(bounds) - 1):
             lo, hi = int(bounds[i]), int(bounds[i + 1])
-            sub = sorted_tbl.slice(lo, hi - lo)
-            out = group_fn((int(skeys[lo]),), sub)
-            if out.num_rows == 0:
-                continue
+            out = group_fn(int(skeys[lo]), sorted_tbl.slice(lo, hi - lo))
             pages = np.asarray(out["page_id"].combine_chunks(),
                                dtype=np.int64)
             new_pages = pa.array(_compose_page_ids(pages, pid, chunk),
@@ -1501,6 +1476,9 @@ def recode_blocks(blocks: DataFrame, page_bytes: int = DEFAULT_PAGE_BYTES,
     shape (``decode_blocks`` → ``encode_table``) moved ~2x raw bytes:
     decoded rows out of one python UDF, through a raw-row hash exchange,
     into another (measured 25 s vs 6 s for the same bench compaction).
+    The re-encode is the encoder's own part encoder (``_encode_part``);
+    only its inputs differ: pages are sized from the exact decoded bytes
+    per row, not a sample.
 
     ``compression=None`` preserves each column's incoming block codec;
     a string / per-column dict overrides it (same forms as
@@ -1519,9 +1497,7 @@ def recode_blocks(blocks: DataFrame, page_bytes: int = DEFAULT_PAGE_BYTES,
     computes), carried onto the part's first new block.
     """
     def recode_group(key: tuple, tbl: pa.Table) -> pa.Table:
-        part_key = int(key[0].as_py() if hasattr(key[0], "as_py") else key[0])
-        if tbl.num_rows == 0:
-            return _ARROW_BLOCKS_SCHEMA.empty_table()
+        part_key = key[0].as_py()
         repos = set(tbl["repo"].to_pylist())
         repo = repos.pop() if len(repos) == 1 else None
         splits = set(tbl["split_id"].to_pylist())
@@ -1538,10 +1514,8 @@ def recode_blocks(blocks: DataFrame, page_bytes: int = DEFAULT_PAGE_BYTES,
             col_order.setdefault(c, ci)
             col_comp.setdefault(c, cp)
         ordered = sorted(col_order, key=lambda c: (col_order[c], c))
-        override = (_per_column_compression(compression, ordered)
-                    if compression is not None else None)
-        out: list[dict] = []
-        trial_hints: dict[str, dict] = {}
+        if compression is not None:
+            col_comp = _per_column_compression(compression, ordered)
         decoded = _decode_columns(tbl)
         if sort_by:
             missing = [c for c in sort_by if c not in decoded]
@@ -1553,18 +1527,14 @@ def recode_blocks(blocks: DataFrame, page_bytes: int = DEFAULT_PAGE_BYTES,
                 pa.table({c: decoded[c] for c in sort_by}),
                 sort_keys=[(c, "ascending") for c in sort_by])
             decoded = {c: a.take(perm) for c, a in decoded.items()}
-        for ci, c in enumerate(ordered):
-            arr_all = decoded[c]
-            bpr = max(arr_all.nbytes / max(len(arr_all), 1), 1.0)
-            out += _encode_pages(
-                arr_all, max(int(page_bytes / bpr), 1024),
-                override[c] if override is not None else col_comp[c],
-                trial_hints.setdefault(c, {}),
-                lambda page_id, lo, hi: (rh_total if ci == 0 and page_id == 0
+        # exact bytes per row: the part is already decoded in memory
+        return _encode_part(
+            ((c, decoded[c], max(decoded[c].nbytes / max(len(decoded[c]), 1),
+                                 1.0), col_comp[c]) for c in ordered),
+            page_bytes, {},
+            lambda ci, page_id, lo, hi: (rh_total if ci == 0 and page_id == 0
                                          else 0),
-                part_key=part_key, repo=repo, split_id=split_id, col_idx=ci,
-                column=c)
-        return pa.Table.from_pylist(out, schema=_ARROW_BLOCKS_SCHEMA)
+            part_key=part_key, repo=repo, split_id=split_id)
 
     return blocks.groupBy("part_key").applyInArrow(recode_group,
                                                    BLOCKS_SCHEMA)
@@ -1897,7 +1867,6 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
         schema = StructType(
             [StructField("part_key", LongType(), False)] + list(schema.fields))
     want_cols = [f.name for f in schema.fields if f.name != "part_key"]
-    from pyspark.sql.pandas.types import to_arrow_schema
     expected = to_arrow_schema(schema)
 
     def decode_group(key: tuple, tbl: pa.Table) -> pa.Table:
@@ -1910,8 +1879,8 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
                 else pa.nulls(n_rows, type=expected.field(c).type)
                 for c in want_cols}
         if keep_part_key:
-            pk = int(key[0].as_py() if hasattr(key[0], "as_py") else key[0])
-            cols = {"part_key": pa.array(np.full(n_rows, pk, dtype=np.int64)),
+            cols = {"part_key": pa.array(np.full(n_rows, key[0].as_py(),
+                                                 dtype=np.int64)),
                     **cols}
         # cast to Spark's exact arrow schema (tz metadata on timestamps)
         return pa.table(cols).cast(expected)

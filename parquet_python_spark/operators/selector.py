@@ -9,12 +9,13 @@ encoded size per candidate codec; the smallest predicted size wins.
 
 The sampling style mirrors the reference's own page-sizing heuristic
 (``_rows_per_page`` samples string lengths, fastparquet/writer.py:458-484).
-Every choice is recorded with its metrics so the lineage table can expose
-codec-choice statistics (north_star requirement).
+The codec-choice statistics live in the store: every block row carries
+its ``codec``, ``raw_size``, ``encoded_size`` and ``encode_ms``, and
+each lineage row the part's ``codecs``.
 """
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -30,8 +31,6 @@ SAMPLE = 8192  # per-block sampling cap: selection cost stays O(sample)
 class Choice:
     codec: int
     dtype_id: int
-    n: int
-    metrics: dict = field(default_factory=dict)
 
     @property
     def codec_name(self) -> str:
@@ -74,36 +73,34 @@ def choose(arr: pa.Array, compressed: bool = False,
     n = len(arr)
     if enc._is_map_dt(dt):
         # key/value codecs are chosen recursively inside the MAP encoder
-        return Choice(enc.MAP, dt, n, {"map": True})
+        return Choice(enc.MAP, dt)
     if dt >= enc.DT_LIST_BASE:
         # child codec is chosen recursively inside the LIST encoder
         # (covers any nesting depth: list ids compose, e.g. 200 = list<list>)
-        return Choice(enc.LIST, dt, n, {"list": True})
+        return Choice(enc.LIST, dt)
     vals = arr.drop_null() if arr.null_count else arr
     nv = len(vals)
     if nv == 0:
-        return Choice(enc.PLAIN, dt, n, {"empty": True})
+        return Choice(enc.PLAIN, dt)
     samp = vals.slice(0, min(nv, SAMPLE))
 
     if dt in (enc.DT_STRING, enc.DT_BINARY):
-        return _choose_string(samp, vals, dt, n, hints)
+        return _choose_string(samp, vals, dt, hints)
     if dt == enc.DT_BOOL:
-        return Choice(enc.BITPACK, dt, n, {"width": 1})
+        return Choice(enc.BITPACK, dt)
     if dt in (enc.DT_FLOAT64, enc.DT_FLOAT32):
         return _choose_float(samp, vals, dt, n, compressed, hints)
-    return _choose_int(samp, vals, dt, n)
+    return _choose_int(samp, vals, dt)
 
 
-def _choose_string(samp: pa.Array, vals: pa.Array, dt: int, n: int,
+def _choose_string(samp: pa.Array, vals: pa.Array, dt: int,
                    hints: dict | None = None) -> Choice:
-    s = np.asarray(samp.cast(pa.string())) if dt == enc.DT_STRING else None
     k = len(samp)
     nv = len(vals)
     lens = pa.compute.binary_length(samp)
     avg_len = float(pa.compute.mean(lens).as_py() or 0.0)
     distinct = len(pa.compute.unique(samp))
     distinct_ratio = distinct / k
-    metrics = {"avg_len": avg_len, "distinct_ratio": distinct_ratio, "distinct": distinct}
 
     plain_size = nv * (avg_len + 4)
     sizes = {enc.PLAIN: plain_size}
@@ -114,7 +111,6 @@ def _choose_string(samp: pa.Array, vals: pa.Array, dt: int, n: int,
         if hexpack.is_applicable(samp.cast(pa.string())) and \
                 hexpack.is_applicable(vals.cast(pa.string())):
             sizes[enc.HEXPACK] = nv * avg_len / 2 + 6
-            metrics["hex"] = True
     # dict: labels + codes at dict width (ignore run savings; conservative)
     est_distinct_total = distinct if distinct < 0.5 * k else int(distinct_ratio * nv)
     width = bitpack.width_from_max(max(est_distinct_total - 1, 1))
@@ -149,7 +145,6 @@ def _choose_string(samp: pa.Array, vals: pa.Array, dt: int, n: int,
             est_dict = (trial["nd"] if line_ratio < 0.5
                         else line_ratio * est_lines_total)
             lw = bitpack.width_from_max(max(int(est_dict) - 1, 1))
-            metrics["line_ratio"] = line_ratio
             sizes[enc.LINEDICT] = (est_dict * (trial["mean_line"] + 4)
                                    + est_lines_total * lw / 8
                                    + nv * 4)
@@ -177,14 +172,12 @@ def _choose_string(samp: pa.Array, vals: pa.Array, dt: int, n: int,
             ratio = len(trial) / max(sample_bytes + 4.0 * t_rows, 1.0)
             if hints is not None:
                 hints["fsst_ratio"] = ratio
-        metrics["fsst_ratio"] = ratio
         # cost-aware: FSST encodes ~10× slower than plain/dict, so charge a
         # 1.3× penalty — it wins only when it saves real space (still well
         # under the reference's PLAIN output when chosen)
         sizes[enc.FSST] = ratio * plain_size * 1.3
     codec = min(sizes, key=sizes.get)
-    metrics["predicted_sizes"] = {enc.CODEC_NAMES[c]: int(v) for c, v in sizes.items()}
-    return Choice(codec, dt, n, metrics)
+    return Choice(codec, dt)
 
 
 def _choose_float(samp: pa.Array, vals: pa.Array, dt: int, n: int,
@@ -194,7 +187,6 @@ def _choose_float(samp: pa.Array, vals: pa.Array, dt: int, n: int,
     distinct = len(pa.compute.unique(samp))
     itemsize = 8 if dt == enc.DT_FLOAT64 else 4
     ratio = distinct / k
-    metrics = {"distinct_ratio": ratio}
     # predicted sizes, same style as ints/strings: dictionary pays off
     # whenever labels + packed codes undercut raw values
     est_distinct_total = distinct if ratio < 0.5 else int(ratio * n)
@@ -226,7 +218,6 @@ def _choose_float(samp: pa.Array, vals: pa.Array, dt: int, n: int,
             ints = np.rint(s_np.astype(np.float64) * full_scale)
             span = int(ints.max() - ints.min()) if k else 0
             iw = bitpack.width_from_max(max(span, 1))
-            metrics["dec_scale"] = full_scale
             sizes[enc.DECFLOAT] = n * iw / 8 + 17
     if compressed and enc.DECFLOAT not in sizes:
         # BYTE_STREAM_SPLIT has identical RAW size to PLAIN; it wins only
@@ -245,15 +236,13 @@ def _choose_float(samp: pa.Array, vals: pa.Array, dt: int, n: int,
             gain = round(1 - gz_bss / max(gz_plain, 1), 4)
             if hints is not None:
                 hints["bss_gain"] = gain
-        metrics["bss_gain"] = gain
         if gain > 0:
             sizes[enc.BSS] = n * itemsize * (1 - gain)
     codec = min(sizes, key=sizes.get)
-    metrics["predicted_sizes"] = {enc.CODEC_NAMES[c]: int(v) for c, v in sizes.items()}
-    return Choice(codec, dt, n, metrics)
+    return Choice(codec, dt)
 
 
-def _choose_int(samp: pa.Array, vals: pa.Array, dt: int, n: int) -> Choice:
+def _choose_int(samp: pa.Array, vals: pa.Array, dt: int) -> Choice:
     v = enc._to_int_view(samp, dt)
     nv = len(vals)
     k = len(v)
@@ -268,10 +257,6 @@ def _choose_int(samp: pa.Array, vals: pa.Array, dt: int, n: int) -> Choice:
     mb = dpad.reshape(-1, 32)
     mb_span = (mb.max(axis=1) - mb.min(axis=1)).astype(np.uint64)
     delta_width = float(np.mean([bitpack.width_from_max(int(s)) for s in mb_span])) if len(mb) else 0.0
-    metrics = {
-        "distinct_ratio": distinct / k, "mean_run_len": run_len,
-        "range_width": range_width, "delta_width": delta_width,
-    }
 
     itemsize = {enc.DT_INT64: 8, enc.DT_TIMESTAMP_US: 8, enc.DT_INT32: 4,
                 enc.DT_DATE32: 4, enc.DT_INT16: 2, enc.DT_INT8: 1,
@@ -289,5 +274,4 @@ def _choose_int(samp: pa.Array, vals: pa.Array, dt: int, n: int) -> Choice:
         width = bitpack.width_from_max(max(est_distinct_total - 1, 1))
         sizes[enc.DICT] = est_distinct_total * itemsize + nv * width / 8
     codec = min(sizes, key=sizes.get)
-    metrics["predicted_sizes"] = {enc.CODEC_NAMES[c]: int(s) for c, s in sizes.items()}
-    return Choice(codec, dt, n, metrics)
+    return Choice(codec, dt)

@@ -211,7 +211,7 @@ def test_uint_blocks_decode_widened_through_spark(spark):
                raw_size=int(arr.nbytes), encoded_size=len(blk),
                encode_ms=0.0, min_s=None, max_s=None,
                min_num=float(vals.min()), max_num=float(vals.max()),
-               row_hash=0, metrics="{}", block=blk)
+               row_hash=0, block=blk)
     blocks = spark.createDataFrame([row], pl.BLOCKS_SCHEMA)
     out = pl.decode_blocks(blocks)
     assert dict(out.dtypes)["u"] == "bigint"

@@ -76,8 +76,8 @@ def _block_rows(part: int, pages: dict[str, list[pa.Array]]) -> list[dict]:
                 n_values=len(arr), n_nulls=arr.null_count,
                 raw_size=arr.nbytes, encoded_size=len(blk), encode_ms=0.0,
                 min_s=lo_s, max_s=hi_s, min_num=lo_n, max_num=hi_n,
-                row_hash=0, metrics=None,
-                bloom=pl._page_bloom(arr, choice.dtype_id), block=blk))
+                row_hash=0, bloom=pl._page_bloom(arr, choice.dtype_id),
+                block=blk))
     return rows
 
 
