@@ -56,11 +56,11 @@ from . import fs as fs_mod
 from . import selector
 
 DEFAULT_PAGE_BYTES = 8 << 20  # target raw bytes per page across all columns
-# the chunk encoder (``_encode_chunks``) buffers this much raw input per
-# task before sorting/encoding a chunk: bounds task memory independently
-# of split size (an executor with 4 concurrent tasks holds <=4 chunks +
-# working copies).  Bigger chunks -> fewer, larger sub-blocks (better
-# ingest ratio); compaction restores the ratio either way.
+# ingest (encode_table_local) buffers this much raw input per task before
+# sorting/encoding a chunk: bounds task memory independently of split
+# size (an executor with 4 concurrent tasks holds <=4 chunks + working
+# copies).  Bigger chunks -> fewer, larger sub-blocks (better ingest
+# ratio); compaction restores the ratio either way.
 ENCODE_CHUNK_BYTES = 64 << 20
 # page-id composition limits: page_id = (pid * CHUNKS_PER_TASK + chunk)
 #   * PAGES_PER_CHUNK + page — int64-exact to ~9e7 tasks
@@ -250,14 +250,14 @@ def _per_column_compression(compression, cols: list[str]) -> dict[str, str]:
     return {c: name for c in cols}
 
 
-def make_encode_group(cols: list[str], page_bytes: int = DEFAULT_PAGE_BYTES,
-                      compression_name="UNCOMPRESSED"):
-    """Build the chunk encoder's ``encode_group(part_key, tbl)``: one
-    part's rows of one chunk -> its block table (``_encode_part``), pages
-    sized from the sampled bytes per row.  The per-page row hash XORs the
-    JVM-computed ``_row_hash`` column (xxhash64 over all encoded columns).
-    ``compression_name`` may be a single codec or a per-column dict."""
-    comp_names = _per_column_compression(compression_name, cols)
+def _part_encoder(cols: list[str], page_bytes: int, compression):
+    """Build ``encode_part(part_key, tbl)``: one part's rows (a whole part
+    in ``encode_table``, one chunk's share in ``encode_table_local``) ->
+    its block table (``_encode_part``), pages sized from the sampled bytes
+    per row.  The per-page row hash XORs the JVM-computed ``_row_hash``
+    column (xxhash64 over all encoded columns).  ``compression`` may be a
+    single codec or a per-column dict."""
+    comp_names = _per_column_compression(compression, cols)
     for name in comp_names.values():
         comp.resolve(name)  # an unavailable codec fails here, not in a task
     # per-column trial-metric hints, shared across every part/sub-block
@@ -268,7 +268,7 @@ def make_encode_group(cols: list[str], page_bytes: int = DEFAULT_PAGE_BYTES,
     # measured ~60% of encode time at bench scale)
     trial_hints: dict[str, dict] = {}
 
-    def encode_group(part_key: int, tbl: pa.Table) -> pa.Table:
+    def encode_part(part_key: int, tbl: pa.Table) -> pa.Table:
         if "repo" in tbl.column_names:
             repos = pa.compute.unique(tbl["repo"])
             repo = repos[0].as_py() if len(repos) == 1 else None
@@ -288,7 +288,7 @@ def make_encode_group(cols: list[str], page_bytes: int = DEFAULT_PAGE_BYTES,
             page_bytes, trial_hints, row_hash,
             part_key=part_key, repo=repo, split_id=split_id)
 
-    return encode_group
+    return encode_part
 
 
 def _encode_part(columns, page_bytes: int, hints: dict[str, dict], row_hash,
@@ -565,18 +565,25 @@ def encode_table(df: DataFrame, columns: list[str] | None = None,
                  compression: str = "UNCOMPRESSED",
                  plan: DataFrame | None = None) -> DataFrame:
     """Source DataFrame -> lazy blocks DataFrame (one row per page×column),
-    each part encoded in one task: the maintenance encode.
+    each part encoded whole in one task: the maintenance encode.
 
-    The projected rows are hash-partitioned by ``part_key`` — the single
-    exchange of this path, carrying only the encoded columns — and then
-    run ``encode_table_local``'s chunk encoder (``mapInArrow``).  A task
-    holding more than ``ENCODE_CHUNK_BYTES`` of raw rows encodes them
-    chunk by chunk, so its parts may land as several sub-blocks (as at
-    ingest); task memory stays bounded and ``compact_store`` merges them.
+    The groupBy on ``part_key`` is the single shuffle of this path (a
+    hash exchange carrying only the encoded columns, then a grouped Arrow
+    UDF); each group runs the part encoder ``encode_table_local`` shares.
+    The grouped UDF runs no Python task for an empty post-shuffle
+    partition.  A ``mapInArrow`` pass here would, and AQE does not
+    coalesce the partitions of a cached plan: each empty task cost
+    0.2-0.3 s on a 4-vCPU host, and ``roundtrip_sha`` over the cached
+    sf0.1 documents frame (one part in 8 shuffle partitions) ran 25-35%
+    slower.
     """
     df, cols = _encode_input(df, columns, target_rows, plan)
-    return _encode_chunks(df.repartition("part_key"), cols, page_bytes,
-                          compression)
+    encode_part = _part_encoder(cols, page_bytes, compression)
+
+    def encode_group(key: tuple, tbl: pa.Table) -> pa.Table:
+        return encode_part(key[0].as_py(), tbl)
+
+    return df.groupBy("part_key").applyInArrow(encode_group, BLOCKS_SCHEMA)
 
 
 def _compose_page_ids(pages: np.ndarray, pid: int, chunk: int,
@@ -622,20 +629,14 @@ def encode_table_local(df: DataFrame, columns: list[str] | None = None,
     Trade-off: sub-blocks are bounded by the (partition x part) row
     overlap, so per-block dictionaries/symbol tables amortize less — the
     ratio degrades as input partitions fragment parts.  ``compact_store``
-    restores whole-part compression off the ingest path.  Both entry
-    points run the same encoder and decode identically.
+    restores whole-part compression off the ingest path.  Page ids
+    compose (task, chunk, local page), so a part's pages stay row-aligned
+    across columns whichever tasks and chunks contributed.  Both entry
+    points run the same part encoder (``_part_encoder``) and decode
+    identically.
     """
     df, cols = _encode_input(df, columns, target_rows, plan)
-    return _encode_chunks(df, cols, page_bytes, compression)
-
-
-def _encode_chunks(df: DataFrame, cols: list[str], page_bytes: int,
-                   compression) -> DataFrame:
-    """The one encode UDF: a ``mapInArrow`` pass that encodes each task's
-    rows chunk by chunk, per part.  Page ids compose (task, chunk, local
-    page), so a part's pages stay row-aligned across columns whichever
-    tasks and chunks contributed."""
-    group_fn = make_encode_group(cols, page_bytes, compression)
+    encode_part = _part_encoder(cols, page_bytes, compression)
 
     def emit_chunk(pid: int, chunk: int, batch_list: list):
         tbl = pa.Table.from_batches(batch_list)
@@ -647,7 +648,7 @@ def _encode_chunks(df: DataFrame, cols: list[str], page_bytes: int,
         bounds = np.r_[bounds, len(skeys)]
         for i in range(len(bounds) - 1):
             lo, hi = int(bounds[i]), int(bounds[i + 1])
-            out = group_fn(int(skeys[lo]), sorted_tbl.slice(lo, hi - lo))
+            out = encode_part(int(skeys[lo]), sorted_tbl.slice(lo, hi - lo))
             pages = np.asarray(out["page_id"].combine_chunks(),
                                dtype=np.int64)
             new_pages = pa.array(_compose_page_ids(pages, pid, chunk),

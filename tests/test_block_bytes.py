@@ -209,3 +209,20 @@ def test_store_with_metrics_column_reads_prunes_and_compacts(spark, tmp_path):
     assert blocks_digest(pl.read_blocks(spark, old)) == \
         blocks_digest(pl.read_blocks(spark, cur))
     assert rows(pl.decode_blocks(pl.read_blocks(spark, old))) == dec_cur
+
+
+def test_encode_table_keeps_parts_whole(spark, monkeypatch):
+    """``encode_table`` writes each part as one block set (page ids 0..n-1
+    per column) however many input partitions feed its part_key exchange,
+    and whatever chunk size the ingest encoder streams with."""
+    src = _code(spark)  # 6 input partitions
+    monkeypatch.setattr(pl, "ENCODE_CHUNK_BYTES", 4 << 10)
+    blocks = pl.encode_table(src, target_rows=2_000).persist()
+    pages = {}
+    for r in blocks.select("part_key", "column", "page_id").collect():
+        pages.setdefault((r[0], r[1]), []).append(r[2])
+    assert len({k[0] for k in pages}) > 1
+    assert all(sorted(p) == list(range(len(p))) for p in pages.values()), \
+        pages
+    assert pl.verify_roundtrip(src, pl.decode_blocks(blocks))["ok"]
+    blocks.unpersist()

@@ -108,16 +108,3 @@ def test_encode_has_single_data_shuffle(spark):
     others = [m.group(0) for m in re.finditer(r"Exchange hashpartitioning\((\w+)", plan)
               if m.group(1) != "part_key"]
     assert all("repo" in o for o in others), others
-
-
-def test_encode_runs_the_ingest_map_udf(spark):
-    """``encode_table`` runs the same ``mapInArrow`` encoder as ingest
-    behind its part_key exchange: one MapInArrow node, no grouped Arrow
-    UDF (and so no sort of the raw rows by part_key)."""
-    import re
-
-    df = cg.code_table(spark, 300, partitions=2)
-    plan = _plan(pl.encode_table(part.assign_part_keys(
-        df, part.plan_splits(df, 200))))
-    assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
-    assert "FlatMapGroupsInArrow" not in plan, plan
