@@ -14,14 +14,13 @@ module is our equivalent over blockstore metadata rows:
   per distinct value rounded up to a power of two (so probe positions are
   a mask, not a mod), capped at ``MAX_BITS`` — pages too distinct to fit
   usefully store NULL and simply stay unprunable.
-* probing runs JVM-side, inside the metadata job that plans a filtered
-  decode: the driver hashes each filter LITERAL once
-  (``hash_pair_int`` / ``hash_pair_bytes``), folds the K probe positions
-  into constants, and ``operators.pipeline._sql_bloom_probe`` renders
-  them as one SQL predicate over the stored words (a word fetch and a
-  bit test per probe).  No Python touches per-block data and the words
-  never reach the driver, so pruning scales with metadata rows, not
-  store bytes.
+* probing runs on the driver, in the planner of a filtered decode: it
+  hashes each filter LITERAL once (``hash_pair_int`` /
+  ``hash_pair_bytes``) and ``maybe_contains_many`` tests the K probe
+  positions against every page's stored words at once (numpy over the
+  flattened list column, no per-page Python).  Only the payload-free
+  metadata columns reach the driver, so pruning scales with metadata
+  rows, not store bytes.
 
 Hash: double hashing h(i) = h1 + i*h2 (Kirsch-Mitzenmacher) over two
 independent 32-bit streams of the value's canonical rendering —
@@ -33,11 +32,9 @@ crc32 loop was ~30% of total encode CPU at page granularity):
 * strings/binary hash with pandas' C siphash (``pd.util.hash_array``,
   two fixed 16-byte keys = two streams; one C pass over the array).
 
-Both streams are masked to 32 bits so the probe constants ``h1 + i*h2``
-stay well inside a SQL BIGINT, and their word indexes inside an INT.  The
-stream definitions are a FORMAT CONSTANT: build (executor) and probe
-(driver literal hashing) must move together, and stores persist their
-filters.
+Both streams are masked to 32 bits.  The stream definitions are a FORMAT
+CONSTANT: build (executor) and probe (driver literal hashing) must move
+together, and stores persist their filters.
 False positives only cost a wasted decode (the exact re-filter still
 runs); false negatives are impossible because every non-null value's
 bits are set from the same canonical rendering the probe uses.
@@ -150,17 +147,39 @@ def build(arr: pa.Array, is_string: bool) -> list[int] | None:
     return words.view(np.int64).tolist()
 
 
+def maybe_contains_many(words, h1: int, h2: int) -> np.ndarray:
+    """Probe one value's hash pair against many filters: ``words`` is a
+    list array (or chunked list array) of filter words, one filter per
+    row.  Returns a bool ndarray, True where the value may be present.  A
+    NULL or empty filter keeps its row (True): it rules nothing out.
+    Positions are taken modulo 2^64 before the power-of-two mask, which
+    leaves them unchanged: the mask keeps only low bits."""
+    if isinstance(words, pa.ChunkedArray):
+        words = (words.combine_chunks() if words.num_chunks
+                 else pa.array([], words.type))
+    sizes = np.asarray(pa.compute.list_value_length(words).fill_null(0),
+                       dtype=np.int64)
+    out = np.ones(len(words), dtype=bool)
+    live = np.flatnonzero(sizes > 0)
+    if not len(live):
+        return out
+    flat = np.asarray(words.values, dtype=np.int64).view(np.uint64)
+    base = np.asarray(words.offsets, dtype=np.int64)[live]
+    mask = (sizes[live] * 64 - 1).astype(np.uint64)
+    hit = np.ones(len(live), dtype=bool)
+    for i in range(K):
+        p = np.uint64((int(h1) + i * int(h2)) & 0xFFFF_FFFF_FFFF_FFFF) & mask
+        w = flat[base + (p >> np.uint64(6)).astype(np.int64)]
+        hit &= ((w >> (p & np.uint64(63))) & np.uint64(1)).astype(bool)
+    out[live] = hit
+    return out
+
+
 def maybe_contains(words: list[int], v: bytes | int) -> bool:
-    """Local probe (tests / driver-side checks); the production probe is
-    the SQL predicate of ``operators.pipeline._sql_bloom_probe``, which
-    must agree with it bit for bit.  Pass bytes for the string rendering,
-    an int for the integer one."""
-    m = len(words) * 64
+    """Probe one filter for one value (tests and driver-side checks):
+    ``maybe_contains_many`` over a single row.  Pass bytes for the string
+    rendering, an int for the integer one."""
     h1, h2 = (hash_pair_int(v) if isinstance(v, int)
               else hash_pair_bytes(v))
-    w = np.asarray(words, dtype=np.int64).view(np.uint64)
-    for i in range(K):
-        p = (h1 + i * h2) & (m - 1)
-        if not (int(w[p >> 6]) >> (p & 63)) & 1:
-            return False
-    return True
+    return bool(maybe_contains_many(
+        pa.array([words], pa.list_(pa.int64())), h1, h2)[0])

@@ -15,7 +15,9 @@ The engine's DATA files (parquet part files under ``blocks/``,
 pluggable Hadoop FileSystem/committer layer — that side is already
 portable (S3A + magic committer, GCS connector, …).  This interface
 covers everything the commit protocol does OUTSIDE a Spark job: listing,
-the pointer-file commit, and file/directory deletes.
+the pointer-file commit, and file/directory deletes, plus the ranged
+reads with which the driver plans a decode from the block files'
+metadata columns.
 
 Implementations:
 - ``LocalFS`` (default): POSIX; ``put_atomic`` is write-tmp + os.replace
@@ -32,12 +34,14 @@ may retry any step.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote
 
 
 def _strip_uri(path: str) -> str:
-    """file:// URIs (Spark's input_file_name) -> local paths."""
+    """file:// URIs (Spark's ``inputFiles`` and ``input_file_name``, which
+    percent-encode the path: a space reads ``%20``) -> local paths."""
     if path.startswith("file://"):
-        return path[7:]
+        return unquote(path[7:])
     return path
 
 
@@ -58,6 +62,12 @@ class StoreFS:
         raise NotImplementedError
 
     def read_bytes(self, path: str) -> bytes:
+        raise NotImplementedError
+
+    def open(self, path: str):
+        """A seekable binary file object: a reader fetches the byte ranges
+        it needs (a parquet footer and the column chunks it selects), not
+        the whole object.  The caller closes it."""
         raise NotImplementedError
 
     def put_atomic(self, path: str, data: bytes) -> None:
@@ -103,6 +113,9 @@ class LocalFS(StoreFS):
     def read_bytes(self, path: str) -> bytes:
         with open(_strip_uri(path), "rb") as f:
             return f.read()
+
+    def open(self, path: str):
+        return open(_strip_uri(path), "rb")
 
     def put_atomic(self, path: str, data: bytes) -> None:
         p = _strip_uri(path)
@@ -158,6 +171,9 @@ class FsspecFS(StoreFS):
 
     def read_bytes(self, path: str) -> bytes:
         return self._fs.cat_file(path)
+
+    def open(self, path: str):
+        return self._fs.open(path, "rb")
 
     def put_atomic(self, path: str, data: bytes) -> None:
         # object-store PUT is atomic per object; pipe_file is one PUT

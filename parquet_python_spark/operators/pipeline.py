@@ -39,6 +39,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute  # noqa: F401 — binds pa.compute
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -696,14 +697,6 @@ def _list_part_files(path: str) -> set[str]:
             if os.path.basename(f).startswith("part-")}
 
 
-def _is_path_missing(exc: Exception) -> bool:
-    """True only for path-not-found analysis errors.  Anything else (IO
-    failure, corrupted footer, permissions) must propagate — swallowing it
-    would misread a damaged store as 'fresh' and duplicate-append."""
-    msg = str(exc)
-    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-
-
 # every lineage delta, manifest and fold output has this schema (the
 # rollup ``lineage_from_blocks`` writes); reading with it runs no
 # footer-inference job
@@ -1068,7 +1061,8 @@ def _read_lineage(spark: SparkSession, path: str,
 
 
 def completed_part_keys(spark: SparkSession, path: str) -> DataFrame | None:
-    """Completed part_keys, or None if no store exists yet.
+    """Completed part_keys, or None if the store holds no block file yet
+    (checked through StoreFS, so a fresh store is never read).
 
     Derived from the BLOCKS table, not lineage: parquet job commits make
     block files appear atomically, so a part_key present in blocks was
@@ -1077,23 +1071,21 @@ def completed_part_keys(spark: SparkSession, path: str) -> DataFrame | None:
     payload column is never read), but it still visits every block row of
     the store: ``run_encode`` skips it for a generation appended for the
     first time, whose part_keys cannot be in the store yet."""
-    try:
-        return read_blocks(spark, path).select("part_key").distinct()
-    except Exception as e:  # noqa: BLE001 — re-raised unless path-missing
-        if _is_path_missing(e):
-            return None
-        raise
+    if not _list_part_files(f"{path}/blocks"):
+        return None
+    return read_blocks(spark, path).select("part_key").distinct()
 
 
 def load_plan(spark: SparkSession, path: str) -> DataFrame | None:
     """The persisted plan, read with ``PLAN_SCHEMA`` (no schema-inference
-    job), or None if the store has none."""
-    try:
-        return spark.read.schema(PLAN_SCHEMA).parquet(f"{path}/plan")
-    except Exception as e:  # noqa: BLE001 — re-raised unless path-missing
-        if _is_path_missing(e):
-            return None
-        raise
+    job), or None if the store has none.  The ``plan/`` directory is
+    checked through StoreFS before Spark reads it: a read of a missing
+    path fails analysis, which Spark's listeners log as an error once any
+    ``DataFrame.observe`` has run in the session.  Every read error
+    propagates."""
+    if not fs_mod.get_fs(path).exists(f"{path}/plan"):
+        return None
+    return spark.read.schema(PLAN_SCHEMA).parquet(f"{path}/plan")
 
 
 def _plan_for_store(df: DataFrame, path: str, target_rows: int) -> DataFrame:
@@ -1733,7 +1725,8 @@ def _decode_columns(tbl: pa.Table) -> dict[str, pa.Array]:
 
 
 def _schema_from_column_rows(rows) -> StructType:
-    """(name, col_idx, dts) records -> decoded StructType.
+    """(``column``, ``col_idx_min``, ``dtype_id_distinct``) records ->
+    decoded StructType.
 
     Schema EVOLUTION aware: generations appended with extra columns give
     the union of all column names (first-seen col_idx order, so old
@@ -1742,9 +1735,9 @@ def _schema_from_column_rows(rows) -> StructType:
     loudly rather than mis-decoding (type widening is re-encode-time
     work — ``recode_blocks`` — not read-time guesswork)."""
     from pyspark.sql.pandas.types import from_arrow_type
-    rows = sorted(rows, key=lambda r: (r["col_idx"], r["name"]))
-    conflicts = {r["name"]: sorted(r["dts"]) for r in rows
-                 if len(r["dts"]) > 1}
+    rows = sorted(rows, key=lambda r: (r["col_idx_min"], r["column"]))
+    conflicts = {r["column"]: sorted(r["dtype_id_distinct"]) for r in rows
+                 if len(r["dtype_id_distinct"]) > 1}
     if conflicts:
         raise ValueError(
             f"columns with conflicting dtypes across parts: {conflicts} — "
@@ -1752,9 +1745,8 @@ def _schema_from_column_rows(rows) -> StructType:
     # spark_safe: unsigned widths promote to the next wider signed type
     # (Spark has no unsigned types; reference promotion api.py:974-996)
     return StructType([
-        StructField(r["name"],
-                    from_arrow_type(enc.spark_safe_arrow_type(sorted(r["dts"])[0])),
-                    True)
+        StructField(r["column"], from_arrow_type(enc.spark_safe_arrow_type(
+            r["dtype_id_distinct"][0])), True)
         for r in rows])
 
 
@@ -1765,59 +1757,104 @@ def infer_schema_from_blocks(blocks: DataFrame) -> StructType:
     return _plan_decode(blocks, None, [])[0]
 
 
-def _plan_decode(blocks: DataFrame, proj, groups):
-    """ONE metadata job over the payload-free block columns plans a decode
+# the payload-free block columns every plan reads, and the stats columns a
+# plan that prunes adds
+_PLAN_COLS = ("part_key", "column", "col_idx", "dtype_id", "encoded_size")
+_STATS_COLS = ("min_s", "max_s", "min_num", "max_num", "bloom")
+
+
+def _scan_files(blocks: DataFrame) -> list[str]:
+    """The files behind an untouched ``read_blocks`` frame (a bare file
+    relation), else ``[]``.  A cached frame lists none, and neither does
+    a fresh read of a cached path: Spark serves those from the cache."""
+    plan = blocks._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return []
+    return list(blocks.inputFiles())
+
+
+def _block_meta(blocks: DataFrame, cols) -> pa.Table:
+    """The ``cols`` of every block row as one Arrow table on the driver,
+    typed as in ``BLOCKS_SCHEMA``; a column the source lacks (``bloom``
+    before it existed, or dropped from the frame) reads as NULL.
+
+    An untouched ``read_blocks`` frame is read from its own files with
+    pyarrow through ``StoreFS.open`` (footers and the selected column
+    chunks, no Spark job); any other frame (filtered, joined, cached,
+    built in memory) by one ``select(...).toArrow()`` job."""
+    files = _scan_files(blocks)
+    if files:
+        tables = []
+        for f in files:
+            with fs_mod.get_fs(f).open(f) as fh:
+                pf = pq.ParquetFile(fh)
+                have = set(pf.schema_arrow.names)
+                tables.append(pf.read(columns=[c for c in cols if c in have]))
+    else:
+        tables = [blocks.select(*[c for c in cols
+                                  if c in blocks.columns]).toArrow()]
+
+    types = {c: _ARROW_BLOCKS_SCHEMA.field(c).type for c in cols}
+    return pa.concat_tables([
+        pa.table({c: t[c].cast(types[c]) if c in t.column_names
+                  else pa.nulls(t.num_rows, types[c]) for c in cols})
+        for t in tables])
+
+
+def _plan_decode(blocks: DataFrame, columns: list[str] | None, groups):
+    """A decode's plan, computed on the driver from the payload-free block
+    columns (``_block_meta``: the block files' own metadata column
+    chunks for an untouched ``read_blocks`` frame, else one collect job)
     -> (schema, kept part_keys or None when nothing prunes, {sizer column:
-    uncovered part_keys}).  Per projected column (``proj``; None = all):
-    min ``col_idx`` and the dtype set, i.e. the schema.  When pruning or
-    projecting, each block row with its pruning flags (``_prune_flags``)
-    is also aggregated per part (an explode: one shuffle serves both
-    keys): is the part kept, and does it hold any projected column?  A
-    part holding none (written before those columns existed) decodes
-    through its sizer column, whose length sizes the NULL fill instead of
-    the part silently vanishing (fastparquet NA-fills absent columns,
-    api.py:566-573).  Only schema rows and kept / uncovered parts are
-    collected."""
-    flags, keep = _prune_flags(
-        blocks, groups,
-        ["col_idx", "encoded_size",
-         (F.lit(True) if proj is None else proj).alias("_proj")])
-    prunes = keep != "true"
-    aggs = [F.expr("min(col_idx) AS col_idx"),
-            F.expr("collect_set(dtype_id) AS dts")]
-    if not prunes and proj is None:  # every part holds every column
-        rows = flags.groupBy(F.col("column").alias("name")).agg(*aggs).collect()
-        return _schema_from_column_rows(rows), None, {}
-    rows = (flags
-            .withColumn("_set",
-                        F.expr("explode(IF(_proj, array(0, 1), array(1)))"))
-            .groupBy(F.expr("IF(_set = 0, `column`, NULL) AS name"),
-                     F.expr("IF(_set = 1, part_key, NULL) AS part_key"))
-            .agg(*aggs, F.expr(f"{keep} AS _keep"),
-                 # an uncovered part's (column, encoded_size) pages
-                 F.expr("IF(bool_or(_proj), NULL, collect_list(IF(_proj, NULL,"
-                        " struct(`column`, encoded_size)))) AS pages"))
-            .where(f"name IS NOT NULL OR (_keep AND ({str(prunes).lower()}"
-                   " OR pages IS NOT NULL))")
-            .collect())
+    uncovered part_keys}).
+
+    Per projected column (``columns``; None = all): min ``col_idx`` and
+    the dtype set, i.e. the schema.  A requested name matches itself, its
+    escaped literal-dot spelling (``META_ESC``) and its struct children.
+    Under ``groups`` the kept parts are ``_kept_parts``.  A kept part
+    holding none of the projected columns (written before they existed)
+    decodes through its sizer column, whose length sizes the NULL fill
+    instead of the part silently vanishing (fastparquet NA-fills absent
+    columns, api.py:566-573)."""
+    tests = _prune_tests(groups)
+    m = _block_meta(blocks, _PLAN_COLS + (_STATS_COLS if tests else ()))
+    names = m["column"]
+    if columns is None:
+        proj = np.ones(m.num_rows, dtype=bool)
+    else:
+        match = list(dict.fromkeys(
+            list(columns) + [c.replace(".", META_ESC) for c in columns
+                             if "." in c]))
+        hit = pa.compute.is_in(names, value_set=pa.array(match, pa.string()))
+        for c in columns:
+            hit = pa.compute.or_(hit, pa.compute.starts_with(names, c + "."))
+        proj = np.asarray(hit, dtype=bool)
+    schema = _schema_from_column_rows(
+        m.filter(pa.array(proj)).group_by("column")
+        .aggregate([("col_idx", "min"), ("dtype_id", "distinct")])
+        .to_pylist())
+    keys, inv = np.unique(np.asarray(m["part_key"]), return_inverse=True)
+    keep = _kept_parts(m, keys, inv, tests)
+    uncovered = keep & ~_any_per_part(inv, len(keys), proj)
+    pages = (m.take(np.flatnonzero(uncovered[inv]))
+             .group_by(["part_key", "column"])
+             .aggregate([("encoded_size", "sum")])
+             .sort_by([("encoded_size_sum", "descending"),
+                       ("column", "descending")]))
     sizers: dict[str, list[int]] = {}
-    for r in rows:
-        if r["pages"] is not None:
-            # the column with the smallest encoded footprint, name as the
-            # tiebreak (not just the first name: r4 ADVICE)
-            size: dict[str, int] = {}
-            for c, b in r["pages"]:
-                size[c] = size.get(c, 0) + b
-            sizer = min(size, key=lambda c: (size[c], c))
-            sizers.setdefault(sizer, []).append(r["part_key"])
-    return (_schema_from_column_rows([r for r in rows
-                                      if r["name"] is not None]),
-            [r["part_key"] for r in rows if r["name"] is None] if prunes
-            else None, sizers)
+    # per part, the column with the smallest encoded footprint, name as
+    # the tiebreak (not just the first name: r4 ADVICE) — written last
+    for k, c in dict(zip(pages["part_key"].to_pylist(),
+                         pages["column"].to_pylist())).items():
+        sizers.setdefault(c, []).append(k)
+    return schema, keys[keep].tolist() if tests else None, sizers
 
 
 def _part_key_in(keys: list[int]):
-    """``part_key IN (...)`` as SQL text: one py4j call, pushed down."""
+    """``part_key IN (...)`` as SQL text: one py4j call, pushed down.  No
+    key: ``false``."""
+    if not len(keys):
+        return F.lit(False)
     return F.expr(f"part_key IN ({', '.join(str(int(k)) for k in keys)})")
 
 
@@ -1826,15 +1863,18 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
     """Blocks -> original rows (the reference's two-level read:
     filter_row_groups, then the row filter, api.py:691-794).
 
-    One metadata job plans the call (``_plan_decode``): the projected
-    schema, the schema-evolution coverage check and, under ``filters``,
-    the parts whose stats and Bloom filters may hold a match
-    (``prune_blocks`` semantics).  When no part survives the result is an
-    empty frame the optimizer folds to an empty local relation: no decode
-    job runs.  Otherwise the decode scans only the projected columns of
-    the kept parts (``column IN`` / ``part_key IN``, pushed into the block
-    scan), groups them by part in Python, and re-applies the exact
-    predicate to the decoded rows.
+    A driver-side plan (``_plan_decode``) gives the projected schema, the
+    schema-evolution coverage check and, under ``filters``, the parts
+    whose stats and Bloom filters may hold a match (``prune_blocks``
+    semantics).  It reads the payload-free block columns from one of two
+    sources: the block files' own metadata column chunks, read with
+    pyarrow, when ``blocks`` is an untouched ``read_blocks`` frame (no
+    Spark job), else one collect job over ``blocks``.  When no part
+    survives the result is an empty frame the optimizer folds to an empty
+    local relation: no decode job runs.  Otherwise the decode scans only
+    the projected columns of the kept parts (``column IN`` /
+    ``part_key IN``, pushed into the block scan), groups them by part in
+    Python, and re-applies the exact predicate to the decoded rows.
 
     ``keep_part_key=True`` prepends the originating part_key to every row
     (store-maintenance ops re-encode rows under their original parts).
@@ -1842,19 +1882,13 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
     exchange (``spark.sql.shuffle.partitions``, coalesced by AQE)."""
     user_cols = list(columns) if columns is not None else None
     groups = _norm_filters(filters)
-    proj = None
     if columns is not None:
         need = [c for grp in groups for (c, _, _) in grp]
         columns = list(dict.fromkeys(list(columns) + need))
-        # a requested struct column matches its dotted children; a column
-        # literally named 'a.b' matches its META_ESC metadata spelling
-        match = list(dict.fromkeys(
-            list(columns) + [c.replace(".", META_ESC) for c in columns
-                             if "." in c]))
-        proj = F.col("column").isin(match)
-        for c in columns:
-            proj = proj | F.col("column").startswith(c + ".")
-    schema, kept, sizers = _plan_decode(blocks, proj, groups)
+    schema, kept, sizers = _plan_decode(blocks, columns, groups)
+    # the metadata names of the projected columns present in the blocks
+    proj = (None if columns is None
+            else F.col("column").isin([f.name for f in schema.fields]))
     if filters is not None:
         # resolve filter names against the flat metadata schema: exact
         # (struct-path) spelling wins; else the escaped literal-dot one
@@ -1991,151 +2025,119 @@ def _bloom_hashes(lt: dict) -> dict:
             "days": ival(days) if isinstance(days, int) else None}
 
 
-# The pruning predicate is SQL text: integer and double constants are
-# folded in when the plan is built; string literals are elements of one
-# array-of-literals column, referenced as ``_lit[i]`` and never spliced
-# into the text.  Building it costs a few py4j calls however many probes
-# it holds.
-
-def _sql_in(vals) -> str:
-    return "(" + ", ".join(str(v) for v in vals) + ")"
+_RANGE_OPS = {"<": np.less, "<=": np.less_equal,
+              ">": np.greater, ">=": np.greater_equal}
 
 
-def _sql_double(x: float) -> str:
-    """An exact DOUBLE constant: ``repr`` round-trips, and the ``D``
-    suffix keeps it a DOUBLE, not a DECIMAL."""
-    if np.isinf(x):
-        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
-    return f"{float(x)!r}D"
+def _maybe_rows(t: pa.Table, op: str, v) -> np.ndarray:
+    """Per block row of ``t`` (rows of the filter's column): can it hold
+    an ``x`` with ``x op v``?  Yes unless its min/max stats or its Bloom
+    filter rule every literal out; rows without usable stats (none
+    stored, a NULL truncated max, a literal unreadable as the row's
+    dtype, a NULL ``bloom``) stay possible.  ``op`` is ``==``, ``in`` or
+    a range op."""
+    lits = [_literal_views(x) for x in (list(v) if op == "in" else [v])]
+    op = "==" if op == "in" else op
+    dt = np.asarray(t["dtype_id"])
+    out = np.ones(t.num_rows, dtype=bool)
 
+    def prune_range(dts, lo_col: str, hi_col: str, xs) -> None:
+        rows = np.isin(dt, dts)
+        if op != ">" and op != ">=":
+            rows &= np.asarray(t[lo_col].is_valid())
+        if op != "<" and op != "<=":
+            rows &= np.asarray(t[hi_col].is_valid())
+        idx = np.flatnonzero(rows)
+        if not len(idx) or any(x is None for x in xs):
+            return
+        lo = t[lo_col].take(idx).to_numpy(zero_copy_only=False)
+        hi = t[hi_col].take(idx).to_numpy(zero_copy_only=False)
+        hit = np.zeros(len(idx), dtype=bool)
+        for x in xs:
+            if op == "==":
+                hit |= (lo <= x) & (hi >= x)
+            elif op in ("<", "<="):
+                hit |= _RANGE_OPS[op](lo, x)
+            else:
+                # a NaN-bearing page stores max +inf, and Spark orders NaN
+                # above +inf: ``> +inf`` keeps such a page
+                hit |= _RANGE_OPS[">=" if x == np.inf else op](hi, x)
+        out[idx] = hit
 
-def _sql_any(terms) -> str:
-    terms = list(terms)
-    if "true" in terms:
-        return "true"
-    return "(" + " OR ".join(terms) + ")" if terms else "false"
-
-
-def _sql_case(branches) -> str:
-    """CASE over DISJOINT (condition, value) branches, ELSE true — so an
-    always-true branch can be dropped."""
-    whens = [f"WHEN {c} THEN {v}" for c, v in branches if v != "true"]
-    return f"CASE {' '.join(whens)} ELSE true END" if whens else "true"
-
-
-_RANGE_SQL = {"==": "({lo} <= {x} AND {hi} >= {x})",
-              "<": "{lo} < {x}", "<=": "{lo} <= {x}",
-              ">": "{hi} > {x}", ">=": "{hi} >= {x}"}
-
-
-def _sql_bloom_probe(hp: tuple[int, int] | None) -> str:
-    """``bloom.maybe_contains`` over the row's words: the K double-hash
-    positions are constants, so each probe is one word fetch (its
-    index masked by the power-of-two filter size) and one bit test."""
-    if hp is None:
-        return "true"
-    probes = []
-    for i in range(bloom.K):
-        p = hp[0] + i * hp[1]
-        probes.append(f"bit_get(get(bloom, {p >> 6} & (size(bloom) - 1)), "
-                      f"{p & 63}) = 1")
-    return "(" + " AND ".join(probes) + ")"
-
-
-def _sql_maybe(op: str, v, has_bloom: bool, lit) -> str | None:
-    """Row-level SQL: can this block row hold an ``x`` with ``x op v``?
-    Yes unless its min/max stats or its Bloom filter rule every literal
-    out; rows without usable stats (none stored, a NULL truncated max, a
-    literal unreadable as the row's dtype) stay possible.  None for ops
-    stats can't disprove (``!=``, ``not in``).  ``lit(s)`` returns the
-    SQL reference of a string literal."""
-    op = "==" if op == "=" else op
-    if op not in ("==", "<", "<=", ">", ">=", "in"):
-        return None
-    items = list(v) if op == "in" else [v]
-    rng = _RANGE_SQL["==" if op == "in" else op]
-    need = ((["min"] if op not in (">", ">=") else [])
-            + (["max"] if op not in ("<", "<=") else []))
-
-    def elig(kind: str, dts) -> str:
-        return " AND ".join([f"dtype_id IN {_sql_in(dts)}"]
-                            + [f"{b}_{kind} IS NOT NULL" for b in need])
-
-    lits = [_literal_views(x) for x in items]
-    branches = []
     if all(isinstance(lt["s"], str) for lt in lits):
-        branches.append((elig("s", [enc.DT_STRING]), _sql_any(
-            rng.format(lo="min_s", hi="max_s", x=lit(lt["s"]))
-            for lt in lits)))
-    # a NaN-bearing page stores max +inf, and Spark orders NaN above +inf:
-    # only ``>= +inf`` keeps such a page for ``> +inf``
-    def nrng(x):
-        return _RANGE_SQL[">="] if op == ">" and x == np.inf else rng
-
+        # object arrays of str compare by code point, which is the
+        # UTF-8 byte order Spark sorts strings in
+        prune_range([enc.DT_STRING], "min_s", "max_s",
+                    [lt["s"] for lt in lits])
     # stats of timestamps and dates are in their integer-view units
     for dts, key in (([enc.DT_TIMESTAMP_US], "ts"), ([enc.DT_DATE32], "days"),
                      (_PLAIN_NUM_DTS, "num")):
-        xs = [lt[key] for lt in lits]
-        branches.append((elig("num", dts), "true" if None in xs else _sql_any(
-            nrng(x).format(lo="min_num", hi="max_num",
-                           x=_sql_double(float(x)))
-            for x in xs)))
-    terms = [_sql_case(branches)]
-    if has_bloom and op in ("==", "in"):
+        prune_range(dts, "min_num", "max_num",
+                    [None if lt[key] is None else float(lt[key])
+                     for lt in lits])
+    if op == "==":
         # equality literals probe the page's Bloom filter — the one pruner
         # that works on high-cardinality UNSORTED columns
         hs = [_bloom_hashes(lt) for lt in lits]
-        probe = _sql_case(
-            (f"dtype_id IN {_sql_in(dts)}",
-             _sql_any(_sql_bloom_probe(h[key]) for h in hs))
-            for dts, key in ((_BLOOM_STR_DTS, "str"),
-                             ([enc.DT_TIMESTAMP_US], "ts"),
-                             ([enc.DT_DATE32], "days"),
-                             (_BLOOM_PLAIN_INT_DTS, "int")))
-        if probe != "true":
-            terms.append(f"coalesce(bloom IS NULL OR {probe}, true)")
-    return " AND ".join(t for t in terms if t != "true") or "true"
-
-
-def _prune_flags(blocks: DataFrame, groups, extra=()) -> tuple[DataFrame, str]:
-    """The one pruning implementation -> (block rows with ``part_key``,
-    ``column``, ``dtype_id``, ``extra`` and per filter triple ``i`` the
-    flags ``_h<i>``: the row is of the triple's column, and ``_m<i>``: it
-    also may hold a match (``_sql_maybe``); the aggregate SQL keeping a
-    part: OR over groups of AND over triples of ``NOT bool_or(_h<i>) OR
-    bool_or(_m<i>)``).  A part drops only when every page of the column
-    rules the triple out.  A dotted name matches both its struct-path and
-    escaped literal-dot spellings (keeping more is always safe)."""
-    strs: list[str] = []
-
-    def lit(s: str) -> str:
-        strs.append(s)
-        return f"_lit[{len(strs) - 1}]"
-
-    has_bloom = "bloom" in blocks.columns  # stores predate the bloom column
-    flags, keep_groups = [], []
-    for grp in groups:
-        terms = []
-        for c, op, v in grp:
-            maybe = _sql_maybe(op, v, has_bloom, lit)
-            if maybe is None:
+        for dts, key in ((_BLOOM_STR_DTS, "str"),
+                         ([enc.DT_TIMESTAMP_US], "ts"),
+                         ([enc.DT_DATE32], "days"),
+                         (_BLOOM_PLAIN_INT_DTS, "int")):
+            idx = np.flatnonzero(np.isin(dt, dts) & out)
+            if not len(idx) or any(h[key] is None for h in hs):
                 continue
-            i = len(flags) // 2
-            names = [c] + ([c.replace(".", META_ESC)] if "." in c else [])
-            is_col = f"`column` IN ({', '.join(lit(n) for n in names)})"
-            flags += [f"{is_col} AS _h{i}", f"{is_col} AND {maybe} AS _m{i}"]
-            terms.append(f"(NOT bool_or(_h{i}) OR bool_or(_m{i}))")
-        keep_groups.append(" AND ".join(terms) or "true")
-    keep = ("true" if not keep_groups or "true" in keep_groups
-            else " OR ".join(f"({g})" for g in keep_groups))
-    cols = ["part_key", "column", "dtype_id", *extra]
-    if keep == "true":
-        return blocks.select(*cols), keep
-    stats = ["min_s", "max_s", "min_num", "max_num"] + (
-        ["bloom"] if has_bloom else [])
-    out = blocks.select(*cols, *stats,
-                        F.array(*[F.lit(s) for s in strs]).alias("_lit"))
-    return out.selectExpr("*", *flags), keep
+            words = t["bloom"].take(idx)
+            hit = np.zeros(len(idx), dtype=bool)
+            for h in hs:
+                hit |= bloom.maybe_contains_many(words, *h[key])
+            out[idx] = hit
+    return out
+
+
+def _prune_tests(groups) -> list:
+    """Per OR group, the triples stats can disprove (not ``!=`` / ``not
+    in``) as (metadata names of the column, op, value); ``[]`` when some
+    group has none, so nothing prunes.  A dotted name matches both its
+    struct-path and its escaped literal-dot spelling."""
+    tests = []
+    for grp in groups:
+        tests.append([([c] + ([c.replace(".", META_ESC)] if "." in c else []),
+                       "==" if op == "=" else op, v)
+                      for c, op, v in grp
+                      if op in ("==", "=", "<", "<=", ">", ">=", "in")])
+        if not tests[-1]:
+            return []
+    return tests
+
+
+def _any_per_part(inv: np.ndarray, n_parts: int, rows: np.ndarray):
+    """Per part (``inv``: each row's part index): does any row hold?"""
+    return np.bincount(inv, weights=rows, minlength=n_parts) > 0
+
+
+def _kept_parts(m: pa.Table, keys: np.ndarray, inv: np.ndarray,
+                tests) -> np.ndarray:
+    """Per part of ``keys``: may it hold a row passing the filter?  A part
+    is kept when some group keeps it, and a group when every test does:
+    the part holds no page of the test's column, or one that may match
+    (``_maybe_rows``).  So a part drops only when every page of the
+    column rules the triple out."""
+    if not tests:
+        return np.ones(len(keys), dtype=bool)
+    keep = np.zeros(len(keys), dtype=bool)
+    for grp in tests:
+        grp_keep = np.ones(len(keys), dtype=bool)
+        for names, op, v in grp:
+            is_col = np.asarray(pa.compute.is_in(
+                m["column"], value_set=pa.array(names, pa.string())),
+                dtype=bool)
+            idx = np.flatnonzero(is_col)
+            maybe = np.zeros(m.num_rows, dtype=bool)
+            maybe[idx] = _maybe_rows(m.take(idx), op, v)
+            grp_keep &= (~_any_per_part(inv, len(keys), is_col)
+                         | _any_per_part(inv, len(keys), maybe))
+        keep |= grp_keep
+    return keep
 
 
 def prune_blocks(blocks: DataFrame, filters) -> DataFrame:
@@ -2150,17 +2152,16 @@ def prune_blocks(blocks: DataFrame, filters) -> DataFrame:
     typed min_num/max_num doubles (reference typed-stat coercion:
     api.py:1425-1518); ``==`` / ``in`` literals also probe the page's
     Bloom filter.  Pages without usable stats are kept; the exact
-    re-filter after decode decides.  Lazy: ``blocks`` semi-joined with
-    the kept part_keys, aggregated from the same flags
-    (``_prune_flags``) as ``decode_blocks``' one metadata job."""
-    groups = _norm_filters(filters)
-    flags, keep = _prune_flags(blocks, groups)
-    if keep == "true":
+    re-filter after decode decides.  The kept set is planned on the
+    driver as ``decode_blocks`` plans it (``_block_meta``,
+    ``_kept_parts``); returns ``blocks`` where ``part_key IN`` that set,
+    or ``blocks`` itself when nothing prunes."""
+    tests = _prune_tests(_norm_filters(filters))
+    if not tests:
         return blocks
-    kept = (flags.groupBy("part_key").agg(F.expr(keep).alias("_keep"))
-            .where("_keep").select("part_key"))
-    # one row per part — broadcast so the blocks side never shuffles
-    return blocks.join(F.broadcast(kept), ["part_key"], "left_semi")
+    m = _block_meta(blocks, ("part_key", "column", "dtype_id", *_STATS_COLS))
+    keys, inv = np.unique(np.asarray(m["part_key"]), return_inverse=True)
+    return blocks.where(_part_key_in(keys[_kept_parts(m, keys, inv, tests)]))
 
 
 def export_hive(df: DataFrame, path: str, partition_cols: list[str],
@@ -2248,25 +2249,17 @@ def head_rows(spark: SparkSession, path: str, n: int,
     ``head`` (api.py:288-307).  Picks the minimal part_key prefix whose
     cumulative row count covers ``n``, decodes only those.
 
-    The cutoff comes from an early-stopping iterator over the (tiny)
-    per-part row counts, sorted by part_key — NOT a no-partitionBy global
-    window, which would funnel every part's metadata row through one task
-    (r2 review finding; at 10^8 parts that single task is the bottleneck).
-    ``toLocalIterator`` streams one sorted partition at a time and stops
-    after O(parts needed) rows."""
+    The per-part row counts (the max over columns of summed ``n_values``)
+    come from the block files' metadata column chunks (``_block_meta``),
+    read on the driver without a Spark job."""
     blocks = read_blocks(spark, path)
-    parts = (blocks.groupBy("part_key", "column")
-             .agg(F.sum("n_values").alias("rows"))
-             .groupBy("part_key").agg(F.max("rows").alias("rows"))
-             .orderBy("part_key"))
-    cum, keys = 0, []
-    for r in parts.toLocalIterator():
-        keys.append(int(r["part_key"]))
-        cum += int(r["rows"])
-        if cum >= n:
-            break
-    need = spark.createDataFrame([(k,) for k in keys], "part_key long")
-    picked = blocks.join(F.broadcast(need), ["part_key"], "left_semi")
+    rows = (_block_meta(blocks, ("part_key", "column", "n_values"))
+            .group_by(["part_key", "column"]).aggregate([("n_values", "sum")])
+            .group_by("part_key").aggregate([("n_values_sum", "max")])
+            .sort_by("part_key"))
+    cum = np.cumsum(np.asarray(rows["n_values_sum_max"], dtype=np.int64))
+    keys = rows["part_key"].to_pylist()[:int(np.searchsorted(cum, n)) + 1]
+    picked = blocks.where(_part_key_in(keys))
     return decode_blocks(picked, columns=columns).limit(n)
 
 
@@ -2279,19 +2272,17 @@ def iter_pages(spark: SparkSession, path: str,
     """Generator of pandas DataFrames, one per part (row group) —
     ``iter_row_groups`` parity (api.py:397-413).
 
-    Parts are decoded in key-range batches of ``ITER_BATCH_PARTS``: one
-    Spark job fetches a whole batch, which is then sliced per part
-    locally — at 10^6 parts the old one-job-per-part shape was 10^6
-    scheduler round-trips (r3 judge finding); this is
-    ceil(parts / ITER_BATCH_PARTS) jobs while preserving the
-    one-frame-per-part yield order."""
+    The part_keys come from the block files' metadata column chunks
+    (``_block_meta``, no Spark job).  Parts are decoded in key-range
+    batches of ``ITER_BATCH_PARTS``: one Spark job fetches a whole batch,
+    which is then sliced per part locally — ceil(parts /
+    ITER_BATCH_PARTS) jobs, not one per part (r3 judge finding)."""
     blocks = read_blocks(spark, path)
-    keys = [int(r["part_key"]) for r in
-            (blocks.select("part_key").distinct()
-             .orderBy("part_key").collect())]
+    keys = np.unique(np.asarray(
+        _block_meta(blocks, ("part_key",))["part_key"])).tolist()
     for i in range(0, len(keys), ITER_BATCH_PARTS):
         chunk = keys[i:i + ITER_BATCH_PARTS]
-        grp = blocks.where(F.col("part_key").isin(chunk))
+        grp = blocks.where(_part_key_in(chunk))
         pdf = decode_blocks(grp, columns=columns,
                             keep_part_key=True).toPandas()
         for k in chunk:

@@ -7,8 +7,11 @@ as a translator to a single pyspark ``Column`` predicate.  In the reference
 these filters drive row-group *skipping* against min/max stats; on Spark the
 same triples become a Catalyst predicate — pushdown, partition pruning and
 row-group skipping then happen inside the scan for free.  The identical
-algebra is also applied to our *blockstore lineage stats* (min/max per block)
-to prune blocks before decode — see ``operators.pipeline.prune_blocks``.
+algebra also prunes whole parts of a blockstore before decode, against each
+block's min/max stats and Bloom filter: the driver evaluates it with
+pyarrow/numpy over the payload-free block columns, read from the block
+files' own metadata column chunks (``operators.pipeline.prune_blocks``,
+which ``decode_blocks`` plans through).
 
 Accepted shapes (same as the reference):
     [(c, op, v), ...]                 -> AND of all triples

@@ -81,9 +81,8 @@ class BlockStore:
 
     @property
     def columns(self) -> list[str]:
-        rows = (self.blocks.select("col_idx", "column").distinct()
-                .orderBy("col_idx").collect())
-        return [r["column"] for r in rows]
+        schema = pl.infer_schema_from_blocks(self.blocks)
+        return [f.name for f in schema.fields]
 
     @property
     def dtypes(self) -> dict[str, str]:

@@ -1,0 +1,88 @@
+#!/usr/bin/env python
+"""What planning a decode costs on one blockstore.
+
+Every ``decode_blocks`` / ``prune_blocks`` call plans on the driver from
+the payload-free block columns (``pipeline._block_meta``); for an
+untouched ``read_blocks`` frame they come from the block files' own
+metadata column chunks.  This prints, for the store at ``<store>``:
+
+* the number of block files and of pages (block rows);
+* the metadata bytes the planner holds on the driver, in total and per
+  part: the Arrow size of the plan and stats columns, Bloom words
+  included.  This is the design's driver-memory cost, O(pages);
+* the median planning time over 10 calls, in ms, for an unfiltered full
+  decode and for an equality lookup of a key absent from the store on
+  the first string column (when there is one), which reads every stats
+  column.  Each call builds a fresh ``read_blocks`` frame, as a caller
+  of ``decode_blocks`` does, and that time is included.
+
+Usage: ``python scripts/plan_stats.py <store>``
+"""
+from __future__ import annotations
+
+import os
+import statistics
+import sys
+import time
+
+os.environ.setdefault("MALLOC_MMAP_MAX_", "0")
+os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
+os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+CALLS = 10
+ABSENT = "\x00plan_stats: absent key"
+
+
+def _median_ms(fn) -> float:
+    fn()  # warm-up: imports, py4j and file caches
+    times = []
+    for _ in range(CALLS):
+        t = time.perf_counter()
+        fn()
+        times.append((time.perf_counter() - t) * 1e3)
+    return statistics.median(times)
+
+
+def main(store: str) -> None:
+    from pyspark.sql import SparkSession
+
+    from parquet_python_spark.operators import encoder as enc
+    from parquet_python_spark.operators import pipeline as pl
+
+    spark = (SparkSession.builder.master("local[2]")
+             .config("spark.ui.enabled", "false")
+             .config("spark.ui.showConsoleProgress", "false")
+             .getOrCreate())
+    try:
+        blocks = pl.read_blocks(spark, store)
+        meta = pl._block_meta(blocks, pl._PLAN_COLS + pl._STATS_COLS)
+        n_parts = len(set(meta["part_key"].to_pylist()))
+        print(f"store            {store}")
+        print(f"block files      {len(pl._scan_files(blocks))}")
+        print(f"pages            {meta.num_rows}")
+        print(f"parts            {n_parts}")
+        print(f"metadata bytes   {meta.nbytes}")
+        print(f"  per part       {meta.nbytes / max(n_parts, 1):.0f}")
+
+        def plan(groups):
+            return lambda: pl._plan_decode(pl.read_blocks(spark, store),
+                                           None, groups)
+
+        print(f"plan ms, full    {_median_ms(plan([])):.1f}")
+        strings = [c for c, d in zip(meta["column"].to_pylist(),
+                                     meta["dtype_id"].to_pylist())
+                   if d == enc.DT_STRING]
+        if strings:
+            ms = _median_ms(plan([[(strings[0], "==", ABSENT)]]))
+            print(f"plan ms, lookup  {ms:.1f}  ({strings[0]} == absent key)")
+    finally:
+        spark.stop()
+
+
+if __name__ == "__main__":
+    if len(sys.argv) != 2:
+        sys.exit(__doc__.strip().splitlines()[-1])
+    main(sys.argv[1])

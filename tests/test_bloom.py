@@ -80,6 +80,59 @@ def test_bloom_null_and_empty_pages():
     assert bloom.maybe_contains(words, b"y")
 
 
+def _scalar_probe(words: list[int], h1: int, h2: int) -> bool:
+    """The per-filter loop probe ``maybe_contains_many`` replaced, kept
+    as its reference: Python ints, so nothing wraps."""
+    m = len(words) * 64
+    w = np.asarray(words, dtype=np.int64).view(np.uint64)
+    for i in range(bloom.K):
+        p = (h1 + i * h2) & (m - 1)
+        if not (int(w[p >> 6]) >> (p & 63)) & 1:
+            return False
+    return True
+
+
+def test_maybe_contains_many_matches_scalar_probe():
+    """Over random pages of 1-64 words, dense and sparse, the vectorized
+    probe agrees bit for bit with the loop probe: for hash pairs of int
+    and bytes renderings, and for pairs near 2^64, where uint64 wraps.
+    NULL and empty filters keep their row."""
+    rng = np.random.default_rng(19)
+    M64 = (1 << 64) - 1
+    for trial in range(30):
+        pages = []
+        for _ in range(int(rng.integers(1, 40))):
+            n = int(rng.integers(1, 65))
+            w = rng.integers(-(1 << 63), (1 << 63) - 1, n, dtype=np.int64)
+            if rng.random() < 0.5:  # dense: most probes hit
+                w |= rng.integers(-(1 << 63), (1 << 63) - 1, n,
+                                  dtype=np.int64)
+            pages.append(w.tolist())
+        pages.append(bloom.build(pa.array(rng.integers(
+            0, 1000, int(rng.integers(1, 300)))), False))
+        arr = pa.array(pages + [None, []], pa.list_(pa.int64()))
+        pairs = [bloom.hash_pair_int(int(rng.integers(-(1 << 62), 1 << 62))),
+                 bloom.hash_pair_bytes(rng.bytes(int(rng.integers(0, 20)))),
+                 (M64, M64), (M64 - int(rng.integers(1 << 20)),
+                              M64 - 2 * int(rng.integers(1 << 20)) - 1),
+                 (int(rng.integers(1 << 62)) + (1 << 63), M64 - 2)]
+        for h1, h2 in pairs:
+            got = bloom.maybe_contains_many(arr, h1, h2)
+            assert got.tolist() == [_scalar_probe(p, h1, h2)
+                                    for p in pages] + [True, True], (h1, h2)
+            # chunked and sliced inputs read the same words
+            k = len(pages) // 2
+            chunked = pa.chunked_array([arr.slice(0, k), arr.slice(k)])
+            assert (bloom.maybe_contains_many(chunked, h1, h2)
+                    == got).all()
+    # the single-filter probe is the same function
+    words = bloom.build(pa.array(["a", "b", "c"]), True)
+    for v in (b"a", b"zz", 7, -3):
+        h = (bloom.hash_pair_int(v) if isinstance(v, int)
+             else bloom.hash_pair_bytes(v))
+        assert bloom.maybe_contains(words, v) == _scalar_probe(words, *h)
+
+
 # ----------------------------------------------------------- pipeline level
 
 @pytest.fixture(scope="module")

@@ -67,6 +67,31 @@ def test_lineage_and_plan_frames_run_no_job(spark, store):
     assert _jobs(spark, lambda: pl.load_plan(spark, store)) == 0
 
 
+class _NoRead:
+    """A session whose ``read`` fails the test."""
+
+    @property
+    def read(self):
+        raise AssertionError("spark.read called on a missing store")
+
+
+def test_missing_store_is_detected_without_a_read(tmp_path):
+    """A store that does not exist is recognised through StoreFS, never
+    by reading it: a failed read logs a listener error once any
+    ``observe`` has run in the session."""
+    missing = str(tmp_path / "absent")
+    assert pl.load_plan(_NoRead(), missing) is None
+    assert pl.completed_part_keys(_NoRead(), missing) is None
+
+
+def test_corrupt_plan_file_still_raises(spark, tmp_path):
+    plan = tmp_path / "s" / "plan"
+    plan.mkdir(parents=True)
+    (plan / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        pl.load_plan(spark, str(tmp_path / "s")).collect()
+
+
 def test_store_summary_is_one_aggregation(spark, store):
     """countDistinct + sums over the uncombined rows: a distinct map
     stage, a merge stage and the result — no combine exchange before."""

@@ -285,9 +285,9 @@ def _group_jobs(st, group: str) -> list[int]:
 
 
 def test_absent_key_decode_runs_only_the_metadata_job(spark, stores):
-    """A lookup that no part survives plans from one metadata job (a map
-    stage and a result stage: at most 2 jobs) and collects an empty local
-    relation: no decode job, no Python task."""
+    """A lookup that no part survives on a ``read_blocks`` frame plans on
+    the driver from the block files' metadata column chunks (no job) and
+    collects an empty local relation: no decode job, no Python task."""
     blocks = pl.read_blocks(spark, stores[0])
     f = [("k", "==", 10**12)]
     assert _kept(blocks, f) == set()
@@ -301,9 +301,121 @@ def test_absent_key_decode_runs_only_the_metadata_job(spark, stores):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert 1 <= len(_group_jobs(st, "absent-key-plan")) <= 2
+    assert _group_jobs(st, "absent-key-plan") == []
     assert _group_jobs(st, "absent-key-collect") == []
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "Python" not in plan, plan
     assert "Arrow" not in plan, plan
     assert df.columns == ["s", "k", "d", "t", "x"]
+
+
+def _plans_alike(spark, path, filters, columns=None):
+    """The plan from the block files equals the plan collected through
+    Spark, from a filtered frame and from a cached one."""
+    files = pl.read_blocks(spark, path)
+    assert pl._scan_files(files)
+    collected = pl.read_blocks(spark, path).where("true")
+    cached = pl.read_blocks(spark, path).cache()
+    try:
+        assert pl._scan_files(cached) == []
+        assert pl._scan_files(pl.read_blocks(spark, path)) == []
+        for f in filters:
+            groups = pl._norm_filters(f)
+            want = pl._plan_decode(files, columns, groups)
+            for other in (collected, cached):
+                schema, kept, sizers = pl._plan_decode(other, columns, groups)
+                assert schema == want[0], f
+                assert (kept is None) == (want[1] is None), f
+                assert set(kept or ()) == set(want[1] or ()), f
+                assert ({c: sorted(k) for c, k in sizers.items()}
+                        == {c: sorted(k) for c, k in want[2].items()}), f
+    finally:
+        cached.unpersist(blocking=True)
+
+
+@pytest.mark.parametrize("which", ["bloom", "legacy"])
+def test_file_and_collect_sources_plan_alike(spark, stores, which):
+    path = stores[0] if which == "bloom" else stores[1]
+    _plans_alike(spark, path,
+                 [[]] + FIXED + _random_filters(np.random.default_rng(23), 30))
+
+
+@pytest.fixture(scope="module")
+def mixed_store(tmp_path_factory):
+    """Two block files: parts 0-2 without a ``bloom`` column, parts 3-5
+    with the old ``metrics`` column and a column ``e`` that parts 0-2
+    lack."""
+    rng = np.random.default_rng(7)
+    old, new = [], []
+    for p in range(N_PARTS):
+        pages = _column_pages(rng, p)
+        if p >= 3:
+            pages["e"] = [pa.array([f"e{p}-{i}" for i in range(PAGE_ROWS)])
+                          for _ in range(PAGES)]
+        (new if p >= 3 else old).extend(_block_rows(p, pages))
+    path = tmp_path_factory.mktemp("mixed")
+    (path / "blocks").mkdir()
+    tbl = pa.Table.from_pylist(old, schema=pl._ARROW_BLOCKS_SCHEMA)
+    pq.write_table(tbl.drop(["bloom"]),
+                   str(path / "blocks" / "part-00000.parquet"))
+    tbl = pa.Table.from_pylist(new, schema=pl._ARROW_BLOCKS_SCHEMA)
+    tbl = tbl.append_column("metrics", pa.array(["{}"] * len(tbl)))
+    pq.write_table(tbl, str(path / "blocks" / "part-00001.parquet"))
+    return str(path), [dict(r, bloom=None) for r in old] + new
+
+
+def test_plan_from_files_of_mixed_block_schemas(spark, mixed_store):
+    """A file without ``bloom`` plans as NULL filters (kept), a file with
+    the old ``metrics`` column plans as any other, and parts without a
+    projected column decode through their sizer column."""
+    path, rows = mixed_store
+    blocks = pl.read_blocks(spark, path)
+    filters = FIXED + _random_filters(np.random.default_rng(29), 20)
+    for f in filters:
+        groups = pl._norm_filters(f)
+        assert _kept(blocks, f) == _oracle(rows, groups, use_bloom=True), f
+    _plans_alike(spark, path, filters[:8], columns=["e"])
+    schema, kept, sizers = pl._plan_decode(blocks, ["e"], [])
+    assert [fl.name for fl in schema.fields] == ["e"] and kept is None
+    assert sorted(k for ks in sizers.values() for k in ks) == [0, 1, 2]
+    got = pl.decode_blocks(blocks, columns=["e"]).collect()
+    assert len(got) == N_PARTS * PAGES * PAGE_ROWS
+    assert sum(r["e"] is None for r in got) == 3 * PAGES * PAGE_ROWS
+
+
+def _plan_jobs(spark, fn) -> list[int]:
+    sc = spark.sparkContext
+    group = f"plan-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "plan")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return _group_jobs(sc.statusTracker(), group)
+
+
+def test_full_decode_and_key_listing_of_read_blocks_run_no_job(spark, stores):
+    """An unfiltered full decode of a ``read_blocks`` frame plans from the
+    block files, and so does listing its part keys (``iter_pages``)."""
+    assert _plan_jobs(spark, lambda: pl.decode_blocks(
+        pl.read_blocks(spark, stores[0]))) == []
+    keys = []
+    assert _plan_jobs(spark, lambda: keys.extend(pl._block_meta(
+        pl.read_blocks(spark, stores[0]), ("part_key",))["part_key"]
+        .to_pylist())) == []
+    assert set(keys) == set(range(N_PARTS))
+
+
+def test_plan_reads_percent_encoded_file_uris(spark, stores, tmp_path):
+    """Spark lists a block file of a store whose path holds a space or a
+    ``%`` percent-encoded; the planner opens the file it names."""
+    import shutil
+
+    path = tmp_path / "a store %41"
+    shutil.copytree(stores[0], path)
+    blocks = pl.read_blocks(spark, str(path))
+    assert "%20" in pl._scan_files(blocks)[0]
+    f = [("s", "==", SPECIAL)]
+    assert _kept(blocks, f) == _kept(pl.read_blocks(spark, stores[0]), f)
+    assert pl.decode_blocks(blocks).count() == N_PARTS * PAGES * PAGE_ROWS

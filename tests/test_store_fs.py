@@ -277,3 +277,16 @@ def test_concurrent_commit_fence(spark, tmp_path):
     # was cleaned up; the store still reads consistently
     assert pl._read_lineage_ptr(store)["epoch"] == 2
     assert pl.store_summary(spark, store) == before
+
+
+def test_maintenance_unlinks_percent_encoded_file_uris(spark, tmp_path):
+    """Spark names a block file by its percent-encoded URI (a space reads
+    ``%20``): a removal must unlink the file it names, or the removed
+    part stays on disk and decodes again."""
+    store = str(tmp_path / "a store %41")
+    pl.run_encode(_docs(spark, 0, 300), store, columns=COLS,
+                  target_rows=100, resume=False)
+    key, n = pl.read_lineage(spark, store).select(
+        "part_key", "n_rows").first()
+    assert pl.remove_parts(spark, store, [key])["rows"] == 300 - n
+    assert pl.decode_blocks(pl.read_blocks(spark, store)).count() == 300 - n
