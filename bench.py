@@ -142,7 +142,6 @@ def bench_encode(spark, n_rows: int) -> dict:
 
     def wipe_data():
         shutil.rmtree(f"{store}/blocks", ignore_errors=True)
-        shutil.rmtree(f"{store}/lineage", ignore_errors=True)
         spark.catalog.refreshByPath(f"{store}/blocks")
 
     # min-of-2 timed passes: host steal on this VM varies identical runs
@@ -166,7 +165,6 @@ def bench_encode(spark, n_rows: int) -> dict:
         shutil.rmtree(store, ignore_errors=True)
         shutil.copytree(snap, store)
         spark.catalog.refreshByPath(f"{store}/blocks")
-        spark.catalog.refreshByPath(f"{store}/lineage")
         t0 = time.perf_counter()
         comp_res = pl.compact_store(
             spark, store,
@@ -175,10 +173,8 @@ def bench_encode(spark, n_rows: int) -> dict:
         w = time.perf_counter() - t0
         compact_sec = w if compact_sec is None else min(compact_sec, w)
     shutil.rmtree(snap, ignore_errors=True)
-    from pyspark.sql import functions as F
-    agg = pl.read_lineage(spark, store).agg(
-        F.sum("raw_bytes"), F.sum("enc_bytes")).collect()[0]
-    ratio_compacted = agg[1] / max(agg[0], 1)
+    compacted = pl.store_summary(spark, store)
+    ratio_compacted = compacted["enc_bytes"] / max(compacted["raw_bytes"], 1)
     # decode the (compacted — steady-state read path) store back, min-of-2
     dec_wall = None
     for _ in range(2):

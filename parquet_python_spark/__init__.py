@@ -15,7 +15,7 @@ kernels/    pure-numpy codec kernels (no Spark imports)
 operators/  codec auto-selector + column-block encoder/decoder
 sources/    deterministic source-code table generator; block table I/O
 plans/      Spark pipeline: repartition+salt -> mapInPandas encode ->
-            lineage/checkpoint -> anti-join resume -> decode/verify
+            blockstore -> anti-join resume -> decode/verify
 streaming/  Structured Streaming encode path
 functions/  training-data pipeline ops (dedup, similarity, text stats,
             multimodal plumbing)

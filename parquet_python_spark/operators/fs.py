@@ -4,20 +4,26 @@ layer speaks, with NO rename/move anywhere in it.
 Reference parity: fastparquet abstracts its filesystem behind
 ``open_with`` / ``mkdirs`` hooks (writer.py:1192-1197) so any fsspec
 filesystem can host a dataset.  This module is the same seam for the
-blockstore's maintenance protocol, designed one step further for object
-stores: directory rename is not in the interface at all, because S3/GCS/
-ABFS have no atomic (or even cheap) rename — the commit point is a
-single-object ``put_atomic`` of a small pointer file, which every object
-store gives you natively as PUT.
+blockstore, designed one step further for object stores: rename is not
+in the interface at all, because S3/GCS/ABFS have no atomic (or even
+cheap) rename.
 
-The engine's DATA files (parquet part files under ``blocks/``,
-``lineage/``, ``manifests/``) are written by Spark through its own
-pluggable Hadoop FileSystem/committer layer — that side is already
-portable (S3A + magic committer, GCS connector, …).  This interface
-covers everything the commit protocol does OUTSIDE a Spark job: listing,
-the pointer-file commit, and file/directory deletes, plus the ranged
-reads with which the driver plans a decode from the block files'
-metadata columns.
+The commit protocol has three parts:
+- block files under ``blocks/`` are written by Spark through its own
+  pluggable Hadoop FileSystem/committer layer (already portable: S3A +
+  magic committer, GCS connector, …); the job commit makes each file
+  visible whole, and from then on it counts — lineage is derived from
+  the block files, so nothing else is committed beside them;
+- maintenance writes the replacement files, then re-lists ``blocks/`` as
+  a single-writer fence (a file it means to replace already gone means
+  another commit rewrote those parts: it removes its own new files and
+  fails), then unlinks the dead files;
+- ``put_atomic`` writes the small metadata objects
+  (``generations.json``, the custom key-value metadata) in one PUT.
+
+This interface covers what the driver does outside a Spark job: listing,
+``put_atomic``, file deletes, and the ranged reads with which it rolls
+up lineage and plans a decode from the block files' metadata columns.
 
 Implementations:
 - ``LocalFS`` (default): POSIX; ``put_atomic`` is write-tmp + os.replace
@@ -27,8 +33,8 @@ Implementations:
   store's native atomic PUT (``pipe_file``).
 - Custom: subclass ``StoreFS`` and ``register_fs(prefix, fs)``.
 
-All deletes are idempotent (missing path is success): crash-recovery GC
-may retry any step.
+Deletes are idempotent (missing path is success), so a retried
+maintenance step may repeat them.
 """
 
 from __future__ import annotations
@@ -54,10 +60,6 @@ class StoreFS:
         no directories).  Missing directory -> empty list."""
         raise NotImplementedError
 
-    def ls_dirs(self, dirpath: str) -> list[str]:
-        """Full paths of DIRECTORIES directly under ``dirpath``."""
-        raise NotImplementedError
-
     def exists(self, path: str) -> bool:
         raise NotImplementedError
 
@@ -72,16 +74,11 @@ class StoreFS:
 
     def put_atomic(self, path: str, data: bytes) -> None:
         """All-or-nothing create/replace of one small object.  Readers
-        never observe a partial write.  This is the ONLY primitive the
-        commit point uses."""
+        never observe a partial write."""
         raise NotImplementedError
 
     def delete(self, path: str) -> None:
         """Delete one file; missing file is success."""
-        raise NotImplementedError
-
-    def delete_dir(self, path: str) -> None:
-        """Recursively delete a directory; missing is success."""
         raise NotImplementedError
 
 
@@ -96,14 +93,6 @@ class LocalFS(StoreFS):
         try:
             with os.scandir(d) as it:
                 return [e.path for e in it if e.is_file()]
-        except FileNotFoundError:
-            return []
-
-    def ls_dirs(self, dirpath: str) -> list[str]:
-        d = _strip_uri(dirpath)
-        try:
-            with os.scandir(d) as it:
-                return [e.path for e in it if e.is_dir()]
         except FileNotFoundError:
             return []
 
@@ -133,11 +122,6 @@ class LocalFS(StoreFS):
         except FileNotFoundError:
             pass
 
-    def delete_dir(self, path: str) -> None:
-        import shutil
-
-        shutil.rmtree(_strip_uri(path), ignore_errors=True)
-
 
 class FsspecFS(StoreFS):
     """Adapter over an fsspec filesystem instance (s3fs/gcsfs/adlfs/...).
@@ -159,13 +143,6 @@ class FsspecFS(StoreFS):
             return []
         return [i["name"] for i in infos if i.get("type") == "file"]
 
-    def ls_dirs(self, dirpath: str) -> list[str]:
-        try:
-            infos = self._fs.ls(dirpath, detail=True)
-        except FileNotFoundError:
-            return []
-        return [i["name"] for i in infos if i.get("type") == "directory"]
-
     def exists(self, path: str) -> bool:
         return self._fs.exists(path)
 
@@ -182,12 +159,6 @@ class FsspecFS(StoreFS):
     def delete(self, path: str) -> None:
         try:
             self._fs.rm_file(path)
-        except FileNotFoundError:
-            pass
-
-    def delete_dir(self, path: str) -> None:
-        try:
-            self._fs.rm(path, recursive=True)
         except FileNotFoundError:
             pass
 

@@ -11,7 +11,7 @@ The sampling style mirrors the reference's own page-sizing heuristic
 (``_rows_per_page`` samples string lengths, fastparquet/writer.py:458-484).
 The codec-choice statistics live in the store: every block row carries
 its ``codec``, ``raw_size``, ``encoded_size`` and ``encode_ms``, and
-each lineage row the part's ``codecs``.
+the lineage rolled up from them gives each part's ``codecs``.
 """
 from __future__ import annotations
 

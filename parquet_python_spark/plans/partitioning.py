@@ -22,7 +22,7 @@ The plan is one narrow agg over ``repo`` (Catalyst prunes the scan) plus a
 single scalar collect for the bucket count; it broadcasts to the
 assignment join.  Resume correctness requires re-planning over the same
 source (same counts → same plan); for incremental sources, persist the
-plan table alongside the lineage table.
+plan table alongside the blocks (``run_encode`` keeps it under ``plan/``).
 """
 from __future__ import annotations
 

@@ -24,13 +24,14 @@ this class adds no logic, only the reference's ergonomic shape.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from .operators import pipeline as pl
 
 
 class BlockStore:
-    """Handle on an encoded blockstore directory (blocks + lineage + plan)."""
+    """Handle on an encoded blockstore directory (blocks + plan); its
+    lineage is a view of the blocks."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -65,19 +66,13 @@ class BlockStore:
 
     def count(self) -> int:
         """Row count without decoding (``ParquetFile.count`` parity)."""
-        row = self.lineage.agg(F.coalesce(F.sum("n_rows"),
-                                          F.lit(0))).collect()[0]
-        return int(row[0])
+        return self.summary()["rows"]
 
     def summary(self) -> dict:
-        """Scalar store totals {parts, rows, raw_bytes, enc_bytes} — one
-        distributed agg over lineage, one collected row."""
+        """Scalar store totals {parts, rows, raw_bytes, enc_bytes}, rolled
+        up on the driver from the block files' metadata columns (no Spark
+        job)."""
         return pl.store_summary(self.spark, self.path)
-
-    def repair_lineage(self) -> dict:
-        """Rebuild lineage from blocks after a crashed commit (see
-        ``pipeline.repair_lineage``)."""
-        return pl.repair_lineage(self.spark, self.path)
 
     @property
     def columns(self) -> list[str]:

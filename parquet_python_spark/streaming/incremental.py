@@ -4,9 +4,9 @@ The reference's nearest analogue is incremental append / partition
 overwrite (fastparquet/writer.py:1282-1303, 1497-1601) — batch-only.  Here
 the same blockstore becomes a streaming sink: ``readStream`` over an
 arriving-files directory → ``foreachBatch`` encode with resume semantics
-(every micro-batch anti-joins the lineage table, so replayed files after a
-failure never double-encode — exactly-once at the part_key level on top of
-at-least-once delivery).
+(every micro-batch anti-joins the part_keys already in the store's blocks,
+so replayed files after a failure never double-encode — exactly-once at the
+part_key level on top of at-least-once delivery).
 
 Also provides a watermarked windowed rollup of encode metrics (events-style
 monitoring stream), using native Structured Streaming operators.

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""What planning a decode costs on one blockstore.
+"""What planning a decode and rolling up lineage cost on one blockstore.
 
 Every ``decode_blocks`` / ``prune_blocks`` call plans on the driver from
 the payload-free block columns (``pipeline._block_meta``); for an
@@ -14,7 +14,10 @@ metadata column chunks.  This prints, for the store at ``<store>``:
   decode and for an equality lookup of a key absent from the store on
   the first string column (when there is one), which reads every stats
   column.  Each call builds a fresh ``read_blocks`` frame, as a caller
-  of ``decode_blocks`` does, and that time is included.
+  of ``decode_blocks`` does, and that time is included;
+* the median time over 10 calls, in ms, of ``store_summary`` and of
+  ``read_lineage(...).collect()``: the lineage rollup of every block
+  file's metadata columns, on the driver.
 
 Usage: ``python scripts/plan_stats.py <store>``
 """
@@ -78,6 +81,10 @@ def main(store: str) -> None:
         if strings:
             ms = _median_ms(plan([[(strings[0], "==", ABSENT)]]))
             print(f"plan ms, lookup  {ms:.1f}  ({strings[0]} == absent key)")
+        ms = _median_ms(lambda: pl.store_summary(spark, store))
+        print(f"summary ms       {ms:.1f}")
+        ms = _median_ms(lambda: pl.read_lineage(spark, store).collect())
+        print(f"lineage ms       {ms:.1f}")
     finally:
         spark.stop()
 

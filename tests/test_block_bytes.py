@@ -149,7 +149,7 @@ def case_digests(spark, name: str, root: str) -> dict:
     src = source(spark)
     store = f"{root}/{name}"
     pl.run_encode(split(src), store, target_rows=target,
-                  compression=compression, resume=False, summarize=False)
+                  compression=compression, resume=False)
     out = {"run_encode": blocks_digest(pl.read_blocks(spark, store))}
     out["compacted"] = pl.compact_store(spark, store, max_pages_per_column=1)
     out["compact_store"] = blocks_digest(pl.read_blocks(spark, store))
@@ -183,7 +183,7 @@ def test_store_with_metrics_column_reads_prunes_and_compacts(spark, tmp_path):
     src = _events(spark)
     cur, old = str(tmp_path / "cur"), str(tmp_path / "old")
     pl.run_encode(src.repartition(3, "event_id"), cur, target_rows=200,
-                  resume=False, summarize=False)
+                  resume=False)
     shutil.copytree(cur, old)
     _with_metrics_column(old)
     assert "metrics" in pq.read_schema(

@@ -1,11 +1,12 @@
 """A commit builds on what the write already knows.
 
-Lineage and plan frames are read with their known schemas, so building
-one runs no schema-inference job; ``store_summary`` is one aggregation
-over the uncombined lineage rows; an append of a generation the store has
-never seen skips the O(store) resume scan, while a replay keeps it.  The
-reference builds ``_metadata`` from the footers its writer returns instead
-of re-reading them (fastparquet writer.py:732-758).
+Lineage is rolled up on the driver from the block files' metadata
+columns, and the plan is read with its known schema, so building either
+frame, ``store_summary`` and a compaction with nothing to do run no Spark
+job; an append of a generation the store has never seen skips the
+O(store) resume scan, while a replay keeps it.  The reference builds
+``_metadata`` from the footers its writer returns instead of re-reading
+them (fastparquet writer.py:732-758).
 """
 import time
 import uuid
@@ -93,33 +94,21 @@ def test_corrupt_plan_file_still_raises(spark, tmp_path):
 
 
 def test_store_summary_is_one_aggregation(spark, store):
-    """countDistinct + sums over the uncombined rows: a distinct map
-    stage, a merge stage and the result — no combine exchange before."""
-    assert _jobs(spark, lambda: pl.store_summary(spark, store)) <= 3
+    """The totals are summed on the driver over the block files' metadata
+    columns: no Spark job."""
+    assert _jobs(spark, lambda: pl.store_summary(spark, store)) == 0
 
 
-def test_lineage_files_have_lineage_schema(spark, tmp_path, monkeypatch):
-    """The inferred schema of a delta, a manifest and a fold output is
-    the one lineage is read with."""
-    path = str(tmp_path / "s")
-    pl.run_encode(_docs(spark, 0, 200), path, columns=COLS,
-                  target_rows=100, resume=False)
-    assert spark.read.parquet(f"{path}/lineage").schema == pl.LINEAGE_SCHEMA
-    assert spark.read.parquet(f"{path}/plan").schema == pl.PLAN_SCHEMA
+def test_noop_compaction_runs_no_job(spark, store):
+    """Finding nothing to compact reads only the block files' metadata
+    columns, on the driver."""
+    res = {}
 
-    def manifest_schema():
-        ptr = pl._read_lineage_ptr(path)
-        return spark.read.parquet(
-            f"{path}/manifests/{ptr['manifest']}").schema
+    def compact():
+        res.update(pl.compact_store(spark, store, max_pages_per_column=10**6))
 
-    pl.repair_lineage(spark, path)
-    assert manifest_schema() == pl.LINEAGE_SCHEMA
-    monkeypatch.setattr(pl, "LINEAGE_FOLD_FILES", 0)
-    epoch = pl._read_lineage_ptr(path)["epoch"]
-    pl.run_encode(_docs(spark, 200, 260), path, columns=COLS,
-                  target_rows=100, generation=1)
-    assert pl._read_lineage_ptr(path)["epoch"] == epoch + 1  # folded
-    assert manifest_schema() == pl.LINEAGE_SCHEMA
+    assert _jobs(spark, compact) == 0
+    assert res["parts_compacted"] == 0
 
 
 def test_first_generation_skips_resume_scan(spark, tmp_path, monkeypatch):
@@ -152,8 +141,8 @@ def test_first_generation_skips_resume_scan(spark, tmp_path, monkeypatch):
 
 
 def test_store_summary_equals_combined_lineage(spark, tmp_path):
-    """After each kind of commit the one-aggregation summary equals the
-    totals of the combined lineage table."""
+    """After each kind of commit the summary equals the totals of the
+    lineage frame."""
     path = str(tmp_path / "s")
 
     def combined():
@@ -176,5 +165,4 @@ def test_store_summary_equals_combined_lineage(spark, tmp_path):
     first = pl.read_lineage(spark, path).orderBy("part_key").first()
     pl.remove_parts(spark, path, [first["part_key"]])
     assert pl.store_summary(spark, path) == combined()
-    assert pl.repair_lineage(spark, path) == combined()
     assert combined()["rows"] == 3500 - first["n_rows"]

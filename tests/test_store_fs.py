@@ -70,23 +70,19 @@ def no_rename_store(tmp_path, monkeypatch):
     fs_mod.unregister_fs(root)
 
 
-def test_full_maintenance_suite_without_rename(spark, no_rename_store,
-                                               monkeypatch):
-    """encode → append(+fold) → overwrite → remove → compact → sort →
-    repair → merge, all on rename-forbidden semantics, ending with exact
-    row fidelity and a duplicate-free combined lineage."""
-    monkeypatch.setattr(pl, "LINEAGE_FOLD_FILES", 2)
+def test_full_maintenance_suite_without_rename(spark, no_rename_store):
+    """encode → append → overwrite → remove → compact → sort → merge, all
+    on rename-forbidden semantics, ending with exact row fidelity and one
+    lineage row per part."""
     root = no_rename_store
     store = f"{root}/s"
 
     pl.run_encode(_docs(spark, 0, 200), store, columns=COLS,
                   target_rows=60, resume=False)
-    # several appends: exceeds LINEAGE_FOLD_FILES -> pointer-commit fold
     for gen, (lo, hi) in enumerate([(200, 300), (300, 380), (380, 450)],
                                    start=1):
         pl.run_encode(_docs(spark, lo, hi), store, columns=COLS,
                       target_rows=60, resume=False, generation=gen)
-    assert pl._read_lineage_ptr(store) is not None, "fold never triggered"
 
     # partition overwrite + repo removal (file-granular delta commit)
     repl = (_docs(spark, 0, 450).where(F.col("repo") == "3")
@@ -94,10 +90,9 @@ def test_full_maintenance_suite_without_rename(spark, no_rename_store,
     pl.overwrite_partitions(repl, store, columns=COLS, target_rows=60)
     pl.remove_repos(spark, store, ["4"])
 
-    # compact + sort (affected_is_all commits) and crash repair
+    # compact + sort (commits that rewrite every file)
     pl.compact_store(spark, store, max_pages_per_column=1)
     pl.sort_store(spark, store, by=["doc_id"])
-    pl.repair_lineage(spark, store)
 
     expected = (_docs(spark, 0, 450)
                 .withColumn("n_chars",
@@ -117,24 +112,6 @@ def test_full_maintenance_suite_without_rename(spark, no_rename_store,
                   target_rows=60, resume=False)
     out = pl.merge_stores(spark, [store, f"{root}/t"], f"{root}/m")
     assert out["rows"] == expected.count() + 50
-
-
-def test_pointer_commit_uses_single_object_put(spark, no_rename_store):
-    """The commit point is exactly one put_atomic of the pointer file."""
-    root = no_rename_store
-    store = f"{root}/s"
-    puts = []
-
-    class RecordingFS(ObjectStoreFS):
-        def put_atomic(self, path, data):
-            puts.append(path)
-            super().put_atomic(path, data)
-
-    fs_mod.register_fs(root, RecordingFS())
-    pl.run_encode(_docs(spark, 0, 150), store, columns=["doc_id", "text"],
-                  target_rows=50, resume=False)
-    pl.repair_lineage(spark, store)
-    assert puts and all(p.endswith(pl._LINEAGE_PTR) for p in puts)
 
 
 def test_store_metadata_uses_store_fs(no_rename_store):
@@ -190,6 +167,11 @@ class _FakeFsspec:
     def cat_file(self, path):
         return self.objs[path]
 
+    def open(self, path, mode="rb"):
+        import io
+
+        return io.BytesIO(self.objs[path])
+
     def pipe_file(self, path, data):
         self.objs[path] = data
 
@@ -198,34 +180,25 @@ class _FakeFsspec:
             raise FileNotFoundError(path)
         del self.objs[path]
 
-    def rm(self, path, recursive=False):
-        p = path.rstrip("/")
-        hits = [k for k in self.objs if k == p or k.startswith(p + "/")]
-        if not hits:
-            raise FileNotFoundError(path)
-        for k in hits:
-            del self.objs[k]
-
 
 def test_fsspec_adapter_contract():
     fake = _FakeFsspec()
     fs = fs_mod.FsspecFS(fs=fake)
-    fs.put_atomic("bkt/store/lineage_ptr.json", b'{"epoch": 1}')
-    fs.put_atomic("bkt/store/lineage/part-0001", b"x")
-    fs.put_atomic("bkt/store/manifests/m-1/part-0000", b"y")
-    assert fs.exists("bkt/store/lineage_ptr.json")
-    assert fs.read_bytes("bkt/store/lineage_ptr.json") == b'{"epoch": 1}'
-    assert fs.ls("bkt/store/lineage") == ["bkt/store/lineage/part-0001"]
-    assert fs.ls_dirs("bkt/store/manifests") == ["bkt/store/manifests/m-1"]
+    fs.put_atomic("bkt/store/generations.json", b'{"generations": [1]}')
+    fs.put_atomic("bkt/store/blocks/part-0001", b"x")
+    assert fs.exists("bkt/store/generations.json")
+    assert fs.read_bytes("bkt/store/generations.json") == \
+        b'{"generations": [1]}'
+    assert fs.ls("bkt/store/blocks") == ["bkt/store/blocks/part-0001"]
+    assert fs.ls("bkt/store") == ["bkt/store/generations.json"]  # files only
     assert fs.ls("bkt/store/nope") == []         # missing dir -> empty
-    fs.put_atomic("bkt/store/lineage_ptr.json", b'{"epoch": 2}')  # replace
-    assert fs.read_bytes("bkt/store/lineage_ptr.json") == b'{"epoch": 2}'
-    fs.delete("bkt/store/lineage/part-0001")
-    fs.delete("bkt/store/lineage/part-0001")     # idempotent
-    assert fs.ls("bkt/store/lineage") == []
-    fs.delete_dir("bkt/store/manifests/m-1")
-    fs.delete_dir("bkt/store/manifests/m-1")     # idempotent
-    assert fs.ls_dirs("bkt/store/manifests") == []
+    with fs.open("bkt/store/blocks/part-0001") as f:
+        assert f.read() == b"x"
+    fs.put_atomic("bkt/store/generations.json", b"{}")  # replace
+    assert fs.read_bytes("bkt/store/generations.json") == b"{}"
+    fs.delete("bkt/store/blocks/part-0001")
+    fs.delete("bkt/store/blocks/part-0001")      # idempotent
+    assert fs.ls("bkt/store/blocks") == []
 
 
 def test_get_fs_longest_prefix_routing(tmp_path):
@@ -243,40 +216,48 @@ def test_get_fs_longest_prefix_routing(tmp_path):
 
 
 def test_concurrent_commit_fence(spark, tmp_path):
-    """A pointer that moves while a manifest is being written must fail
-    the in-flight commit loudly (silent last-writer-wins would drop the
-    other committer's lineage) and leave the interloper's state intact."""
-    import json
-
+    """A block file that disappears while a maintenance commit writes its
+    replacements was rewritten by another commit: the in-flight commit
+    must fail loudly (unlinking on would resurrect what the other commit
+    replaced) and remove its own new files, and the interloper's state
+    must survive whole."""
     store = str(tmp_path / "s")
     pl.run_encode(_docs(spark, 0, 200), store, columns=["doc_id", "text"],
                   target_rows=60, resume=False)
-    pl.repair_lineage(spark, store)  # install a pointer (epoch 1)
-    before = pl.store_summary(spark, store)
+    initial = pl._list_part_files(f"{store}/blocks")
+    interloper_meta = pl._store_meta(store, ("part_key",))
+    lin = pl.read_lineage(spark, store).orderBy("part_key").collect()
+    race = {}
 
     class InterloperFS(fs_mod.LocalFS):
-        """Advances the pointer underneath the committer the moment it
-        checks the manifest _SUCCESS marker."""
+        """Commits the interloper's removal of the first part, read before
+        the committer wrote, the moment the committer's replacement files
+        show up in a listing of ``blocks/``."""
 
-        def exists(self, path):
-            ok = super().exists(path)
-            if ok and path.endswith("/_SUCCESS"):
-                ptr = pl._read_lineage_ptr(store)
-                ptr["epoch"] += 1
-                super().put_atomic(f"{store}/{pl._LINEAGE_PTR}",
-                                   json.dumps(ptr).encode())
-            return ok
+        def ls(self, dirpath):
+            files = super().ls(dirpath)
+            parts = {f for f in files
+                     if os.path.basename(f).startswith("part-")}
+            if not race and parts - initial:
+                race["loser_files"] = parts - initial
+                pl._commit_blocks_delta(spark, store, interloper_meta,
+                                        [lin[0]["part_key"]])
+                race["files"] = pl._list_part_files(f"{store}/blocks")
+                files = super().ls(dirpath)
+            return files
 
     fs_mod.register_fs(store, InterloperFS())
     try:
-        with pytest.raises(RuntimeError, match="concurrent lineage commit"):
-            pl.repair_lineage(spark, store)
+        with pytest.raises(RuntimeError, match="concurrent block commit"):
+            pl.remove_parts(spark, store, [lin[1]["part_key"]])
     finally:
         fs_mod.unregister_fs(store)
-    # the interloper's pointer survives; the failed commit's manifest dir
-    # was cleaned up; the store still reads consistently
-    assert pl._read_lineage_ptr(store)["epoch"] == 2
-    assert pl.store_summary(spark, store) == before
+    after = pl._list_part_files(f"{store}/blocks")
+    assert race["loser_files"] and not after & race["loser_files"]
+    assert after == race["files"] - race["loser_files"]
+    want = 200 - lin[0]["n_rows"]
+    assert pl.store_summary(spark, store)["rows"] == want
+    assert pl.decode_blocks(pl.read_blocks(spark, store)).count() == want
 
 
 def test_maintenance_unlinks_percent_encoded_file_uris(spark, tmp_path):

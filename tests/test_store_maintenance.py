@@ -54,10 +54,9 @@ def test_merge_colliding_parts(spark, tmp_path):
 
 
 def test_merge_over_pointer_committed_store(spark, tmp_path):
-    """merge_stores commits through the lineage pointer: an out_path that
-    already holds a pointer-committed store (after repair_lineage) must
-    report exactly the merged rows — the rows decode returns — not the
-    old manifest's rows on top of them."""
+    """merge_stores overwrites whatever ``out_path`` held: an out_path
+    that already holds a store must report exactly the merged rows — the
+    rows decode returns — not its old rows on top of them."""
     a, b, out = (str(tmp_path / x) for x in ("a", "b", "out"))
     pl.run_encode(_docs(spark, 0, 250), a, columns=COLS, target_rows=100,
                   resume=False)
@@ -65,7 +64,6 @@ def test_merge_over_pointer_committed_store(spark, tmp_path):
                   resume=False)
     pl.run_encode(_docs(spark, 0, 50), out, columns=COLS, target_rows=100,
                   resume=False)
-    pl.repair_lineage(spark, out)  # installs lineage_ptr.json
     res = pl.merge_stores(spark, [a, b], out)
     assert pl.decode_blocks(pl.read_blocks(spark, out)).count() == 500
     assert res["rows"] == 500
@@ -270,45 +268,43 @@ def test_compact_leaves_unfragmented_files_intact(spark, tmp_path):
     assert dec.count() == 3500
 
 
-def test_concurrent_commit_fence_aborts_and_cleans(spark, tmp_path, monkeypatch):
-    """Single-writer fence: if the lineage pointer epoch moves while a
-    manifest is being written (another committer landed first), the commit
-    must abort LOUDLY and delete its own manifest — a blind pointer PUT
-    would silently drop the other committer's fold."""
-    import glob
-    import json
-    import os
-
+def test_concurrent_commit_fence_aborts_and_cleans(spark, tmp_path,
+                                                   monkeypatch):
+    """Single-writer fence at the block files: a part removal that read
+    the store before a compaction wrote, and commits while the compaction
+    writes its recoded parts, unlinks a file the compaction means to
+    replace.  The compaction must abort LOUDLY and remove the files it
+    wrote — unlinking on would leave its recoded copy of the removed part
+    live — and the removal's state must survive."""
     store = str(tmp_path / "s")
     pl.run_encode(_docs(spark, 0, 200), store, columns=COLS,
                   target_rows=100, resume=False)
-    # establish a pointer (epoch 1)
-    pl.repair_lineage(spark, store)
-    ptr_path = os.path.join(store, pl._LINEAGE_PTR)
-    with open(ptr_path) as f:
-        base_ptr = json.load(f)
-    assert base_ptr["epoch"] == 1
+    initial = pl._list_part_files(f"{store}/blocks")
+    removal_meta = pl._store_meta(store, ("part_key",))
+    lin = pl.read_lineage(spark, store).orderBy("part_key").collect()
+    key = lin[0]["part_key"]
+    real_list = pl._list_part_files
+    race = {}
 
-    real_read = pl._read_lineage_ptr
-    calls = {"n": 0}
+    def racing_list(path):
+        files = real_list(path)
+        if not race and path.endswith("/blocks") and files - initial:
+            # the compaction's recoded files just landed: the removal
+            # commits now, from what it read before them
+            race["loser_files"] = files - initial
+            pl._commit_blocks_delta(spark, store, removal_meta, [key])
+            race["files"] = files = real_list(path)
+        return files
 
-    def racing_read(path):
-        ptr = real_read(path)
-        calls["n"] += 1
-        if calls["n"] == 2 and ptr is not None:
-            # simulate a committer that landed between our two reads
-            return {**ptr, "epoch": ptr["epoch"] + 1}
-        return ptr
-
-    monkeypatch.setattr(pl, "_read_lineage_ptr", racing_read)
-    lin = pl.read_lineage(spark, store)
-    with pytest.raises(RuntimeError, match="concurrent lineage commit"):
-        pl._commit_manifest(spark, store, lin)
-    monkeypatch.setattr(pl, "_read_lineage_ptr", real_read)
-    # the loser's manifest was GC'd; the winner's state is untouched
-    manifests = glob.glob(os.path.join(store, "manifests", "manifest-*"))
-    assert len(manifests) == 1
-    assert os.path.basename(manifests[0]) == base_ptr["manifest"]
-    with open(ptr_path) as f:
-        assert json.load(f) == base_ptr
-    assert pl.store_summary(spark, store)["rows"] == 200
+    monkeypatch.setattr(pl, "_list_part_files", racing_list)
+    with pytest.raises(RuntimeError, match="concurrent block commit"):
+        pl.compact_store(spark, store, max_pages_per_column=0)
+    monkeypatch.setattr(pl, "_list_part_files", real_list)
+    after = real_list(f"{store}/blocks")
+    assert race["loser_files"] and not after & race["loser_files"]
+    assert after == race["files"] - race["loser_files"]
+    want = 200 - lin[0]["n_rows"]
+    assert pl.store_summary(spark, store)["rows"] == want
+    assert key not in {r["part_key"]
+                       for r in pl.read_lineage(spark, store).collect()}
+    assert pl.decode_blocks(pl.read_blocks(spark, store)).count() == want
