@@ -24,6 +24,11 @@ The commit protocol has three parts:
 This interface covers what the driver does outside a Spark job: listing,
 ``put_atomic``, file deletes, and the ranged reads with which it rolls
 up lineage and plans a decode from the block files' metadata columns.
+Decode and compaction tasks read block files through it too: the driver
+resolves each file's ``StoreFS`` (``get_fs``) and ships that instance
+inside the task, so a ``register_fs`` mapping holds in the workers.  A
+registered filesystem must therefore pickle, and its class must be
+importable where the Python workers run.
 
 Implementations:
 - ``LocalFS`` (default): POSIX; ``put_atomic`` is write-tmp + os.replace

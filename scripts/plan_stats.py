@@ -9,12 +9,17 @@ metadata column chunks.  This prints, for the store at ``<store>``:
 * the number of block files and of pages (block rows);
 * the metadata bytes the planner holds on the driver, in total and per
   part: the Arrow size of the plan and stats columns, Bloom words
-  included.  This is the design's driver-memory cost, O(pages);
+  included, and of each row's file, row group and row.  This is the
+  design's driver-memory cost, O(pages);
 * the median planning time over 10 calls, in ms, for an unfiltered full
   decode and for an equality lookup of a key absent from the store on
   the first string column (when there is one), which reads every stats
   column.  Each call builds a fresh ``read_blocks`` frame, as a caller
   of ``decode_blocks`` does, and that time is included;
+* for both plans, the read units the decode would run, one Python task
+  each: how many, the parts and the kept encoded bytes of each, and the
+  block files the tasks open in all (a file shared by two units counts
+  twice).  A lookup that keeps no part plans no unit;
 * the median time over 10 calls, in ms, of ``store_summary`` and of
   ``read_lineage(...).collect()``: the lineage rollup of every block
   file's metadata columns, on the driver.
@@ -49,6 +54,15 @@ def _median_ms(fn) -> float:
     return statistics.median(times)
 
 
+def _print_units(label: str, plan) -> None:
+    units = plan.units or []
+    print(f"{label:<17}{len(units)}")
+    if units:
+        print(f"  parts per unit {[len(u.parts) for u in units]}")
+        print(f"  bytes per unit {[u.nbytes for u in units]}")
+        print(f"  files opened   {sum(len(u.files) for u in units)}")
+
+
 def main(store: str) -> None:
     from pyspark.sql import SparkSession
 
@@ -75,12 +89,15 @@ def main(store: str) -> None:
                                            None, groups)
 
         print(f"plan ms, full    {_median_ms(plan([])):.1f}")
+        _print_units("units, full", plan([])())
         strings = [c for c, d in zip(meta["column"].to_pylist(),
                                      meta["dtype_id"].to_pylist())
                    if d == enc.DT_STRING]
         if strings:
-            ms = _median_ms(plan([[(strings[0], "==", ABSENT)]]))
+            lookup = plan([[(strings[0], "==", ABSENT)]])
+            ms = _median_ms(lookup)
             print(f"plan ms, lookup  {ms:.1f}  ({strings[0]} == absent key)")
+            _print_units("units, lookup", lookup())
         ms = _median_ms(lambda: pl.store_summary(spark, store))
         print(f"summary ms       {ms:.1f}")
         ms = _median_ms(lambda: pl.read_lineage(spark, store).collect())

@@ -35,11 +35,22 @@ def test_source_column_pruning(spark):
 
 
 def test_decode_projection_pushes_column_filter_to_blockstore(spark, tmp_path):
+    """A projected decode reads only the projected column's blocks.  A
+    ``read_blocks`` frame is planned from its block files, and its read
+    units name exactly the ``lang`` block rows; any other frame is
+    scanned by Spark, and the projection reaches that parquet scan."""
     store = str(tmp_path / "store")
     df = cg.code_table(spark, 300, partitions=2)
     pl.run_encode(df, store, target_rows=200, resume=False)
     blocks = pl.read_blocks(spark, store)
-    q = pl.decode_blocks(blocks, columns=["lang"])
+    meta = pl._block_meta(blocks, ("column",)).to_pylist()
+    column_at = {(r["_file"], r["_rg"], r["_row"]): r["column"] for r in meta}
+    read = [column_at[(path, rg, int(row))]
+            for u in pl._plan_decode(blocks, ["lang"], []).units
+            for path, _, rgs in u.files for rg, rows in rgs for row in rows]
+    assert read and set(read) == {"lang"}
+    assert len(read) == sum(r["column"] == "lang" for r in meta)
+    q = pl.decode_blocks(blocks.where("true"), columns=["lang"])
     plan = _plan(q)
     assert "PushedFilters" in plan and (
         "In(column" in plan or "EqualTo(column,lang)" in plan), (

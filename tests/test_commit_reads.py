@@ -85,6 +85,19 @@ def test_missing_store_is_detected_without_a_read(tmp_path):
     assert pl.completed_part_keys(_NoRead(), missing) is None
 
 
+def test_completed_part_keys_frame_runs_no_job(spark, store):
+    """The resume key set is read on the driver from the block files'
+    ``part_key`` column chunks: building the frame runs no Spark job, and
+    it holds each stored part_key once."""
+    got = {}
+    assert _jobs(spark, lambda: got.update(
+        keys=pl.completed_part_keys(spark, store))) == 0
+    keys = [r[0] for r in got["keys"].collect()]
+    assert len(keys) == len(set(keys))
+    assert set(keys) == {r[0] for r in pl.read_blocks(spark, store)
+                         .select("part_key").distinct().collect()}
+
+
 def test_corrupt_plan_file_still_raises(spark, tmp_path):
     plan = tmp_path / "s" / "plan"
     plan.mkdir(parents=True)

@@ -323,7 +323,8 @@ def _plans_alike(spark, path, filters, columns=None):
             groups = pl._norm_filters(f)
             want = pl._plan_decode(files, columns, groups)
             for other in (collected, cached):
-                schema, kept, sizers = pl._plan_decode(other, columns, groups)
+                schema, kept, sizers, _ = pl._plan_decode(other, columns,
+                                                          groups)
                 assert schema == want[0], f
                 assert (kept is None) == (want[1] is None), f
                 assert set(kept or ()) == set(want[1] or ()), f
@@ -375,7 +376,7 @@ def test_plan_from_files_of_mixed_block_schemas(spark, mixed_store):
         groups = pl._norm_filters(f)
         assert _kept(blocks, f) == _oracle(rows, groups, use_bloom=True), f
     _plans_alike(spark, path, filters[:8], columns=["e"])
-    schema, kept, sizers = pl._plan_decode(blocks, ["e"], [])
+    schema, kept, sizers, _ = pl._plan_decode(blocks, ["e"], [])
     assert [fl.name for fl in schema.fields] == ["e"] and kept is None
     assert sorted(k for ks in sizers.values() for k in ks) == [0, 1, 2]
     got = pl.decode_blocks(blocks, columns=["e"]).collect()
@@ -419,3 +420,92 @@ def test_plan_reads_percent_encoded_file_uris(spark, stores, tmp_path):
     f = [("s", "==", SPECIAL)]
     assert _kept(blocks, f) == _kept(pl.read_blocks(spark, stores[0]), f)
     assert pl.decode_blocks(blocks).count() == N_PARTS * PAGES * PAGE_ROWS
+
+
+# ------------------------------------------- file-unit vs grouped decode
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _decodes_agree(spark, path, **kw):
+    """The decode of a ``read_blocks`` frame (read units: Python tasks
+    read the block files themselves) equals the decode of the same
+    blocks through a filtered frame (grouped Arrow UDF behind a part_key
+    exchange), as sorted rows."""
+    unit = pl.decode_blocks(pl.read_blocks(spark, path), **kw)
+    grouped = pl.decode_blocks(pl.read_blocks(spark, path).where("true"),
+                               **kw)
+    got = _rows(unit)
+    assert got == _rows(grouped), kw
+    assert unit.columns == grouped.columns, kw
+    return unit, got
+
+
+@pytest.mark.parametrize("which", ["bloom", "legacy"])
+def test_unit_decode_equals_grouped_decode(spark, stores, which):
+    path = stores[0] if which == "bloom" else stores[1]
+    unit, rows = _decodes_agree(spark, path)
+    assert len(rows) == N_PARTS * PAGES * PAGE_ROWS
+    plan = _executed(unit)
+    assert "Exchange" not in plan and "MapInArrow" in plan, plan
+    assert "Exchange" in _executed(pl.decode_blocks(
+        pl.read_blocks(spark, path).where("true")))
+    _decodes_agree(spark, path, columns=["k", "s"])
+    _decodes_agree(spark, path, keep_part_key=True)
+    for f in FIXED + _random_filters(np.random.default_rng(31), 6):
+        _decodes_agree(spark, path, filters=f)
+        _decodes_agree(spark, path, columns=["x"], filters=f,
+                       keep_part_key=True)
+
+
+def test_unit_decode_of_evolved_schema(spark, mixed_store):
+    """Parts without a projected column decode through their sizer
+    column into NULLs, in both decode paths."""
+    path, _ = mixed_store
+    _, rows = _decodes_agree(spark, path, columns=["e"])
+    assert sum(r[0] is None for r in rows) == 3 * PAGES * PAGE_ROWS
+    _decodes_agree(spark, path, columns=["e", "k"], keep_part_key=True)
+    _decodes_agree(spark, path)
+
+
+def test_unit_decode_of_parts_spread_over_files(spark, tmp_path):
+    """A multi-partition ingest, two appends and a removal's survivor
+    rewrite leave parts whose pages span three or more block files: a
+    read unit holds every file of its parts and decodes them whole."""
+    from parquet_python_spark.sources import codegen as cg
+
+    path = str(tmp_path / "s")
+    pl.run_encode(cg.code_table(spark, 3000, partitions=8), path,
+                  target_rows=1500, resume=False)
+    for gen in (1, 2):
+        pl.run_encode(cg.code_table(spark, 400, partitions=2), path,
+                      target_rows=1500, generation=gen)
+    victim = pl.read_lineage(spark, path).orderBy("part_key").first()
+    pl.remove_parts(spark, path, [victim["part_key"]])
+    meta = pl._store_meta(path, ("part_key",))
+    files_per_part = (meta.group_by("part_key")
+                      .aggregate([("_file", "count_distinct")]))
+    assert max(files_per_part["_file_count_distinct"].to_pylist()) >= 3
+    n = 3800 - victim["n_rows"]
+    unit, rows = _decodes_agree(spark, path)
+    assert len(rows) == n
+    _decodes_agree(spark, path, keep_part_key=True)
+    _decodes_agree(spark, path, columns=["path"],
+                   filters=[("lang", "==", unit.first()["lang"])])
+
+
+def test_one_part_lookup_is_one_task(spark, stores):
+    """A lookup that keeps one part of a ``read_blocks`` frame runs one
+    job of one Python task, with no exchange in its plan."""
+    f = [("k", "<", 30)]
+    assert len(_kept(pl.read_blocks(spark, stores[0]), f)) == 1
+    df = pl.decode_blocks(pl.read_blocks(spark, stores[0]), filters=f)
+    assert "Exchange" not in _executed(df)
+    rows = []
+    jobs = _plan_jobs(spark, lambda: rows.extend(df.collect()))
+    assert rows and all(r["k"] < 30 for r in rows)
+    st = spark.sparkContext.statusTracker()
+    assert len(jobs) == 1
+    stages = st.getJobInfo(jobs[0]).stageIds
+    assert sum(st.getStageInfo(s).numTasks for s in stages) == 1

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from parquet_python_spark.operators import fs as fs_mod
 from parquet_python_spark.operators import pipeline as pl
+from tests.fs_doubles import ObjectStoreFS, OpenLogFS
 
 pytestmark = pytest.mark.spark
 
@@ -34,17 +35,6 @@ def _docs(spark, lo, hi):
             .withColumn("repo", (F.col("doc_id") % 5).cast("string"))
             .withColumn("path", F.col("doc_id").cast("string"))
             .withColumn("commit", F.lit("0")))
-
-
-class ObjectStoreFS(fs_mod.LocalFS):
-    """LocalFS with object-store PUT semantics: put_atomic writes the
-    object directly (one PUT), never via a temp-file rename."""
-
-    def put_atomic(self, path, data):
-        p = fs_mod._strip_uri(path)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "wb") as f:
-            f.write(data)
 
 
 @pytest.fixture
@@ -271,3 +261,29 @@ def test_maintenance_unlinks_percent_encoded_file_uris(spark, tmp_path):
         "part_key", "n_rows").first()
     assert pl.remove_parts(spark, store, [key])["rows"] == 300 - n
     assert pl.decode_blocks(pl.read_blocks(spark, store)).count() == 300 - n
+
+
+def test_registered_store_fs_serves_the_workers_reads(spark, tmp_path):
+    """A decode and a compaction read the block files inside their Python
+    tasks, through the StoreFS the driver resolved for each file: a
+    filesystem registered for the store root serves the workers' reads,
+    not only the driver's plan."""
+    store = str(tmp_path / "s")
+    pl.run_encode(_docs(spark, 0, 300), store, columns=COLS,
+                  target_rows=100, resume=False)
+    files = pl._list_part_files(f"{store}/blocks")
+    log_fs = OpenLogFS(str(tmp_path / "opens.log"))
+    fs_mod.register_fs(store, log_fs)
+    try:
+        assert pl.decode_blocks(pl.read_blocks(spark, store)).count() == 300
+        opens = log_fs.opens()
+        assert {p for pid, p in opens if pid == os.getpid()} == files
+        assert {p for pid, p in opens if pid != os.getpid()} == files
+        res = pl.compact_store(spark, store, max_pages_per_column=0)
+        assert res["parts_compacted"] > 0
+        recode = {p for pid, p in log_fs.opens()[len(opens):]
+                  if pid != os.getpid()}
+        assert recode and recode <= files
+    finally:
+        fs_mod.unregister_fs(store)
+    assert pl.decode_blocks(pl.read_blocks(spark, store)).count() == 300
