@@ -735,7 +735,7 @@ _ROLLUP_COLS = ("part_key", "repo", "split_id", "column", "page_id",
 
 def _store_meta(path: str, cols) -> pa.Table:
     """The ``cols`` of every block row of the store at ``path``, with the
-    file, row group and row that hold it (``_read_meta_files``): every
+    file that holds it (``_read_meta_files``): every
     ``part-*`` file under ``blocks/`` (``_list_part_files``) read on the
     driver with pyarrow, no Spark job."""
     return _read_meta_files(sorted(_list_part_files(f"{path}/blocks")), cols)
@@ -1240,21 +1240,6 @@ def remove_repos(spark: SparkSession, path: str, repos: list[str],
     return _parts_rows(spark, path)
 
 
-def recode_blocks(blocks: DataFrame, page_bytes: int = DEFAULT_PAGE_BYTES,
-                  compression=None,
-                  sort_by: list[str] | None = None) -> DataFrame:
-    """Fused decode→re-encode of whole parts over their ENCODED blocks
-    (``_part_recoder``), for any frame of block rows: a grouped Arrow UDF
-    behind a part_key exchange of the encoded block rows, one task per
-    post-shuffle partition (``spark.sql.shuffle.partitions``, coalesced
-    by AQE).  ``compact_store`` and ``sort_store`` run the same recode
-    from the block files themselves instead (``_recode_parts``: no block
-    scan, no exchange)."""
-    recode = _part_recoder(page_bytes, compression, sort_by)
-    return blocks.groupBy("part_key").applyInArrow(
-        lambda key, tbl: recode(key[0].as_py(), tbl), BLOCKS_SCHEMA)
-
-
 def _part_recoder(page_bytes: int, compression, sort_by: list[str] | None):
     """``recode(part_key, tbl)``: one part's block rows -> its new block
     table.  Decode and re-encode run back-to-back in one Python task, so
@@ -1329,9 +1314,7 @@ def _recode_parts(spark: SparkSession, meta: pa.Table, keys,
                   sort_by: list[str] | None = None) -> DataFrame:
     """The new blocks of the parts ``keys`` (``_part_recoder``), read
     from the block files that ``meta`` (``_store_meta``, with
-    ``encoded_size``) locates them in: the parts are bin-packed by
-    encoded bytes into ``min(parts, defaultParallelism, bytes //
-    UNIT_BYTES)`` read units (at least one), one Python task each
+    ``encoded_size``) locates them in, one Python task per read unit
     (``_plan_units``, ``_unit_frame``)."""
     units = _plan_units(
         meta, np.isin(np.asarray(meta["part_key"], dtype=np.int64), keys),
@@ -1365,13 +1348,15 @@ def compact_store(spark: SparkSession, path: str,
     exchange) and swapped in.  Untouched parts are left on disk.
     ``compression=None`` preserves each column's incoming block codec.
 
-    The recode runs ``min(fragmented parts, defaultParallelism, their
-    encoded bytes // UNIT_BYTES)`` tasks (at least one), the parts
-    bin-packed by encoded bytes.  Compaction is BACKGROUND
-    maintenance and its workers are memory-bandwidth-bound (on a 32-vCPU
-    host, 27 concurrent recode tasks ran 22-32 s where 8-16 ran 2.3-2.7 s
-    for the same 0.23 GB), so a session that compacts large stores sizes
-    its parallelism to the node's bandwidth, not its vCPU count.
+    The recode runs one task per read unit (``_plan_units``): the
+    fragmented parts in store order, cut by encoded bytes into
+    ``min(parts, defaultParallelism, bytes // UNIT_BYTES)`` runs, at
+    least one, each cut further down to ``UNIT_MAX_BYTES``.  Compaction
+    is BACKGROUND maintenance and its workers are memory-bandwidth-bound
+    (on a 32-vCPU host, 27 concurrent recode tasks ran 22-32 s where
+    8-16 ran 2.3-2.7 s for the same 0.23 GB), so a session that compacts
+    large stores sizes its concurrent tasks (executor cores) to the
+    node's bandwidth, not its vCPU count.
     Returns {'parts_compacted', 'enc_bytes_before', 'enc_bytes_after'}.
     """
     meta = _store_meta(path, _ROLLUP_COLS)
@@ -1402,8 +1387,7 @@ def sort_store(spark: SparkSession, path: str, by: list[str],
     (fastparquet writer.py:1560-1579); this generalizes that to any
     column set as an off-ingest maintenance pass, same recode from the
     block files + file-granular commit as ``compact_store`` (and the same
-    task rule: ``min(parts, defaultParallelism, bytes // UNIT_BYTES)``
-    units, at least one, bin-packed by encoded bytes).  Also restores
+    read units, ``_plan_units``).  Also restores
     whole-part compression as a side effect (sorted runs dictionary/RLE
     better).
     """
@@ -1520,7 +1504,7 @@ def _schema_from_column_rows(rows) -> StructType:
     columns keep their position and new ones append); a column whose
     dtype differs across parts is a corrupt/unsupported store and raises
     loudly rather than mis-decoding (type widening is re-encode-time
-    work — ``recode_blocks`` — not read-time guesswork)."""
+    work — ``_part_recoder`` — not read-time guesswork)."""
     from pyspark.sql.pandas.types import from_arrow_type
     rows = sorted(rows, key=lambda r: (r["col_idx_min"], r["column"]))
     conflicts = {r["column"]: sorted(r["dtype_id_distinct"]) for r in rows
@@ -1578,31 +1562,21 @@ def _read_meta_files(files, cols) -> pa.Table:
     """The ``cols`` of every row of the block files ``files``
     (``_typed_meta``), read on the driver with pyarrow through
     ``StoreFS.open``: the footers and the selected column chunks, no
-    Spark job.  Three more columns say where each row lives: ``_file``
-    (its file, dictionary-coded over ``files``), ``_rg`` (its row group
-    in the file) and ``_row`` (its index in the row group)."""
-    tables, rg_rows = [], []
+    Spark job.  One more column, ``_file``, says which file holds each
+    row (dictionary-coded over ``files``); the rows follow ``files``'
+    order, and each file's rows their order in the file."""
+    tables = []
     for f in files:
         with fs_mod.get_fs(f).open(f) as fh:
             pf = pq.ParquetFile(fh)
             have = set(pf.schema_arrow.names)
             tables.append(_typed_meta(
                 pf.read(columns=[c for c in cols if c in have]), cols))
-            md = pf.metadata
-            rg_rows.append([md.row_group(i).num_rows
-                            for i in range(md.num_row_groups)])
     m = pa.concat_tables([_typed_meta(pa.table({}), cols), *tables])
-    n_rgs = np.array([len(r) for r in rg_rows], dtype=np.int64)
-    rows = np.array([n for r in rg_rows for n in r], dtype=np.int64)
-    rg = np.arange(len(rows)) - np.repeat(np.cumsum(n_rgs) - n_rgs, n_rgs)
-    file_idx = np.repeat(np.repeat(np.arange(len(files), dtype=np.int32),
-                                   n_rgs), rows)
-    return (m.append_column("_file", pa.DictionaryArray.from_arrays(
-                file_idx, pa.array(files, pa.string())))
-            .append_column("_rg", pa.array(np.repeat(rg, rows), pa.int32()))
-            .append_column("_row", pa.array(
-                np.arange(m.num_rows) - np.repeat(np.cumsum(rows) - rows,
-                                                  rows), pa.int64())))
+    file_idx = np.repeat(np.arange(len(files), dtype=np.int32),
+                         [t.num_rows for t in tables])
+    return m.append_column("_file", pa.DictionaryArray.from_arrays(
+        file_idx, pa.array(files, pa.string())))
 
 
 def _block_meta(blocks: DataFrame, cols) -> pa.Table:
@@ -1612,7 +1586,7 @@ def _block_meta(blocks: DataFrame, cols) -> pa.Table:
 
     An untouched ``read_blocks`` frame is read from its own files
     (``_read_meta_files``, no Spark job), and then the table also says
-    where each row lives (``_file``, ``_rg``, ``_row``); any other frame
+    which file holds each row (``_file``); any other frame
     (filtered, joined, cached, built in memory) is read by one
     ``select(...).toArrow()`` job."""
     files = _scan_files(blocks)
@@ -1626,8 +1600,10 @@ def _block_meta(blocks: DataFrame, cols) -> pa.Table:
 class _ReadUnit(NamedTuple):
     """One Python task's share of a decode or a recode (``_plan_units``):
     whole ``parts``, ``nbytes`` of kept encoded blocks, and ``files``:
-    per block file holding their kept rows, (path, the ``StoreFS`` the
-    driver resolved for it, [(row group, the kept rows' indices in it)])."""
+    per block file holding their kept rows, in store order, (path, the
+    ``StoreFS`` the driver resolved for it, the kept rows' indices in the
+    file, [(row, part_key) of each part whose last kept row is that row
+    of this file]), all in row order."""
     parts: list[int]
     nbytes: int
     files: list
@@ -1657,11 +1633,12 @@ def _plan_decode(blocks: DataFrame, columns: list[str] | None,
     columns, api.py:566-573).
 
     When the metadata came from the block files and some part is kept,
-    the plan also bin-packs the kept parts into read units
-    (``_plan_units``), one per Python task: ``min(kept parts,
-    defaultParallelism, kept bytes // UNIT_BYTES)`` of them, at least
-    one.  The rows a unit reads are its parts' projected and sizer
-    blocks, and kept bytes are their ``encoded_size``."""
+    the plan also cuts the kept parts into read units (``_plan_units``),
+    one per Python task: in store order, by kept bytes, ``min(kept
+    parts, defaultParallelism, kept bytes // UNIT_BYTES)`` of them (at
+    least one), and more where a unit would hold over
+    ``UNIT_MAX_BYTES``.  The rows a unit reads are its parts' projected
+    and sizer blocks, and kept bytes are their ``encoded_size``."""
     tests = _prune_tests(groups)
     m = _block_meta(blocks, _PLAN_COLS + (_STATS_COLS if tests else ()))
     names = m["column"]
@@ -1713,85 +1690,133 @@ def _plan_decode(blocks: DataFrame, columns: list[str] | None,
 # outweighs the split decode), while a 5.4 MB code-table scan ran 30%
 # faster in four tasks than in one.
 UNIT_BYTES = 1 << 20
+# the most encoded block bytes one read unit holds, unless one part alone
+# holds more: it bounds what a Python task reads, so a large decode or
+# recode runs more units than cores, in waves, instead of each task
+# holding its share of the whole read.
+UNIT_MAX_BYTES = 64 << 20
 
 
 def _plan_units(m: pa.Table, rows: np.ndarray,
                 n_units: int) -> list[_ReadUnit]:
-    """Bin-pack the parts of the block rows ``rows`` (a mask over ``m``
-    that selects some row; ``m`` is block metadata read from the files:
-    ``_read_meta_files``) into read units by the ``encoded_size`` of
-    their rows, largest part first onto the lightest unit.  There are ``min(parts, n_units, kept bytes //
-    UNIT_BYTES)`` units, at least one: never an empty one, since a
-    ``mapInArrow`` task runs Python even with nothing to read.  A part
-    goes whole to one unit, with every file that holds its rows, so each
-    part's pages decode together (``_decode_columns``: page order and the
-    duplicate-page refusal)."""
-    import heapq
-
+    """Cut the parts of the block rows ``rows`` (a mask over ``m`` that
+    selects some row; ``m`` is block metadata read from the files:
+    ``_read_meta_files``) into read units, weighing each part by the
+    ``encoded_size`` of its rows.  The parts are taken in store order
+    (of their first row) and cut into contiguous runs, so parts that
+    share a block file share a unit as far as the balance allows and a
+    file is read by few units, not by every one.  There are ``min(parts,
+    n_units, kept bytes // UNIT_BYTES)`` runs, at least one, cut so the
+    heaviest is as light as it can be; a run heavier than
+    ``UNIT_MAX_BYTES`` is cut further, down to one part.  No unit is
+    empty, since a ``mapInArrow`` task runs Python even with nothing to
+    read.  A part goes whole to one unit, with every file that holds its
+    rows, so each part's pages decode together (``_decode_columns``:
+    page order and the duplicate-page refusal)."""
     sel = np.flatnonzero(rows)
-    keys, inv = np.unique(np.asarray(m["part_key"], dtype=np.int64)[sel],
-                          return_inverse=True)
+    keys, first, inv = np.unique(
+        np.asarray(m["part_key"], dtype=np.int64)[sel],
+        return_index=True, return_inverse=True)
     size = np.bincount(inv, minlength=len(keys), weights=np.asarray(
         m["encoded_size"], dtype=np.int64)[sel]).astype(np.int64)
-    n = min(len(keys), n_units, max(int(size.sum()) // UNIT_BYTES, 1))
-    load = [(0, u) for u in range(n)]
+    in_order = np.argsort(first, kind="stable")
+    cum = np.cumsum(size[in_order])
+    total = int(cum[-1])
+    n = min(len(keys), n_units, max(total // UNIT_BYTES, 1))
+
+    def cut(limit: int) -> list[int]:
+        """The first part (in store order) of each run when runs are
+        filled greedily up to ``limit`` bytes; a heavier part runs
+        alone."""
+        starts = [0]
+        while True:
+            s = starts[-1]
+            e = max(int(np.searchsorted(cum, (cum[s - 1] if s else 0)
+                                        + limit, "right")), s + 1)
+            if e >= len(cum):
+                return starts
+            starts.append(e)
+
+    lo, hi = max(-(-total // n), int(size.max())), total
+    while lo < hi:  # the lightest heaviest run over at most n runs
+        mid = (lo + hi) // 2
+        lo, hi = (lo, mid) if len(cut(mid)) <= n else (mid + 1, hi)
+    starts = cut(min(lo, UNIT_MAX_BYTES))
     unit_of = np.empty(len(keys), dtype=np.int64)
-    for p in np.argsort(-size, kind="stable"):
-        w, u = heapq.heappop(load)
-        unit_of[p] = u
-        heapq.heappush(load, (w + int(size[p]), u))
+    unit_of[in_order] = np.searchsorted(starts, np.arange(len(keys)),
+                                        "right") - 1
     files = m["_file"].combine_chunks()
-    # (unit, file, row group) of every selected row, sorted by them
-    loc = np.stack([unit_of[inv], np.asarray(files.indices)[sel],
-                    np.asarray(m["_rg"])[sel]])
-    order = np.lexsort(loc[::-1])
-    loc, row = loc[:, order], np.asarray(m["_row"])[sel][order]
-    starts = np.flatnonzero(np.r_[True, (np.diff(loc, axis=1) != 0)
-                                  .any(axis=0)])
-    per_unit: list[dict] = [{} for _ in range(n)]
-    for s, e in zip(starts, [*starts[1:], len(row)]):
-        u, f, rg = loc[:, s].tolist()
-        per_unit[u].setdefault(f, []).append((rg, row[s:e]))
+    file_idx = np.asarray(files.indices)
+    file_row0 = np.searchsorted(file_idx, np.arange(len(files.dictionary)))
+    # the selected rows by unit, then in store order
+    o = np.lexsort((sel, unit_of[inv]))
+    unit, part = unit_of[inv][o], inv[o]
+    fi = file_idx[sel][o]
+    row = (sel - file_row0[file_idx[sel]])[o]
+    last = np.zeros(len(o), dtype=bool)
+    last[len(o) - 1 - np.unique(part[::-1], return_index=True)[1]] = True
+    group = np.flatnonzero(np.r_[True, (unit[1:] != unit[:-1])
+                                 | (fi[1:] != fi[:-1])])
     paths = files.dictionary.to_pylist()
+    per_unit: list[list] = [[] for _ in starts]
+    for s, e in zip(group, [*group[1:], len(o)]):
+        path = paths[fi[s]]
+        done = last[s:e]
+        per_unit[unit[s]].append(
+            (path, fs_mod.get_fs(path), row[s:e],
+             list(zip(row[s:e][done].tolist(),
+                      keys[part[s:e][done]].tolist()))))
     return [_ReadUnit(keys[unit_of == u].tolist(),
-                      int(size[unit_of == u].sum()),
-                      [(paths[f], fs_mod.get_fs(paths[f]), rgs)
-                       for f, rgs in per_unit[u].items()])
-            for u in range(n)]
+                      int(size[unit_of == u].sum()), per_unit[u])
+            for u in range(len(starts))]
 
 
-def _read_unit(unit: _ReadUnit, cols) -> pa.Table:
-    """The ``cols`` of a unit's block rows, read inside its task through
+def _read_unit(unit: _ReadUnit, cols):
+    """Yield ``(part_key, that part's block rows)`` for each part of
+    ``unit``: the ``cols`` of its kept rows, read inside its task through
     the ``StoreFS`` the driver resolved (so a ``register_fs`` mapping
-    holds in the workers too): per file, only its kept row groups, and of
-    those only the kept rows."""
-    tables = []
-    for path, store_fs, rgs in unit.files:
+    holds in the workers too), file by file, only the row groups holding
+    kept rows, and of those only the kept rows.  A part is yielded once
+    the row group holding its last kept row is read, so a task holds one
+    row group and the parts it has begun reading: one part at a time
+    when each part sits in one file, and never more than its unit."""
+    pending: dict[int, list] = {}
+    for path, store_fs, rows, ends in unit.files:
+        ends = iter(ends)
+        end = next(ends, None)
         with store_fs.open(path) as fh:
             pf = pq.ParquetFile(fh)
-            tables += [_typed_meta(pf.read_row_group(rg, columns=list(cols))
-                                   .take(rows), cols) for rg, rows in rgs]
-    return pa.concat_tables(tables)
+            md = pf.metadata
+            bounds = np.cumsum([md.row_group(i).num_rows
+                                for i in range(md.num_row_groups)])
+            rg_of = np.searchsorted(bounds, rows, "right")
+            for rg in np.unique(rg_of).tolist():
+                row0 = bounds[rg] - md.row_group(rg).num_rows
+                t = _typed_meta(pf.read_row_group(rg, columns=list(cols))
+                                .take(rows[rg_of == rg] - row0), cols)
+                keys = np.asarray(t["part_key"])
+                order = np.argsort(keys, kind="stable")
+                t, keys = t.take(order), keys[order]
+                starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+                for s, e in zip(starts, [*starts[1:], len(keys)]):
+                    pending.setdefault(int(keys[s]), []).append(
+                        t.slice(s, e - s))
+                while end is not None and end[0] < bounds[rg]:
+                    yield end[1], pa.concat_tables(pending.pop(end[1]))
+                    end = next(ends, None)
 
 
 def _unit_frame(spark: SparkSession, units: list[_ReadUnit], cols, part_fn,
                 schema: StructType) -> DataFrame:
     """One Python task per read unit, with no block scan and no exchange:
     ``spark.range`` with one partition per unit, mapped in Arrow.  Each
-    task reads its unit's block rows (``_read_unit``) and yields
-    ``part_fn(part_key, that part's block rows)`` for each of its parts,
-    typed as ``schema``."""
+    task yields ``part_fn(part_key, that part's block rows)`` for each
+    part of its unit as ``_read_unit`` reads it, typed as ``schema``."""
     def run(batches):
         for batch in batches:
             for i in batch.column(0).to_pylist():
-                t = _read_unit(units[i], cols)
-                keys = np.asarray(t["part_key"])
-                order = np.argsort(keys, kind="stable")
-                t, keys = t.take(order), keys[order]
-                starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
-                for s, e in zip(starts, [*starts[1:], len(keys)]):
-                    yield from part_fn(int(keys[s]),
-                                       t.slice(s, e - s)).to_batches()
+                for key, tbl in _read_unit(units[i], cols):
+                    yield from part_fn(key, tbl).to_batches()
 
     n = len(units)
     return spark.range(0, n, 1, n).mapInArrow(run, schema)
@@ -1846,11 +1871,13 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
 
     The decode runs one of two ways.  An untouched ``read_blocks`` frame
     is planned from its block files' own metadata column chunks, and its
-    kept parts are bin-packed by kept bytes into read units, ``min(kept
-    parts, defaultParallelism, kept bytes // UNIT_BYTES)`` of them (at
-    least one): one Python task per unit reads
-    its block files itself through StoreFS (no block scan, no
-    exchange), so a one-part lookup is one job of one task.  Any other
+    kept parts are cut in store order into read units by kept bytes,
+    ``min(kept parts, defaultParallelism, kept bytes // UNIT_BYTES)`` of
+    them (at least one), and more where a unit would hold over
+    ``UNIT_MAX_BYTES`` (those run in waves): one Python task per unit
+    reads its block files itself through StoreFS (no block scan, no
+    exchange) and finishes each part as soon as it is read, so a
+    one-part lookup is one job of one task.  Any other
     frame (filtered, joined, cached, built in memory) is planned by one
     collect job and decoded by a grouped Arrow UDF behind a part_key
     exchange, one task per post-shuffle partition

@@ -9,8 +9,8 @@ metadata column chunks.  This prints, for the store at ``<store>``:
 * the number of block files and of pages (block rows);
 * the metadata bytes the planner holds on the driver, in total and per
   part: the Arrow size of the plan and stats columns, Bloom words
-  included, and of each row's file, row group and row.  This is the
-  design's driver-memory cost, O(pages);
+  included, and of each row's file.  This is the design's driver-memory
+  cost, O(pages);
 * the median planning time over 10 calls, in ms, for an unfiltered full
   decode and for an equality lookup of a key absent from the store on
   the first string column (when there is one), which reads every stats

@@ -44,10 +44,14 @@ def test_decode_projection_pushes_column_filter_to_blockstore(spark, tmp_path):
     pl.run_encode(df, store, target_rows=200, resume=False)
     blocks = pl.read_blocks(spark, store)
     meta = pl._block_meta(blocks, ("column",)).to_pylist()
-    column_at = {(r["_file"], r["_rg"], r["_row"]): r["column"] for r in meta}
-    read = [column_at[(path, rg, int(row))]
+    row_in_file = {}
+    column_at = {}
+    for r in meta:
+        i = row_in_file[r["_file"]] = row_in_file.get(r["_file"], -1) + 1
+        column_at[(r["_file"], i)] = r["column"]
+    read = [column_at[(path, int(row))]
             for u in pl._plan_decode(blocks, ["lang"], []).units
-            for path, _, rgs in u.files for rg, rows in rgs for row in rows]
+            for path, _, rows, _ in u.files for row in rows]
     assert read and set(read) == {"lang"}
     assert len(read) == sum(r["column"] == "lang" for r in meta)
     q = pl.decode_blocks(blocks.where("true"), columns=["lang"])

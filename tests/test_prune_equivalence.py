@@ -469,13 +469,14 @@ def test_unit_decode_of_evolved_schema(spark, mixed_store):
     _decodes_agree(spark, path)
 
 
-def test_unit_decode_of_parts_spread_over_files(spark, tmp_path):
+@pytest.fixture(scope="module")
+def spread_store(spark, tmp_path_factory):
     """A multi-partition ingest, two appends and a removal's survivor
-    rewrite leave parts whose pages span three or more block files: a
-    read unit holds every file of its parts and decodes them whole."""
+    rewrite: (path, rows, a part whose pages span three or more block
+    files)."""
     from parquet_python_spark.sources import codegen as cg
 
-    path = str(tmp_path / "s")
+    path = str(tmp_path_factory.mktemp("spread") / "s")
     pl.run_encode(cg.code_table(spark, 3000, partitions=8), path,
                   target_rows=1500, resume=False)
     for gen in (1, 2):
@@ -483,16 +484,63 @@ def test_unit_decode_of_parts_spread_over_files(spark, tmp_path):
                       target_rows=1500, generation=gen)
     victim = pl.read_lineage(spark, path).orderBy("part_key").first()
     pl.remove_parts(spark, path, [victim["part_key"]])
+    return path, 3800 - victim["n_rows"]
+
+
+def test_unit_decode_of_parts_spread_over_files(spark, spread_store):
+    """Parts whose pages span three or more block files: a read unit
+    holds every file of its parts and decodes them whole."""
+    path, n = spread_store
     meta = pl._store_meta(path, ("part_key",))
     files_per_part = (meta.group_by("part_key")
                       .aggregate([("_file", "count_distinct")]))
     assert max(files_per_part["_file_count_distinct"].to_pylist()) >= 3
-    n = 3800 - victim["n_rows"]
     unit, rows = _decodes_agree(spark, path)
     assert len(rows) == n
     _decodes_agree(spark, path, keep_part_key=True)
     _decodes_agree(spark, path, columns=["path"],
                    filters=[("lang", "==", unit.first()["lang"])])
+
+
+def test_read_units_are_capped_and_stream_their_parts(spark, spread_store,
+                                                      tmp_path,
+                                                      monkeypatch):
+    """A read of more than ``UNIT_MAX_BYTES`` per core is cut into more
+    units than cores, none over the cap unless it holds one part.  A
+    unit's reader yields each of its parts once, whole, as soon as the
+    file holding the part's last rows is read, before it opens the next
+    file; the decode still equals the grouped decode."""
+    from parquet_python_spark.operators import fs as fs_mod
+    from tests.fs_doubles import OpenLogFS
+
+    path, n = spread_store
+    meta = pl._store_meta(path, ("part_key", "encoded_size"))
+    rows_of = dict(zip(*np.unique(np.asarray(meta["part_key"]),
+                                  return_counts=True)))
+    cap = sum(meta["encoded_size"].to_pylist()) // 10
+    monkeypatch.setattr(pl, "UNIT_MAX_BYTES", cap)
+    log_fs = OpenLogFS(str(tmp_path / "opens.log"))
+    fs_mod.register_fs(path, log_fs)
+    try:
+        units = pl._plan_decode(pl.read_blocks(spark, path), None, []).units
+        assert len(units) > spark.sparkContext.defaultParallelism
+        assert all(u.nbytes <= cap or len(u.parts) == 1 for u in units)
+        assert sorted(k for u in units for k in u.parts) == sorted(rows_of)
+        for u in units:
+            before = len(log_fs.opens())
+            yielded = []
+            for k, t in pl._read_unit(u, pl._DECODE_COLS):
+                assert t.num_rows == rows_of[k]
+                opened = [p for _, p in log_fs.opens()[before:]]
+                holds = [fs_mod._strip_uri(f) for f, _, _, ends in u.files
+                         if k in [e[1] for e in ends]]
+                assert opened[-1:] == holds, (k, opened, holds)
+                yielded.append(k)
+            assert sorted(yielded) == sorted(u.parts)
+        _, rows = _decodes_agree(spark, path)
+        assert len(rows) == n
+    finally:
+        fs_mod.unregister_fs(path)
 
 
 def test_one_part_lookup_is_one_task(spark, stores):
