@@ -5,9 +5,9 @@ dictionary encoding, RLE/bit-packed hybrid runs, DELTA_BINARY_PACKED
 (frame-of-reference + delta), fixed-width bit-packing — plus FSST symbol-table
 compression for strings (absent from the reference), as vectorized numpy
 kernels driven through Spark ``mapInPandas``.  A per-column codec
-auto-selector (cardinality / run-length / entropy sampling) replaces the
-reference's static dtype-driven dispatch (reference:
-fastparquet/writer.py:411-414, 519, 601-631).
+auto-selector (sampled cardinality, run length, delta width and trial
+encodes) replaces the reference's static dtype-driven dispatch
+(reference: fastparquet/writer.py:411-414, 519, 601-631).
 
 Layout
 ------

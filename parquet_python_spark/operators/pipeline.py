@@ -860,11 +860,7 @@ def read_blocks(spark: SparkSession, path: str) -> DataFrame:
     """The store's block rows, read with the known ``BLOCKS_SCHEMA``: no
     schema-inference job, and a store written before a column existed
     (``bloom``) reads it as NULL, which pruning treats as "keep"."""
-    return _read_block_files(spark, f"{path}/blocks")
-
-
-def _read_block_files(spark: SparkSession, *paths: str) -> DataFrame:
-    return spark.read.schema(BLOCKS_SCHEMA).parquet(*paths)
+    return spark.read.schema(BLOCKS_SCHEMA).parquet(f"{path}/blocks")
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
@@ -971,22 +967,22 @@ def _record_generation(path: str, generation: int) -> bool:
     return True
 
 
-def _with_generation_keys(keys: DataFrame, path: str) -> DataFrame:
-    """Base part_keys ∪ their generation-composed twins — the full key
-    set a repo's rows can live under.  O(parts × generations) KEY rows
-    only (metadata scale); non-existent twins vanish in the left-semi
-    join against blocks."""
+def _with_generation_keys(keys: DataFrame, path: str) -> list[int]:
+    """The distinct part_keys of ``keys`` ∪ their generation-composed
+    twins, collected — the full key set a repo's rows can live under.
+    O(parts × generations) KEY rows only (metadata scale); a twin the
+    store does not hold has no block to decode or replace."""
     base = keys.select("part_key").distinct()
     gens = _store_generations(path)
-    if not gens:
-        return base
-    spark = keys.sparkSession
-    # int32 column: must hash identically to run_encode's F.lit(int(gen)),
-    # which Catalyst types as IntegerType (xxhash64 is type-sensitive)
-    gen_df = spark.createDataFrame([(int(g),) for g in gens], "gen int")
-    composed = (base.crossJoin(F.broadcast(gen_df))
-                .select(F.xxhash64("part_key", "gen").alias("part_key")))
-    return base.unionByName(composed)
+    if gens:
+        # int32 column: must hash identically to run_encode's
+        # F.lit(int(gen)), which Catalyst types as IntegerType (xxhash64
+        # is type-sensitive)
+        gen_df = keys.sparkSession.createDataFrame(
+            [(int(g),) for g in gens], "gen int")
+        base = base.unionByName(base.crossJoin(F.broadcast(gen_df)).select(
+            F.xxhash64("part_key", "gen").alias("part_key")))
+    return [r[0] for r in base.collect()]
 
 
 def run_encode(df: DataFrame, path: str,
@@ -1069,20 +1065,20 @@ def overwrite_partitions(df: DataFrame, path: str,
     means re-encoding its *bucket*: rows of other repos in affected buckets
     are decoded from the store, unioned with the replacement rows, and
     re-encoded under the SAME persisted plan (part_keys never move).
+    They are read in read units (``_decode_parts``) planned from the
+    metadata read that is also the commit's part→file map.
     """
     spark = df.sparkSession
-    meta = _store_meta(path, ("part_key",))
+    meta = _store_meta(path, _PLAN_COLS)
     plan = _plan_for_store(df, path, target_rows)
     repos = df.select("repo").distinct()
     assigned_new = part.assign_part_keys(df, plan)
     # affected = the repos' base buckets AND their generation-composed
     # twins: rows of a replaced repo may have arrived via later
     # incremental appends (part_key = xxhash64(base, gen))
-    aff_keys = [r[0] for r in _with_generation_keys(
-        assigned_new.select("part_key").distinct(), path).collect()]
-    aff_blocks = read_blocks(spark, path).where(_part_key_in(aff_keys))
+    aff_keys = _with_generation_keys(assigned_new, path)
     # rows of OTHER repos living in the affected buckets survive
-    retained_rows = (decode_blocks(aff_blocks)
+    retained_rows = (_decode_parts(spark, meta, aff_keys)
                      .join(repos, "repo", "left_anti"))
     missing = [c for c in ("repo", "path", "commit")
                if c not in retained_rows.columns]
@@ -1149,7 +1145,8 @@ def _commit_blocks_delta(spark: SparkSession, path: str, meta: pa.Table,
     survivors = np.unique(keys[in_dead & ~hit]).tolist()
     to_write = new_blocks
     if survivors:
-        kept = _read_block_files(spark, *dead).where(_part_key_in(survivors))
+        kept = (spark.read.schema(BLOCKS_SCHEMA).parquet(*dead)
+                .where(_part_key_in(survivors)))
         to_write = (kept if to_write is None
                     else kept.unionByName(to_write, allowMissingColumns=True))
     # this commit's file-name prefix: tells its files from any other
@@ -1196,22 +1193,20 @@ def remove_parts(spark: SparkSession, path: str,
 
 
 def remove_repos(spark: SparkSession, path: str, repos: list[str],
-                 target_rows: int = part.DEFAULT_TARGET_ROWS,
                  page_bytes: int = DEFAULT_PAGE_BYTES,
                  compression: str = "UNCOMPRESSED") -> dict:
     """Drop every row of the given repos.  Mono-repo parts are dropped
     without decoding; packed buckets shared with other repos are decoded,
     filtered and re-encoded under their original part_key (requires the
-    ``repo`` column to have been encoded in those buckets)."""
+    ``repo`` column to have been encoded in those buckets), read in read
+    units (``_decode_parts``) planned from the commit's metadata read."""
     plan = load_plan(spark, path)
     if plan is None:
         raise ValueError(f"store {path} has no persisted plan")
-    meta = _store_meta(path, ("part_key", "repo"))
+    meta = _store_meta(path, (*_PLAN_COLS, "repo"))
     repos_df = spark.createDataFrame([(r,) for r in repos], "repo string")
-    aff_keys = [r[0] for r in _with_generation_keys(
-        part.plan_part_keys(plan)
-        .join(F.broadcast(repos_df), "repo", "left_semi")
-        .select("part_key").distinct(), path).collect()]
+    aff_keys = _with_generation_keys(part.plan_part_keys(plan).join(
+        F.broadcast(repos_df), "repo", "left_semi"), path)
     # a part may drop without decode only when EVERY block is labeled with
     # a removed repo: local-strategy sub-blocks carry per-source-partition
     # repo labels, so a shared bucket can hold repo-'2' AND repo-'3'
@@ -1225,17 +1220,15 @@ def remove_repos(spark: SparkSession, path: str, repos: list[str],
     shared = sorted(set(aff.filter(keep_label)["part_key"].to_pylist()))
     new_blocks = None
     if shared:
-        decoded = decode_blocks(
-            read_blocks(spark, path).where(_part_key_in(shared)),
-            keep_part_key=True)
+        decoded = _decode_parts(spark, meta, shared, keep_part_key=True)
         if "repo" not in decoded.columns:
             raise ValueError(
                 "cannot remove repos from shared buckets: the 'repo' "
                 "column was not encoded — re-encode the store from source")
         retained = decoded.join(F.broadcast(repos_df), "repo", "left_anti")
         cols = [c for c in retained.columns if c not in _HELPER_COLS]
-        new_blocks = encode_table(retained, cols, target_rows, page_bytes,
-                                  compression)
+        new_blocks = encode_table(retained, cols, page_bytes=page_bytes,
+                                  compression=compression)
     _commit_blocks_delta(spark, path, meta, aff_keys, new_blocks)
     return _parts_rows(spark, path)
 
@@ -1409,27 +1402,36 @@ def merge_stores(spark: SparkSession, paths: list[str], out_path: str) -> dict:
     decoded PER STORE (page ids overlap across stores, so their blocks
     must never be concatenated directly), the rows unioned, and re-encoded
     under the same key.  Row multisets are preserved — deduplication is a
-    separate operator, as in the reference."""
-    stores = [read_blocks(spark, p) for p in paths]
-    all_keys = None
-    for s in stores:
-        k = s.select("part_key").distinct()
-        all_keys = k if all_keys is None else all_keys.unionByName(k)
-    collide = (all_keys.groupBy("part_key").count()
-               .where(F.col("count") > 1).select("part_key"))
-    clean = None
-    for s in stores:
-        part_df = s.join(F.broadcast(collide), "part_key", "left_anti")
-        clean = (part_df if clean is None else
-                 clean.unionByName(part_df, allowMissingColumns=True))
-    merged = clean
+    separate operator, as in the reference.
+
+    Collisions are found from each store's block metadata on the driver
+    (``_store_meta``, no Spark job) and decoded in read units
+    (``_decode_parts``), whose tasks read the source files through
+    StoreFS, out of Spark's sight: an ``out_path`` among ``paths``, whose
+    overwrite would delete those files, raises ``ValueError`` first."""
+    import os
+
+    if os.path.abspath(fs_mod._strip_uri(out_path)) in {
+            os.path.abspath(fs_mod._strip_uri(p)) for p in paths}:
+        raise ValueError(
+            f"merge_stores cannot write into a store it merges: {out_path}")
+    metas = [_store_meta(p, _PLAN_COLS) for p in paths]
+    store_keys = [np.unique(np.asarray(m["part_key"], dtype=np.int64))
+                  for m in metas]
+    all_keys, n_stores = np.unique(
+        np.concatenate([np.empty(0, np.int64), *store_keys]),
+        return_counts=True)
+    collide = all_keys[n_stores > 1]
+    merged = None
     rows = None
-    for s in stores:
-        coll = s.join(F.broadcast(collide), "part_key", "left_semi")
-        if coll.isEmpty():
-            continue
-        r = decode_blocks(coll, keep_part_key=True)
-        rows = r if rows is None else rows.unionByName(r)
+    for p, meta, keys in zip(paths, metas, store_keys):
+        clean = read_blocks(spark, p).where(~_part_key_in(collide))
+        merged = (clean if merged is None else
+                  merged.unionByName(clean, allowMissingColumns=True))
+        mine = np.intersect1d(keys, collide)
+        if len(mine):
+            r = _decode_parts(spark, meta, mine, keep_part_key=True)
+            rows = r if rows is None else rows.unionByName(r)
     if rows is not None:
         cols = [c for c in rows.columns if c not in _HELPER_COLS]
         merged = merged.unionByName(encode_table(rows, cols),
@@ -1619,28 +1621,38 @@ class _DecodePlan(NamedTuple):
 
 def _plan_decode(blocks: DataFrame, columns: list[str] | None,
                  groups) -> _DecodePlan:
-    """A decode's plan, computed on the driver from the payload-free block
-    columns (``_block_meta``: the block files' own metadata column
-    chunks for an untouched ``read_blocks`` frame, else one collect job).
+    """The plan (``_plan_meta``) of a decode of ``blocks``, from its
+    payload-free block columns (``_block_meta``)."""
+    tests = _prune_tests(groups)
+    return _plan_meta(
+        _block_meta(blocks, _PLAN_COLS + (_STATS_COLS if tests else ())),
+        columns, tests, None,
+        blocks.sparkSession.sparkContext.defaultParallelism)
+
+
+def _plan_meta(m: pa.Table, columns: list[str] | None, tests, subset,
+               n_units: int) -> _DecodePlan:
+    """A decode's plan from the block metadata ``m`` (``_PLAN_COLS``, and
+    ``_STATS_COLS`` under ``tests``).
 
     Per projected column (``columns``; None = all): min ``col_idx`` and
     the dtype set, i.e. the schema.  A requested name matches itself, its
     escaped literal-dot spelling (``META_ESC``) and its struct children.
-    Under ``groups`` the kept parts are ``_kept_parts``.  A kept part
-    holding none of the projected columns (written before they existed)
-    decodes through its sizer column, whose length sizes the NULL fill
-    instead of the part silently vanishing (fastparquet NA-fills absent
-    columns, api.py:566-573).
+    Under ``tests`` (``_prune_tests``) the kept parts are ``_kept_parts``.
+    ``subset`` (a mask over ``m``'s rows that holds whole parts, or None)
+    limits the decode to those parts: schema, kept set and sizers are
+    computed over them alone, as over a frame filtered to them.  ``m``
+    itself stays whole, since ``_plan_units`` places each row in its
+    file by its position in ``m``.  A kept part holding none of the
+    projected columns (written before they existed) decodes through its
+    sizer column, whose length sizes the NULL fill instead of the part
+    silently vanishing (fastparquet NA-fills absent columns,
+    api.py:566-573).
 
-    When the metadata came from the block files and some part is kept,
-    the plan also cuts the kept parts into read units (``_plan_units``),
-    one per Python task: in store order, by kept bytes, ``min(kept
-    parts, defaultParallelism, kept bytes // UNIT_BYTES)`` of them (at
-    least one), and more where a unit would hold over
-    ``UNIT_MAX_BYTES``.  The rows a unit reads are its parts' projected
-    and sizer blocks, and kept bytes are their ``encoded_size``."""
-    tests = _prune_tests(groups)
-    m = _block_meta(blocks, _PLAN_COLS + (_STATS_COLS if tests else ()))
+    When ``m`` was read from the block files (it has ``_file``) and some
+    part is kept, the plan also cuts the kept parts' projected and sizer
+    blocks into read units (``_plan_units``, at most ``n_units`` unless
+    ``UNIT_MAX_BYTES`` cuts more), one per Python task."""
     names = m["column"]
     if columns is None:
         proj = np.ones(m.num_rows, dtype=bool)
@@ -1652,6 +1664,8 @@ def _plan_decode(blocks: DataFrame, columns: list[str] | None,
         for c in columns:
             hit = pa.compute.or_(hit, pa.compute.starts_with(names, c + "."))
         proj = np.asarray(hit, dtype=bool)
+    if subset is not None:
+        proj = proj & subset
     schema = _schema_from_column_rows(
         m.filter(pa.array(proj)).group_by("column")
         .aggregate([("col_idx", "min"), ("dtype_id", "distinct")])
@@ -1659,6 +1673,8 @@ def _plan_decode(blocks: DataFrame, columns: list[str] | None,
     part_keys = np.asarray(m["part_key"])
     keys, inv = np.unique(part_keys, return_inverse=True)
     keep = _kept_parts(m, keys, inv, tests)
+    if subset is not None:
+        keep &= _any_per_part(inv, len(keys), subset)
     uncovered = keep & ~_any_per_part(inv, len(keys), proj)
     pages = (m.take(np.flatnonzero(uncovered[inv]))
              .group_by(["part_key", "column"])
@@ -1677,10 +1693,9 @@ def _plan_decode(blocks: DataFrame, columns: list[str] | None,
         for c, pks in sizers.items():
             read = read | (np.asarray(pa.compute.equal(names, c), dtype=bool)
                            & np.isin(part_keys, pks))
-        units = _plan_units(m, keep[inv] & read,
-                            blocks.sparkSession.sparkContext
-                            .defaultParallelism)
-    return _DecodePlan(schema, keys[keep].tolist() if tests else None,
+        units = _plan_units(m, keep[inv] & read, n_units)
+    return _DecodePlan(schema, (keys[keep].tolist()
+                                if tests or subset is not None else None),
                        sizers, units)
 
 
@@ -1855,6 +1870,52 @@ def _part_key_in(keys: list[int]):
     return F.expr(f"part_key IN ({', '.join(str(int(k)) for k in keys)})")
 
 
+def _plan_frame(spark: SparkSession, plan: _DecodePlan, keep_part_key: bool,
+                blocks: DataFrame | None = None) -> DataFrame:
+    """The flat decoded rows of ``plan`` (``_part_finisher``): an empty
+    local frame (no job) when no part is kept, else one Python task per
+    read unit; a plan without units came from ``blocks``, a frame with no
+    files behind it, decoded by a grouped Arrow UDF behind an exchange."""
+    schema = plan.schema
+    if keep_part_key:
+        schema = StructType(
+            [StructField("part_key", LongType(), False)] + list(schema.fields))
+    if plan.kept == []:
+        # an empty LocalRelation built in the JVM: no job.  The Arrow path
+        # (``createDataFrame(pa.Table)``) round-trips a temp file: 9-14 ms
+        # against 6-7 ms here on a 4-vCPU host
+        js = spark._jsparkSession
+        return DataFrame(js.createDataFrame(
+            spark.sparkContext._jvm.java.util.ArrayList(),
+            js.parseDataType(schema.json())), spark)
+    finish = _part_finisher(schema, keep_part_key)
+    if plan.units is not None:
+        return _unit_frame(spark, plan.units, _DECODE_COLS, finish, schema)
+    # the metadata names of the projected columns present in the blocks
+    cond = F.col("column").isin([f.name for f in plan.schema.fields])
+    if plan.kept is not None:
+        cond = cond & _part_key_in(plan.kept)
+    for col, pks in plan.sizers.items():
+        # finish ignores non-projected columns but for sizing
+        cond = cond | ((F.col("column") == col) & _part_key_in(pks))
+    return (blocks.where(cond).groupBy("part_key").applyInArrow(
+        lambda key, tbl: finish(key[0].as_py(), tbl), schema))
+
+
+def _decode_parts(spark: SparkSession, meta: pa.Table, keys,
+                  columns: list[str] | None = None,
+                  keep_part_key: bool = False) -> DataFrame:
+    """The rows of the parts ``keys`` of a store, as ``decode_blocks``
+    returns them, planned from its block metadata ``meta`` (``_store_meta``
+    with ``_PLAN_COLS``) and read in read units: no planning job, no block
+    scan, no exchange.  Keys the store does not hold are skipped."""
+    subset = np.isin(np.asarray(meta["part_key"], dtype=np.int64),
+                     np.fromiter(keys, dtype=np.int64))
+    plan = _plan_meta(meta, columns, [], subset,
+                      spark.sparkContext.defaultParallelism)
+    return reassemble_structs(_plan_frame(spark, plan, keep_part_key))
+
+
 def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
                   filters=None, keep_part_key: bool = False) -> DataFrame:
     """Blocks -> original rows (the reference's two-level read:
@@ -1863,24 +1924,21 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
     A driver-side plan (``_plan_decode``) gives the projected schema, the
     schema-evolution coverage check and, under ``filters``, the parts
     whose stats and Bloom filters may hold a match (``prune_blocks``
-    semantics).  When no part survives the result is an empty frame the
-    optimizer folds to an empty local relation: no decode job runs.
-    Otherwise the decode reads only the projected columns of the kept
-    parts, decodes them part by part in Python, and re-applies the exact
-    predicate to the decoded rows.
+    semantics).  When no part survives the result is an empty local
+    frame built from the schema: no decode job runs.  Otherwise the
+    decode reads only the projected columns of the kept parts, decodes
+    them part by part in Python, and re-applies the exact predicate to
+    the decoded rows.
 
-    The decode runs one of two ways.  An untouched ``read_blocks`` frame
-    is planned from its block files' own metadata column chunks, and its
-    kept parts are cut in store order into read units by kept bytes,
-    ``min(kept parts, defaultParallelism, kept bytes // UNIT_BYTES)`` of
-    them (at least one), and more where a unit would hold over
-    ``UNIT_MAX_BYTES`` (those run in waves): one Python task per unit
-    reads its block files itself through StoreFS (no block scan, no
-    exchange) and finishes each part as soon as it is read, so a
-    one-part lookup is one job of one task.  Any other
-    frame (filtered, joined, cached, built in memory) is planned by one
-    collect job and decoded by a grouped Arrow UDF behind a part_key
-    exchange, one task per post-shuffle partition
+    An untouched ``read_blocks`` frame is planned from its block files'
+    own metadata column chunks, and its kept parts are read in read
+    units (``_plan_units``), as every store operation reads its parts:
+    one Python task per unit reads its block files itself through
+    StoreFS (no block scan, no exchange), so a one-part lookup is one
+    job of one task.  Only a frame with no files behind it (in-memory
+    ``encode_table`` output, or a frame a caller cached, filtered or
+    joined) is planned by one collect job and decoded by a grouped Arrow
+    UDF behind a part_key exchange, one task per post-shuffle partition
     (``spark.sql.shuffle.partitions``, coalesced by AQE).
 
     ``keep_part_key=True`` prepends the originating part_key to every row
@@ -1890,41 +1948,17 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
     if columns is not None:
         need = [c for grp in groups for (c, _, _) in grp]
         columns = list(dict.fromkeys(list(columns) + need))
-    schema, kept, sizers, units = _plan_decode(blocks, columns, groups)
+    plan = _plan_decode(blocks, columns, groups)
     if filters is not None:
         # resolve filter names against the flat metadata schema: exact
         # (struct-path) spelling wins; else the escaped literal-dot one
-        names = {f.name for f in schema.fields}
+        names = {f.name for f in plan.schema.fields}
         filters = [[(c if c in names
                      else (c.replace(".", META_ESC)
                            if c.replace(".", META_ESC) in names else c),
                      op, v) for (c, op, v) in grp]
                    for grp in groups]
-    # the metadata names of the projected columns present in the blocks
-    proj = [f.name for f in schema.fields]
-    if keep_part_key:
-        schema = StructType(
-            [StructField("part_key", LongType(), False)] + list(schema.fields))
-    finish = _part_finisher(schema, keep_part_key)
-    if kept == []:
-        out = (blocks.where("false")
-               .selectExpr(*[f"CAST({'NULL' if f.nullable else '0'} AS "
-                             f"{f.dataType.simpleString()})"
-                             for f in schema.fields])
-               .toDF(*[f.name for f in schema.fields]))
-    elif units is not None:
-        out = _unit_frame(blocks.sparkSession, units, _DECODE_COLS, finish,
-                          schema)
-    else:
-        cond = (F.lit(True) if columns is None
-                else F.col("column").isin(proj))
-        if kept is not None:
-            cond = cond & _part_key_in(kept)
-        for col, pks in sizers.items():
-            # finish ignores non-projected columns but for sizing
-            cond = cond | ((F.col("column") == col) & _part_key_in(pks))
-        out = (blocks.where(cond).groupBy("part_key").applyInArrow(
-            lambda key, tbl: finish(key[0].as_py(), tbl), schema))
+    out = _plan_frame(blocks.sparkSession, plan, keep_part_key, blocks)
     if filters is not None:
         out = filt.apply_filters(out, filters)
         if user_cols is not None:
@@ -2240,17 +2274,18 @@ def head_rows(spark: SparkSession, path: str, n: int,
     cumulative row count covers ``n``, decodes only those.
 
     The per-part row counts (the max over columns of summed ``n_values``)
-    come from the block files' metadata column chunks (``_block_meta``),
-    read on the driver without a Spark job."""
-    blocks = read_blocks(spark, path)
-    rows = (_block_meta(blocks, ("part_key", "column", "n_values"))
-            .group_by(["part_key", "column"]).aggregate([("n_values", "sum")])
+    come from the block files' metadata column chunks (``_store_meta``),
+    read on the driver without a Spark job, and the picked parts are read
+    in read units (``_decode_parts``): a head inside the first part is one
+    job of one Python task."""
+    meta = _store_meta(path, (*_PLAN_COLS, "n_values"))
+    rows = (meta.group_by(["part_key", "column"])
+            .aggregate([("n_values", "sum")])
             .group_by("part_key").aggregate([("n_values_sum", "max")])
             .sort_by("part_key"))
     cum = np.cumsum(np.asarray(rows["n_values_sum_max"], dtype=np.int64))
     keys = rows["part_key"].to_pylist()[:int(np.searchsorted(cum, n)) + 1]
-    picked = blocks.where(_part_key_in(keys))
-    return decode_blocks(picked, columns=columns).limit(n)
+    return _decode_parts(spark, meta, keys, columns).limit(n)
 
 
 # parts decoded per Spark job by ``iter_pages``
@@ -2263,22 +2298,19 @@ def iter_pages(spark: SparkSession, path: str,
     ``iter_row_groups`` parity (api.py:397-413).
 
     The part_keys come from the block files' metadata column chunks
-    (``_block_meta``, no Spark job).  Parts are decoded in key-range
-    batches of ``ITER_BATCH_PARTS``: one Spark job fetches a whole batch,
-    which is then sliced per part locally — ceil(parts /
-    ITER_BATCH_PARTS) jobs, not one per part (r3 judge finding)."""
-    blocks = read_blocks(spark, path)
-    keys = np.unique(np.asarray(
-        _block_meta(blocks, ("part_key",))["part_key"])).tolist()
+    (``_store_meta``, no Spark job).  Parts are decoded in key-range
+    batches of ``ITER_BATCH_PARTS`` through read units
+    (``_decode_parts``): one Spark job fetches a whole batch, which is
+    then sliced per part locally — ceil(parts / ITER_BATCH_PARTS) jobs,
+    not one per part (r3 judge finding)."""
+    meta = _store_meta(path, _PLAN_COLS)
+    keys = np.unique(np.asarray(meta["part_key"])).tolist()
     for i in range(0, len(keys), ITER_BATCH_PARTS):
         chunk = keys[i:i + ITER_BATCH_PARTS]
-        grp = blocks.where(_part_key_in(chunk))
-        pdf = decode_blocks(grp, columns=columns,
+        pdf = _decode_parts(spark, meta, chunk, columns,
                             keep_part_key=True).toPandas()
-        for k in chunk:
-            sub = pdf[pdf["part_key"] == k].drop(columns=["part_key"])
-            if len(sub):
-                yield sub.reset_index(drop=True)
+        for _, sub in pdf.groupby("part_key", sort=True):
+            yield sub.drop(columns=["part_key"]).reset_index(drop=True)
 
 
 # -------------------------------------------------------------------- verify

@@ -4,7 +4,8 @@ Replaces the reference's *static* dtype-driven dispatch — "encoding = PLAIN
 unless the pandas dtype is categorical, then RLE_DICTIONARY"
 (fastparquet/writer.py:519, 601-631, dispatch table writer.py:411-414) —
 with sampling-based selection per the north rule: cardinality, mean run
-length, byte entropy, and (for ints) delta width, scored into a predicted
+length, (for ints) delta width, and trial encodes of a small sample
+(FSST, line splitting, byte-stream split), scored into a predicted
 encoded size per candidate codec; the smallest predicted size wins.
 
 The sampling style mirrors the reference's own page-sizing heuristic
@@ -35,14 +36,6 @@ class Choice:
     @property
     def codec_name(self) -> str:
         return enc.CODEC_NAMES[self.codec]
-
-
-def _entropy(byte_sample: np.ndarray) -> float:
-    if len(byte_sample) == 0:
-        return 0.0
-    counts = np.bincount(byte_sample, minlength=256)
-    p = counts[counts > 0] / len(byte_sample)
-    return float(-(p * np.log2(p)).sum())
 
 
 def _mean_run_len(v: np.ndarray) -> float:

@@ -1,5 +1,7 @@
 """Metadata utilities: statistics exposure, sortedness detection, custom
 key-value metadata, head/iterator (reference api.py parity)."""
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -74,6 +76,37 @@ def test_head_rows(spark, store):
     assert list(pdf.columns) == ["repo", "lang"]
 
 
+def _group_jobs(sc, group: str) -> list[int]:
+    """The jobs a job group ran, once the status tracker has seen them end
+    (listener events arrive asynchronously)."""
+    st = sc.statusTracker()
+    for _ in range(50):
+        ids = st.getJobIdsForGroup(group)
+        if ids and all(st.getJobInfo(j) is not None and st.getJobInfo(j)
+                       .status in ("SUCCEEDED", "FAILED") for j in ids):
+            return ids
+        time.sleep(0.02)
+    return st.getJobIdsForGroup(group)
+
+
+def test_head_inside_first_part_is_one_job(spark, store):
+    """``head_rows`` reads its parts in read units: a head inside the
+    first part is one Spark job, with no exchange and no grouped UDF."""
+    first = pl.read_lineage(spark, store).orderBy("part_key").first()
+    n = 5
+    assert n <= first["n_rows"]
+    h = pl.head_rows(spark, store, n, columns=["repo", "lang"])
+    plan = h._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "FlatMapGroupsInArrow" not in plan, plan
+    sc = spark.sparkContext
+    sc.setJobGroup("head_one_part", "test")
+    rows = h.collect()
+    sc.setJobGroup("", "")
+    assert len(rows) == n
+    assert len(_group_jobs(sc, "head_one_part")) == 1
+
+
 def test_iter_pages(spark, store):
     total = 0
     n_pages = 0
@@ -100,17 +133,13 @@ def test_iter_pages_batches_jobs(spark, tmp_path, monkeypatch):
     sc = spark.sparkContext
     sc.setJobGroup("iter_pages_batched", "test")
     frames = list(pl.iter_pages(spark, path, columns=["lang"]))
-    jobs = len(sc.statusTracker().getJobIdsForGroup("iter_pages_batched"))
     sc.setJobGroup("", "")
-    # decode_blocks runs a handful of jobs per call (schema inference,
-    # AQE stages, the fetch) — the invariant is that the TOTAL scales
-    # with the ~7 batches, never with the 108 parts (the old shape was
-    # >= 1 decode pipeline per part: ~700 jobs here)
+    jobs = len(_group_jobs(sc, "iter_pages_batched"))
+    # each batch is planned on the driver and read in read units: one
+    # fetch job per batch, never one per part (the old shape was >= 1
+    # decode pipeline per part: ~700 jobs here)
     n_batches = -(-n_parts // 16)
-    # ~7-9 jobs per batch depending on AQE staging; the old shape was
-    # >= that PER PART (~700+ here), so `jobs < n_parts` is the invariant
-    assert jobs <= 12 * n_batches + 2
-    assert jobs < n_parts
+    assert jobs == n_batches
     assert len(frames) == n_parts
     assert sum(len(f) for f in frames) == 3000
 

@@ -287,3 +287,39 @@ def test_registered_store_fs_serves_the_workers_reads(spark, tmp_path):
     finally:
         fs_mod.unregister_fs(store)
     assert pl.decode_blocks(pl.read_blocks(spark, store)).count() == 300
+
+
+def test_maintenance_decodes_read_through_registered_store_fs(spark,
+                                                              tmp_path):
+    """``overwrite_partitions`` and ``remove_repos`` decode the parts they
+    rewrite in read units: the workers open the block files holding those
+    parts through the StoreFS registered for the store, and no other."""
+    store = str(tmp_path / "s")
+    pl.run_encode(_docs(spark, 0, 300).repartition(3), store, columns=COLS,
+                  target_rows=100, resume=False)
+    log_fs = OpenLogFS(str(tmp_path / "opens.log"))
+    fs_mod.register_fs(store, log_fs)
+    try:
+        def worker_opens(op) -> set[str]:
+            seen = len(log_fs.opens())
+            op()
+            return {p for pid, p in log_fs.opens()[seen:]
+                    if pid != os.getpid()}
+
+        files = pl._list_part_files(f"{store}/blocks")
+        repl = _docs(spark, 0, 300).where(F.col("repo") == "3")
+        opened = worker_opens(lambda: pl.overwrite_partitions(
+            repl, store, columns=COLS, target_rows=100))
+        # every file holding an affected part is replaced by the commit
+        assert opened and opened == files - pl._list_part_files(
+            f"{store}/blocks")
+
+        files = pl._list_part_files(f"{store}/blocks")
+        opened = worker_opens(lambda: pl.remove_repos(spark, store, ["4"]))
+        assert opened and opened <= files - pl._list_part_files(
+            f"{store}/blocks")
+    finally:
+        fs_mod.unregister_fs(store)
+    want = _docs(spark, 0, 300).where(F.col("repo") != "4").select(*COLS)
+    decoded = pl.decode_blocks(pl.read_blocks(spark, store))
+    assert pl.verify_roundtrip(want, decoded)["ok"]

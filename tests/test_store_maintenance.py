@@ -1,6 +1,8 @@
 """Store maintenance: merge_stores / remove_parts / remove_repos — parity
 with the reference's merge (fastparquet writer.py:1464-1494) and
 ParquetFile.remove_row_groups (api.py:415-574) on the blockstore."""
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -51,6 +53,27 @@ def test_merge_colliding_parts(spark, tmp_path):
     # lineage part_keys unique after merge
     lin = pl.read_lineage(spark, out)
     assert lin.groupBy("part_key").count().where(F.col("count") > 1).count() == 0
+
+
+def test_merge_refuses_an_out_path_it_merges(spark, tmp_path):
+    """Colliding parts are read by Python tasks through StoreFS, out of
+    Spark's sight, so an ``out_path`` that is one of the merged stores
+    (in any spelling) raises before anything is written to it."""
+    a, b = (str(tmp_path / x) for x in ("a", "b"))
+    pl.run_encode(_docs(spark, 0, 300), a, columns=COLS, target_rows=100,
+                  resume=False)
+    pl.run_encode(_docs(spark, 300, 500), b, columns=COLS, target_rows=100,
+                  resume=False)
+
+    def listing(root):
+        return sorted((d, sorted(fs)) for d, _, fs in os.walk(root))
+
+    before = listing(str(tmp_path))
+    for out in (a, f"{b}/", f"file://{a}"):
+        with pytest.raises(ValueError, match="store it merges"):
+            pl.merge_stores(spark, [a, b], out)
+    assert listing(str(tmp_path)) == before
+    assert pl.decode_blocks(pl.read_blocks(spark, a)).count() == 300
 
 
 def test_merge_over_pointer_committed_store(spark, tmp_path):
