@@ -961,11 +961,10 @@ def q_overwrite_repo(spark, sf_dir):
     base = tempfile.mkdtemp(prefix="pqs_ovw_")
     try:
         src = _doc_source(spark, sf_dir)
-        # 'repo' must be encoded (replacing one repo of a shared bucket
-        # decodes the bucket and retains other repos' rows by label), and
-        # 'path'/'commit' too: the retained rows re-enter the partitioner,
-        # whose skew-split key is xxhash64(path, commit) — MAINT_COLS is
-        # exactly this column set
+        # 'repo' must be encoded: replacing one repo of a shared bucket
+        # decodes the bucket and keeps the other repos' rows by label,
+        # under their own part_key.  The overwrite encodes the store's
+        # own column set, MAINT_COLS
         cols = MAINT_COLS
         _copy_maintenance_store(spark, sf_dir, f"{base}/s")
         repl = (src.where(F.col("source") == "src3")

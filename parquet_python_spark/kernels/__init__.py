@@ -1,3 +1,4 @@
-"""Pure-numpy codec kernels.  No Spark imports here — these run inside
-Arrow-batched ``mapInPandas`` UDFs on executors, and in unit tests without a
-SparkSession."""
+"""Pure-numpy codec kernels.  No Spark imports here — these run inside the
+Arrow UDFs of ``operators/pipeline.py`` on executors (encode:
+``applyInArrow`` / ``mapInArrow``; decode: ``mapInArrow``), and in unit
+tests without a SparkSession."""

@@ -37,6 +37,8 @@ Python anywhere (input_hint).
 """
 from __future__ import annotations
 
+import functools
+import json
 import time
 from typing import NamedTuple
 
@@ -245,13 +247,15 @@ def _page_bloom(arr: pa.Array, dt: int) -> list[int] | None:
 
 def _per_column_compression(compression, cols: list[str]) -> dict[str, str]:
     """Normalize the compression argument to {column: codec_name}.  Accepts
-    one name for all columns, or a per-column dict with ``"*"`` /
-    ``"_default"`` as the fallback key — the reference's per-column
-    compression dict (fastparquet writer.py:785-790, 1157-1187)."""
+    one name for all columns, or a per-column dict keyed by block-metadata
+    column name (``_meta_name``) with ``"*"`` / ``"_default"`` as the
+    fallback key — the reference's per-column compression dict
+    (fastparquet writer.py:785-790, 1157-1187)."""
     if isinstance(compression, dict):
         default = compression.get("*", compression.get("_default",
                                                        "UNCOMPRESSED"))
-        return {c: str(compression.get(c, default)).upper() for c in cols}
+        return {c: str(compression.get(_meta_name(c), default)).upper()
+                for c in cols}
     name = str(compression or "UNCOMPRESSED").upper()
     return {c: name for c in cols}
 
@@ -567,11 +571,14 @@ def _encode_input(df: DataFrame, columns: list[str] | None,
 
 def encode_table(df: DataFrame, columns: list[str] | None = None,
                  target_rows: int = part.DEFAULT_TARGET_ROWS,
-                 page_bytes: int = DEFAULT_PAGE_BYTES,
-                 compression: str = "UNCOMPRESSED",
-                 plan: DataFrame | None = None) -> DataFrame:
+                 compression="UNCOMPRESSED") -> DataFrame:
     """Source DataFrame -> lazy blocks DataFrame (one row per page×column),
     each part encoded whole in one task: the maintenance encode.
+
+    Rows that carry a ``part_key`` keep it; others are planned with
+    ``target_rows``.  Pages are ``DEFAULT_PAGE_BYTES``; ``compression``
+    is one codec name or a per-column dict (``_per_column_compression``):
+    maintenance passes its store's own (``_store_compression``).
 
     The groupBy on ``part_key`` is the single shuffle of this path (a
     hash exchange carrying only the encoded columns, then a grouped Arrow
@@ -583,8 +590,8 @@ def encode_table(df: DataFrame, columns: list[str] | None = None,
     sf0.1 documents frame (one part in 8 shuffle partitions) ran 25-35%
     slower.
     """
-    df, cols = _encode_input(df, columns, target_rows, plan)
-    encode_part = _part_encoder(cols, page_bytes, compression)
+    df, cols = _encode_input(df, columns, target_rows, None)
+    encode_part = _part_encoder(cols, DEFAULT_PAGE_BYTES, compression)
 
     def encode_group(key: tuple, tbl: pa.Table) -> pa.Table:
         return encode_part(key[0].as_py(), tbl)
@@ -932,23 +939,31 @@ def _plan_for_store(df: DataFrame, path: str, target_rows: int) -> DataFrame:
 _GENERATIONS_FILE = "generations.json"
 
 
+def _read_json(path: str, name: str):
+    """The store's JSON record ``name`` (through StoreFS), or None."""
+    fs = fs_mod.get_fs(path)
+    p = f"{path}/{name}"
+    if not fs.exists(p):
+        return None
+    return json.loads(fs.read_bytes(p).decode("utf-8"))
+
+
+def _put_json(path: str, name: str, record, **dumps) -> None:
+    """Write the store's JSON record ``name`` (``json.dumps`` with
+    ``dumps``) in one atomic PUT through StoreFS."""
+    fs_mod.get_fs(path).put_atomic(
+        f"{path}/{name}", json.dumps(record, **dumps).encode("utf-8"))
+
+
 def _store_generations(path: str) -> list[int]:
     """Generations ever appended to the store (see ``_record_generation``)."""
-    import json
-
-    fs = fs_mod.get_fs(path)
-    p = f"{path}/{_GENERATIONS_FILE}"
-    if not fs.exists(p):
-        return []
-    return [int(g) for g in
-            json.loads(fs.read_bytes(p).decode("utf-8"))["generations"]]
+    record = _read_json(path, _GENERATIONS_FILE)
+    return [] if record is None else [int(g) for g in record["generations"]]
 
 
 def _put_generations(path: str, gens) -> None:
-    import json
-
-    fs_mod.get_fs(path).put_atomic(f"{path}/{_GENERATIONS_FILE}", json.dumps(
-        {"generations": sorted({int(g) for g in gens})}).encode("utf-8"))
+    _put_json(path, _GENERATIONS_FILE,
+              {"generations": sorted({int(g) for g in gens})})
 
 
 def _record_generation(path: str, generation: int) -> bool:
@@ -965,24 +980,6 @@ def _record_generation(path: str, generation: int) -> bool:
         return False
     _put_generations(path, [*gens, generation])
     return True
-
-
-def _with_generation_keys(keys: DataFrame, path: str) -> list[int]:
-    """The distinct part_keys of ``keys`` ∪ their generation-composed
-    twins, collected — the full key set a repo's rows can live under.
-    O(parts × generations) KEY rows only (metadata scale); a twin the
-    store does not hold has no block to decode or replace."""
-    base = keys.select("part_key").distinct()
-    gens = _store_generations(path)
-    if gens:
-        # int32 column: must hash identically to run_encode's
-        # F.lit(int(gen)), which Catalyst types as IntegerType (xxhash64
-        # is type-sensitive)
-        gen_df = keys.sparkSession.createDataFrame(
-            [(int(g),) for g in gens], "gen int")
-        base = base.unionByName(base.crossJoin(F.broadcast(gen_df)).select(
-            F.xxhash64("part_key", "gen").alias("part_key")))
-    return [r[0] for r in base.collect()]
 
 
 def run_encode(df: DataFrame, path: str,
@@ -1053,48 +1050,17 @@ def run_encode(df: DataFrame, path: str,
 
 def overwrite_partitions(df: DataFrame, path: str,
                          columns: list[str] | None = None,
-                         target_rows: int = part.DEFAULT_TARGET_ROWS,
-                         page_bytes: int = DEFAULT_PAGE_BYTES,
-                         compression: str = "UNCOMPRESSED") -> dict:
+                         target_rows: int = part.DEFAULT_TARGET_ROWS) -> dict:
     """Replace every repo present in ``df`` with the given rows — the
     reference's partition-overwrite semantics (fastparquet ``overwrite`` /
     ``remove_row_groups``, writer.py:1497-1601, api.py:415-574) on the
-    blockstore.
-
-    Tail repos are bin-packed into shared buckets, so replacing one repo
-    means re-encoding its *bucket*: rows of other repos in affected buckets
-    are decoded from the store, unioned with the replacement rows, and
-    re-encoded under the SAME persisted plan (part_keys never move).
-    They are read in read units (``_decode_parts``) planned from the
-    metadata read that is also the commit's part→file map.
-    """
-    spark = df.sparkSession
-    meta = _store_meta(path, _PLAN_COLS)
+    blockstore, through ``remove_repos``' rewrite (``_replace_repos``):
+    every split and generation twin of each repo goes, and ``df``'s rows
+    come in under the SAME persisted plan (part_keys never move; repos
+    new to the store extend it)."""
     plan = _plan_for_store(df, path, target_rows)
-    repos = df.select("repo").distinct()
-    assigned_new = part.assign_part_keys(df, plan)
-    # affected = the repos' base buckets AND their generation-composed
-    # twins: rows of a replaced repo may have arrived via later
-    # incremental appends (part_key = xxhash64(base, gen))
-    aff_keys = _with_generation_keys(assigned_new, path)
-    # rows of OTHER repos living in the affected buckets survive
-    retained_rows = (_decode_parts(spark, meta, aff_keys)
-                     .join(repos, "repo", "left_anti"))
-    missing = [c for c in ("repo", "path", "commit")
-               if c not in retained_rows.columns]
-    if missing:
-        # fail at plan time with the real cause — otherwise this surfaces
-        # as an unresolved-column error deep inside the partitioner
-        raise ValueError(
-            f"overwrite_partitions needs columns {missing} encoded in the "
-            "store: retained rows of shared buckets re-enter the "
-            "partitioner (repo label + xxhash64(path, commit) skew split)")
-    union = retained_rows.unionByName(df.select(*retained_rows.columns))
-    cols = columns or [c for c in union.columns if c not in _HELPER_COLS]
-    new_blocks = encode_table(part.assign_part_keys(union, plan), cols,
-                              target_rows, page_bytes, compression)
-    _commit_blocks_delta(spark, path, meta, aff_keys, new_blocks)
-    return _parts_rows(spark, path)
+    return _replace_repos(df.sparkSession, path, plan,
+                          df.select("repo").distinct(), df, columns)
 
 
 def _commit_blocks_delta(spark: SparkSession, path: str, meta: pa.Table,
@@ -1192,48 +1158,96 @@ def remove_parts(spark: SparkSession, path: str,
     return _parts_rows(spark, path)
 
 
-def remove_repos(spark: SparkSession, path: str, repos: list[str],
-                 page_bytes: int = DEFAULT_PAGE_BYTES,
-                 compression: str = "UNCOMPRESSED") -> dict:
-    """Drop every row of the given repos.  Mono-repo parts are dropped
-    without decoding; packed buckets shared with other repos are decoded,
-    filtered and re-encoded under their original part_key (requires the
-    ``repo`` column to have been encoded in those buckets), read in read
-    units (``_decode_parts``) planned from the commit's metadata read."""
+def remove_repos(spark: SparkSession, path: str, repos: list[str]) -> dict:
+    """Drop every row of the given repos: ``_replace_repos`` with no new
+    rows."""
     plan = load_plan(spark, path)
     if plan is None:
         raise ValueError(f"store {path} has no persisted plan")
-    meta = _store_meta(path, (*_PLAN_COLS, "repo"))
-    repos_df = spark.createDataFrame([(r,) for r in repos], "repo string")
-    aff_keys = _with_generation_keys(part.plan_part_keys(plan).join(
-        F.broadcast(repos_df), "repo", "left_semi"), path)
+    return _replace_repos(spark, path, plan, spark.createDataFrame(
+        [(r,) for r in sorted(set(repos))], "repo string"))
+
+
+def _store_compression(*metas: pa.Table) -> dict[str, str]:
+    """{column: compression} of the block metadata ``metas`` (``column``,
+    ``compression``): per column, the compression most of its blocks
+    carry (the first name on a tie).  As an ``encode_table``
+    ``compression`` argument, a column they lack gets ``UNCOMPRESSED``."""
+    n = (pa.concat_tables([m.select(["column", "compression"])
+                           for m in metas])
+         .group_by(["column", "compression"], use_threads=False)
+         .aggregate([([], "count_all")])
+         .sort_by([("count_all", "ascending"), ("compression", "descending")]))
+    # in that order a column's most common compression comes last and wins
+    return dict(zip(n["column"].to_pylist(), n["compression"].to_pylist()))
+
+
+def _replace_repos(spark: SparkSession, path: str, plan: DataFrame,
+                   repos: DataFrame, rows: DataFrame | None = None,
+                   columns: list[str] | None = None) -> dict:
+    """Replace every stored row of the repos in ``repos`` (distinct names
+    in a ``repo`` column) with ``rows`` (None: with nothing), encoding
+    ``columns`` (None: every column of the rows) — the one rewrite under
+    ``overwrite_partitions`` and ``remove_repos``.
+
+    The affected parts are all that ``plan`` gives the repos
+    (``plan_part_keys``: every split of a salted repo, the bucket of a
+    packed one) and their generation twins (``xxhash64(part_key, gen)``
+    per recorded generation), collected by one query.  A part whose every
+    block is labeled with a replaced repo drops without a decode; the
+    others (packed buckets shared with other repos) are decoded in read
+    units (``_decode_parts``) and their other repos' rows keep their
+    part_key.  Those rows and ``rows`` (keyed by ``plan``) are encoded
+    once (``encode_table``, each column compressed as the store holds it:
+    ``_store_compression``) and committed once (``_commit_blocks_delta``)
+    in place of every affected part."""
+    meta = _store_meta(path, (*_PLAN_COLS, "repo", "compression"))
+    keys = part.plan_part_keys(plan)
+    gens = _store_generations(path)
+    if gens:
+        # int32 column: must hash identically to run_encode's
+        # F.lit(int(gen)), which Catalyst types as IntegerType (xxhash64
+        # is type-sensitive)
+        gen_df = spark.createDataFrame([(int(g),) for g in gens], "gen int")
+        keys = keys.unionByName(keys.crossJoin(F.broadcast(gen_df)).select(
+            "repo", F.xxhash64("part_key", "gen").alias("part_key")))
+    pairs = repos.join(F.broadcast(keys), "repo").collect()
+    replaced = sorted({r for r, _ in pairs})
+    aff_keys = sorted({k for _, k in pairs})
     # a part may drop without decode only when EVERY block is labeled with
-    # a removed repo: local-strategy sub-blocks carry per-source-partition
+    # a replaced repo: local-strategy sub-blocks carry per-source-partition
     # repo labels, so a shared bucket can hold repo-'2' AND repo-'3'
-    # sub-blocks — classifying on "has any removed label" would silently
+    # sub-blocks — classifying on "has any replaced label" would silently
     # delete the other repos' rows (r2 review finding).  A NULL label
     # (a mixed sub-block) keeps its part.
     aff = meta.filter(pa.array(np.isin(
         np.asarray(meta["part_key"], dtype=np.int64), aff_keys)))
     keep_label = pa.compute.invert(pa.compute.is_in(
-        aff["repo"], value_set=pa.array(repos, pa.string())))
+        aff["repo"], value_set=pa.array(replaced, pa.string())))
     shared = sorted(set(aff.filter(keep_label)["part_key"].to_pylist()))
-    new_blocks = None
+    parts = [] if rows is None else [part.assign_part_keys(rows, plan)]
     if shared:
         decoded = _decode_parts(spark, meta, shared, keep_part_key=True)
         if "repo" not in decoded.columns:
             raise ValueError(
-                "cannot remove repos from shared buckets: the 'repo' "
+                "cannot replace repos in shared buckets: the 'repo' "
                 "column was not encoded — re-encode the store from source")
-        retained = decoded.join(F.broadcast(repos_df), "repo", "left_anti")
-        cols = [c for c in retained.columns if c not in _HELPER_COLS]
-        new_blocks = encode_table(retained, cols, page_bytes=page_bytes,
-                                  compression=compression)
+        # only packed buckets are shared, and their rows are split 0
+        parts.insert(0, decoded.join(F.broadcast(spark.createDataFrame(
+            [(r,) for r in replaced], "repo string")), "repo", "left_anti")
+            .withColumn("split_id", F.lit(0)))
+    new_blocks = None
+    if parts:
+        union = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+        cols = columns or [c for c in union.columns if c not in _HELPER_COLS]
+        new_blocks = encode_table(union, cols,
+                                  compression=_store_compression(meta))
     _commit_blocks_delta(spark, path, meta, aff_keys, new_blocks)
     return _parts_rows(spark, path)
 
 
-def _part_recoder(page_bytes: int, compression, sort_by: list[str] | None):
+def _part_recoder(sort_by: list[str] | None):
     """``recode(part_key, tbl)``: one part's block rows -> its new block
     table.  Decode and re-encode run back-to-back in one Python task, so
     raw bytes never cross a shuffle or the JVM↔Python boundary.  The
@@ -1241,12 +1255,10 @@ def _part_recoder(page_bytes: int, compression, sort_by: list[str] | None):
     bytes: decoded rows out of one python UDF, through a raw-row hash
     exchange, into another (measured 25 s vs 6 s for the same bench
     compaction).  The re-encode is the encoder's own part encoder
-    (``_encode_part``); only its inputs differ: pages are sized from the
-    exact decoded bytes per row, not a sample.
-
-    ``compression=None`` preserves each column's incoming block codec;
-    a string / per-column dict overrides it (same forms as
-    ``encode_table``).
+    (``_encode_part``); only its inputs differ: pages of
+    ``DEFAULT_PAGE_BYTES`` are sized from the exact decoded bytes per
+    row, not a sample, and each column keeps its incoming block
+    compression (the store's, as every maintenance re-encode does).
 
     ``sort_by``: re-order each part's rows by these columns before
     re-paginating (all columns permuted consistently).  Within-part
@@ -1277,8 +1289,6 @@ def _part_recoder(page_bytes: int, compression, sort_by: list[str] | None):
             col_order.setdefault(c, ci)
             col_comp.setdefault(c, cp)
         ordered = sorted(col_order, key=lambda c: (col_order[c], c))
-        if compression is not None:
-            col_comp = _per_column_compression(compression, ordered)
         decoded = _decode_columns(tbl)
         if sort_by:
             missing = [c for c in sort_by if c not in decoded]
@@ -1294,7 +1304,7 @@ def _part_recoder(page_bytes: int, compression, sort_by: list[str] | None):
         return _encode_part(
             ((c, decoded[c], max(decoded[c].nbytes / max(len(decoded[c]), 1),
                                  1.0), col_comp[c]) for c in ordered),
-            page_bytes, {},
+            DEFAULT_PAGE_BYTES, {},
             lambda ci, page_id, lo, hi: (rh_total if ci == 0 and page_id == 0
                                          else 0),
             part_key=part_key, repo=repo, split_id=split_id)
@@ -1303,7 +1313,6 @@ def _part_recoder(page_bytes: int, compression, sort_by: list[str] | None):
 
 
 def _recode_parts(spark: SparkSession, meta: pa.Table, keys,
-                  page_bytes: int, compression,
                   sort_by: list[str] | None = None) -> DataFrame:
     """The new blocks of the parts ``keys`` (``_part_recoder``), read
     from the block files that ``meta`` (``_store_meta``, with
@@ -1313,14 +1322,12 @@ def _recode_parts(spark: SparkSession, meta: pa.Table, keys,
         meta, np.isin(np.asarray(meta["part_key"], dtype=np.int64), keys),
         spark.sparkContext.defaultParallelism)
     return _unit_frame(spark, units, _RECODE_COLS,
-                       _part_recoder(page_bytes, compression, sort_by),
+                       _part_recoder(sort_by),
                        BLOCKS_SCHEMA)
 
 
 def compact_store(spark: SparkSession, path: str,
-                  max_pages_per_column: int = 8,
-                  page_bytes: int = DEFAULT_PAGE_BYTES,
-                  compression=None) -> dict:
+                  max_pages_per_column: int = 8) -> dict:
     """Re-encode fragmented parts whole — the LSM/Iceberg compaction step
     that pairs with ``run_encode``'s ingest: ``encode_table_local`` lands
     sub-blocks fast (no raw shuffle), compaction later restores the
@@ -1338,8 +1345,9 @@ def compact_store(spark: SparkSession, path: str,
     Fragmented parts are recoded under the same part_key
     (``_recode_parts``: decode→re-encode inside one Python task that
     reads the part's block files itself, so no block scan and no
-    exchange) and swapped in.  Untouched parts are left on disk.
-    ``compression=None`` preserves each column's incoming block codec.
+    exchange) and swapped in, with ``DEFAULT_PAGE_BYTES`` pages and each
+    column's incoming block compression.  Untouched parts are left on
+    disk.
 
     The recode runs one task per read unit (``_plan_units``): the
     fragmented parts in store order, cut by encoded bytes into
@@ -1360,15 +1368,13 @@ def compact_store(spark: SparkSession, path: str,
         return {"parts_compacted": 0, "enc_bytes_before": 0,
                 "enc_bytes_after": 0}
     before = int(np.asarray(lin["enc_bytes"], dtype=np.int64)[frag].sum())
-    new_blocks = _recode_parts(spark, meta, keys, page_bytes, compression)
+    new_blocks = _recode_parts(spark, meta, keys)
     after = _commit_blocks_delta(spark, path, meta, keys, new_blocks)
     return {"parts_compacted": len(keys), "enc_bytes_before": before,
             "enc_bytes_after": after}
 
 
-def sort_store(spark: SparkSession, path: str, by: list[str],
-               page_bytes: int = DEFAULT_PAGE_BYTES,
-               compression=None) -> dict:
+def sort_store(spark: SparkSession, path: str, by: list[str]) -> dict:
     """Cluster each part's rows by ``by`` (within-part sort + repagination)
     so per-page [min, max] stats on those columns become narrow and
     disjoint — range predicates then prune PAGES, not just parts, via the
@@ -1380,16 +1386,15 @@ def sort_store(spark: SparkSession, path: str, by: list[str],
     (fastparquet writer.py:1560-1579); this generalizes that to any
     column set as an off-ingest maintenance pass, same recode from the
     block files + file-granular commit as ``compact_store`` (and the same
-    read units, ``_plan_units``).  Also restores
-    whole-part compression as a side effect (sorted runs dictionary/RLE
-    better).
+    read units, ``_plan_units``, ``DEFAULT_PAGE_BYTES`` pages and incoming
+    block compression).  Also restores whole-part compression as a side
+    effect (sorted runs dictionary/RLE better).
     """
     meta = _store_meta(path, ("part_key", "encoded_size"))
     keys = np.unique(np.asarray(meta["part_key"], dtype=np.int64)).tolist()
     if not keys:
         return {"parts_sorted": 0}
-    new_blocks = _recode_parts(spark, meta, keys, page_bytes, compression,
-                               sort_by=by)
+    new_blocks = _recode_parts(spark, meta, keys, sort_by=by)
     _commit_blocks_delta(spark, path, meta, keys, new_blocks)
     return {"parts_sorted": len(keys)}
 
@@ -1401,8 +1406,10 @@ def merge_stores(spark: SparkSession, paths: list[str], out_path: str) -> dict:
     raw blocks (no decode); a part_key present in more than one store is
     decoded PER STORE (page ids overlap across stores, so their blocks
     must never be concatenated directly), the rows unioned, and re-encoded
-    under the same key.  Row multisets are preserved — deduplication is a
-    separate operator, as in the reference.
+    under the same key, with ``DEFAULT_PAGE_BYTES`` pages and each
+    column's compression as the merged stores hold it
+    (``_store_compression``).  Row multisets are preserved —
+    deduplication is a separate operator, as in the reference.
 
     Collisions are found from each store's block metadata on the driver
     (``_store_meta``, no Spark job) and decoded in read units
@@ -1415,7 +1422,7 @@ def merge_stores(spark: SparkSession, paths: list[str], out_path: str) -> dict:
             os.path.abspath(fs_mod._strip_uri(p)) for p in paths}:
         raise ValueError(
             f"merge_stores cannot write into a store it merges: {out_path}")
-    metas = [_store_meta(p, _PLAN_COLS) for p in paths]
+    metas = [_store_meta(p, (*_PLAN_COLS, "compression")) for p in paths]
     store_keys = [np.unique(np.asarray(m["part_key"], dtype=np.int64))
                   for m in metas]
     all_keys, n_stores = np.unique(
@@ -1434,8 +1441,9 @@ def merge_stores(spark: SparkSession, paths: list[str], out_path: str) -> dict:
             rows = r if rows is None else rows.unionByName(r)
     if rows is not None:
         cols = [c for c in rows.columns if c not in _HELPER_COLS]
-        merged = merged.unionByName(encode_table(rows, cols),
-                                    allowMissingColumns=True)
+        merged = merged.unionByName(
+            encode_table(rows, cols, compression=_store_compression(*metas)),
+            allowMissingColumns=True)
     # the generations appended to any source come along: maintenance
     # enumerates their composed part_keys from this registry, and
     # run_encode skips its resume scan for a generation missing from it.
@@ -2243,28 +2251,18 @@ def update_store_metadata(path: str, updates: dict) -> dict:
     ``update_file_custom_metadata`` (fastparquet/writer.py:1613-1666):
     None values delete keys; returns the merged mapping.  Written with
     one atomic PUT through the store's ``StoreFS``."""
-    import json
-
     meta = read_store_metadata(path)
     for k, v in updates.items():
         if v is None:
             meta.pop(k, None)
         else:
             meta[k] = v
-    fs_mod.get_fs(path).put_atomic(
-        f"{path}/{_CUSTOM_METADATA}",
-        json.dumps(meta, indent=2, sort_keys=True).encode("utf-8"))
+    _put_json(path, _CUSTOM_METADATA, meta, indent=2, sort_keys=True)
     return meta
 
 
 def read_store_metadata(path: str) -> dict:
-    import json
-
-    fs = fs_mod.get_fs(path)
-    meta_path = f"{path}/{_CUSTOM_METADATA}"
-    if not fs.exists(meta_path):
-        return {}
-    return json.loads(fs.read_bytes(meta_path).decode("utf-8"))
+    return _read_json(path, _CUSTOM_METADATA) or {}
 
 
 def head_rows(spark: SparkSession, path: str, n: int,

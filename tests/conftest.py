@@ -1,3 +1,7 @@
+import contextlib
+import time
+import uuid
+
 import numpy as np
 import pytest
 
@@ -25,3 +29,34 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` fills ``jobs`` with the ids of
+    the Spark jobs the block ran, counted in a job group of its own once
+    the status tracker has seen every job of the group end (listener
+    events arrive asynchronously, so an exact count read at once could be
+    short; an empty group waits 1 s)."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    @contextlib.contextmanager
+    def counted():
+        group = f"counted-{uuid.uuid4().hex[:8]}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, "counted")
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        for _ in range(50):
+            ids = st.getJobIdsForGroup(group)
+            if ids and all(st.getJobInfo(j) is not None and st.getJobInfo(j)
+                           .status in ("SUCCEEDED", "FAILED") for j in ids):
+                break
+            time.sleep(0.02)
+        jobs.extend(st.getJobIdsForGroup(group))
+
+    return counted

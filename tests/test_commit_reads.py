@@ -8,9 +8,6 @@ O(store) resume scan, while a replay keeps it.  The reference builds
 ``_metadata`` from the footers its writer returns instead of re-reading
 them (fastparquet writer.py:732-758).
 """
-import time
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -31,28 +28,6 @@ def _docs(spark, lo, hi):
 COLS = ["doc_id", "text", "lang"]
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` ran, counted in its own job group once the status
-    tracker has seen them end (listener events arrive asynchronously; an
-    empty group waits 1 s)."""
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    group = f"commit-reads-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "commit reads")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    for _ in range(50):
-        ids = st.getJobIdsForGroup(group)
-        if ids and all(st.getJobInfo(j) is not None and st.getJobInfo(j)
-                       .status in ("SUCCEEDED", "FAILED") for j in ids):
-            break
-        time.sleep(0.02)
-    return len(st.getJobIdsForGroup(group))
-
-
 @pytest.fixture(scope="module")
 def store(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("commit_reads") / "s")
@@ -63,9 +38,11 @@ def store(spark, tmp_path_factory):
     return path
 
 
-def test_lineage_and_plan_frames_run_no_job(spark, store):
-    assert _jobs(spark, lambda: pl.read_lineage(spark, store)) == 0
-    assert _jobs(spark, lambda: pl.load_plan(spark, store)) == 0
+def test_lineage_and_plan_frames_run_no_job(spark, spark_jobs, store):
+    with spark_jobs() as jobs:
+        pl.read_lineage(spark, store)
+        pl.load_plan(spark, store)
+    assert len(jobs) == 0
 
 
 class _NoRead:
@@ -85,14 +62,14 @@ def test_missing_store_is_detected_without_a_read(tmp_path):
     assert pl.completed_part_keys(_NoRead(), missing) is None
 
 
-def test_completed_part_keys_frame_runs_no_job(spark, store):
+def test_completed_part_keys_frame_runs_no_job(spark, spark_jobs, store):
     """The resume key set is read on the driver from the block files'
     ``part_key`` column chunks: building the frame runs no Spark job, and
     it holds each stored part_key once."""
-    got = {}
-    assert _jobs(spark, lambda: got.update(
-        keys=pl.completed_part_keys(spark, store))) == 0
-    keys = [r[0] for r in got["keys"].collect()]
+    with spark_jobs() as jobs:
+        frame = pl.completed_part_keys(spark, store)
+    assert len(jobs) == 0
+    keys = [r[0] for r in frame.collect()]
     assert len(keys) == len(set(keys))
     assert set(keys) == {r[0] for r in pl.read_blocks(spark, store)
                          .select("part_key").distinct().collect()}
@@ -106,21 +83,20 @@ def test_corrupt_plan_file_still_raises(spark, tmp_path):
         pl.load_plan(spark, str(tmp_path / "s")).collect()
 
 
-def test_store_summary_is_one_aggregation(spark, store):
+def test_store_summary_is_one_aggregation(spark, spark_jobs, store):
     """The totals are summed on the driver over the block files' metadata
     columns: no Spark job."""
-    assert _jobs(spark, lambda: pl.store_summary(spark, store)) == 0
+    with spark_jobs() as jobs:
+        pl.store_summary(spark, store)
+    assert len(jobs) == 0
 
 
-def test_noop_compaction_runs_no_job(spark, store):
+def test_noop_compaction_runs_no_job(spark, spark_jobs, store):
     """Finding nothing to compact reads only the block files' metadata
     columns, on the driver."""
-    res = {}
-
-    def compact():
-        res.update(pl.compact_store(spark, store, max_pages_per_column=10**6))
-
-    assert _jobs(spark, compact) == 0
+    with spark_jobs() as jobs:
+        res = pl.compact_store(spark, store, max_pages_per_column=10**6)
+    assert len(jobs) == 0
     assert res["parts_compacted"] == 0
 
 

@@ -1,7 +1,5 @@
 """Metadata utilities: statistics exposure, sortedness detection, custom
 key-value metadata, head/iterator (reference api.py parity)."""
-import time
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -76,20 +74,7 @@ def test_head_rows(spark, store):
     assert list(pdf.columns) == ["repo", "lang"]
 
 
-def _group_jobs(sc, group: str) -> list[int]:
-    """The jobs a job group ran, once the status tracker has seen them end
-    (listener events arrive asynchronously)."""
-    st = sc.statusTracker()
-    for _ in range(50):
-        ids = st.getJobIdsForGroup(group)
-        if ids and all(st.getJobInfo(j) is not None and st.getJobInfo(j)
-                       .status in ("SUCCEEDED", "FAILED") for j in ids):
-            return ids
-        time.sleep(0.02)
-    return st.getJobIdsForGroup(group)
-
-
-def test_head_inside_first_part_is_one_job(spark, store):
+def test_head_inside_first_part_is_one_job(spark, spark_jobs, store):
     """``head_rows`` reads its parts in read units: a head inside the
     first part is one Spark job, with no exchange and no grouped UDF."""
     first = pl.read_lineage(spark, store).orderBy("part_key").first()
@@ -99,12 +84,10 @@ def test_head_inside_first_part_is_one_job(spark, store):
     plan = h._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert "FlatMapGroupsInArrow" not in plan, plan
-    sc = spark.sparkContext
-    sc.setJobGroup("head_one_part", "test")
-    rows = h.collect()
-    sc.setJobGroup("", "")
+    with spark_jobs() as jobs:
+        rows = h.collect()
     assert len(rows) == n
-    assert len(_group_jobs(sc, "head_one_part")) == 1
+    assert len(jobs) == 1
 
 
 def test_iter_pages(spark, store):
@@ -118,7 +101,7 @@ def test_iter_pages(spark, store):
     assert total > 0 and n_pages == 3
 
 
-def test_iter_pages_batches_jobs(spark, tmp_path, monkeypatch):
+def test_iter_pages_batches_jobs(spark, spark_jobs, tmp_path, monkeypatch):
     """r3 judge: one Spark job per part is 10^6 scheduler round-trips at
     scale — iter_pages must run ceil(parts / ITER_BATCH_PARTS) decode jobs.
     Job count observed via a job group on the status tracker; per-part
@@ -130,16 +113,13 @@ def test_iter_pages_batches_jobs(spark, tmp_path, monkeypatch):
     assert n_parts >= 40  # enough parts for batching to matter
     # the batch loop runs on the driver, so the module constant applies
     monkeypatch.setattr(pl, "ITER_BATCH_PARTS", 16)
-    sc = spark.sparkContext
-    sc.setJobGroup("iter_pages_batched", "test")
-    frames = list(pl.iter_pages(spark, path, columns=["lang"]))
-    sc.setJobGroup("", "")
-    jobs = len(_group_jobs(sc, "iter_pages_batched"))
+    with spark_jobs() as jobs:
+        frames = list(pl.iter_pages(spark, path, columns=["lang"]))
     # each batch is planned on the driver and read in read units: one
     # fetch job per batch, never one per part (the old shape was >= 1
     # decode pipeline per part: ~700 jobs here)
     n_batches = -(-n_parts // 16)
-    assert jobs == n_batches
+    assert len(jobs) == n_batches
     assert len(frames) == n_parts
     assert sum(len(f) for f in frames) == 3000
 

@@ -12,7 +12,6 @@ the unpruned decode plus the filter.  A copy of the store without the
 """
 import datetime
 import math
-import time
 
 import numpy as np
 import pyarrow as pa
@@ -272,37 +271,20 @@ def test_pruned_decode_equals_filtered_full_decode(spark, stores, which):
     assert _rows(got) == _rows(filt.apply_filters(full, f).select("k"))
 
 
-def _group_jobs(st, group: str) -> list[int]:
-    """The jobs a job group ran, once the status tracker has seen them end
-    (listener events arrive asynchronously; an empty group waits 1 s)."""
-    for _ in range(50):
-        ids = st.getJobIdsForGroup(group)
-        if ids and all(st.getJobInfo(j) is not None and st.getJobInfo(j)
-                       .status in ("SUCCEEDED", "FAILED") for j in ids):
-            return ids
-        time.sleep(0.02)
-    return st.getJobIdsForGroup(group)
-
-
-def test_absent_key_decode_runs_only_the_metadata_job(spark, stores):
+def test_absent_key_decode_runs_only_the_metadata_job(spark, spark_jobs,
+                                                     stores):
     """A lookup that no part survives on a ``read_blocks`` frame plans on
     the driver from the block files' metadata column chunks (no job) and
     collects an empty local relation: no decode job, no Python task."""
     blocks = pl.read_blocks(spark, stores[0])
     f = [("k", "==", 10**12)]
     assert _kept(blocks, f) == set()
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    sc.setJobGroup("absent-key-plan", "plan")
-    try:
+    with spark_jobs() as plan_jobs:
         df = pl.decode_blocks(pl.read_blocks(spark, stores[0]), filters=f)
-        sc.setJobGroup("absent-key-collect", "collect")
+    with spark_jobs() as collect_jobs:
         assert df.collect() == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert _group_jobs(st, "absent-key-plan") == []
-    assert _group_jobs(st, "absent-key-collect") == []
+    assert plan_jobs == []
+    assert collect_jobs == []
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "Python" not in plan, plan
     assert "Arrow" not in plan, plan
@@ -384,27 +366,17 @@ def test_plan_from_files_of_mixed_block_schemas(spark, mixed_store):
     assert sum(r["e"] is None for r in got) == 3 * PAGES * PAGE_ROWS
 
 
-def _plan_jobs(spark, fn) -> list[int]:
-    sc = spark.sparkContext
-    group = f"plan-{time.monotonic_ns()}"
-    sc.setJobGroup(group, "plan")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return _group_jobs(sc.statusTracker(), group)
-
-
-def test_full_decode_and_key_listing_of_read_blocks_run_no_job(spark, stores):
+def test_full_decode_and_key_listing_of_read_blocks_run_no_job(
+        spark, spark_jobs, stores):
     """An unfiltered full decode of a ``read_blocks`` frame plans from the
     block files, and so does listing its part keys (``iter_pages``)."""
-    assert _plan_jobs(spark, lambda: pl.decode_blocks(
-        pl.read_blocks(spark, stores[0]))) == []
-    keys = []
-    assert _plan_jobs(spark, lambda: keys.extend(pl._block_meta(
-        pl.read_blocks(spark, stores[0]), ("part_key",))["part_key"]
-        .to_pylist())) == []
+    with spark_jobs() as jobs:
+        pl.decode_blocks(pl.read_blocks(spark, stores[0]))
+    assert jobs == []
+    with spark_jobs() as jobs:
+        keys = pl._block_meta(pl.read_blocks(spark, stores[0]),
+                              ("part_key",))["part_key"].to_pylist()
+    assert jobs == []
     assert set(keys) == set(range(N_PARTS))
 
 
@@ -543,15 +515,15 @@ def test_read_units_are_capped_and_stream_their_parts(spark, spread_store,
         fs_mod.unregister_fs(path)
 
 
-def test_one_part_lookup_is_one_task(spark, stores):
+def test_one_part_lookup_is_one_task(spark, spark_jobs, stores):
     """A lookup that keeps one part of a ``read_blocks`` frame runs one
     job of one Python task, with no exchange in its plan."""
     f = [("k", "<", 30)]
     assert len(_kept(pl.read_blocks(spark, stores[0]), f)) == 1
     df = pl.decode_blocks(pl.read_blocks(spark, stores[0]), filters=f)
     assert "Exchange" not in _executed(df)
-    rows = []
-    jobs = _plan_jobs(spark, lambda: rows.extend(df.collect()))
+    with spark_jobs() as jobs:
+        rows = df.collect()
     assert rows and all(r["k"] < 30 for r in rows)
     st = spark.sparkContext.statusTracker()
     assert len(jobs) == 1

@@ -2,6 +2,7 @@
 with the reference's merge (fastparquet writer.py:1464-1494) and
 ParquetFile.remove_row_groups (api.py:415-574) on the blockstore."""
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -138,6 +139,81 @@ def test_remove_repos_shared_bucket(spark, tmp_path):
     dec = pl.decode_blocks(pl.read_blocks(spark, store))
     assert pl.verify_roundtrip(want.select(*cols), dec)["ok"]
     assert dec.where(F.col("repo") == "2").count() == 0
+
+
+def test_overwrite_replaces_every_split_of_a_salted_repo(spark, tmp_path):
+    """An overwrite replaces every part a repo's rows live in: a salted
+    repo overwritten with one row decodes exactly that row, the splits
+    the row does not hash to included, and every other repo's rows are
+    unchanged."""
+    store = str(tmp_path / "salted")
+    src = cg.code_table(spark, 6000, n_repos=20).cache()
+    pl.run_encode(src, store, target_rows=500, resume=False)
+    top = pl.load_plan(spark, store).orderBy(F.desc("n_splits")).first()
+    assert top["n_splits"] > 1
+    one = src.where(F.col("repo") == top["repo"]).orderBy("path").limit(1)
+    pl.overwrite_partitions(one, store, target_rows=500)
+    dec = pl.decode_blocks(pl.read_blocks(spark, store))
+    assert dec.where(F.col("repo") == top["repo"]).count() == 1
+    want = src.where(F.col("repo") != top["repo"]).unionByName(one)
+    assert pl.verify_roundtrip(want, dec)["ok"]
+    src.unpersist()
+
+
+def test_overwrite_of_a_store_without_path_and_commit(spark, tmp_path):
+    """Rows kept from a shared bucket keep their part_key, so an overwrite
+    needs only ``repo`` encoded, not the ``path`` and ``commit`` that
+    salt new rows."""
+    store = str(tmp_path / "nopath")
+    cols = ["repo"] + COLS
+    df = _docs(spark, 0, 500)  # one packed bucket holds all five repos
+    pl.run_encode(df, store, columns=cols, target_rows=1000, resume=False)
+    repl = df.where(F.col("repo") == "2").withColumn("lang", F.lit("xx"))
+    pl.overwrite_partitions(repl, store, columns=cols, target_rows=1000)
+    want = df.where(F.col("repo") != "2").unionByName(repl).select(*cols)
+    dec = pl.decode_blocks(pl.read_blocks(spark, store))
+    assert pl.verify_roundtrip(want, dec)["ok"]
+
+
+GZIP_COLS = ["repo", "path", "commit"] + COLS
+
+
+@pytest.fixture(scope="module")
+def gzip_store(spark, tmp_path_factory):
+    """A GZIP store whose one packed bucket holds all five repos."""
+    path = str(tmp_path_factory.mktemp("gzip") / "s")
+    pl.run_encode(_docs(spark, 0, 500), path, columns=GZIP_COLS,
+                  target_rows=1000, resume=False, compression="GZIP")
+    return path
+
+
+@pytest.mark.parametrize("op", ["compact", "sort", "remove", "overwrite",
+                                "merge"])
+def test_maintenance_keeps_the_store_compression(spark, gzip_store, tmp_path,
+                                                 op):
+    """Every maintenance re-encode compresses each column as the store
+    does: after it, every block of a GZIP store is still GZIP."""
+    store = str(tmp_path / "s")
+    shutil.copytree(gzip_store, store)
+    before = pl._list_part_files(f"{store}/blocks")
+    if op == "compact":
+        pl.compact_store(spark, store, max_pages_per_column=0)
+    elif op == "sort":
+        pl.sort_store(spark, store, ["doc_id"])
+    elif op == "remove":
+        pl.remove_repos(spark, store, ["2"])
+    elif op == "overwrite":
+        pl.overwrite_partitions(
+            _docs(spark, 0, 500).where(F.col("repo") == "2").limit(3),
+            store, columns=GZIP_COLS, target_rows=1000)
+    else:  # every part collides with its copy: all are re-encoded
+        shutil.copytree(gzip_store, str(tmp_path / "t"))
+        store = str(tmp_path / "m")
+        pl.merge_stores(spark, [str(tmp_path / "s"), str(tmp_path / "t")],
+                        store)
+    assert pl._list_part_files(f"{store}/blocks") != before
+    meta = pl._store_meta(store, ("compression",))
+    assert meta.num_rows and set(meta["compression"].to_pylist()) == {"GZIP"}
 
 
 def test_compact_restores_whole_part_ratio(spark, tmp_path):
