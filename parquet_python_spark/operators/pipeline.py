@@ -51,8 +51,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
-    ArrayType, BinaryType, DoubleType, IntegerType, LongType, MapType,
-    StringType, StructField, StructType,
+    ArrayType, BinaryType, ByteType, DoubleType, IntegerType, LongType,
+    MapType, ShortType, StringType, StructField, StructType,
 )
 
 from ..kernels import bloom
@@ -1482,7 +1482,8 @@ def _decode_columns(tbl: pa.Table) -> dict[str, pa.Array]:
     """One part's block rows -> {column: decoded array}: per column, the
     pages in page_id order, concatenated — pages are per-column
     (independent row splits), but every column covers the same rows in
-    the same order."""
+    the same order.  A block that fails to decode raises ``ValueError``
+    naming its part_key, column and page_id."""
     names = tbl["column"].to_pylist()
     pages = tbl["page_id"].to_pylist()
     blocks_col = tbl["block"].combine_chunks()
@@ -1499,8 +1500,15 @@ def _decode_columns(tbl: pa.Table) -> dict[str, pa.Array]:
                 f"part has duplicate pages for column {c!r} — the same "
                 "data was appended twice (use resume=True for retries, "
                 "or merge_stores to consolidate overlapping stores)")
-        arrs = [enc.decode_block(blocks_col[i].as_py())
-                for _, i in sorted(lst)]
+        arrs = []
+        for p, i in sorted(lst):
+            try:
+                arrs.append(enc.decode_block(blocks_col[i].as_py()))
+            except Exception as e:  # any kernel failure: say which block
+                raise ValueError(
+                    f"cannot decode the block of part_key "
+                    f"{tbl['part_key'][i].as_py()}, column {c!r}, page_id "
+                    f"{p}: {e}") from e
         out[c] = pa.concat_arrays(arrs) if len(arrs) > 1 else arrs[0]
     return out
 
@@ -1878,25 +1886,142 @@ def _part_key_in(keys: list[int]):
     return F.expr(f"part_key IN ({', '.join(str(int(k)) for k in keys)})")
 
 
+# the most candidate rows a point read hands to Spark from the driver
+# (``_point_rows``); one with more runs as the unit frame.  Rows, not
+# bytes, track where handing rows over stops paying: on a 4-vCPU host,
+# counting a one-unit read's rows took as long either way at about 20k
+# rows of the code table (5 columns, 24 MB as Arrow) and 50k lineitem
+# rows (11 columns, 4 MB), 2.5x apart in rows but 6x in bytes; below
+# 16k rows the driver path ran 20-70% faster on both.
+POINT_ROWS = 1 << 14
+
+
+def _point_tests(groups, schema: StructType):
+    """Per OR group of a filter (names as in ``schema``), its ``==`` /
+    ``in`` tests that ``_point_mask`` evaluates exactly, as (column, Arrow
+    value set): a string or binary column against ``str`` / ``bytes``
+    literals, or an integer column against ``int`` literals (``bool``
+    excluded).  NULLs in an ``in`` list are skipped.  None unless every
+    group holds such a test: only then does the mask bound the filter's
+    rows."""
+    types = {f.name: f.dataType for f in schema.fields}
+    out = []
+    for grp in groups:
+        tests = []
+        for c, op, v in grp:
+            if op not in ("==", "=", "in") or c not in types:
+                continue
+            vals = [x for x in v if x is not None] if op == "in" else [v]
+            t = types[c]
+            if isinstance(t, StringType) and all(
+                    isinstance(x, str) for x in vals):
+                tests.append((c, pa.array(vals, pa.string())))
+            elif isinstance(t, BinaryType) and all(
+                    isinstance(x, bytes) for x in vals):
+                tests.append((c, pa.array(vals, pa.binary())))
+            elif isinstance(t, (ByteType, ShortType, IntegerType, LongType)) \
+                    and all(isinstance(x, (int, np.integer))
+                            and not isinstance(x, (bool, np.bool_))
+                            for x in vals):
+                # compared as int64, which holds every Spark integer
+                tests.append((c, pa.array(
+                    [int(x) for x in vals if -(1 << 63) <= x < (1 << 63)],
+                    pa.int64())))
+        if not tests:
+            return None
+        out.append(tests)
+    return out or None
+
+
+def _point_mask(tests, data: dict[str, pa.Array]) -> np.ndarray:
+    """One part's candidate rows for ``tests`` (``_point_tests``), given
+    its decoded test columns ``data``: a superset of the rows the filter
+    passes, since every other test of a group counts as true.  A NULL
+    value, or a column the part lacks (NULL-filled on decode), matches
+    nothing."""
+    if not data:
+        return np.zeros(0, dtype=bool)
+    n = len(next(iter(data.values())))
+    mask = np.zeros(n, dtype=bool)
+    for grp in tests:
+        hit = np.ones(n, dtype=bool)
+        for c, values in grp:
+            if c not in data:
+                hit[:] = False
+                break
+            hit &= np.asarray(pa.compute.is_in(
+                data[c].cast(values.type), value_set=values,
+                skip_nulls=True).fill_null(False), dtype=bool)
+        mask |= hit
+    return mask
+
+
+def _point_rows(unit: _ReadUnit, tests, finish) -> list[pa.Table] | None:
+    """The candidate rows (``_point_mask``) of the parts of ``unit``, read
+    and decoded here in the calling process: per part, the test columns'
+    pages decode first, and only a part with candidates is finished
+    (``finish``), keeping its candidate rows.  None once the candidates
+    exceed ``POINT_ROWS``."""
+    cols = pa.array(sorted({c for grp in tests for c, _ in grp}), pa.string())
+    found, n = [], 0
+    for key, tbl in _read_unit(unit, _DECODE_COLS):
+        hit = np.flatnonzero(_point_mask(tests, _decode_columns(tbl.filter(
+            pa.compute.is_in(tbl["column"], value_set=cols)))))
+        n += len(hit)
+        if n > POINT_ROWS:
+            return None
+        if len(hit):
+            found.append(finish(key, tbl).take(hit))
+    return found
+
+
+def _local_frame(spark: SparkSession, tables: list[pa.Table],
+                 schema: StructType) -> DataFrame:
+    """``tables`` (typed as ``schema``) as a local relation: no job runs
+    when it is collected."""
+    if tables:
+        # a LocalRelation built in the JVM from the Arrow batches
+        # (``PythonSQLUtils.toDataFrame`` over an iterator of serialized
+        # batches, no temp file) ran no faster: 12.2 against 11.6 ms for 4
+        # lineitem rows, 14.8 against 12.7 ms for 2,000, on a 4-vCPU host
+        return spark.createDataFrame(pa.concat_tables(tables), schema)
+    # an empty LocalRelation built in the JVM.  The Arrow path
+    # (``createDataFrame(pa.Table)``) round-trips a temp file: 9-14 ms
+    # against 6-7 ms here on a 4-vCPU host
+    js = spark._jsparkSession
+    return DataFrame(js.createDataFrame(
+        spark.sparkContext._jvm.java.util.ArrayList(),
+        js.parseDataType(schema.json())), spark)
+
+
 def _plan_frame(spark: SparkSession, plan: _DecodePlan, keep_part_key: bool,
-                blocks: DataFrame | None = None) -> DataFrame:
-    """The flat decoded rows of ``plan`` (``_part_finisher``): an empty
-    local frame (no job) when no part is kept, else one Python task per
-    read unit; a plan without units came from ``blocks``, a frame with no
-    files behind it, decoded by a grouped Arrow UDF behind an exchange."""
+                blocks: DataFrame | None = None,
+                point=None) -> DataFrame:
+    """The flat decoded rows of ``plan`` (``_part_finisher``), by one of
+    three paths:
+
+    * empty: no part is kept; an empty local relation, no job;
+    * driver: ``point`` (``_point_tests``, a point filter) is given and
+      the plan is one read unit of at most ``UNIT_MAX_BYTES``; the unit is
+      read and probed here, now (``_point_rows``), and its candidate rows
+      become a local relation: no job, no Python task.  Zero candidates
+      give the empty relation; more than ``POINT_ROWS`` fall through to
+      the unit path;
+    * units: one Python task per read unit.  A plan without units came
+      from ``blocks``, a frame with no files behind it, decoded by a
+      grouped Arrow UDF behind an exchange."""
     schema = plan.schema
     if keep_part_key:
         schema = StructType(
             [StructField("part_key", LongType(), False)] + list(schema.fields))
     if plan.kept == []:
-        # an empty LocalRelation built in the JVM: no job.  The Arrow path
-        # (``createDataFrame(pa.Table)``) round-trips a temp file: 9-14 ms
-        # against 6-7 ms here on a 4-vCPU host
-        js = spark._jsparkSession
-        return DataFrame(js.createDataFrame(
-            spark.sparkContext._jvm.java.util.ArrayList(),
-            js.parseDataType(schema.json())), spark)
+        return _local_frame(spark, [], schema)
     finish = _part_finisher(schema, keep_part_key)
+    if (point is not None and plan.units is not None and len(plan.units) == 1
+            and plan.units[0].nbytes <= UNIT_MAX_BYTES):
+        rows = _point_rows(plan.units[0], point, finish)
+        if rows is not None:
+            return _local_frame(spark, rows, schema)
     if plan.units is not None:
         return _unit_frame(spark, plan.units, _DECODE_COLS, finish, schema)
     # the metadata names of the projected columns present in the blocks
@@ -1932,21 +2057,35 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
     A driver-side plan (``_plan_decode``) gives the projected schema, the
     schema-evolution coverage check and, under ``filters``, the parts
     whose stats and Bloom filters may hold a match (``prune_blocks``
-    semantics).  When no part survives the result is an empty local
-    frame built from the schema: no decode job runs.  Otherwise the
-    decode reads only the projected columns of the kept parts, decodes
-    them part by part in Python, and re-applies the exact predicate to
-    the decoded rows.
+    semantics).  The decode reads only the projected columns of the kept
+    parts, decodes them part by part, and re-applies the exact predicate
+    (``filters.apply_filters``) to the decoded rows, by one of three
+    paths (``_plan_frame``):
+
+    * empty: no part survives; an empty local frame built from the
+      schema, no job;
+    * driver: a point read, i.e. the plan is one read unit (of at most
+      ``UNIT_MAX_BYTES``) and every OR group of ``filters`` holds an
+      ``==`` / ``in`` test of a string, binary or integer column against
+      literals of its kind (``_point_tests``).  The unit is read and its
+      test columns decoded in this process; only the parts with candidate
+      rows are finished, and their candidate rows, when no more than
+      ``POINT_ROWS``, become a local relation: no job and no Python task
+      when the result is collected.  This read is eager: it happens when
+      ``decode_blocks`` is called, while the unit path fixes its files and
+      rows then and reads them when an action runs;
+    * units: everything else (range filters, scans, several units, more
+      candidates than ``POINT_ROWS``).  One Python task per read unit
+      reads its block files itself through StoreFS (no block scan, no
+      exchange), so a one-unit read is one job of one task.
 
     An untouched ``read_blocks`` frame is planned from its block files'
-    own metadata column chunks, and its kept parts are read in read
-    units (``_plan_units``), as every store operation reads its parts:
-    one Python task per unit reads its block files itself through
-    StoreFS (no block scan, no exchange), so a one-part lookup is one
-    job of one task.  Only a frame with no files behind it (in-memory
-    ``encode_table`` output, or a frame a caller cached, filtered or
-    joined) is planned by one collect job and decoded by a grouped Arrow
-    UDF behind a part_key exchange, one task per post-shuffle partition
+    own metadata column chunks, and its kept parts are cut into read
+    units (``_plan_units``), as every store operation reads its parts.
+    Only a frame with no files behind it (in-memory ``encode_table``
+    output, or a frame a caller cached, filtered or joined) is planned by
+    one collect job and decoded by a grouped Arrow UDF behind a part_key
+    exchange, one task per post-shuffle partition
     (``spark.sql.shuffle.partitions``, coalesced by AQE).
 
     ``keep_part_key=True`` prepends the originating part_key to every row
@@ -1966,7 +2105,8 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
                            if c.replace(".", META_ESC) in names else c),
                      op, v) for (c, op, v) in grp]
                    for grp in groups]
-    out = _plan_frame(blocks.sparkSession, plan, keep_part_key, blocks)
+    out = _plan_frame(blocks.sparkSession, plan, keep_part_key, blocks,
+                      _point_tests(filters or [], plan.schema))
     if filters is not None:
         out = filt.apply_filters(out, filters)
         if user_cols is not None:

@@ -20,6 +20,14 @@ metadata column chunks.  This prints, for the store at ``<store>``:
   each: how many, the parts and the kept encoded bytes of each, and the
   block files the tasks open in all (a file shared by two units counts
   twice).  A lookup that keeps no part plans no unit;
+* for the absent-key lookup and for a lookup of a key the store holds
+  (the first value of the same column), the path ``decode_blocks``
+  takes: ``empty`` (no part kept, no job), ``driver`` (a point read of
+  one unit, probed and decoded in this process, no job) or ``units``
+  (one Python task per unit); on the driver path also the probe's
+  candidate rows, and for every path the median time over 10 calls, in
+  ms, of the ``decode_blocks`` call itself, which on the driver path
+  holds the whole read;
 * the median time over 10 calls, in ms, of ``store_summary`` and of
   ``read_lineage(...).collect()``: the lineage rollup of every block
   file's metadata columns, on the driver.
@@ -63,6 +71,30 @@ def _print_units(label: str, plan) -> None:
         print(f"  files opened   {sum(len(u.files) for u in units)}")
 
 
+def _print_path(spark, store: str, label: str, filters) -> None:
+    """Which path ``decode_blocks`` takes for ``filters``, the probe's
+    candidate rows on the driver path, and the call's median time."""
+    from parquet_python_spark.operators import pipeline as pl
+
+    def call():
+        return pl.decode_blocks(pl.read_blocks(spark, store), filters=filters)
+
+    groups = pl._norm_filters(filters)
+    plan = pl._plan_decode(pl.read_blocks(spark, store), None, groups)
+    executed = call()._jdf.queryExecution().executedPlan().toString()
+    if plan.kept == []:
+        path = "empty"
+    elif "MapInArrow" in executed:
+        path = "units"
+    else:
+        rows = pl._point_rows(plan.units[0],
+                              pl._point_tests(groups, plan.schema),
+                              pl._part_finisher(plan.schema, False))
+        path = f"driver, {sum(t.num_rows for t in rows)} candidate rows"
+    print(f"path, {label:<9} {path}")
+    print(f"  decode ms      {_median_ms(call):.1f}")
+
+
 def main(store: str) -> None:
     from pyspark.sql import SparkSession
 
@@ -98,6 +130,10 @@ def main(store: str) -> None:
             ms = _median_ms(lookup)
             print(f"plan ms, lookup  {ms:.1f}  ({strings[0]} == absent key)")
             _print_units("units, lookup", lookup())
+            held = pl.head_rows(spark, store, 1,
+                                [strings[0]]).collect()[0][0]
+            for label, key in (("absent", ABSENT), ("held", held)):
+                _print_path(spark, store, label, [(strings[0], "==", key)])
         ms = _median_ms(lambda: pl.store_summary(spark, store))
         print(f"summary ms       {ms:.1f}")
         ms = _median_ms(lambda: pl.read_lineage(spark, store).collect())

@@ -529,3 +529,197 @@ def test_one_part_lookup_is_one_task(spark, spark_jobs, stores):
     assert len(jobs) == 1
     stages = st.getJobInfo(jobs[0]).stageIds
     assert sum(st.getStageInfo(s).numTasks for s in stages) == 1
+
+
+# ----------------------------------------------- point reads on the driver
+
+def test_point_lookup_runs_no_job(spark, spark_jobs, stores):
+    """A present-key point lookup of a ``read_blocks`` frame whose plan is
+    one read unit is read, probed and decoded in the calling process and
+    handed to Spark as a local relation: no job when ``decode_blocks`` is
+    called, none when the result is collected, no Python in its plan."""
+    for kw in ({"filters": [("s", "==", SPECIAL)]},
+               {"filters": [("k", "in", [41, 200])], "columns": ["x"],
+                "keep_part_key": True}):
+        with spark_jobs() as plan_jobs:
+            df = pl.decode_blocks(pl.read_blocks(spark, stores[0]), **kw)
+        with spark_jobs() as collect_jobs:
+            rows = df.collect()
+        assert plan_jobs == [] and collect_jobs == [], kw
+        assert rows, kw
+        plan = _executed(df)
+        assert "LocalTableScan" in plan and "Python" not in plan, plan
+        _, want = _decodes_agree(spark, stores[0], **kw)
+        assert _rows(df) == want, kw
+
+
+def test_bloom_false_positive_lookup_runs_no_job(spark, spark_jobs, stores):
+    """A key that no row holds but some page's Bloom filter passes costs a
+    probe on the driver, not a Python task: an empty result, no job."""
+    m = pl._store_meta(stores[0], pl._PLAN_COLS + pl._STATS_COLS)
+    keys, inv = np.unique(np.asarray(m["part_key"]), return_inverse=True)
+
+    def kept(v) -> bool:
+        return bool(pl._kept_parts(m, keys, inv,
+                                   pl._prune_tests([[("s", "==", v)]])).any())
+
+    absent = (f"w{i % 60:03d}{i}" for i in range(3000))  # not in VOCAB
+    f = [("s", "==", next(v for v in absent if kept(v)))]
+    with spark_jobs() as plan_jobs:
+        df = pl.decode_blocks(pl.read_blocks(spark, stores[0]), filters=f)
+    with spark_jobs() as collect_jobs:
+        assert df.collect() == []
+    assert plan_jobs == [] and collect_jobs == []
+    assert "Python" not in _executed(df)
+
+
+def test_point_read_over_the_candidate_budget_runs_the_unit_frame(
+        spark, spark_jobs, stores, monkeypatch):
+    """A point filter with more candidate rows than ``POINT_ROWS`` runs
+    the unit frame: one job of one Python task, the same rows."""
+    monkeypatch.setattr(pl, "POINT_ROWS", 5)
+    f = [("s", "in", VOCAB[:30])]
+    df = pl.decode_blocks(pl.read_blocks(spark, stores[0]), filters=f)
+    assert "MapInArrow" in _executed(df)
+    with spark_jobs() as jobs:
+        rows = df.collect()
+    assert len(rows) > 5 and len(jobs) == 1
+    st = spark.sparkContext.statusTracker()
+    assert sum(st.getStageInfo(s).numTasks
+               for s in st.getJobInfo(jobs[0]).stageIds) == 1
+    _, want = _decodes_agree(spark, stores[0], filters=f)
+    assert _rows(df) == want
+
+
+def _random_point_filters(rng, n: int) -> list:
+    """OR groups each holding an ``==`` / ``in`` test the probe evaluates
+    (a string or int column), plus random triples of any op and column:
+    NaN, float-against-int and NULL literals among them."""
+    out = []
+    for _ in range(n):
+        groups = []
+        for _ in range(int(rng.integers(1, 3))):
+            if rng.random() < 0.5:
+                vals = [_literal(rng, "s") for _ in range(3)] + [None]
+                c = "s"
+            else:
+                vals = [int(v) for v in rng.integers(0, N_PARTS * 40 + 60, 3)]
+                c = "k"
+            if rng.random() < 0.5:
+                grp = [(c, "==", vals[0])]
+            else:
+                grp = [(c, "in", vals[:int(rng.integers(1, 5))])]
+            grp += _random_filters(rng, 1)[0][0][:int(rng.integers(0, 3))]
+            groups.append(grp)
+        out.append(groups)
+    return out
+
+
+POINT_FIXED = [
+    [("s", "==", SPECIAL)],
+    [("s", "==", HUGE)],
+    [("s", "in", [None, "O'Brien", SPECIAL])],
+    [("k", "==", 41), ("x", "==", math.nan)],
+    [("s", "==", "w001"), ("k", "==", 41.0)],
+    [("k", "in", [0, 45, 90]), ("x", "!=", math.nan)],
+    [[("k", "in", [3, 81])], [("s", "in", ["a\\b", None]), ("x", ">", 0.0)]],
+]
+
+
+def test_point_mask_bounds_the_filter(spark, stores):
+    """The candidate rows of every point filter hold every row the exact
+    filter passes (NULL rows, NaN and float literals, NULLs in ``in``
+    lists, truncated-stat strings), and filtering them gives its answer."""
+    from collections import Counter
+
+    blocks = pl.read_blocks(spark, stores[0])
+    full = pl.decode_blocks(blocks).localCheckpoint()
+    narrowed = False
+    for f in POINT_FIXED + _random_point_filters(np.random.default_rng(37),
+                                                 30):
+        groups = pl._norm_filters(f)
+        plan = pl._plan_decode(blocks, None, groups)
+        point = pl._point_tests(groups, plan.schema)
+        assert point is not None, f
+        want = _rows(filt.apply_filters(full, f))
+        if plan.units is None:  # every part pruned
+            assert want == [], f
+            continue
+        cand = pl._point_rows(plan.units[0], point,
+                              pl._part_finisher(plan.schema, False))
+        got = pl._local_frame(spark, cand, plan.schema)
+        assert not Counter(want) - Counter(_rows(got)), f
+        assert _rows(filt.apply_filters(got, f)) == want, f
+        narrowed |= got.count() < N_PARTS * PAGES * PAGE_ROWS / 2
+    assert narrowed
+
+
+@pytest.fixture(scope="module")
+def nested_store(spark, tmp_path_factory):
+    """A store with list, list-of-struct, struct-in-struct and map
+    columns, some of them NULL."""
+    from pyspark.sql import functions as F
+
+    src = spark.range(300).select(
+        F.col("id"),
+        F.when(F.col("id") % 5 != 0, F.sequence(F.lit(0), F.col("id") % 4))
+        .alias("ll"),
+        F.array(F.struct(F.lit("uid").alias("k"), F.col("id").alias("v")),
+                F.struct(F.lit("sq").alias("k"),
+                         (F.col("id") * F.col("id")).alias("v")))
+        .alias("tags"),
+        F.when(F.col("id") % 7 != 0, F.struct(
+            (F.col("id") % 11).alias("uid"),
+            F.struct((F.col("id") / 4).alias("v")).alias("inner")))
+        .alias("meta"),
+        F.create_map(F.lit("a"), F.col("id").cast("int"),
+                     F.lit("b"), (F.col("id") % 3).cast("int"))
+        .alias("props"),
+    ).withColumn("repo", (F.col("id") % 3).cast("string")) \
+        .withColumn("path", F.col("id").cast("string")) \
+        .withColumn("commit", F.lit("0"))
+    path = str(tmp_path_factory.mktemp("nested") / "s")
+    pl.run_encode(src, path, columns=["id", "ll", "tags", "meta", "props"],
+                  target_rows=100, resume=False)
+    return path
+
+
+def test_point_lookup_of_nested_columns(spark, spark_jobs, nested_store):
+    """Point lookups of a store with list, struct and map columns equal
+    the grouped decode, through a key column or a struct child."""
+    for kw in ({"filters": [("id", "==", 17)]},
+               {"filters": [("id", "in", [3, 150, 299])],
+                "columns": ["tags", "props"]},
+               {"filters": [("meta.uid", "==", 5)]}):
+        with spark_jobs() as jobs:
+            df = pl.decode_blocks(pl.read_blocks(spark, nested_store), **kw)
+            rows = df.collect()
+        assert jobs == [] and rows, kw
+        _, want = _decodes_agree(spark, nested_store, **kw)
+        assert _rows(df) == want, kw
+
+
+def test_decode_error_names_the_block(spark, stores, tmp_path):
+    """A block that fails to decode raises naming its part_key, column and
+    page_id, on the driver path and in a Python task alike."""
+    import shutil
+
+    path = tmp_path / "damaged"
+    shutil.copytree(stores[0], path)
+    f = str(path / "blocks" / "part-00000.parquet")
+    t = pq.read_table(f)
+    rows = t.to_pylist()
+    bad = next(i for i, r in enumerate(rows) if r["part_key"] == 2
+               and r["column"] == "k" and r["page_id"] == 1)
+    rows[bad]["block"] = b"XXXX" + rows[bad]["block"][4:]
+    pq.write_table(pa.Table.from_pylist(rows, schema=t.schema), f)
+    msg = r"part_key 2, column 'k', page_id 1: bad block magic"
+    key = enc.decode_block(next(r["block"] for r in rows
+                                if r["part_key"] == 2 and r["column"] == "k"
+                                and r["page_id"] == 0))[0].as_py()
+    with pytest.raises(ValueError, match=msg) as err:
+        pl.decode_blocks(pl.read_blocks(spark, str(path)),
+                         filters=[("k", "==", key)])
+    assert str(err.value.__cause__) == "bad block magic"
+    with pytest.raises(Exception, match=msg):
+        pl.decode_blocks(pl.read_blocks(spark, str(path))).collect()
